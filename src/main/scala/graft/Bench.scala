@@ -1,19 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warm-up: session bring-up, codegen and parquet-footer costs otherwise
     // land on whichever query sorts first and distort its number
@@ -24,17 +14,8 @@ object Bench {
     // (name, seconds, errorOrNull): failures are REPORTED, never silently folded
     // into the total as fast runs (round-1 bug: 9 crashed queries looked like 0.1s wins).
     // args, when given, select a query subset (scale smokes bench the heavy tail only).
-    // Parity twins whose BETTER implementation is already the benched default
-    // stay under the correctness gate (Verify runs every query) but out of the
-    // default timing sweep: d7 label-prop is diameter-bounded (rounds×edges) and
-    // alone cost ~10% of the 100× suite while d7s star contraction — the
-    // adjudicated default with the identical output contract and oracle — is
-    // benched right next to it (VERDICT r11 #4). Name it explicitly
-    // (`runMain graft.Bench d7_dedup_clusters`) to time it on demand.
-    val benchExcluded = Set("d7_dedup_clusters")
     val selected =
-      if (args.isEmpty) SparkEntry.queries.view
-        .filterKeys(k => !benchExcluded.contains(k)).toMap
+      if (args.isEmpty) SparkEntry.queries
       else {
         val unknown = args.toSet -- SparkEntry.queries.keySet
         require(unknown.isEmpty, s"unknown queries: $unknown")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** One-off scaling measurement for the batched BPE trainer (SCALE.md's t16
   * row): times `bpeTrain` at a production-ish merge budget for a given batch
@@ -8,14 +7,7 @@ import org.apache.spark.sql.SparkSession
 object BenchBpe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val nMerges = args(1).toInt; val batch = args(2).toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val t0 = System.nanoTime()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit probe (dev tool, the SCALE.md plan-shape evidence): prints the
   * executed plan's exchange/join profile for the named queries (args; default
@@ -8,11 +7,7 @@ import org.apache.spark.sql.SparkSession
   * without reading full explain output. */
 object ExplainProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // data dir: SPARK_GRAFT_SF_DIR or a leading arg that IS a directory
     // (ADVICE r14: a '/'-heuristic misrouted relative dirs like 'testdata'

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** k-means trainer probe (dev tool, the SCALE.md evidence for VERDICT r14
@@ -17,10 +16,7 @@ object KmeansProbe {
     val n = args.lift(1).map(_.toInt).getOrElse(20000)
     val dim = args.lift(2).map(_.toInt).getOrElse(32)
     val skipLiteral = args.lift(3).contains("skipLiteral")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // deterministic synthetic corpus (md5-derived, aperiodic)

@@ -11,17 +11,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 object Mm10Ab {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/scale100")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     implicit val sp: SparkSession = spark
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -35,8 +25,10 @@ object Mm10Ab {
     def rows = {
       // same fixture parquet the query reads (materialized by the warmup rep)
       val prefix = s"graft_mm10_av_v1_${math.abs(sfDir.hashCode)}_"
-      val f = new java.io.File("/tmp").listFiles()
-        .filter(_.getName.startsWith(prefix)).head
+      val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+      val f = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
+        .find(_.getName.startsWith(prefix))
+        .getOrElse(sys.error(s"no mm10 fixture $prefix* under $tmp"))
       spark.read.parquet(f.getAbsolutePath)
         .as[MultimodalOps.MediaRow](org.apache.spark.sql.Encoders.product[MultimodalOps.MediaRow])
     }

@@ -25,6 +25,16 @@ object QueriesLlm {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     SparkEntry.loadTableFanout(s, dir, name)
 
+  /** d7/d7s body: MinHash near-dup pairs -> star-contraction components. */
+  private def dedupClusters(s: SparkSession, dir: String): DataFrame = {
+    val pairs = DedupOps.minhashNearDups(t(s, dir, "documents"), "doc_id", "text",
+        threshold = 0.4, shingleN = 3, k = 32, bands = 8)
+      .select(col("id1"), col("id2"))
+    DedupOps.connectedComponentsStar(pairs)
+      .select(col("id").as("doc_id"), col("cluster"),
+        (col("id") === col("cluster")).as("keep"))
+  }
+
   private def r4(c: Column): Column = round(c, 4)
 
   /** Fixture-cache key component for the mm3/mm4r materialized-payload caches:
@@ -486,28 +496,11 @@ object QueriesLlm {
     }),
 
     // d7: duplicate-cluster resolution — LSH near-dup pairs -> connected components
-    // -> one canonical doc (the minimum id) per cluster
-    "d7_dedup_clusters" -> ((s, dir) => {
-      val pairs = DedupOps.minhashNearDups(t(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.4, shingleN = 3, k = 32, bands = 8)
-        .select(col("id1"), col("id2"))
-      DedupOps.connectedComponents(pairs)
-        .select(col("id").as("doc_id"), col("cluster"),
-          (col("id") === col("cluster")).as("keep"))
-    }),
+    // (star contraction) -> one canonical doc (the minimum id) per cluster
+    "d7_dedup_clusters" -> dedupClusters,
 
-    // d7s: identical clustering contract via LARGE-STAR/SMALL-STAR contraction —
-    // the O(log² n)-round adversarial-graph path (label propagation is
-    // diameter-bounded); shares d7's recursive-CTE oracle because the output
-    // contract is identical
-    "d7s_dedup_clusters_star" -> ((s, dir) => {
-      val pairs = DedupOps.minhashNearDups(t(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.4, shingleN = 3, k = 32, bands = 8)
-        .select(col("id1"), col("id2"))
-      DedupOps.connectedComponentsStar(pairs)
-        .select(col("id").as("doc_id"), col("cluster"),
-          (col("id") === col("cluster")).as("keep"))
-    }),
+    // d7s: same body and oracle as d7
+    "d7s_dedup_clusters_star" -> dedupClusters,
 
     // t6: Gopher-style repetition stats per document (shuffle-free HOF fold)
     "t6_repetition" -> ((s, dir) => {
@@ -980,15 +973,15 @@ object QueriesLlm {
     }),
 
     // mm4w: WIDE-RADIUS perceptual near-dup pairs (VERDICT r14 #1) — the
-    // 8x8-bit-band hamming64PairsWide chassis, pigeonhole-exact at hamming
-    // <= 7: the radius real re-encodes actually land at (dHash distance 4-10
-    // for quality/resolution/crop jitter), where the 4x16 chassis is blind
-    // past 3. The fixture plants EXACTLY that band: per group of 4 docs, a
-    // shared md5-derived 64-bit base code with disjoint per-member bit
-    // flips (member 1 flips 4 bits, member 2 five, member 3 seven), so the
-    // kept pairs are the three member-0 pairs at hamming 4/5/7 while the
-    // 1-2/1-3/2-3 pairs (hamming 9/11/12) prove the verify filter, not the
-    // bands, draws the line.
+    // 8x8-bit-band layout the hamming64Pairs chassis picks above radius 3,
+    // pigeonhole-exact at hamming <= 7: the radius real re-encodes actually
+    // land at (dHash distance 4-10 for quality/resolution/crop jitter), where
+    // the 4x16 layout is blind past 3. The fixture plants EXACTLY that band:
+    // per group of 4 docs, a shared md5-derived 64-bit base code with
+    // disjoint per-member bit flips (member 1 flips 4 bits, member 2 five,
+    // member 3 seven), so the kept pairs are the three member-0 pairs at
+    // hamming 4/5/7 while the 1-2/1-3/2-3 pairs (hamming 9/11/12) prove the
+    // verify filter, not the bands, draws the line.
     "mm4w_wide_neardups" -> ((s, dir) => {
       val g = md5(concat(lit("w"), (col("doc_id") / 4).cast("long").cast("string")))
       val codes = t(s, dir, "documents")
@@ -1002,7 +995,7 @@ object QueriesLlm {
           when(col("m") === 1, col("lo0").bitwiseXOR(lit(0xfL)))
             .when(col("m") === 2, col("lo0").bitwiseXOR(lit(0x1f00000L)))
             .otherwise(col("lo0")).as("lo"))
-      DedupOps.hamming64PairsWide(codes, "doc_id", "hi", "lo", maxHamming = 7)
+      DedupOps.hamming64Pairs(codes, "doc_id", "hi", "lo", maxHamming = 7)
     }),
 
     // mm4p: pHash (DCT) perceptual near-dup pairs (r15) — the industry-
@@ -1021,7 +1014,7 @@ object QueriesLlm {
         graft.multimodal.MultimodalOps.MediaRow(did, "image",
           graft.multimodal.MultimodalOps.mm4pFixturePng(did), Map.empty))
       val h = graft.multimodal.MultimodalOps.imagePHashes(rows)
-      DedupOps.hamming64PairsWide(h, "id", "hi", "lo", maxHamming = 7)
+      DedupOps.hamming64Pairs(h, "id", "hi", "lo", maxHamming = 7)
     }),
 
     // mm4r: mm4's REAL-DECODE twin (VERDICT r11 #2) — the payload→PNG-decode→
@@ -1222,11 +1215,12 @@ object QueriesLlm {
           when(col("m") === 1, col("lo0").bitwiseXOR(lit(0xfL)))
             .when(col("m") === 2, col("lo0").bitwiseXOR(lit(0x1f00000L)))
             .otherwise(col("lo0")).as("lo"))
-      DedupOps.hamming64IncrementalNearDupsWide(
+      DedupOps.hamming64IncrementalNearDups(
           codes.filter(col("doc_id") % 10 =!= 0),
           codes.filter(col("doc_id") % 10 === 0),
           "doc_id", "hi", "lo", maxHamming = 6)
-        .crossJoin(DedupOps.hamming64CapStatsWide(codes, "doc_id", "hi", "lo"))
+        .crossJoin(DedupOps.hamming64CapStats(codes, "doc_id", "hi", "lo",
+          maxHamming = 6))
     }),
 
     // mm10: JOINT A/V video near-dup (VERDICT r14 #2) — the robust-against-
@@ -2058,6 +2052,21 @@ object QueriesLlm {
                         / len(list_distinct(list_concat(a1, a2))) END AS j
             FROM prefiltered)"""
 
+  /** d7/d7s oracle: the recursive-CTE walk is algorithm-independent. */
+  private val dedupClustersOracle: String =
+    s"""WITH RECURSIVE $minhashVerifiedCte,
+          nd AS (SELECT id1, id2 FROM verified WHERE j >= 0.4),
+          e2 AS (SELECT id1 AS s, id2 AS d FROM nd
+                 UNION SELECT id2, id1 FROM nd),
+          walk(id, r) AS (
+            SELECT s, d FROM e2
+            UNION
+            SELECT w.id, e.d FROM walk w JOIN e2 e ON w.r = e.s)
+          SELECT id AS doc_id,
+            LEAST(id, MIN(r)) AS cluster,
+            (id = LEAST(id, MIN(r))) AS keep
+          FROM walk GROUP BY id"""
+
   def oracles: Map[String, String] = Map(
     // Segmentation replayed in pure SQL: symbols ride as chr(1)||sym||chr(2)
     // wrapped tokens (unambiguous boundaries, so a merge can never match across
@@ -2212,19 +2221,7 @@ object QueriesLlm {
                    AS n_members_excluded,
                  CAST(MAX(n) AS BIGINT) AS max_bucket
           FROM bc""",
-    "d7_dedup_clusters" ->
-      s"""WITH RECURSIVE $minhashVerifiedCte,
-          nd AS (SELECT id1, id2 FROM verified WHERE j >= 0.4),
-          e2 AS (SELECT id1 AS s, id2 AS d FROM nd
-                 UNION SELECT id2, id1 FROM nd),
-          walk(id, r) AS (
-            SELECT s, d FROM e2
-            UNION
-            SELECT w.id, e.d FROM walk w JOIN e2 e ON w.r = e.s)
-          SELECT id AS doc_id,
-            LEAST(id, MIN(r)) AS cluster,
-            (id = LEAST(id, MIN(r))) AS keep
-          FROM walk GROUP BY id""",
+    "d7_dedup_clusters" -> dedupClustersOracle,
     // the d7 clustering CTE feeding a survivors anti-join + per-source stats
     "pipe3_near_dedup" ->
       s"""WITH RECURSIVE $minhashVerifiedCte,
@@ -2241,20 +2238,7 @@ object QueriesLlm {
           WHERE doc_id NOT IN (
             SELECT id FROM walk GROUP BY id HAVING id != LEAST(id, MIN(r)))
           GROUP BY source""",
-    // same contract, different algorithm — the oracle is algorithm-independent
-    "d7s_dedup_clusters_star" ->
-      s"""WITH RECURSIVE $minhashVerifiedCte,
-          nd AS (SELECT id1, id2 FROM verified WHERE j >= 0.4),
-          e2 AS (SELECT id1 AS s, id2 AS d FROM nd
-                 UNION SELECT id2, id1 FROM nd),
-          walk(id, r) AS (
-            SELECT s, d FROM e2
-            UNION
-            SELECT w.id, e.d FROM walk w JOIN e2 e ON w.r = e.s)
-          SELECT id AS doc_id,
-            LEAST(id, MIN(r)) AS cluster,
-            (id = LEAST(id, MIN(r))) AS keep
-          FROM walk GROUP BY id""",
+    "d7s_dedup_clusters_star" -> dedupClustersOracle,
     "t6_repetition" ->
       s"""WITH toks AS (SELECT doc_id, $toksSql AS tk FROM documents),
           g AS (SELECT doc_id,

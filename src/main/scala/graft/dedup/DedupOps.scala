@@ -281,53 +281,32 @@ object DedupOps {
 
   /** Banded-Hamming pair chassis over PRECOMPUTED 64-bit codes, split as two
     * signed 32-bit-halves-in-long columns (hi = bits 32..63, lo = 0..31): the
-    * shared candidate engine behind image dHash near-dup
+    * shared candidate engine behind image dHash/pHash near-dup
     * ([[graft.multimodal.MultimodalOps.dHashNearDups]]), audio energy-hash
-    * near-dup (mm7), and any future 64-bit perceptual code. 4×16-bit
-    * multi-index bands — the pigeonhole guarantee makes recall EXACT at
-    * hamming ≤ 3 (a ≤3-bit difference leaves at least one of four bands
-    * untouched) — then exact `bit_count(xor)` verify inside buckets. One
-    * shuffle on band keys; `maxBucketSize` caps the in-bucket quadratic
-    * (audit with [[bandCapLedger]] over the same band keys — no silent caps).
+    * near-dup (mm7), pooled video hashes, and any future 64-bit perceptual
+    * code. Multi-index bands whose layout follows the radius
+    * ([[hamming64BandKeys]]): 4×16-bit bands up to hamming 3, 8×8-bit bands
+    * up to 7 — either way the pigeonhole guarantee makes recall EXACT (a
+    * difference of at most `bands - 1` bits leaves one band untouched) — then
+    * exact `bit_count(xor)` verify inside buckets. One shuffle on band keys;
+    * `maxBucketSize` caps the in-bucket quadratic (audit with
+    * [[hamming64CapStats]] at the same radius — same band keys by
+    * construction, no silent caps).
+    *
+    * Cost of the 8×8 layout, measured not guessed (SCALE.md r15): band
+    * fan-out doubles (8 keys/item), and 8-bit bands have only 256 values, so
+    * on an n-item corpus of near-uniform codes (worst case) buckets average
+    * n/256 and the in-bucket quadratic dominates past n ≈ 256·cap. Perceptual
+    * corpora cluster far from uniform, but for a corpus that large either
+    * raise `maxBucketSize` knowingly (the ledger reports what was dropped) or
+    * shard the corpus before pairing.
     * Output: (id1, id2, hamming), id1 < id2, distinct. */
   def hamming64Pairs(df: DataFrame, idCol: String, hiCol: String, loCol: String,
                      maxHamming: Int = 3, maxBucketSize: Int = 2000): DataFrame = {
-    require(maxHamming <= 3,
-      "4x16-bit banding guarantees recall only for maxHamming <= 3")
-    hamming64PairsImpl(df, idCol, hiCol, loCol, maxHamming, maxBucketSize,
-      hamming64BandKeys)
-  }
-
-  /** WIDE-RADIUS form of [[hamming64Pairs]]: 8×8-bit multi-index bands, so the
-    * pigeonhole guarantee extends recall-EXACT coverage to hamming ≤ 7 — the
-    * radius real re-encodes land at (different JPEG quality, resolution,
-    * crop jitter put dHash distance at 4–10 in practice; the ≤3 chassis is
-    * fixture-radius). Same shape, shuffle, and cap contract as the narrow
-    * form; audit with [[hamming64CapStatsWide]] (same band keys by
-    * construction — the no-silent-caps rule).
-    *
-    * Cost model vs the narrow chassis, measured not guessed (SCALE.md r15):
-    * band fan-out doubles (8 keys/item), and — the real cost — 8-bit bands
-    * have only 256 values, so on an n-item corpus whose codes are
-    * near-uniform (worst case) buckets average n/256 and the in-bucket
-    * quadratic dominates past n ≈ 256·cap. Perceptual-hash corpora cluster
-    * far from uniform, but for a corpus that large either raise
-    * `maxBucketSize` knowingly (the ledger reports what was dropped) or
-    * shard the corpus before pairing. */
-  def hamming64PairsWide(df: DataFrame, idCol: String, hiCol: String, loCol: String,
-                         maxHamming: Int = 7, maxBucketSize: Int = 2000): DataFrame = {
-    require(maxHamming <= 7,
-      "8x8-bit banding guarantees recall only for maxHamming <= 7")
-    hamming64PairsImpl(df, idCol, hiCol, loCol, maxHamming, maxBucketSize,
-      hamming64BandKeysWide)
-  }
-
-  private def hamming64PairsImpl(df: DataFrame, idCol: String, hiCol: String,
-      loCol: String, maxHamming: Int, maxBucketSize: Int,
-      bandKeys: (Column, Column) => Column): DataFrame =
+    requireBucketCap(maxBucketSize)
     df.select(struct(col(idCol).as("id"), col(hiCol).as("hi"), col(loCol).as("lo"))
           .as("_rec"),
-        explode(bandKeys(col(hiCol), col(loCol))).as("_band"))
+        explode(hamming64BandKeys(col(hiCol), col(loCol), maxHamming)).as("_band"))
       .groupBy(col("_band")).agg(collect_list(col("_rec")).as("_recs"))
       .filter(size(col("_recs")).between(2, maxBucketSize))
       .select(explode(col("_recs")).as("a"), col("_recs"))
@@ -339,27 +318,24 @@ object DedupOps {
       .filter(col("hamming") <= maxHamming)
       .select(col("a.id").as("id1"), col("b.id").as("id2"), col("hamming"))
       .distinct()
-
-  /** The 4×16-bit band keys of a 64-bit (hi, lo) code — ONE definition shared
-    * by [[hamming64Pairs]] and its cap ledgers so audited keys cannot drift
-    * from join keys (the minhashCapStats rule). */
-  def hamming64BandKeys(hi: Column, lo: Column): Column = {
-    val parts = Seq(
-      lo.bitwiseAND(lit(65535L)),
-      shiftright(lo, 16).bitwiseAND(lit(65535L)),
-      hi.bitwiseAND(lit(65535L)),
-      shiftright(hi, 16).bitwiseAND(lit(65535L)))
-    array(parts.zipWithIndex.map { case (c, b) =>
-      concat(lit(s"$b:"), c.cast("string")) }: _*)
   }
 
-  /** The 8×8-bit band keys of a 64-bit (hi, lo) code — [[hamming64BandKeys]]'
-    * wide-radius twin (bands 0–3 from lo, 4–7 from hi, low byte first), ONE
-    * definition shared by [[hamming64PairsWide]] and
-    * [[hamming64CapStatsWide]]. */
-  def hamming64BandKeysWide(hi: Column, lo: Column): Column = {
-    val parts = (0 until 4).map(i => shiftright(lo, 8 * i).bitwiseAND(lit(255L))) ++
-      (0 until 4).map(i => shiftright(hi, 8 * i).bitwiseAND(lit(255L)))
+  private def requireBucketCap(maxBucketSize: Int): Unit =
+    require(maxBucketSize >= 2,
+      s"maxBucketSize must be >= 2 (a smaller bucket holds no pair), got $maxBucketSize")
+
+  /** The band keys of a 64-bit (hi, lo) code — ONE definition shared by every
+    * Hamming pair op, its cap ledger and the streaming catalog, so audited keys
+    * cannot drift from join keys (the minhashCapStats rule). The radius picks
+    * the layout: up to 3, four 16-bit bands; 4 to 7, eight 8-bit bands. Bands
+    * run low bits first (lo before hi), each rendered "band:value". */
+  def hamming64BandKeys(hi: Column, lo: Column, maxHamming: Int = 3): Column = {
+    require(maxHamming >= 0 && maxHamming <= 7,
+      s"banding guarantees recall only for 0 <= maxHamming <= 7, got $maxHamming")
+    val bits = if (maxHamming <= 3) 16 else 8
+    val mask = lit((1L << bits) - 1)
+    val parts = Seq(lo, hi).flatMap(h => (0 until 32 by bits).map(shift =>
+      (if (shift == 0) h else shiftright(h, shift)).bitwiseAND(mask)))
     array(parts.zipWithIndex.map { case (c, b) =>
       concat(lit(s"$b:"), c.cast("string")) }: _*)
   }
@@ -372,48 +348,22 @@ object DedupOps {
     * new item keeps its single BEST match (min hamming, then smallest
     * matched id). The corpus side arrives as precomputed codes — on a real
     * deployment that is the stored hash catalog, so per-drop cost is
-    * O(shard + catalog scan), never a corpus re-decode. Output:
+    * O(shard + catalog scan), never a corpus re-decode. Same radius-selected
+    * bands and cost model as the batch op. Output:
     * (idCol, matched_id, hamming, vs_corpus).
     *
     * Audit contract (the no-silent-caps rule, sharper here than for the
     * batch op): bands over `maxBucketSize` are dropped, and for the
     * incremental contract that means a NEW item landing only in mega-buckets
     * gets NO match row at all — it silently enters the corpus as "novel".
-    * Incremental callers therefore run [[hamming64CapStats]] over
-    * shard ∪ catalog alongside every drop and alert on
-    * `n_buckets_capped > 0` (the mm9 query is the reference call shape: the
-    * ledger rides the same output row). */
+    * Incremental callers therefore run [[hamming64CapStats]] at the same
+    * radius over shard ∪ catalog alongside every drop and alert on
+    * `n_buckets_capped > 0` (the mm9/mm9w queries are the reference call
+    * shapes: the ledger rides the same output row). */
   def hamming64IncrementalNearDups(corpus: DataFrame, shard: DataFrame,
       idCol: String, hiCol: String, loCol: String,
       maxHamming: Int = 3, maxBucketSize: Int = 2000): DataFrame = {
-    require(maxHamming <= 3,
-      "4x16-bit banding guarantees recall only for maxHamming <= 3")
-    hamming64IncrementalImpl(corpus, shard, idCol, hiCol, loCol, maxHamming,
-      maxBucketSize, hamming64BandKeys)
-  }
-
-  /** WIDE-RADIUS form of [[hamming64IncrementalNearDups]] — the 8×8-bit-band
-    * chassis ([[hamming64BandKeysWide]]), recall-exact at hamming ≤ 7, for
-    * incremental catalogs whose drops are real re-encodes (quality/resolution/
-    * crop jitter puts perceptual distance at 4–10, past the narrow chassis).
-    * Same contract, same audit rule: run [[hamming64CapStatsWide]] over
-    * shard ∪ catalog alongside every drop (the mm9w query is the reference
-    * call shape); same cost model as [[hamming64PairsWide]] — 8-bit bands
-    * average n/256 members on near-uniform codes, so past n ≈ 256·cap raise
-    * the cap knowingly or shard the catalog. */
-  def hamming64IncrementalNearDupsWide(corpus: DataFrame, shard: DataFrame,
-      idCol: String, hiCol: String, loCol: String,
-      maxHamming: Int = 7, maxBucketSize: Int = 2000): DataFrame = {
-    require(maxHamming <= 7,
-      "8x8-bit banding guarantees recall only for maxHamming <= 7")
-    hamming64IncrementalImpl(corpus, shard, idCol, hiCol, loCol, maxHamming,
-      maxBucketSize, hamming64BandKeysWide)
-  }
-
-  private def hamming64IncrementalImpl(corpus: DataFrame, shard: DataFrame,
-      idCol: String, hiCol: String, loCol: String,
-      maxHamming: Int, maxBucketSize: Int,
-      bandKeys: (Column, Column) => Column): DataFrame = {
+    requireBucketCap(maxBucketSize)
     def side(df: DataFrame, isNew: Boolean): DataFrame =
       df.select(col(idCol).as("_id"), col(hiCol).as("_hi"),
         col(loCol).as("_lo"), lit(isNew).as("_new"))
@@ -421,7 +371,7 @@ object DedupOps {
     prep
       .select(struct(col("_id").as("id"), col("_hi").as("hi"),
           col("_lo").as("lo"), col("_new").as("isNew")).as("_rec"),
-        explode(bandKeys(col("_hi"), col("_lo"))).as("_band"))
+        explode(hamming64BandKeys(col("_hi"), col("_lo"), maxHamming)).as("_band"))
       .groupBy(col("_band")).agg(collect_list(col("_rec")).as("_recs"))
       .filter(size(col("_recs")).between(2, maxBucketSize))
       .select(explode(col("_recs")).as("a"), col("_recs"))
@@ -442,23 +392,19 @@ object DedupOps {
         col("vs_corpus"))
   }
 
-  /** Over-cap ledger for [[hamming64Pairs]]'s bands (precomputed-code form of
-    * [[graft.multimodal.MultimodalOps.dHashCapStats]]). */
+  /** Over-cap ledger for [[hamming64Pairs]] / [[hamming64IncrementalNearDups]]
+    * at the same `maxHamming` (precomputed-code form of
+    * [[graft.multimodal.MultimodalOps.dHashCapStats]]): the radius picks the
+    * same band layout the pair op joins on, so audited keys cannot drift from
+    * join keys. */
   def hamming64CapStats(df: DataFrame, idCol: String, hiCol: String, loCol: String,
-                        maxBucketSize: Int = 2000): DataFrame =
+                        maxHamming: Int = 3, maxBucketSize: Int = 2000): DataFrame = {
+    requireBucketCap(maxBucketSize)
     bandCapLedger(
       df.select(col(idCol),
-        explode(hamming64BandKeys(col(hiCol), col(loCol))).as("_band")),
+        explode(hamming64BandKeys(col(hiCol), col(loCol), maxHamming)).as("_band")),
       "_band", maxBucketSize)
-
-  /** Over-cap ledger for [[hamming64PairsWide]]'s 8×8-bit bands (same band
-    * keys by construction — audited keys cannot drift from join keys). */
-  def hamming64CapStatsWide(df: DataFrame, idCol: String, hiCol: String,
-                            loCol: String, maxBucketSize: Int = 2000): DataFrame =
-    bandCapLedger(
-      df.select(col(idCol),
-        explode(hamming64BandKeysWide(col(hiCol), col(loCol))).as("_band")),
-      "_band", maxBucketSize)
+  }
 
   /** Over-cap ledger for [[simhashNearDups]]'s 4×8-bit multi-index. */
   def simhashCapStats(df: DataFrame, idCol: String, textCol: String,
@@ -716,83 +662,18 @@ object DedupOps {
         round(col("_hit").cast("double") / col("_tot"), 6).as("contamination"))
   }
 
-  /** Connected components over an undirected near-dup edge list — the clustering step
-    * after candidate-pair generation: each document gets its component's MINIMUM id as
-    * `cluster`, so `id == cluster` selects one canonical document per duplicate
-    * cluster (the step that turns pairwise near-dups into an actual dedup decision).
+  /** Connected components over an undirected near-dup edge list — the clustering
+    * step after candidate-pair generation: each document gets its component's
+    * MINIMUM id as `cluster`, so `id == cluster` selects one canonical document
+    * per duplicate cluster (the step that turns pairwise near-dups into an actual
+    * dedup decision). Singleton documents (no near-dup pair) are their own
+    * cluster by definition and need no row.
     *
-    * Algorithm: iterative min-label propagation. Per round, every node takes the min
-    * of its own label and its neighbors' labels (one equi-join + one groupBy — two
-    * key-balanced shuffles), repeated to a fixpoint. Rounds = component diameter;
-    * near-dup clusters are shallow (most are pairs/triangles), so this converges in
-    * 2-4 rounds in practice. The FIRST round needs no join (labels are the ids
-    * themselves), so it folds into the init as a single groupBy over the edge list;
-    * each later round carries the previous label through its groupBy so convergence
-    * is read from a one-row `sum(lbl != own)` aggregate over the round's label table —
-    * the SAME job that materializes the round's lazy `localCheckpoint(false)`, so each
-    * round costs exactly one job and no data collect. `maxIter` bounds pathological
-    * chains; components wider than that still get consistent (if unconverged) labels,
-    * and a production run on adversarial graphs would switch to large-star/small-star
-    * for O(log n) rounds. The per-round checkpoint is load-bearing: persist alone
-    * caches the DATA but not the PLAN — the union+join both reference the previous
-    * round, so the uncheckpointed logical plan doubles per round and planning itself
-    * goes exponential by ~10 rounds. Checkpointing truncates lineage to O(1) per
-    * round (a cluster job would use reliable `checkpoint` to survive executor loss).
-    *
-    * Returns (id, cluster) for every node that appears in `edges`; singleton documents
-    * (no near-dup pair) are their own cluster by definition and need no row. */
-  def connectedComponents(edges: DataFrame, id1: String = "id1", id2: String = "id2",
-                          maxIter: Int = 20): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // repartition by src BEFORE distinct: hash(src) co-locates equal (src,dst) rows,
-    // so the distinct is partition-local (no extra shuffle), the init groupBy(src) is
-    // partition-local, and every round's join on src reuses the cached partitioning —
-    // one setup shuffle buys zero e-side exchanges for the whole loop.
-    val e = edges.select(col(id1).as("src"), col(id2).as("dst"))
-      .union(edges.select(col(id2).as("src"), col(id1).as("dst")))
-      .repartition(col("src"))
-      .distinct()
-      .persist(lvl)
-    // round 1 fused into init: label = min(id, min(neighbors)), one groupBy, no join
-    var labels = e.groupBy(col("src").as("id"))
-      .agg(least(col("src"), min(col("dst"))).as("lbl"))
-      .localCheckpoint(true)
-    var converged = false
-    var iter = 1
-    while (!converged && iter < maxIter) {
-      val lblType = labels.schema("lbl").dataType
-      val msgs = e.join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("lbl"), lit(null).cast(lblType).as("own"))
-      // LAZY checkpoint + one full-scan aggregate: the agg action materializes the
-      // checkpoint AND returns the changed-label count in the same job (the former
-      // eager-checkpoint + filter/limit/count pair was two jobs per round — pure
-      // driver/job overhead on converging graphs).
-      val next = labels.select(col("id"), col("lbl"), col("lbl").as("own"))
-        .unionByName(msgs)
-        .groupBy(col("id")).agg(min(col("lbl")).as("lbl"), max(col("own")).as("own"))
-        .localCheckpoint(false)
-      val changed = next.agg(
-        sum(when(col("lbl") =!= col("own"), 1L).otherwise(0L))).first().getLong(0)
-      labels.unpersist()
-      labels = next.drop("own")
-      converged = changed == 0
-      iter += 1
-    }
-    e.unpersist()
-    if (!converged)
-      System.err.println(s"[graft] connectedComponents: NOT converged after $maxIter " +
-        "rounds — a component's diameter exceeds maxIter; labels are consistent but " +
-        "not minimal. Raise maxIter or switch to large-star/small-star.")
-    labels.select(col("id"), col("lbl").as("cluster"))
-  }
-
-  /** Connected components by alternating LARGE-STAR / SMALL-STAR contraction — the
-    * adversarial-graph production path that [[connectedComponents]]'s scaladoc
-    * promises (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14): label propagation needs diameter-many rounds (a 10M-node chain is
-    * 10M rounds), star contraction converges in O(log² n) — in practice a handful —
-    * regardless of diameter, with every round the same two key-balanced
-    * groupBy shuffles.
+    * Algorithm: alternating LARGE-STAR / SMALL-STAR contraction (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14). Label propagation
+    * needs diameter-many rounds (a 10M-node chain is 10M rounds); star
+    * contraction converges in O(log² n) — in practice a handful — regardless of
+    * diameter, with every round the same two key-balanced groupBy shuffles.
     *
     *  - large-star: every node u links each STRICTLY LARGER neighbor to the minimum
     *    of its closed neighborhood m(u) = min(N(u) ∪ u) — operates on both edge
@@ -804,18 +685,15 @@ object DedupOps {
     * is a forest of stars whose centers are the component minima, read out as
     * (id, cluster) directly from the final edge list. Convergence is detected by an
     * (edge-count, xxhash64-sum) pair computed in the SAME job that materializes each
-    * round's lazy checkpoint — O(1) driver data, no collect. Per-round
-    * `localCheckpoint` bounds lineage exactly as in [[connectedComponents]].
+    * round's lazy checkpoint — O(1) driver data, no collect. The per-round
+    * `localCheckpoint` is load-bearing: persist alone caches the DATA but not the
+    * PLAN, so an uncheckpointed iterate's plan grows every round.
     *
-    * Output contract is identical to [[connectedComponents]] (same oracle applies):
-    * (id, cluster = component minimum) for every node appearing in `edges`.
-    * StarCcSpec pins equality with the label-propagation path on chain / star /
-    * random graphs; d7s runs it against d7's recursive-CTE DuckDB oracle.
-    *
-    * THIS IS THE PRODUCTION DEFAULT (r11 head-to-head adjudication, SCALE.md):
-    * at 10x star wins 5.8 s vs 7.9 s, at 100x it wins 84.8 s vs 321.9 s —
-    * the pipeline consumers (pipe3, d18) use it; label propagation remains as
-    * the independently-benchmarked d7 variant and the parity reference. */
+    * Output: (id, cluster = component minimum) for every node appearing in
+    * `edges`. StarCcSpec pins equality with a label-propagation reference on
+    * chain / star / random graphs; d7 and d7s run it against a recursive-CTE
+    * DuckDB oracle. Star contraction won the r11 head-to-head against label
+    * propagation (SCALE.md): 5.8 s vs 7.9 s at 10x, 84.8 s vs 321.9 s at 100x. */
   def connectedComponentsStar(edges: DataFrame, id1: String = "id1", id2: String = "id2",
                               maxIter: Int = 30): DataFrame = {
     // neighborhood-min links for one star round. `bidir`: large-star sees both
@@ -1014,7 +892,7 @@ object DedupOps {
           .otherwise(array_join(
             filter(col("_toks"), (t, i) => !array_contains(col("_drop"), i)), " "))
           .as(textCol),
-        coalesce(size(col("_drop")), lit(0)).cast("long")
+        when(col("_drop").isNull, lit(0L)).otherwise(size(col("_drop")).cast("long"))
           .as("n_tokens_dropped"))
   }
 
@@ -1044,30 +922,6 @@ object DedupOps {
       df.select(col(idCol), col(vecCol))
         .withColumn("_cell", graft.ann.AnnOps.ivfAssign(col(vecCol), centroids)),
       idCol, vecCol, threshold, maxCellSize)
-
-  /** [[semanticDedup]] with the centroids as a TABLE instead of a plan
-    * literal — the large-k production path. At k = ceil(sqrt(n)) and n ~ 1e10,
-    * literal centroids are ~1e5 x dim doubles embedded in every stage's task
-    * binary; here they ride ONE broadcast and assignment is a
-    * broadcast-nested-loop score + partial-aggregated argmax (the exchange
-    * carries one (id, best) row per vector, never the n x k score table).
-    * Output is pinned equal to the literal path in DedupAnnSpec.
-    *
-    * @param centroidsDf (cid: int, centroid: array<double>), k rows */
-  def semanticDedupByTable(df: DataFrame, idCol: String, vecCol: String,
-                           centroidsDf: DataFrame, threshold: Double,
-                           maxCellSize: Int = 10000): DataFrame =
-    semanticDedupCore(
-      ivfAssignByJoin(df.select(col(idCol), col(vecCol)), idCol, vecCol, centroidsDf),
-      idCol, vecCol, threshold, maxCellSize)
-
-  /** IVF cell assignment against a centroid TABLE — forwarder to
-    * [[graft.ann.AnnOps.ivfAssignByJoin]] (moved in r15 so the table-form
-    * k-means trainer and this assignment share ONE implementation; kept here
-    * for API stability). */
-  def ivfAssignByJoin(vecs: DataFrame, idCol: String, vecCol: String,
-                      centroidsDf: DataFrame): DataFrame =
-    graft.ann.AnnOps.ivfAssignByJoin(vecs, idCol, vecCol, centroidsDf)
 
   private def semanticDedupCore(assigned: DataFrame, idCol: String,
                                 vecCol: String, threshold: Double,
@@ -1105,14 +959,16 @@ object DedupOps {
     *
     * Above `tableAssignK` centroids, BOTH training and cell assignment switch
     * from plan-embedded centroids to the table form
-    * ([[graft.ann.AnnOps.kmeansTrainTable]] + [[semanticDedupByTable]]'s
-    * broadcast join): at k = ceil(sqrt(1e10)) = 1e5, centroids-in-the-plan
-    * means ~1e5 x dim doubles serialized into every stage's task binary —
-    * and for TRAINING, re-ANALYZED as plan literals every iteration, which
-    * dies long before the data does — while the table form ships them once
-    * as a broadcast per round. The two trainers and the two assignment paths
-    * are output-pinned bit-identical in DedupAnnSpec, so the switch moves
-    * cost shape only, never results. */
+    * ([[graft.ann.AnnOps.kmeansTrainTable]] +
+    * [[graft.ann.AnnOps.ivfAssignByJoin]]'s broadcast join): at
+    * k = ceil(sqrt(1e10)) = 1e5, centroids-in-the-plan means ~1e5 x dim
+    * doubles serialized into every stage's task binary — and for TRAINING,
+    * re-ANALYZED as plan literals every iteration, which dies long before the
+    * data does — while the table form ships them once as a broadcast per
+    * round. The two trainers and the two assignment paths are output-pinned
+    * bit-identical in DedupAnnSpec, so the switch moves cost shape only,
+    * never results. Either way the ONE assignment table feeds both the stats
+    * row and the pair stage. */
   def semanticDedupAuto(df: DataFrame, idCol: String, vecCol: String,
                         threshold: Double, trainIters: Int = 3,
                         cellOverflowFactor: Double = 20.0,
@@ -1123,14 +979,8 @@ object DedupOps {
     // cap = overflow x the expected sqrt(n) cell size: generous enough that a
     // healthy distribution never trips it, tight enough to confine the quadratic
     val cap = math.max(64, (cellOverflowFactor * math.sqrt(n.toDouble)).toInt)
-    val useTable = k > tableAssignK
-    // above the threshold BOTH training and assignment take the table form
-    // (r15, VERDICT r14): the literal trainer embeds k x dim centroids into
-    // every iteration's plan — at k = ceil(sqrt(n)) plan analysis dies long
-    // before data does. The two trainers are output-pinned bit-identical
-    // (DedupAnnSpec), so the switch moves cost shape only, never results.
-    val (assigned, centroidsOrNull, centroidsDfOrNull) =
-      if (useTable) {
+    val assigned =
+      if (k > tableAssignK) {
         val initW = Window.orderBy(col(idCol))
         val initDf = vecs.orderBy(col(idCol)).limit(k)
           .select((row_number().over(initW) - 1).cast("int").as("cid"),
@@ -1138,7 +988,7 @@ object DedupOps {
         val dim = vecs.select(size(col(vecCol)).as("_d")).head.getInt(0)
         val centroidsDf = graft.ann.AnnOps.kmeansTrainTable(
           vecs, idCol, vecCol, initDf, dim, trainIters)
-        (ivfAssignByJoin(vecs, idCol, vecCol, centroidsDf), null, centroidsDf)
+        graft.ann.AnnOps.ivfAssignByJoin(vecs, idCol, vecCol, centroidsDf)
       } else {
         val init = vecs.orderBy(col(idCol)).limit(k)
           .select(col(vecCol).cast("array<double>")).collect()
@@ -1146,20 +996,15 @@ object DedupOps {
         val centroids = graft.ann.AnnOps.kmeansTrain(
           vecs.select(col(vecCol).cast("array<double>").as(vecCol)),
           vecCol, init, trainIters)
-        (vecs.withColumn("_cell",
-          graft.ann.AnnOps.ivfAssign(col(vecCol), centroids)), centroids, null)
+        vecs.withColumn("_cell", graft.ann.AnnOps.ivfAssign(col(vecCol), centroids))
       }
-    val sized = assigned
+    val stats = assigned
       .withColumn("_csz", count(lit(1)).over(Window.partitionBy(col("_cell"))))
-    val stats = sized
       .agg(count(lit(1)).as("n"),
         count_distinct(when(col("_csz") > cap, col("_cell"))).as("n_cells_capped"),
         sum(when(col("_csz") > cap, 1L).otherwise(0L)).as("n_vecs_excluded"))
       .withColumn("k", lit(k))
-    val dropped =
-      if (useTable)
-        semanticDedupByTable(df, idCol, vecCol, centroidsDfOrNull, threshold, cap)
-      else semanticDedup(df, idCol, vecCol, centroidsOrNull, threshold, cap)
+    val dropped = semanticDedupCore(assigned, idCol, vecCol, threshold, cap)
     (dropped, stats)
   }
 
@@ -1267,7 +1112,7 @@ object DedupOps {
   }
 
   /** Quality-aware cluster resolution (the FineWeb/Gopher curation rule): given
-    * near-dup clusters (e.g. [[connectedComponents]] output `(id, cluster)`) and
+    * near-dup clusters (e.g. [[connectedComponentsStar]] output `(id, cluster)`) and
     * a per-document quality score, keep the HIGHEST-quality member of each
     * cluster instead of the lowest id — dedup should discard the mirror with the
     * ads, not the original. Ties break on the lower id (deterministic).

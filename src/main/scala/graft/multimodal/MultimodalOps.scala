@@ -1465,11 +1465,6 @@ object MultimodalOps {
     })
   }
 
-  /** Pre-r7 name for [[resize]] (the image path is no longer a stub). */
-  @deprecated("use resize", "r7")
-  def resizeStub(ds: Dataset[MediaRow], stride: Int)
-                (implicit spark: SparkSession): Dataset[MediaRow] = resize(ds, stride)
-
   /** DataFrame-level entry: attach byte features to any (id, binary) pair without the
     * typed API -- for SQL-facing pipelines. */
   def withByteFeatures(df: DataFrame, idCol: String, binCol: String)
@@ -1517,9 +1512,10 @@ object MultimodalOps {
   }
 
   /** Perceptual near-duplicate image pairs over a gray-raster column: dHash +
-    * multi-index Hamming banding (4×16-bit bands; the pigeonhole guarantee —
-    * hamming ≤ 3 leaves at least one band untouched, so recall is EXACT at the
-    * default radius) + exact Hamming verify via `bit_count(xor)`. The d6
+    * multi-index Hamming banding ([[graft.dedup.DedupOps.hamming64Pairs]]:
+    * 4×16-bit bands at the default radius 3, 8×8-bit up to 7; the pigeonhole
+    * guarantee leaves at least one band untouched, so recall is EXACT) + exact
+    * Hamming verify via `bit_count(xor)`. The d6
     * simhash chassis on the image code: one shuffle on band keys, bucket-size
     * cap reports nothing all-pairs, candidate verify runs inside buckets.
     *
@@ -1543,7 +1539,7 @@ object MultimodalOps {
         .select(col(idCol), col("_dh.hi").as("_hi"), col("_dh.lo").as("_lo")),
       idCol, "_hi", "_lo", maxHamming, maxBucketSize)
 
-  /** Over-cap ledger for [[dHashNearDups]]'s 4×16-bit bands (the
+  /** Over-cap ledger for [[dHashNearDups]]'s bands at the default radius (the
     * [[graft.dedup.DedupOps.bandCapLedger]] "no silent caps" contract):
     * reports how many band buckets the pair op dropped and how many members
     * they held — a constant-color image corpus would otherwise silently
@@ -1553,7 +1549,7 @@ object MultimodalOps {
     val dh = dHash(col(grayCol))
     graft.dedup.DedupOps.hamming64CapStats(
       df.select(col(idCol), dh.getField("hi").as("_hi"), dh.getField("lo").as("_lo")),
-      idCol, "_hi", "_lo", maxBucketSize)
+      idCol, "_hi", "_lo", maxBucketSize = maxBucketSize)
   }
 
   /** REAL image on-ramp for [[dHashNearDups]]: payload → decode (PNG fast path
@@ -1584,9 +1580,9 @@ object MultimodalOps {
   /** pHash (DCT perceptual hash) of a 32×32 row-major gray raster — the
     * industry-standard robust image hash (pHash.org's shape): unlike dHash's
     * local gradients, the low-frequency DCT spectrum survives re-encodes,
-    * mild blur, and resampling, so pHash codes feed the WIDE Hamming chassis
-    * ([[graft.dedup.DedupOps.hamming64PairsWide]], radius ≤ 7) at the
-    * distances real re-encodes produce.
+    * mild blur, and resampling, so pHash codes feed the Hamming chassis at
+    * the wide radius ([[graft.dedup.DedupOps.hamming64Pairs]] with
+    * `maxHamming` up to 7) at the distances real re-encodes produce.
     *
     * Fixed, engine-portable evaluation order (the SQL oracle replays it
     * fold-for-fold; floats never reassociate):
@@ -1776,9 +1772,10 @@ object MultimodalOps {
     * sharing most keyframe codes are duplicates; re-encodes, resolution
     * twins, trims): a CALLER-SUPPLIED [[videoKeyframeHashes]] table →
     * banded-Hamming keyframe pairs across DIFFERENT videos (the
-    * [[graft.dedup.DedupOps.hamming64Pairs]] 4×16 chassis inlined so video
-    * identity rides the bucket records; same pigeonhole-exact recall at
-    * hamming ≤ 3) → video-level roll-up: per ordered video pair, how many of
+    * [[graft.dedup.DedupOps.hamming64Pairs]] chassis inlined so video
+    * identity rides the bucket records; same radius-selected
+    * [[graft.dedup.DedupOps.hamming64BandKeys]] and pigeonhole-exact recall
+    * at hamming ≤ 7) → video-level roll-up: per ordered video pair, how many of
     * each side's keyframes found a partner, similarity = matched keyframes /
     * total keyframes across both sides (symmetric), kept at ≥ `minSim`.
     *
@@ -1796,12 +1793,10 @@ object MultimodalOps {
   def videoNearDupsFromKeyframes(kf: DataFrame,
                     maxHamming: Int = 3, maxBucketSize: Int = 2000,
                     minSim: Double = 0.5): DataFrame = {
-    require(maxHamming <= 3,
-      "4x16-bit banding guarantees recall only for maxHamming <= 3")
     val nkf = kf.groupBy(col("id")).agg(count(lit(1)).as("nkf"))
     val pairs = kf
       .select(struct(col("id"), col("frame_idx"), col("hi"), col("lo")).as("_rec"),
-        explode(graft.dedup.DedupOps.hamming64BandKeys(col("hi"), col("lo")))
+        explode(graft.dedup.DedupOps.hamming64BandKeys(col("hi"), col("lo"), maxHamming))
           .as("_band"))
       .groupBy(col("_band")).agg(collect_list(col("_rec")).as("_recs"))
       .filter(size(col("_recs")).between(2, maxBucketSize))

@@ -29,9 +29,9 @@ object CleanOps {
     df.filter(col(latCol).between(latLo, latHi) && col(lonCol).between(lonLo, lonHi))
 
   /** P4 — point-in-polygon membership (ray casting) for stations passing the bbox
-    * prefilter (`qaqc_wholestation.py:231-267`). Polygon is tiny → evaluated as a scalar
-    * UDF over broadcast vertices; call on the *stations* dim table (15k rows), never on
-    * observations, then semi-join. */
+    * prefilter (`qaqc_wholestation.py:231-267`), as a plain Scala predicate: the
+    * parity reference for the native [[graft.expr.PointInPolygon]] expression that
+    * [[filterInPolygon]] wires in. */
   def pointInPolygon(poly: Seq[(Double, Double)]): (Double, Double) => Boolean = {
     val xs = poly.map(_._1).toArray
     val ys = poly.map(_._2).toArray
@@ -47,11 +47,6 @@ object CleanOps {
       inside
     }
   }
-
-  /** P4 (UDF form, kept for API parity — the wired path below uses the native
-    * codegen'd expression instead). */
-  def inPolygonUdf(poly: Seq[(Double, Double)]): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf(pointInPolygon(poly))
 
   /** P4 (wired) — polygon membership via the native Catalyst expression
     * (`graft.expr.PointInPolygon`, whole-stage codegen'd), applied AFTER

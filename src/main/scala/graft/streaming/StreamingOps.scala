@@ -148,14 +148,14 @@ object StreamingOps {
   }
 
   /** Streaming perceptual-code dedup — the live-feed twin of
-    * [[graft.dedup.DedupOps.hamming64IncrementalNearDups]] (and of its wide
-    * form): arriving 64-bit codes (image dHash/pHash, pooled video hash,
-    * audio energy hash) band-join the standing code CATALOG
-    * ([[codeBandTable]], built once per snapshot and persisted) and verify
-    * with exact `bit_count(xor)`. `maxHamming` ≤ 3 rides the 4×16-bit narrow
-    * bands, 4–7 the 8×8-bit wide bands — the SAME key definitions as the
-    * batch chassis, chosen identically by [[codeBandTable]], so stream and
-    * catalog keys cannot disagree. A pair meeting in several bands emits
+    * [[graft.dedup.DedupOps.hamming64IncrementalNearDups]]: arriving 64-bit
+    * codes (image dHash/pHash, pooled video hash, audio energy hash)
+    * band-join the standing code CATALOG ([[codeBandTable]], built once per
+    * snapshot and persisted) and verify with exact `bit_count(xor)`.
+    * `maxHamming` (0–7) picks the band layout through
+    * [[graft.dedup.DedupOps.hamming64BandKeys]] — the SAME key definition the
+    * batch chassis and [[codeBandTable]] use, so stream and catalog keys
+    * cannot disagree. A pair meeting in several bands emits
     * once (`dropDuplicatesWithinWatermark`); the only streaming state is
     * that watermark-bounded pair buffer. Emits every in-radius match —
     * best-match selection is the consumer's fold (a stream cannot wait for
@@ -164,14 +164,9 @@ object StreamingOps {
                       idCol: String, hiCol: String, loCol: String,
                       timeCol: String, maxHamming: Int = 3,
                       watermarkDelay: String = "1 hour"): DataFrame = {
-    import graft.dedup.DedupOps
-    require(maxHamming >= 0 && maxHamming <= 7,
-      "banding guarantees recall only for maxHamming <= 7")
-    val keys =
-      if (maxHamming <= 3) DedupOps.hamming64BandKeys(col(hiCol), col(loCol))
-      else DedupOps.hamming64BandKeysWide(col(hiCol), col(loCol))
     stream
-      .withColumn("band", explode(keys))
+      .withColumn("band", explode(
+        graft.dedup.DedupOps.hamming64BandKeys(col(hiCol), col(loCol), maxHamming)))
       .join(catalogBands, Seq("band"))
       .withColumn("hamming",
         (bit_count(col(hiCol).bitwiseXOR(col("chi"))) +
@@ -184,18 +179,14 @@ object StreamingOps {
   }
 
   /** The standing code-catalog band table [[codeDedupStream]] joins against:
-    * one row per (catalog code, band key). `maxHamming` selects the SAME
-    * narrow/wide key definition the stream side uses — build and serve with
-    * the same radius class. */
+    * one row per (catalog code, band key). `maxHamming` (0–7) selects the
+    * SAME band layout the stream side uses — build and serve with the same
+    * radius class. */
   def codeBandTable(catalog: DataFrame, idCol: String, hiCol: String,
                     loCol: String, maxHamming: Int = 3): DataFrame = {
-    import graft.dedup.DedupOps
-    require(maxHamming >= 0 && maxHamming <= 7,
-      "banding guarantees recall only for maxHamming <= 7")
-    val keys =
-      if (maxHamming <= 3) DedupOps.hamming64BandKeys(col(hiCol), col(loCol))
-      else DedupOps.hamming64BandKeysWide(col(hiCol), col(loCol))
-    catalog.select(col(idCol).as("cid"), explode(keys).as("band"),
+    catalog.select(col(idCol).as("cid"),
+      explode(graft.dedup.DedupOps.hamming64BandKeys(col(hiCol), col(loCol), maxHamming))
+        .as("band"),
       col(hiCol).as("chi"), col(loCol).as("clo"))
   }
 

@@ -1215,6 +1215,10 @@ object TextOps {
   def bm25Retrieve(docs: DataFrame, idCol: String, textCol: String,
                    queries: DataFrame, qidCol: String, qTextCol: String,
                    k: Int = 3, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    // outside these ranges `_contrib` overflows its decimal(8,6) and, with ANSI
+    // off, silently becomes NULL
+    require(k >= 1 && k1 >= 0 && b >= 0 && b <= 1,
+      s"bm25Retrieve needs k >= 1, k1 >= 0 and 0 <= b <= 1, got k=$k k1=$k1 b=$b")
     val tk = tokens(lower(col(textCol)))
     // corpus stats: one narrow scan into a 1-row aggregate, no wide shuffle.
     // Token-less docs are excluded (they carry no postings) so n_docs/avgdl

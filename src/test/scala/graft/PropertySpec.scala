@@ -124,10 +124,10 @@ class PropertySpec extends SparkSpec {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val expected = parent.keys.map(x => x -> find(x)).toMap
-      val got = graft.dedup.DedupOps
-        .connectedComponents(edges.toDF("id1", "id2"), maxIter = 40)
-        .as[(Long, Long)].collect().toMap
-      assert(got == expected)
+      val df = edges.toDF("id1", "id2")
+      for (cc <- Seq(graft.dedup.DedupOps.connectedComponentsStar(df),
+          graft.dedup.LabelPropagation.connectedComponents(df, maxIter = 40)))
+        assert(cc.as[(Long, Long)].collect().toMap == expected)
     }
   }
 

@@ -1,0 +1,35 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps hand-copied scaffolding out of `src/main`: sessions are built only in
+  * [[GraftSession]], and the Hamming chassis has one entry per operator (the
+  * band layout follows `maxHamming`, so no `…Wide` twin is needed). */
+class ScaffoldingSpec extends AnyFunSuite {
+  private val sources: Seq[(Path, String)] = {
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
+    finally walk.close()
+  }
+
+  test("SparkSession.builder() appears only in GraftSession.scala") {
+    assert(sources.exists(_._1.endsWith("GraftSession.scala")), "scan found no sources")
+    val offenders = sources.collect {
+      case (p, text) if text.contains("SparkSession.builder()") &&
+        !p.endsWith("GraftSession.scala") => p.toString
+    }
+    assert(offenders.isEmpty, s"build sessions with GraftSession.builder(): $offenders")
+  }
+
+  test("no hamming64 ...Wide twin is defined") {
+    val wide = "def\\s+hamming64\\w*Wide\\b".r
+    val offenders = sources.collect {
+      case (p, text) if wide.findFirstIn(text).nonEmpty => p.toString
+    }
+    assert(offenders.isEmpty, s"the band layout follows maxHamming: $offenders")
+  }
+}

@@ -7,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSession {
   lazy val spark: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expr.GraftExtensions")
+    val s = GraftSession.builder()
       // bucketed-table tests saveAsTable; keep the warehouse + metastore out of
       // the repo working tree
       .config("spark.sql.warehouse.dir", wh)

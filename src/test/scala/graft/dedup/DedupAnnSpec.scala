@@ -189,17 +189,19 @@ class DedupAnnSpec extends SparkSpec {
     // components: {1,2,3} (triangle), {10,11,12,13} (chain), {20,21} (pair)
     val edges = Seq((2L, 1L), (2L, 3L), (1L, 3L), (11L, 10L), (12L, 11L),
       (13L, 12L), (21L, 20L)).toDF("id1", "id2")
-    val got = DedupOps.connectedComponents(edges).as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
-      12L -> 10L, 13L -> 10L, 20L -> 20L, 21L -> 20L))
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
+      12L -> 10L, 13L -> 10L, 20L -> 20L, 21L -> 20L)
+    assert(DedupOps.connectedComponentsStar(edges).as[(Long, Long)].collect().toMap == want)
+    assert(LabelPropagation.connectedComponents(edges).as[(Long, Long)].collect().toMap == want)
   }
 
   test("connected components converge on a long chain within maxIter") {
     import spark.implicits._
-    // a 12-node path: worst-case diameter for label propagation
+    // a 12-node path: worst-case diameter for the label-propagation reference
     val edges = (1L until 12L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val got = DedupOps.connectedComponents(edges).as[(Long, Long)].collect().toMap
-    assert(got.size == 12 && got.values.forall(_ == 1L))
+    for (got <- Seq(DedupOps.connectedComponentsStar(edges),
+        LabelPropagation.connectedComponents(edges)).map(_.as[(Long, Long)].collect().toMap))
+      assert(got.size == 12 && got.values.forall(_ == 1L))
   }
 
   test("decontaminate drops normalized matches against the reference set") {
@@ -534,7 +536,7 @@ class DedupAnnSpec extends SparkSpec {
     assert(s2.getAs[Long]("n_cells_capped") > 0L)
   }
 
-  test("semanticDedupByTable == literal-centroid semanticDedup; auto switches above tableAssignK") {
+  test("semanticDedupAuto: table assignment == literal, same output") {
     val rng = new scala.util.Random(67)
     val base = (1L to 220L).map(i => (i, Seq.fill(16)(rng.nextGaussian())))
     val twins = base.take(18).map { case (i, v) => (i + 1000L, v.map(_ * 1.0007)) }
@@ -542,15 +544,10 @@ class DedupAnnSpec extends SparkSpec {
     val init = base.take(9).map(_._2)
     val cents = AnnOps.kmeansTrain(df, "v", init, iters = 2)
     val centsDf = cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cid", "centroid")
-    val lit = DedupOps.semanticDedup(df, "vid", "v", cents, threshold = 0.999)
-      .orderBy("vid").collect().toSeq
-    val tab = DedupOps.semanticDedupByTable(df, "vid", "v", centsDf, threshold = 0.999)
-      .orderBy("vid").collect().toSeq
-    assert(lit == tab, "table-assign path must match the literal path exactly")
     // assignment parity directly, including ties-to-higher-cid determinism
     val aLit = df.select(col("vid"),
       AnnOps.ivfAssign(col("v"), cents).as("_cell"))
-    val aTab = DedupOps.ivfAssignByJoin(df, "vid", "v", centsDf).select("vid", "_cell")
+    val aTab = AnnOps.ivfAssignByJoin(df, "vid", "v", centsDf).select("vid", "_cell")
     assert(aLit.exceptAll(aTab).count() == 0 && aTab.exceptAll(aLit).count() == 0)
     // auto: forcing the table path (tableAssignK = 1 < k) keeps output identical
     // to the literal path (tableAssignK huge)
@@ -781,8 +778,8 @@ class DedupAnnSpec extends SparkSpec {
     assert(want.exists(_._3 == 3L), "fixture must include a radius-3 pair")
   }
 
-  test("hamming64PairsWide: banded candidates == brute force at radius <= 7 (pigeonhole, r15)") {
-    // the radius-0..4 harness extended to the wide chassis: 200 random codes
+  test("hamming64Pairs at radius 7: 8x8 bands == brute force (pigeonhole)") {
+    // the radius-0..4 harness extended to the wide layout: 200 random codes
     // + planted near-pairs at every radius 0..8 — 8x8-bit banding must find
     // EXACTLY the all-pairs <= 7 set (the radius-8 plant proves the verify
     // filter, not the bands, draws the line)
@@ -798,7 +795,7 @@ class DedupAnnSpec extends SparkSpec {
       .select($"id",
         expr("shiftright(code, 32)").bitwiseAND(lit(0xffffffffL)).as("hi"),
         $"code".bitwiseAND(lit(0xffffffffL)).as("lo"))
-    val got = DedupOps.hamming64PairsWide(df, "id", "hi", "lo")
+    val got = DedupOps.hamming64Pairs(df, "id", "hi", "lo", maxHamming = 7)
       .as[(Long, Long, Long)].collect().toSet
     val want = (for {
       a <- all; b <- all if a._1 < b._1
@@ -807,25 +804,65 @@ class DedupAnnSpec extends SparkSpec {
     } yield (a._1, b._1, h.toLong)).toSet
     assert(got == want, s"got ${got.size}, want ${want.size}")
     assert(want.exists(_._3 == 7L), "fixture must include a radius-7 pair")
-    assert(DedupOps.hamming64PairsWide(df, "id", "hi", "lo", maxHamming = 4)
+    assert(DedupOps.hamming64Pairs(df, "id", "hi", "lo", maxHamming = 4)
       .as[(Long, Long, Long)].collect().toSet == want.filter(_._3 <= 4))
-    intercept[IllegalArgumentException] {
-      DedupOps.hamming64PairsWide(df, "id", "hi", "lo", maxHamming = 8)
+    // out-of-range radius or cap is rejected loudly on every chassis entry,
+    // never answered with an empty pair set
+    for (h <- Seq(-1, 8)) {
+      intercept[IllegalArgumentException](DedupOps.hamming64Pairs(df, "id", "hi", "lo", h))
+      intercept[IllegalArgumentException](
+        DedupOps.hamming64IncrementalNearDups(df, df, "id", "hi", "lo", h))
+      intercept[IllegalArgumentException](DedupOps.hamming64CapStats(df, "id", "hi", "lo", h))
+      intercept[IllegalArgumentException](DedupOps.hamming64BandKeys($"hi", $"lo", h))
+      intercept[IllegalArgumentException](
+        graft.streaming.StreamingOps.codeBandTable(df, "id", "hi", "lo", h))
+      intercept[IllegalArgumentException](
+        graft.streaming.StreamingOps.codeDedupStream(df, df, "id", "hi", "lo", "id", h))
+    }
+    for (cap <- Seq(0, 1)) {
+      intercept[IllegalArgumentException](
+        DedupOps.hamming64Pairs(df, "id", "hi", "lo", maxBucketSize = cap))
+      intercept[IllegalArgumentException](
+        DedupOps.hamming64IncrementalNearDups(df, df, "id", "hi", "lo", maxBucketSize = cap))
+      intercept[IllegalArgumentException](
+        DedupOps.hamming64CapStats(df, "id", "hi", "lo", maxBucketSize = cap))
     }
   }
 
-  test("hamming64CapStatsWide: audits the same 8x8 band keys the wide pair op drops (r15)") {
+  test("hamming64CapStats at radius 7 audits the 8x8 band keys the pair op drops") {
     // 5 items share code 0 -> every one of the 8 bands has a 5-member bucket;
     // at cap 4 the pair op must drop ALL pairs and the ledger must report
     // exactly 8 capped buckets x 5 members
     import spark.implicits._
     val df = (0L until 5L).map(i => (i, 0L, 0L)).toDF("id", "hi", "lo")
-    assert(DedupOps.hamming64PairsWide(df, "id", "hi", "lo",
+    assert(DedupOps.hamming64Pairs(df, "id", "hi", "lo", maxHamming = 7,
       maxBucketSize = 4).count() == 0L)
-    val led = DedupOps.hamming64CapStatsWide(df, "id", "hi", "lo", maxBucketSize = 4)
-      .collect().head
+    val led = DedupOps.hamming64CapStats(df, "id", "hi", "lo", maxHamming = 7,
+      maxBucketSize = 4).collect().head
     assert(led.getAs[Long]("n_buckets_capped") == 8L, led.toString)
     assert(led.getAs[Long]("n_members_excluded") == 40L, led.toString)
+  }
+
+  test("hamming64 band layout follows the radius: 4x16 up to 3, 8x8 above") {
+    // 5 identical codes at cap 4: the ledger counts one over-cap bucket per
+    // band, so the bucket and member totals read off the layout the pair op
+    // joins on at that radius
+    val df = (0L until 5L).map(i => (i, 0L, 0L)).toDF("id", "hi", "lo")
+    def ledger(h: Int) = {
+      val r = DedupOps.hamming64CapStats(df, "id", "hi", "lo", maxHamming = h,
+        maxBucketSize = 4).collect().head
+      (r.getAs[Long]("n_buckets_capped"), r.getAs[Long]("n_members_excluded"))
+    }
+    assert(ledger(3) == ((4L, 20L)))
+    assert(ledger(7) == ((8L, 40L)))
+    // the default radius emits exactly the four 16-bit keys (the plan pipe8
+    // and mm7 run): bands lo[0:16], lo[16:32], hi[0:16], hi[16:32]
+    val code = Seq((0x12345678L, 0x9abcdef0L)).toDF("hi", "lo")
+    val keys = code.select(DedupOps.hamming64BandKeys($"hi", $"lo")).head.getSeq[String](0)
+    assert(keys == Seq(s"0:${0xdef0}", s"1:${0x9abc}", s"2:${0x5678}", s"3:${0x1234}"))
+    val wide = code.select(DedupOps.hamming64BandKeys($"hi", $"lo", 7)).head.getSeq[String](0)
+    assert(wide == Seq(0xf0, 0xde, 0xbc, 0x9a, 0x78, 0x56, 0x34, 0x12)
+      .zipWithIndex.map { case (v, b) => s"$b:$v" })
   }
 
   test("hamming64IncrementalNearDups: new items only, best match, d19's new-new rule (r14)") {
@@ -848,7 +885,7 @@ class DedupAnnSpec extends SparkSpec {
     assert(!out.contains(10L) && !out.contains(11L), "corpus rows must not emit")
   }
 
-  test("hamming64IncrementalNearDupsWide: banded == brute best-match at radius <= 6 (r15)") {
+  test("hamming64IncrementalNearDups at radius 6: banded == brute best-match") {
     // 200 random codes + plants at every radius 0..8, every 10th id the new
     // drop: the wide banding must reproduce the brute-force incremental
     // contract exactly at radius 6 (4-10 is where real re-encodes land; the
@@ -865,7 +902,7 @@ class DedupAnnSpec extends SparkSpec {
       .select($"id",
         expr("shiftright(code, 32)").bitwiseAND(lit(0xffffffffL)).as("hi"),
         $"code".bitwiseAND(lit(0xffffffffL)).as("lo"))
-    val got = DedupOps.hamming64IncrementalNearDupsWide(
+    val got = DedupOps.hamming64IncrementalNearDups(
         df.filter($"id" % 10 =!= 0), df.filter($"id" % 10 === 0),
         "id", "hi", "lo", maxHamming = 6)
       .as[(Long, Long, Long, Boolean)].collect()
@@ -886,10 +923,6 @@ class DedupAnnSpec extends SparkSpec {
     }.toMap
     assert(got == want, s"got ${got.size}, want ${want.size}")
     assert(want.exists(_._2._2 >= 4L), "fixture must exercise the wide radius")
-    intercept[IllegalArgumentException] {
-      DedupOps.hamming64IncrementalNearDupsWide(df, df, "id", "hi", "lo",
-        maxHamming = 8)
-    }
   }
 
   test("sqTopK: scores are the exact integer-fold expansion; planted neighbor ranks 1 (r15)") {

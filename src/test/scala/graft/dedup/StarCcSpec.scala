@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkSpec
 
 /** Large-star/small-star connected components: same (id, cluster) contract as the
-  * label-propagation path, pinned by equality on graph shapes that stress each
+  * [[LabelPropagation]] reference, pinned by equality on graph shapes that stress each
   * algorithm differently — a long chain is ADVERSARIAL for label propagation
   * (diameter rounds) and easy for star contraction; dense random graphs and star
   * forests exercise the contraction's rewiring invariants. */
@@ -12,7 +12,7 @@ class StarCcSpec extends SparkSpec {
   import spark.implicits._
 
   private def cc(edges: DataFrame): Set[(Long, Long)] =
-    DedupOps.connectedComponents(edges, maxIter = 200)
+    LabelPropagation.connectedComponents(edges, maxIter = 200)
       .as[(Long, Long)].collect().toSet
 
   private def ccStar(edges: DataFrame): Set[(Long, Long)] =

@@ -148,11 +148,11 @@ class MultimodalSpec extends SparkSpec {
 
   test("resize stub decimates payload and records provenance") {
     val ds = Seq(media(1, "image", Array.tabulate(10)(_.toByte))).toDS()
-    val out = resizeStub(ds, 4).collect().head
+    val out = resize(ds, 4).collect().head
     assert(out.payload.toSeq == Seq[Byte](0, 4, 8)) // ceil(10/4)=3, every 4th byte
     assert(out.meta("resize_stride") == "4" && out.meta("orig_bytes") == "10")
     // stride 1 is identity on the payload
-    val id = resizeStub(ds, 1).collect().head
+    val id = resize(ds, 1).collect().head
     assert(id.payload.toSeq == Array.tabulate(10)(_.toByte).toSeq)
   }
 

@@ -361,6 +361,21 @@ class TextOpsSpec extends SparkSpec {
     assert(!out.map(_.getLong(1)).contains(3L))
   }
 
+  test("bm25Retrieve rejects parameters that would overflow the score decimal") {
+    import spark.implicits._
+    // outside k >= 1, k1 >= 0, 0 <= b <= 1 the per-posting contribution
+    // overflows decimal(8,6), which with ANSI off is a silent NULL score
+    val docs = Seq((1L, "alpha beta")).toDF("id", "text")
+    val qs = Seq((10L, "alpha")).toDF("qid", "qtext")
+    def run(k: Int = 3, k1: Double = 1.2, b: Double = 0.75) =
+      TextOps.bm25Retrieve(docs, "id", "text", qs, "qid", "qtext", k, k1, b)
+    intercept[IllegalArgumentException](run(b = 1.5))
+    intercept[IllegalArgumentException](run(b = -0.1))
+    intercept[IllegalArgumentException](run(k1 = -1))
+    intercept[IllegalArgumentException](run(k = 0))
+    assert(run(k1 = 0, b = 1).count() == 1L)
+  }
+
   test("bm25Retrieve plan: query sides broadcast; corpus crosses one wide shuffle") {
     import spark.implicits._
     val docs = (1 to 50).map(i => (i.toLong, s"alpha beta word$i tail")).toDF("id", "text")
