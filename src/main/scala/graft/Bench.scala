@@ -1,5 +1,139 @@
 package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, render}
+
+/** Times every selected query and records what each one cost.
+  *
+  * `runMain graft.Bench [query…]` runs the named queries (default: all) at
+  * `SPARK_GRAFT_SF_DIR` and prints two JSON lines: the full per-query map and
+  * a compact totals line. The full line plus a per-query `detail` record goes
+  * to `bench_<cpus>c.json` (or `SPARK_GRAFT_BENCH_OUT`), each query's final
+  * plan to the `.plans.txt` file beside it. A/B two code shapes by running
+  * the same query list on both commits. */
 object Bench {
+
+  /** Resources of one rep: executor CPU, task run time and GC; input, shuffle
+    * and spill MiB; the jobs and stages it ran and the sum of the jobs' wall
+    * times (the rep's wall minus `jobWallS` is driver time between jobs); and
+    * the Exchange, SortMergeJoin and BroadcastHashJoin counts of the final plan
+    * of every action it ran. */
+  final case class Detail(cpuS: Double, runS: Double, gcS: Double, inputMb: Double,
+      shuffleReadMb: Double, shuffleWriteMb: Double, spillMb: Double,
+      jobs: Int, stages: Int, jobWallS: Double, exchanges: Int, smj: Int, bhj: Int)
+
+  /** One benched query: the min over successful reps (over all reps when none
+    * succeeded), the first rep's time, the first error (a failure is REPORTED,
+    * never folded into the total as a fast run: round-1 bug, 9 crashed queries
+    * looked like 0.1 s wins), and the [[Detail]] and final plan of the min rep. */
+  final case class Result(name: String, sec: Double, coldSec: Double,
+      error: Option[String], detail: Detail, plan: String)
+
+  /** Sums the listener events of one rep; registered once for a whole run. */
+  private final class Recorder(spark: SparkSession)
+      extends SparkListener with QueryExecutionListener {
+    private var cpuNs, runMs, gcMs, inputB, readB, writeB, spillB, jobMs = 0L
+    private var jobs, stages, exchanges, smj, bhj = 0
+    private var lastPlan: Option[SparkPlan] = None
+    private val jobStart = mutable.Map.empty[Int, Long]
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      Option(e.taskMetrics).foreach { m =>
+        cpuNs += m.executorCpuTime; runMs += m.executorRunTime; gcMs += m.jvmGCTime
+        inputB += m.inputMetrics.bytesRead
+        readB += m.shuffleReadMetrics.totalBytesRead
+        writeB += m.shuffleWriteMetrics.bytesWritten
+        spillB += m.diskBytesSpilled
+      }
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized { stages += 1 }
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobStart(e.jobId) = e.time }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobs += 1
+      jobStart.remove(e.jobId).foreach(t => jobMs += e.time - t)
+    }
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = synchronized {
+      val ops = nodes(qe.executedPlan)
+      exchanges += ops.count(_.isInstanceOf[Exchange])
+      smj += ops.count(_.isInstanceOf[SortMergeJoinExec])
+      bhj += ops.count(_.isInstanceOf[BroadcastHashJoinExec])
+      lastPlan = Some(qe.executedPlan)
+    }
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+
+    /** Waits for every pending event, then returns what was summed since the
+      * previous call and the last action's final plan, and starts from zero. */
+    def take(): (Detail, String) = {
+      GraftSqlBridge.drainListenerBus(spark.sparkContext)
+      synchronized {
+        val mib = 1048576.0
+        val d = Detail(cpuNs / 1e9, runMs / 1e3, gcMs / 1e3, inputB / mib, readB / mib,
+          writeB / mib, spillB / mib, jobs, stages, jobMs / 1e3, exchanges, smj, bhj)
+        val plan = lastPlan.fold("") {
+          case a: AdaptiveSparkPlanExec => a.executedPlan.treeString
+          case p => p.treeString
+        }
+        cpuNs = 0; runMs = 0; gcMs = 0; inputB = 0; readB = 0; writeB = 0; spillB = 0; jobMs = 0
+        jobs = 0; stages = 0; exchanges = 0; smj = 0; bhj = 0; lastPlan = None
+        (d, plan)
+      }
+    }
+  }
+
+  /** Every operator of a plan, looking through adaptive wrappers, query stages
+    * and subqueries. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => nodes(s.plan)
+    case o => o +: (o.children ++ o.subqueries).flatMap(nodes)
+  }
+
+  /** Runs each query `reps` times, in name order, under the repeat protocol
+    * described at `reps` in [[main]]. */
+  def run(spark: SparkSession, sfDir: String,
+          queries: Map[String, (SparkSession, String) => DataFrame], reps: Int): Seq[Result] = {
+    val recorder = new Recorder(spark)
+    spark.sparkContext.addSparkListener(recorder)
+    spark.listenerManager.register(recorder)
+    recorder.take() // drop the events of work done before this run
+    try queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val runs = (1 to reps).map { _ =>
+        val t0 = System.nanoTime()
+        val err =
+          try { fn(spark, sfDir).count(); None }
+          catch { case e: Throwable => Some(e.getClass.getSimpleName) }
+        val sec = (System.nanoTime() - t0) / 1e9
+        // queries that pin intermediates (LSH signature tables, pipeline stages) must
+        // not hold memory against later queries — each rep is timed self-contained
+        spark.catalog.clearCache()
+        (sec, err, recorder.take())
+      }
+      // min over SUCCESSFUL reps only: a rep that throws records its (short)
+      // time-to-exception, which must not become the headline min for a query
+      // that still counts as failed (ADVICE r7).
+      val (okMin, okErr, (detail, plan)) =
+        runs.filter(_._2.isEmpty).minByOption(_._1).getOrElse(runs.minBy(_._1))
+      Result(name, okMin, runs.head._1, runs.flatMap(_._2).headOption, detail,
+        okErr.fold(plan)(e => s"(failed: $e)"))
+    } finally {
+      spark.listenerManager.unregister(recorder)
+      spark.sparkContext.removeSparkListener(recorder)
+    }
+  }
+
+  private def f3(v: Double): JValue = JDecimal(BigDecimal(f"$v%.3f"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
@@ -11,16 +145,7 @@ object Bench {
       spark.range(1000).selectExpr("sum(id)").collect()
       spark.read.parquet(s"$sfDir/nation.parquet").count()
     } catch { case _: Throwable => () }
-    // (name, seconds, errorOrNull): failures are REPORTED, never silently folded
-    // into the total as fast runs (round-1 bug: 9 crashed queries looked like 0.1s wins).
-    // args, when given, select a query subset (scale smokes bench the heavy tail only).
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else {
-        val unknown = args.toSet -- SparkEntry.queries.keySet
-        require(unknown.isEmpty, s"unknown queries: $unknown")
-        SparkEntry.queries.view.filterKeys(args.toSet).toMap
-      }
+    val selected = SparkEntry.selectQueries(args.toSeq)
     // Repeat protocol (r7): each query runs `reps` times in-process with the Spark
     // cache cleared between runs, so rep 1 is "cold" (fresh plans + parquet footers,
     // but a warmed JVM) and later reps are "warm" (JIT + OS page cache). The headline
@@ -29,55 +154,45 @@ object Bench {
     // rep, not all, so min-of-reps is the stable plan-cost signal, and the cold/warm
     // pair in the output makes noise adjudication mechanical instead of forensic.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt max 1
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val err =
-          try { fn(spark, sfDir).count(); None }
-          catch { case e: Throwable => Some(e.getClass.getSimpleName) }
-        val sec = (System.nanoTime() - t0) / 1e9
-        // queries that pin intermediates (LSH signature tables, pipeline stages) must
-        // not hold memory against later queries — each rep is timed self-contained
-        spark.catalog.clearCache()
-        (sec, err)
-      }
-      // min over SUCCESSFUL reps only: a rep that throws records its (short)
-      // time-to-exception, which must not become the headline min for a query
-      // that still counts as failed (ADVICE r7).
-      val okMin = runs.filter(_._2.isEmpty).map(_._1).minOption.getOrElse(runs.map(_._1).min)
-      (name, okMin, runs.head._1, runs.flatMap(_._2).headOption)
-    }
-    def jmap(kv: Seq[(String, Double)]): String =
-      kv.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    val qs = jmap(results.map { case (k, v, _, _) => k -> v })
-    val cold = jmap(results.map { case (k, _, c, _) => k -> c })
-    val errs = results.collect { case (k, _, _, Some(e)) => "\"" + k + "\":\"" + e + "\"" }
-      .mkString("{", ",", "}")
-    val nFailed = results.count(_._4.isDefined)
-    val total = results.map(_._2).sum
-    val totalCold = results.map(_._3).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cold":$cold,"total_cold":$totalCold,"reps":$reps,"errors":$errs,"failed":$nFailed,"sf":"$sfDir"}"""
-    println(line)
-    // r16 measurement-contract hardening (VERDICT r15 items 3/5, additions only —
-    // the timing protocol above is untouched): the full line is ~6 KB at 198
-    // queries and the driver's stdout-tail capture front-truncated it in BOTH
+    val results = run(spark, sfDir, selected, reps)
+    def perQuery(f: Result => JValue): JObject = JObject(results.map(r => r.name -> f(r)): _*)
+    val nFailed = results.count(_.error.isDefined)
+    val total = results.map(_.sec).sum
+    val totalCold = results.map(_.coldSec).sum
+    val full = List(
+      "metric" -> JString("total"), "value" -> JDouble(total), "unit" -> JString("sec"),
+      "queries" -> perQuery(r => f3(r.sec)), "cold" -> perQuery(r => f3(r.coldSec)),
+      "total_cold" -> JDouble(totalCold), "reps" -> JInt(reps),
+      "errors" -> JObject(results.flatMap(r => r.error.map(e => r.name -> JString(e))): _*),
+      "failed" -> JInt(nFailed), "sf" -> JString(sfDir))
+    println(compact(render(JObject(full))))
+    // r16 measurement-contract hardening (VERDICT r15 items 3/5): the full line is
+    // ~6 KB at 198 queries and a captured stdout tail front-truncated it in BOTH
     // r14 and r15 (PERF_r15 "parsed": null despite rc=0). A second, compact
     // totals-only line fits any 4 KB tail so the headline survives truncation.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"failed":$nFailed,"n":${results.size},"cpus":$cpus,"sf":"$sfDir"}""")
-    // ALSO persist the full per-query map: the driver's captured stdout tail has
-    // truncated mid-JSON before (BENCH_r10 parsed: null), which made round-over-
-    // round per-query diffs depend on BASELINE.md prose instead of an artifact.
-    // r16: default filename is keyed on the core count so the driver's 32-core
-    // and 8-core runs no longer overwrite each other (bench_last.json kept as a
-    // compat copy; SPARK_GRAFT_BENCH_OUT still overrides).
-    def writeOut(path: String): Unit =
-      try {
-        java.nio.file.Files.write(java.nio.file.Paths.get(path),
-          line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      } catch { case e: Exception => System.err.println(s"$path write failed: $e") }
+    println(compact(render(JObject(
+      "metric" -> JString("total"), "value" -> JDouble(total), "unit" -> JString("sec"),
+      "reps" -> JInt(reps), "failed" -> JInt(nFailed), "n" -> JInt(results.size),
+      "cpus" -> JInt(cpus.toInt), "sf" -> JString(sfDir)))))
+    // ALSO persist the full per-query map plus the per-query detail record: a
+    // captured stdout tail has truncated mid-JSON before (BENCH_r10 parsed:
+    // null). The default filename is keyed on the core count so runs on different
+    // core counts do not overwrite each other (bench_last.json kept as a compat
+    // copy; SPARK_GRAFT_BENCH_OUT still overrides). Each query's final plan goes
+    // to the .plans.txt file beside the JSON.
+    val detail = perQuery(r => Extraction.decompose(r.detail)(DefaultFormats).snakizeKeys)
+    val json = compact(render(JObject(full :+ ("detail" -> detail))))
+    val plans = results.map(r => s"=== ${r.name} ===\n${r.plan}\n").mkString
+    def writeOut(path: String, text: String): Unit =
+      try Files.writeString(Paths.get(path), text)
+      catch { case e: Exception => System.err.println(s"$path write failed: $e") }
+    def writeWithPlans(path: String): Unit = {
+      writeOut(path, json)
+      writeOut(path.stripSuffix(".json") + ".plans.txt", plans)
+    }
     sys.env.get("SPARK_GRAFT_BENCH_OUT") match {
-      case Some(out) => writeOut(out)
-      case None => writeOut(s"bench_${cpus}c.json"); writeOut("bench_last.json")
+      case Some(out) => writeWithPlans(out)
+      case None => writeWithPlans(s"bench_${cpus}c.json"); writeOut("bench_last.json", json)
     }
     spark.stop()
     if (nFailed > 0) sys.exit(1)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a graft `SparkSession` is configured. Every entry point
-  * (`Bench`, `Verify`, the dev probes, the test session) starts from
+  * (`Bench`, `Verify`, the test session) starts from
   * [[builder]], adds only what is its own, and calls `getOrCreate()`. */
 object GraftSession {
 

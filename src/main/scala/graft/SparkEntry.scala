@@ -92,6 +92,15 @@ object SparkEntry {
     QueriesCore.queries ++ QueriesSeries.queries ++ QueriesLlm.queries ++
       QueriesPipeline.queries ++ QueriesClean.queries ++ QueriesEval.queries ++ base
 
+  /** The named subset of [[queries]]; no names selects all of them. An unknown
+    * name is rejected, so a typo cannot silently run nothing. */
+  def selectQueries(names: Seq[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val unknown = names.toSet -- all.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    if (names.isEmpty) all else all.view.filterKeys(names.toSet).toMap
+  }
+
   private def base: Map[String, (SparkSession, String) => DataFrame] = Map(
     // J1: star-schema equi-join with broadcast dims (SURVEY §2.3 J1)
     "j1_revenue_by_nation" -> ((s, dir) => {

@@ -1378,7 +1378,13 @@ object MultimodalOps {
     * as a `window_rms IS NOT NULL` filter). Callers explode `frames` to
     * recover the videoGrayRasters row shape; both downstream channels are
     * bit-identical because every decode call and kernel is shared — only the
-    * number of container walks changes (2 → 1). */
+    * number of container walks changes (2 → 1).
+    *
+    * Memory: one output row holds ALL sampled frames of a video, each frame
+    * (hashW+1)·hashH ints (72 at the 8×8 default), plus one double per
+    * `windowSamples`-sample audio window, so a row grows with the video's
+    * length (frame count / `stride`, and soundtrack duration), not just with
+    * the raster size. The bounded one-row-per-frame shape is ROADMAP item 5c. */
   def videoAvRasters(ds: Dataset[MediaRow], stride: Int = 1,
                      hashW: Int = 8, hashH: Int = 8, windowSamples: Int = 256)
                     (implicit spark: SparkSession): DataFrame = {

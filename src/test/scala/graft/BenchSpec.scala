@@ -1,0 +1,49 @@
+package graft
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** `Bench.run` at sf0.001: the per-query record is filled from the rep it
+  * belongs to, and a query that throws is reported as failed. */
+class BenchSpec extends SparkSpec {
+  private type Query = (SparkSession, String) => DataFrame
+
+  // One rep each, in name order, so `k_one_job` runs right after j1. The slow
+  // listener holds back every later event on the shared listener queue: a
+  // record taken without waiting for the queue would put j1's late events in
+  // k_one_job's rep.
+  private lazy val results: Map[String, Bench.Result] = {
+    val slow = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = Thread.sleep(100)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try Bench.run(spark, "/root/testdata/sf0.001",
+      Map[String, Query](
+        "j1_revenue_by_nation" -> SparkEntry.queries("j1_revenue_by_nation"),
+        "k_one_job" -> ((s, _) => s.range(0, 5, 1, 1).toDF()),
+        "z_throws" -> ((_, _) => throw new IllegalStateException("injected"))),
+      reps = 1).map(r => r.name -> r).toMap
+    finally spark.sparkContext.removeSparkListener(slow)
+  }
+
+  test("j1's record counts its CPU, jobs, stages, exchanges and broadcast joins") {
+    val j1 = results("j1_revenue_by_nation")
+    assert(j1.error.isEmpty)
+    val d = j1.detail
+    assert(d.cpuS > 0 && d.jobs >= 1 && d.stages >= 1 && d.exchanges >= 1 && d.bhj >= 1, d)
+    assert(j1.plan.contains("BroadcastHashJoin"), j1.plan)
+  }
+
+  test("a query that throws is reported as an error, not as a fast success") {
+    val z = results("z_throws")
+    assert(z.error.contains("IllegalStateException"))
+    assert(z.plan.startsWith("(failed"), z.plan)
+  }
+
+  test("a rep's record holds no events of the rep before it") {
+    val k = results("k_one_job")
+    assert(k.error.isEmpty)
+    val d = k.detail
+    assert(d.jobs == 1 && d.stages == 1 && d.exchanges == 0 && d.bhj == 0 && d.smj == 0, d)
+  }
+}

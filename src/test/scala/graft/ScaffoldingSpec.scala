@@ -5,8 +5,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps hand-copied scaffolding out of `src/main`: sessions are built only in
-  * [[GraftSession]], and the Hamming chassis has one entry per operator (the
-  * band layout follows `maxHamming`, so no `…Wide` twin is needed). */
+  * [[GraftSession]], the only entry points are `Bench` and `Verify`, and the
+  * Hamming chassis has one entry per operator (the band layout follows
+  * `maxHamming`, so no `…Wide` twin is needed). */
 class ScaffoldingSpec extends AnyFunSuite {
   private val sources: Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")
@@ -23,6 +24,15 @@ class ScaffoldingSpec extends AnyFunSuite {
         !p.endsWith("GraftSession.scala") => p.toString
     }
     assert(offenders.isEmpty, s"build sessions with GraftSession.builder(): $offenders")
+  }
+
+  test("def main is defined only in Bench.scala and Verify.scala") {
+    val entry = "def\\s+main\\s*\\(".r
+    val mains = sources.collect {
+      case (p, text) if entry.findFirstIn(text).nonEmpty => p.getFileName.toString
+    }
+    assert(mains.sorted == Seq("Bench.scala", "Verify.scala"),
+      s"measure with Bench, A/B by running it on two commits: $mains")
   }
 
   test("no hamming64 ...Wide twin is defined") {

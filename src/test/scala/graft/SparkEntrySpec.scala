@@ -74,4 +74,12 @@ class SparkEntrySpec extends SparkSpec {
     val orphan = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphan.isEmpty, s"orphan oracles: $orphan")
   }
+
+  test("selectQueries rejects an unknown name, naming it") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selectQueries(Seq("e10_bm25", "e10_bm52")))
+    assert(e.getMessage.contains("e10_bm52") && !e.getMessage.contains("e10_bm25"), e.getMessage)
+    assert(SparkEntry.selectQueries(Seq("e10_bm25")).keySet == Set("e10_bm25"))
+    assert(SparkEntry.selectQueries(Nil).keySet == SparkEntry.queries.keySet)
+  }
 }
