@@ -186,9 +186,9 @@ object QueriesSeries {
       // (a spike would not) and opens a distribution gap for the scan to find
       // hourly cadence first (the reference's obs granularity): the chain then runs
       // over ~720 points per series instead of re-evaluating heavy windows on raw rows
-      // the hourly aggregate and the low-passed series are each consumed twice
-      // (aggregate + join-back); pinning them stops the chain re-deriving the whole
-      // upstream plan per consumer (unpinned: 24 parquet re-scans of events)
+      // the hourly aggregate (under the Butterworth join-back) and the low-passed
+      // series are each consumed twice; pinning them stops the chain re-deriving the
+      // whole upstream plan per consumer
       val e = t(s, dir, "events")
         .withColumn("value",
           col("value") + when(col("event_type") === "click" &&
@@ -197,8 +197,8 @@ object QueriesSeries {
         .agg(avg(col("value")).as("v"))
         .withColumn("hr", hour(col("tsh")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eager population (r15, the mm10 lesson): the anomaly's stats side and
-      // its join-back are concurrent AQE jobs — lazy, both re-ran the hourly agg
+      // eager population (r15, the mm10 lesson): the low-pass's two sides are
+      // concurrent AQE jobs — lazy, both re-ran the hourly agg
       e.count()
       val std = AggOps.standardizedAnomaly(e, Seq("event_type", "hr"), "v", "std_anom")
       val interp = SeriesOps.interpolateLinear(std, Seq("event_type"), "tsh", "std_anom", "std_i")
@@ -234,8 +234,7 @@ object QueriesSeries {
       implicit val sp: SparkSession = s
       val e = t(s, dir, "events").withColumn("hr", hour(col("ts")))
       // the standardized table feeds both the per-group Gaussian fit and the row-level
-      // flag join; pin it so the anomaly join-back is computed once (unpinned: 12
-      // parquet re-scans of events)
+      // flag join; pin it so the anomaly is computed once
       val std = AggOps.standardizedAnomaly(e, Seq("event_type", "hr"), "value", "std_anom")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // eager population (r15, the mm10 lesson): the Gaussian fit and the

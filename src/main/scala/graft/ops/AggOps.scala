@@ -94,35 +94,41 @@ object AggOps {
       .drop("_suspect", "_season", "bin")
   }
 
-  /** A6 — winsorized mean: clip at the group's p05/p95 then average — two-pass
-    * percentile + clip, no UDAF (`qaqc_climatological_outlier.py:105-120`). */
-  def winsorizedMean(df: DataFrame, keys: Seq[String], valueCol: String,
-                     pLo: Double = 0.05, pHi: Double = 0.95, out: String = "wmean"): DataFrame = {
-    val kc = keys.map(col)
-    val bounds = df.groupBy(kc: _*).agg(
-      expr(s"percentile($valueCol, $pLo)").as("_lo"),
-      expr(s"percentile($valueCol, $pHi)").as("_hi"))
-    df.join(bounds, keys)
-      .withColumn("_clipped", least(greatest(col(valueCol), col("_lo")), col("_hi")))
-      .groupBy(kc: _*).agg(avg("_clipped").as(out))
+  /** The A6/A7 clip: `valueCol` clipped to its group's [`pLo`, `pHi`] percentiles, as
+    * `_clipped`. The bounds are window aggregates over the group — the group shuffle,
+    * no join-back. Rows with a null key are dropped, as an inner join-back drops them.
+    * (A null value clips to the lower bound: `greatest` skips nulls.) */
+  private def winsorClip(df: DataFrame, keys: Seq[String], valueCol: String,
+                         pLo: Double, pHi: Double): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+    def pctl(p: Double): Column = expr(s"percentile($valueCol, $p)").over(w)
+    df.filter(SeriesOps.keysNotNull(keys))
+      .withColumn("_clipped", least(greatest(col(valueCol), pctl(pLo)), pctl(pHi)))
   }
 
+  /** A6 — winsorized mean: clip at the group's p05/p95 then average, one row per
+    * group — percentile window + clip + groupBy, no UDAF
+    * (`qaqc_climatological_outlier.py:105-120`). One shuffle on `keys`. */
+  def winsorizedMean(df: DataFrame, keys: Seq[String], valueCol: String,
+                     pLo: Double = 0.05, pHi: Double = 0.95, out: String = "wmean"): DataFrame =
+    winsorClip(df, keys, valueCol, pLo, pHi)
+      .groupBy(keys.map(col): _*).agg(avg("_clipped").as(out))
+
   /** A7 — anomaly standardization against the winsorized climatology
-    * (`qaqc_climatological_outlier.py:105-145`): anom = v − winsorizedMean(keys);
-    * std = anom / max(IQR(anom), 1.5), both per key group. Two aggregation join-backs,
-    * keys are (station, month, hour)-shaped so groups stay bounded. */
+    * (`qaqc_climatological_outlier.py:105-145`): anom = v − winsorized mean(keys);
+    * std = anom / max(IQR(anom), 1.5), both per key group. Every statistic is a window
+    * aggregate over the group, so the operator is one shuffle on `keys` and no join;
+    * keys are (station, month, hour)-shaped so groups stay bounded. Rows with a null
+    * key are dropped; output is the key columns, the other input columns, then `out`. */
   def standardizedAnomaly(df: DataFrame, keys: Seq[String], valueCol: String,
                           out: String): DataFrame = {
     val kc = keys.map(col)
-    val clim = winsorizedMean(df, keys, valueCol, out = "_clim")
-    val withAnom = df.join(clim, keys)
-      .withColumn("_anom", col(valueCol) - col("_clim"))
-    val iqr = withAnom.groupBy(kc: _*)
-      .agg(greatest(expr("percentile(_anom, 0.75) - percentile(_anom, 0.25)"), lit(1.5))
-        .as("_iqr"))
-    withAnom.join(iqr, keys)
-      .withColumn(out, col("_anom") / col("_iqr"))
-      .drop("_clim", "_anom", "_iqr")
+    val w = Window.partitionBy(kc: _*)
+    def pctl(p: Double): Column = expr(s"percentile(_anom, $p)").over(w)
+    val anom = col(valueCol) - avg(col("_clipped")).over(w)
+    val withAnom = winsorClip(df, keys, valueCol, 0.05, 0.95).withColumn("_anom", anom)
+    withAnom.select((SeriesOps.keysFirst(df, keys) :+
+      (col("_anom") / greatest(pctl(0.75) - pctl(0.25), lit(1.5))).as(out)): _*)
   }
 
   /** A8 — daily resample-sum with all-null-stays-null semantics

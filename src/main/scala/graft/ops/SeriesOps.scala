@@ -13,6 +13,16 @@ object SeriesOps {
   def seriesWindow(keys: Seq[String], timeCol: String): WindowSpec =
     Window.partitionBy(keys.map(col): _*).orderBy(col(timeCol))
 
+  /** True where every key column is non-null. A per-group statistic joined back on
+    * the keys never matched a null key, and the window forms keep that rule. */
+  private[ops] def keysNotNull(keys: Seq[String]): Column =
+    keys.map(col(_).isNotNull).reduce(_ && _)
+
+  /** `df`'s columns with the key columns first: the output order of a join on `keys`,
+    * kept by the operators whose statistics are window aggregates. */
+  private[ops] def keysFirst(df: DataFrame, keys: Seq[String]): Seq[Column] =
+    (keys ++ df.columns.filterNot(keys.contains)).map(col)
+
   /** W1 — first differences of value and time over the series
     * (`/root/reference/scripts/3_qaqc_data/qaqc_unusual_large_jumps.py:252-262`). */
   def withDiffs(df: DataFrame, keys: Seq[String], timeCol: String, valueCol: String,
@@ -272,17 +282,21 @@ object SeriesOps {
     * and next non-null observation (`qaqc_climatological_outlier.py:175`). Pandas
     * `interpolate(method='linear')` leaves leading nulls unfilled but forward-fills
     * trailing nulls with the last non-null value; matched exactly. Window-only:
-    * two passes of last/first over unbounded frames, no sequential kernel needed. */
+    * the last non-null walking the series forward, then backward, each over a growing
+    * frame (O(n) per series), no sequential kernel needed. The next non-null is not
+    * `first` over a frame running to the partition's end: Spark recomputes such a
+    * shrinking frame for every row, O(n²) per series. */
   def interpolateLinear(df: DataFrame, keys: Seq[String], timeCol: String, valueCol: String,
                         out: String): DataFrame = {
-    val w = seriesWindow(keys, timeCol)
-    val past = w.rowsBetween(Window.unboundedPreceding, 0)
-    val future = w.rowsBetween(0, Window.unboundedFollowing)
+    val past = seriesWindow(keys, timeCol).rowsBetween(Window.unboundedPreceding, 0)
+    // the series in reverse (DESC NULLS LAST reverses ASC NULLS FIRST)
+    val ahead = Window.partitionBy(keys.map(col): _*).orderBy(col(timeCol).desc)
+      .rowsBetween(Window.unboundedPreceding, 0)
     val t = col(timeCol).cast("double")
     val prevV = last(col(valueCol), ignoreNulls = true).over(past)
-    val nextV = first(col(valueCol), ignoreNulls = true).over(future)
+    val nextV = last(col(valueCol), ignoreNulls = true).over(ahead)
     val prevT = last(when(col(valueCol).isNotNull, t), ignoreNulls = true).over(past)
-    val nextT = first(when(col(valueCol).isNotNull, t), ignoreNulls = true).over(future)
+    val nextT = last(when(col(valueCol).isNotNull, t), ignoreNulls = true).over(ahead)
     val frac = (t - prevT) / (nextT - prevT)
     df.withColumn(out,
       when(col(valueCol).isNotNull, col(valueCol))

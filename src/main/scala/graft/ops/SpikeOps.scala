@@ -8,14 +8,15 @@ import org.apache.spark.sql.functions._
   *
   * Re-expression of `detect_spikes` + `potential_spike_check`
   * (`/root/reference/scripts/3_qaqc_data/qaqc_unusual_large_jumps.py:128-299`) as pure
-  * window expressions — no driver loop, whole-stage-codegen-able, one shuffle on the
-  * series key:
+  * window expressions — no driver loop, one shuffle and one sort on the series key:
   *
   *  1. first differences of value (null→0) and time-in-hours (null→0);
   *  2. keep rows with 0 < Δt ≤ 12 h;
   *  3. per (series, year, month): n > `minDatapoints` rows and critical value
   *     crit = ceil(`iqrThresh` × IQR(diff)) (exact percentile — group size is bounded
-  *     by one month of one station's observations, ≤ ~9k rows at 5-min cadence);
+  *     by one month of one station's observations, ≤ ~9k rows at 5-min cadence),
+  *     both window aggregates over (series, month) — a sub-partition of the series
+  *     shuffle, so no second exchange and no join-back;
   *  4. |diff| > crit marks a potential spike;
   *  5. neighbor-pattern confirmation over the FILTERED series (positional lead/lag, as
   *     the reference indexes the filtered frame):
@@ -23,6 +24,9 @@ import org.apache.spark.sql.functions._
   *     - 2-pt: sign(d)≠sign(d₊₂), |d₋₁|<½c₋₁, |d₊₁|<½c₊₁, |d₊₂|>c₊₂, |d₊₃|<½c₊₃
   *     - 1-pt: sign(d)≠sign(d₊₁), |d₋₁|<c₋₁,  |d₊₁|>c₊₁,  |d₊₂|<c₊₂
   *     A k-point spike flags rows i..i+k−1.
+  *
+  * Rows with a null key are dropped. Output: the key columns, the other input
+  * columns, then `_d`, `_dt_h`, `_crit` and `out`, for the rows kept by steps 2–3.
   *
   * Departure from the reference (documented): rows whose pattern window runs off either
   * end of the series are never spikes here; the reference's positional indexing
@@ -34,43 +38,44 @@ object SpikeOps {
                    iqrThresh: Double = 6.0, minDatapoints: Long = 50,
                    out: String = "spike"): DataFrame = {
     val kc = keys.map(col)
-    val w = Window.partitionBy(kc: _*).orderBy(col(timeCol))
+    // The month sorts ahead of the time: the same series order (the month is monotone
+    // in time), and the monthly statistics' partition (keys, month) is then a prefix
+    // of it, so every window below shares the one exchange and the one sort.
+    val ym = col("_ym")
+    val wf = Window.partitionBy(kc: _*).orderBy(ym, col(timeCol))
+    val wm = Window.partitionBy((kc :+ ym): _*)
 
-    val diffed = df
-      .withColumn("_d", coalesce(col(valueCol) - lag(col(valueCol), 1).over(w), lit(0.0)))
+    val diffed = df.filter(SeriesOps.keysNotNull(keys))
+      .withColumn("_ym", date_trunc("MONTH", col(timeCol)))
+      .withColumn("_d", coalesce(col(valueCol) - lag(col(valueCol), 1).over(wf), lit(0.0)))
       .withColumn("_dt_h",
-        coalesce((col(timeCol).cast("double") - lag(col(timeCol), 1).over(w).cast("double")) / 3600.0,
+        coalesce((col(timeCol).cast("double") - lag(col(timeCol), 1).over(wf).cast("double")) / 3600.0,
           lit(0.0)))
       .filter(col("_dt_h") > 0.0 && col("_dt_h") <= 12.0)
 
-    // per-(series, year, month) critical value; join back (group keys are a superset of
-    // the series key, so this is a partition-local aggregation after one shuffle)
-    val mkeys = keys :+ "_ym"
-    val monthly = diffed
-      .withColumn("_ym", date_trunc("MONTH", col(timeCol)))
-    val crit = monthly.groupBy(mkeys.map(col): _*)
-      .agg(count(lit(1)).as("_n"),
-        ceil(lit(iqrThresh) * expr("percentile(_d, 0.75) - percentile(_d, 0.25)")).cast("double").as("_crit"))
-    val withCrit = monthly.join(crit, mkeys)
+    def pctl(p: Double): Column = expr(s"percentile(_d, $p)").over(wm)
+    val withCrit = diffed
+      .withColumn("_n", count(lit(1)).over(wm))
+      .withColumn("_crit", ceil(lit(iqrThresh) * (pctl(0.75) - pctl(0.25))).cast("double"))
       .filter(col("_n") > minDatapoints)
 
-    // Neighbor pattern over the filtered, time-ordered series.
-    val wf = Window.partitionBy(kc: _*).orderBy(col(timeCol))
-    val d = col("_d"); val c = col("_crit")
-    def dAt(k: Int): Column = if (k < 0) lag(d, -k).over(wf) else if (k == 0) d else lead(d, k).over(wf)
-    def cAt(k: Int): Column = if (k < 0) lag(c, -k).over(wf) else if (k == 0) c else lead(c, k).over(wf)
+    // Neighbor pattern over the filtered, time-ordered series: every neighbor the three
+    // patterns read is taken once, in one select.
     // positional guard (`potential_spike_check`, qaqc_unusual_large_jumps.py:171-173):
     // the reference skips candidates at series position 1 (0-based) and in the last 4
     // positions. (At position 0 it reads diff[-1] — python wraparound to the LAST
     // element; we do not replicate that accident: a null lag fails the condition.)
-    // r15 optimization round: the former descending row_number forced WindowExec
-    // to RE-SORT every series partition in reverse purely to express
-    // "not in the last 4 positions" — position-from-end is the same integer as
-    // count-over-partition − rn + 1, and the whole-partition count rides the
-    // ascending sort all the other windows already share (one sort, not two).
-    val rnA = row_number().over(wf)
-    val rnD = count(lit(1)).over(Window.partitionBy(kc: _*)) - rnA + 1
-    val potential = abs(d) > c && rnA =!= 2 && rnD >= 5
+    // Position-from-end is count-over-partition − rn + 1, both on the ascending sort.
+    val d = col("_d"); val c = col("_crit")
+    val ahead = (1 to 4).flatMap(k =>
+      Seq(lead(d, k).over(wf).as(s"_dp$k"), lead(c, k).over(wf).as(s"_cp$k")))
+    val shifted = withCrit.select((col("*") +: lag(d, 1).over(wf).as("_dm1") +:
+      lag(c, 1).over(wf).as("_cm1") +: row_number().over(wf).as("_rnA") +:
+      count(lit(1)).over(wf.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .as("_cnt") +: ahead): _*)
+    def dAt(k: Int): Column = if (k < 0) col("_dm1") else if (k == 0) d else col(s"_dp$k")
+    def cAt(k: Int): Column = if (k < 0) col("_cm1") else if (k == 0) c else col(s"_cp$k")
+    val potential = abs(d) > c && col("_rnA") =!= 2 && col("_cnt") - col("_rnA") + 1 >= 5
 
     val spike3 = potential &&
       signum(dAt(0)) =!= signum(dAt(2)) &&
@@ -79,29 +84,28 @@ object SpikeOps {
       abs(dAt(2)) < cAt(2) * 0.5 &&
       abs(dAt(3)) > cAt(3) &&
       abs(dAt(4)) < cAt(4) * 0.5
-    val spike2 = potential && !coalesce(spike3, lit(false)) &&
+    val spike2 = potential && !col("_s3") &&
       signum(dAt(0)) =!= signum(dAt(2)) &&
       abs(dAt(-1)) < cAt(-1) * 0.5 &&
       abs(dAt(1)) < cAt(1) * 0.5 &&
       abs(dAt(2)) > cAt(2) &&
       abs(dAt(3)) < cAt(3) * 0.5
-    val spike1 = potential && !coalesce(spike3, lit(false)) && !coalesce(spike2, lit(false)) &&
+    val spike1 = potential && !col("_s3") && !col("_s2") &&
       signum(dAt(0)) =!= signum(dAt(1)) &&
       abs(dAt(-1)) < cAt(-1) &&
       abs(dAt(1)) > cAt(1) &&
       abs(dAt(2)) < cAt(2)
 
-    val marked = withCrit
-      .withColumn("_s1", coalesce(spike1, lit(false)))
-      .withColumn("_s2", coalesce(spike2, lit(false)))
+    val marked = shifted
       .withColumn("_s3", coalesce(spike3, lit(false)))
+      .withColumn("_s2", coalesce(spike2, lit(false)))
+      .withColumn("_s1", coalesce(spike1, lit(false)))
     // a k-point spike covers rows i..i+k-1 → a row is flagged if a spike started at it
     // or up to k-1 rows before it
-    marked.withColumn(out,
-      col("_s1") || col("_s2") || col("_s3") ||
-        coalesce(lag(col("_s2"), 1).over(wf), lit(false)) ||
-        coalesce(lag(col("_s3"), 1).over(wf), lit(false)) ||
-        coalesce(lag(col("_s3"), 2).over(wf), lit(false)))
-      .drop("_s1", "_s2", "_s3", "_ym", "_n")
+    val flagged = col("_s1") || col("_s2") || col("_s3") ||
+      coalesce(lag(col("_s2"), 1).over(wf), lit(false)) ||
+      coalesce(lag(col("_s3"), 1).over(wf), lit(false)) ||
+      coalesce(lag(col("_s3"), 2).over(wf), lit(false))
+    marked.select((SeriesOps.keysFirst(df, keys) ++ Seq(d, col("_dt_h"), c, flagged.as(out))): _*)
   }
 }

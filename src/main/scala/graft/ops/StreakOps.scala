@@ -23,10 +23,13 @@ object StreakOps {
     *  - spurious-streak suppression: rows of the streak must be adjacent in the
     *    PRE-minValue-filter valid series (`is_consecutive` — a min_value hole inside a
     *    run disqualifies it), enforced via a row_number taken before the filter.
-    * Returns the NON-NULL (and, when `minValue` is set, above-`minValue`) input rows
-    * with a boolean `out` column (true = member of a flagged streak); dropped rows are
-    * not returned — callers that need full-row preservation join the flag back onto
-    * the input on (keys, time), as QaqcPipeline does. */
+    * Each streak's length, time span and row-number span are window aggregates over
+    * (series, streak id), a sub-partition of the series shuffle: one exchange, no join.
+    * Returns the NON-NULL (and, when `minValue` is set, above-`minValue`) input rows,
+    * key columns first, with a boolean `out` column (true = member of a flagged
+    * streak; always false on a row with a null key); dropped rows are not returned —
+    * callers that need full-row preservation join the flag back onto the input on
+    * (keys, time), as QaqcPipeline does. */
   def straightRepeats(df: DataFrame, keys: Seq[String], timeCol: String, valueCol: String,
                       nValues: Long, nDays: Long, minValue: Option[Double] = None,
                       minSeqLen: Long = 10, out: String = "straight_streak"): DataFrame = {
@@ -42,20 +45,14 @@ object StreakOps {
     val changed = when(lag(v, 1).over(wf).isNull || lag(v, 1).over(wf) =!= v, 1).otherwise(0)
     val withSid = filtered.withColumn("_sid",
       sum(changed).over(wf.rowsBetween(Window.unboundedPreceding, 0)))
-    val gk = kc :+ col("_sid")
-    val streaks = withSid.groupBy(gk: _*).agg(
-      count(lit(1)).as("_len"),
-      min(col(timeCol)).as("_t0"), max(col(timeCol)).as("_t1"),
-      min(col("_rn")).as("_r0"), max(col("_rn")).as("_r1"))
-    val bad = streaks.filter(
-      col("_len") >= minSeqLen &&
-        (col("_len") > nValues ||
-          floor((col("_t1").cast("double") - col("_t0").cast("double")) / 86400.0) > nDays) &&
-        (col("_r1") - col("_r0") + 1 === col("_len")))
-      .select((gk :+ lit(true).as("_bad")): _*)
-    withSid.join(bad, keys :+ "_sid", "left")
-      .withColumn(out, coalesce(col("_bad"), lit(false)))
-      .drop("_sid", "_rn", "_bad")
+    val ws = Window.partitionBy((kc :+ col("_sid")): _*)
+    val t = col(timeCol)
+    val len = count(lit(1)).over(ws)
+    val bad = SeriesOps.keysNotNull(keys) && len >= minSeqLen &&
+      (len > nValues ||
+        floor((max(t).over(ws).cast("double") - min(t).over(ws).cast("double")) / 86400.0) > nDays) &&
+      (max(col("_rn")).over(ws) - min(col("_rn")).over(ws) + 1 === len)
+    withSid.select((SeriesOps.keysFirst(df, keys) :+ coalesce(bad, lit(false)).as(out)): _*)
   }
 
   /** W3 composed — straight repeats with thresholds resolved from the reference's

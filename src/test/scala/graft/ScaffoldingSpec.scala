@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps hand-copied scaffolding out of `src/main`: sessions are built only in
   * [[GraftSession]], the only entry points are `Bench` and `Verify`, and the
   * Hamming chassis has one entry per operator (the band layout follows
-  * `maxHamming`, so no `…Wide` twin is needed). */
+  * `maxHamming`, so no `…Wide` twin is needed). A window frame that runs to the
+  * partition's end starts at its beginning: Spark recomputes a frame with any other
+  * lower bound (a shrinking frame) for every row, O(n²) per partition. */
 class ScaffoldingSpec extends AnyFunSuite {
   private val sources: Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")
@@ -41,5 +43,16 @@ class ScaffoldingSpec extends AnyFunSuite {
       case (p, text) if wide.findFirstIn(text).nonEmpty => p.toString
     }
     assert(offenders.isEmpty, s"the band layout follows maxHamming: $offenders")
+  }
+
+  test("a frame running to unboundedFollowing starts at unboundedPreceding") {
+    assert(sources.exists(_._1.endsWith("SeriesOps.scala")), "scan found no sources")
+    val frame = """(?:rows|range)Between\(\s*([^,()]+?)\s*,\s*(?:[\w.]+\.)?unboundedFollowing\s*\)""".r
+    val offenders = sources.flatMap { case (p, text) =>
+      frame.findAllMatchIn(text).map(_.group(1))
+        .filterNot(_.endsWith("unboundedPreceding")).map(lower => s"$p: $lower")
+    }
+    assert(offenders.isEmpty,
+      s"shrinking frame; take the value over the reversed order instead: $offenders")
   }
 }
