@@ -261,14 +261,18 @@ object QueriesPipeline {
                   lead(d, 3) OVER w AS dp3, lead(d, 4) OVER w AS dp4,
                   lag(crit) OVER w AS cm1, lead(crit, 1) OVER w AS cp1, lead(crit, 2) OVER w AS cp2,
                   lead(crit, 3) OVER w AS cp3, lead(crit, 4) OVER w AS cp4,
-                  (ABS(d) > crit) AS pot
+                  (ABS(d) > crit) AS pot,
+                  -- position guard (qaqc_unusual_large_jumps.py:171-173): no candidate at
+                  -- the 2nd position of the filtered series or in its last four
+                  (row_number() OVER w <> 2
+                   AND COUNT(*) OVER (PARTITION BY user_id) - row_number() OVER w + 1 >= 5) AS pos_ok
                 FROM j WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
          sp AS (SELECT user_id, ts,
-                  COALESCE(pot AND sign(d) <> sign(dp2) AND abs(dm1) < 0.5*cm1 AND abs(dp1) < 0.5*cp1
+                  COALESCE(pot AND pos_ok AND sign(d) <> sign(dp2) AND abs(dm1) < 0.5*cm1 AND abs(dp1) < 0.5*cp1
                     AND abs(dp2) < 0.5*cp2 AND abs(dp3) > cp3 AND abs(dp4) < 0.5*cp4, false) AS s3a,
-                  COALESCE(pot AND sign(d) <> sign(dp2) AND abs(dm1) < 0.5*cm1 AND abs(dp1) < 0.5*cp1
+                  COALESCE(pot AND pos_ok AND sign(d) <> sign(dp2) AND abs(dm1) < 0.5*cm1 AND abs(dp1) < 0.5*cp1
                     AND abs(dp2) > cp2 AND abs(dp3) < 0.5*cp3, false) AS s2raw,
-                  COALESCE(pot AND sign(d) <> sign(dp1) AND abs(dm1) < cm1 AND abs(dp1) > cp1
+                  COALESCE(pot AND pos_ok AND sign(d) <> sign(dp1) AND abs(dm1) < cm1 AND abs(dp1) > cp1
                     AND abs(dp2) < cp2, false) AS s1raw
                 FROM x),
          sp2 AS (SELECT user_id, ts, s3a, (s2raw AND NOT s3a) AS s2a,

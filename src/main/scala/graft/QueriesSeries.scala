@@ -185,10 +185,9 @@ object QueriesSeries {
       // sustained level shift late in the record: survives the one-month low-pass
       // (a spike would not) and opens a distribution gap for the scan to find
       // hourly cadence first (the reference's obs granularity): the chain then runs
-      // over ~720 points per series instead of re-evaluating heavy windows on raw rows
-      // the hourly aggregate (under the Butterworth join-back) and the low-passed
-      // series are each consumed twice; pinning them stops the chain re-deriving the
-      // whole upstream plan per consumer
+      // over ~720 points per series instead of re-evaluating heavy windows on raw rows.
+      // Every stage reads its input once (window aggregates, a pass-through low-pass),
+      // so the chain is one plan with nothing to pin
       val e = t(s, dir, "events")
         .withColumn("value",
           col("value") + when(col("event_type") === "click" &&
@@ -196,17 +195,11 @@ object QueriesSeries {
         .groupBy(col("event_type"), date_trunc("HOUR", col("ts")).as("tsh"))
         .agg(avg(col("value")).as("v"))
         .withColumn("hr", hour(col("tsh")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eager population (r15, the mm10 lesson): the low-pass's two sides are
-      // concurrent AQE jobs — lazy, both re-ran the hourly agg
-      e.count()
       val std = AggOps.standardizedAnomaly(e, Seq("event_type", "hr"), "v", "std_anom")
       val interp = SeriesOps.interpolateLinear(std, Seq("event_type"), "tsh", "std_anom", "std_i")
         .withColumn("freq_s", lit(3600.0))
       val lp = graft.kernels.Butterworth.lowPass(interp, Seq("event_type"), "tsh",
           "std_i", "freq_s", "lp")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      lp.count() // eager: the gap scan consumes lp from concurrent jobs too
       graft.kernels.GaussGapScan.flagged(lp, Seq("event_type", "hr"), "tsh", "lp")
         .groupBy(col("event_type"), col("hr")).agg(count(lit(1)).as("n_flagged"))
     }),
@@ -233,13 +226,7 @@ object QueriesSeries {
     "w13_gauss_gap" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       val e = t(s, dir, "events").withColumn("hr", hour(col("ts")))
-      // the standardized table feeds both the per-group Gaussian fit and the row-level
-      // flag join; pin it so the anomaly is computed once
       val std = AggOps.standardizedAnomaly(e, Seq("event_type", "hr"), "value", "std_anom")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eager population (r15, the mm10 lesson): the Gaussian fit and the
-      // row-level flag join are concurrent consumers of this cache
-      std.count()
       graft.kernels.GaussGapScan.flagged(std, Seq("event_type", "hr"), "ts", "std_anom")
         .groupBy(col("event_type"), col("hr")).agg(count(lit(1)).as("n_flagged"))
     }),

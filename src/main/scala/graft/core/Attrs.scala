@@ -81,17 +81,6 @@ object AttrsTable {
         })
     } catch { case _: org.apache.spark.sql.AnalysisException => empty }
 
-  /** From a DataFrame with (scope, key, value) columns (scope "" = global). */
-  def fromDf(df: DataFrame): AttrsTable = {
-    val rows = df.select(col("scope"), col("key"), col("value")).collect()
-    val (g, v) = rows.partition(_.getString(0).isEmpty)
-    AttrsTable(
-      g.map(r => r.getString(1) -> r.getString(2)).toMap,
-      v.groupBy(_.getString(0)).map { case (vn, rs) =>
-        vn -> rs.map(r => r.getString(1) -> r.getString(2)).toMap
-      })
-  }
-
   /** The reference's standard per-variable attrs for the merged obs product —
     * `ASOSAWOS_clean.py:699-990` (one block per variable; representative keys), the
     * coordinate attrs from `MERGE_pipeline.py:358-370`. Networks add/override via

@@ -34,11 +34,6 @@ object Lookups {
     ) ++ prLike.map { case (v, hi) => Bound(v, 0.0, hi) }
   }
 
-  def worldRecordsDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    worldRecords.toDF()
-  }
-
   /** Straight-repeat streak criteria keyed by (variable, inferred value resolution):
     * a streak is flagged when it exceeds `nValues` consecutive identical values OR spans
     * more than `nDays` days; wind/precip additionally require the repeated value to be
@@ -76,11 +71,6 @@ object Lookups {
       (res, (nVal, nDay)) <- byRes.toSeq.sortBy(_._1)
     } yield StreakCriterion(v, res, nVal, nDay, hourRepeat(res), dayRepeat(res),
       minValue.get(v).flatMap(_.get(res)))
-  }
-
-  def streakCriteriaDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    streakCriteria.toDF()
   }
 
   /** Buoy disestablishment / adrift catalog

@@ -1,18 +1,19 @@
 package graft.kernels
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** W11 — first-order Butterworth low-pass over per-series standardized anomalies
   * (`/root/reference/scripts/3_qaqc_data/qaqc_climatological_outlier.py:148-177`):
   * `signal.butter(1, cutFreq, 'lp', fs=dataFreq)` + `sosfilt`, the reference's only
   * inherently-sequential kernel.
   *
-  * Spark shape: `Dataset.groupByKey(seriesKey).flatMapGroups` over the time-sorted
-  * iterator — the one operator family SQL can't express. The IIR state is two doubles;
-  * rows STREAM through the kernel (no per-station materialization), so a station's
-  * series can be arbitrarily long at 100 TB. The required secondary sort is obtained by
-  * `repartition(key).sortWithinPartitions(key, time)` before `mapPartitions`.
+  * Spark shape: one `mapPartitions` over the time-sorted rows — the one operator
+  * family SQL can't express. The IIR state is two doubles; rows STREAM through the
+  * kernel with all their columns (no per-station materialization, no join-back), so a
+  * station's series can be arbitrarily long at 100 TB. The required secondary sort is
+  * obtained by `repartition(key).sortWithinPartitions(key, time)`: one exchange.
   */
 object Butterworth {
 
@@ -49,52 +50,46 @@ object Butterworth {
   /** Distributed application: per key group, linear interpolation of the value column
     * is the caller's job (SeriesOps.interpolateLinear, as the reference interpolates
     * before filtering); here we sort within partitions by (keys, time) after a
-    * repartition on keys and stream each group through the IIR. `dataFreqSeconds` is
-    * the per-series mode of time deltas (A14) — pass the joined column name. */
+    * repartition on keys and stream each group through the IIR. `dataFreqSecondsCol`
+    * holds the per-series mode of time deltas (A14); the group's first filtered row
+    * sets its coefficients.
+    *
+    * Returns every input row and column plus `out`. A row with a null time, value or
+    * frequency passes through with a null `out` and does not advance the filter
+    * state; a repeated (keys, time) gets the previous row's output (an IIR over
+    * duplicate timestamps is ill-defined) without advancing the state. */
   def lowPass(df: DataFrame, keys: Seq[String], timeCol: String, valueCol: String,
               dataFreqSecondsCol: String, out: String,
               cutFreq: Double = OneMonthCutoffHz)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val keyCols = keys.map(col)
-    // null-safe composite key: coalesce each component so ("a", null) and ("a", "")
-    // cannot collide (concat_ws silently skips nulls), with escaped control chars so
-    // the source file stays plain text
-    val keyExpr = concat_ws("\u0001",
-      keys.map(c => coalesce(col(c).cast("string"), lit("\u0002null"))): _*)
-    val prepared = df
-      .filter(col(valueCol).isNotNull && col(dataFreqSecondsCol).isNotNull)
-      .repartition(keyCols: _*)
+    val schema = df.schema
+    val ki = keys.map(schema.fieldIndex)
+    val Seq(ti, vi, fi) = Seq(timeCol, valueCol, dataFreqSecondsCol).map(schema.fieldIndex)
+    def num(r: Row, i: Int): Double = r.get(i).asInstanceOf[Number].doubleValue
+    df.repartition(keyCols: _*)
       .sortWithinPartitions((keyCols :+ col(timeCol)): _*)
-      .select(keyExpr.as("_k"),
-        col(timeCol).cast("long").as("_t"),
-        col(valueCol).cast("double").as("_v"),
-        col(dataFreqSecondsCol).cast("double").as("_dt"))
-      .as[(String, Long, Double, Double)]
-    val filtered = prepared.mapPartitions { it =>
-      // partition is sorted by (key, time): detect group boundaries on the fly and
-      // keep only two doubles of IIR state per group — true streaming
-      var curKey: String = null
-      var c: Coeffs = null
-      var xp = 0.0; var yp = 0.0; var first = true
-      it.map { case (k, t, v, dt) =>
-        if (k != curKey) {
-          curKey = k
-          c = coeffs(cutFreq, 1.0 / dt)
-          xp = 0.0; yp = 0.0; first = true
+      .mapPartitions { it =>
+        // partition is sorted by (key, time): detect group boundaries on the fly
+        // (null-safe key equality) and keep only the IIR state per group
+        var key: Seq[Any] = null
+        var c: Coeffs = null
+        var t: Any = null
+        var xp = 0.0; var yp = 0.0
+        it.map { r =>
+          val k = ki.map(r.get)
+          if (key == null || k != key) { key = k; c = null; t = null }
+          val y: Any =
+            if (r.isNullAt(ti) || r.isNullAt(vi) || r.isNullAt(fi)) null
+            else if (c != null && r.get(ti) == t) yp
+            else {
+              val x = num(r, vi)
+              yp = if (c == null) { c = coeffs(cutFreq, 1.0 / num(r, fi)); c.b0 * x }
+                   else c.b0 * x + c.b1 * xp - c.a1 * yp
+              xp = x; t = r.get(ti)
+              yp
+            }
+          Row.fromSeq(r.toSeq :+ y)
         }
-        val y = if (first) { first = false; c.b0 * v }
-                else c.b0 * v + c.b1 * xp - c.a1 * yp
-        xp = v; yp = y
-        (k, t, y)
-      }
-    }.toDF("_k", "_t", out)
-    // join-back: dedupe the filtered side on (_k, _t) first — an IIR over duplicate
-    // timestamps is ill-defined, so duplicates share one filtered value instead of
-    // multiplying rows through the join; LEFT join so rows the kernel never saw
-    // (null value / null freq, filtered above) survive with a null `out`
-    df.withColumn("_k", keyExpr)
-      .withColumn("_t", col(timeCol).cast("long"))
-      .join(filtered.dropDuplicates("_k", "_t"), Seq("_k", "_t"), "left")
-      .drop("_k", "_t")
+      }(Encoders.row(schema.add(out, DoubleType, nullable = true)))
   }
 }

@@ -73,27 +73,4 @@ object GapOps {
   def varLengthByMonth(df: DataFrame, keys: Seq[String], timeCol: String): DataFrame =
     df.groupBy((keys.map(col) :+ month(col(timeCol)).as("month")): _*)
       .agg(countDistinct(year(col(timeCol))).as("n_years"))
-
-  /** A12b — whole-station bypass, flag 19 (`qaqc_dist_whole_stn_bypass_check`,
-    * `qaqc_utils.py:203-260`): a series is bypassed (yellow-flagged) when its best month
-    * has fewer than `minNumMonths` distinct years. Returns (keys..., bypass boolean). */
-  def stationBypass(df: DataFrame, keys: Seq[String], timeCol: String,
-                    minNumMonths: Long = 5): DataFrame =
-    varLengthByMonth(df, keys, timeCol)
-      .groupBy(keys.map(col): _*)
-      .agg((max(col("n_years")) < minNumMonths).as("bypass"))
-
-  /** A12c — per-variable monthly bypass, flag 20 (`qaqc_dist_var_bypass_check`,
-    * `qaqc_utils.py:263-293`): a variable is bypassed when all values are null or when
-    * more than `minNumMonths` (year, month) groups have a null median (no non-null
-    * values). Returns (keys..., bypass boolean). */
-  def varBypass(df: DataFrame, keys: Seq[String], timeCol: String, valueCol: String,
-                minNumMonths: Long = 5): DataFrame = {
-    val kc = keys.map(col)
-    val ym = df.groupBy((kc ++ Seq(year(col(timeCol)).as("_y"), month(col(timeCol)).as("_m"))): _*)
-      .agg(count(col(valueCol)).as("_nnn"))
-    ym.groupBy(kc: _*).agg(
-      (sum(when(col("_nnn") === 0, 1).otherwise(0)) > minNumMonths ||
-        sum(col("_nnn")) === 0).as("bypass"))
-  }
 }

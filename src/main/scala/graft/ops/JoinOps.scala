@@ -4,29 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Join operators (SURVEY.md §2.3, J1–J10). Small dimension sides are broadcast;
+/** Join operators (SURVEY.md §2.3, J2–J10; J1 is a plain broadcast join). Small dimension sides are broadcast;
   * series-local joins never shuffle more than one series' rows to a partition.
   */
 object JoinOps {
-
-  /** J1 — two-key equi-join with single-key fallback patch-in
-    * (`/root/reference/scripts/2_clean_data/ASOSAWOS_clean.py:71-138`): left join on the
-    * full key, then rows that missed are joined on the fallback key alone and coalesced. */
-  def joinWithFallback(left: DataFrame, right: DataFrame,
-                       fullKeys: Seq[String], fallbackKeys: Seq[String]): DataFrame = {
-    // No forced broadcast: the right side is a station list today but the op is
-    // generic — let AQE pick broadcast vs shuffle by observed size.
-    val full = left.join(right, fullKeys, "left")
-    val rightCols = right.columns.filterNot(fullKeys.contains)
-    val fallbackRight = right.select((fallbackKeys ++ rightCols).map(col): _*)
-      .groupBy(fallbackKeys.map(col): _*)
-      .agg(rightCols.map(c => first(col(c), ignoreNulls = true).as(s"_fb_$c")).head,
-        rightCols.map(c => first(col(c), ignoreNulls = true).as(s"_fb_$c")).tail: _*)
-    val patched = full.join(fallbackRight, fallbackKeys, "left")
-    rightCols.foldLeft(patched) { (d, c) =>
-      d.withColumn(c, coalesce(col(c), col(s"_fb_$c"))).drop(s"_fb_$c")
-    }
-  }
 
   /** J2/J6 — small-dimension metadata join (sensor heights per station,
     * `MADIS_clean.py:456-460,791-824`; units table `MADIS_clean.py:634-647`): an

@@ -45,19 +45,6 @@ object SeriesOps {
       sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0)))
   }
 
-  /** W3 — straight-repeat streak summary: per streak, length in rows and span in days;
-    * caller joins criteria and flags streaks exceeding either
-    * (`qaqc_unusual_streaks.py:573-670`). */
-  def streakStats(df: DataFrame, keys: Seq[String], timeCol: String, valueCol: String): DataFrame = {
-    val withId = withStreakId(df, keys, timeCol, valueCol)
-    withId.groupBy((keys :+ "streak_id").map(col): _*).agg(
-      first(col(valueCol)).as("value"),
-      count(lit(1)).as("n_values"),
-      min(col(timeCol)).as("start_t"),
-      max(col(timeCol)).as("end_t"),
-      ((max(col(timeCol)).cast("double") - min(col(timeCol)).cast("double")) / 86400.0).as("span_days"))
-  }
-
   /** W7 — range-frame window max: true where `valueCol` stays constant (max |dd| == 0)
     * for `rangeSeconds` ahead (dewpoint-depression 24 h check,
     * `/root/reference/scripts/3_qaqc_data/qaqc_logic_checks.py:80-151`). */

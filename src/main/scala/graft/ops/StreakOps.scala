@@ -27,32 +27,45 @@ object StreakOps {
     * (series, streak id), a sub-partition of the series shuffle: one exchange, no join.
     * Returns the NON-NULL (and, when `minValue` is set, above-`minValue`) input rows,
     * key columns first, with a boolean `out` column (true = member of a flagged
-    * streak; always false on a row with a null key); dropped rows are not returned —
-    * callers that need full-row preservation join the flag back onto the input on
-    * (keys, time), as QaqcPipeline does. */
+    * streak; always false on a row with a null key). */
   def straightRepeats(df: DataFrame, keys: Seq[String], timeCol: String, valueCol: String,
                       nValues: Long, nDays: Long, minValue: Option[Double] = None,
-                      minSeqLen: Long = 10, out: String = "straight_streak"): DataFrame = {
+                      minSeqLen: Long = 10, out: String = "straight_streak"): DataFrame =
+    body(df, keys, timeCol, valueCol, nValues, nDays, minValue, minSeqLen, lit(true), out)
+      .filter(col("_kept"))
+      .select((SeriesOps.keysFirst(df, keys) :+ col(out)): _*)
+
+  /** The row-preserving form of [[straightRepeats]] over the rows where `valid` holds:
+    * every row of `df`, with `_kept` (the row is one [[straightRepeats]] would return
+    * for `df.filter(valid)`) and `out`, which is false wherever `_kept` is. The filters
+    * are window partition keys instead — non-null and `valid` for the row number,
+    * `minValue` on top for the streaks — and one `repartition(keys)` serves every
+    * window. */
+  private[graft] def body(df: DataFrame, keys: Seq[String], timeCol: String,
+                          valueCol: String, nValues: Long, nDays: Long,
+                          minValue: Option[Double], minSeqLen: Long, valid: Column,
+                          out: String): DataFrame = {
     val kc = keys.map(col)
-    val v = col(valueCol)
-    val wAll = Window.partitionBy(kc: _*).orderBy(col(timeCol))
-    val valid = df.filter(v.isNotNull).withColumn("_rn", row_number().over(wAll))
-    val filtered = minValue match {
-      case Some(m) => valid.filter(v > m)
-      case None => valid
-    }
-    val wf = Window.partitionBy(kc: _*).orderBy(col(timeCol))
+    val v = col(valueCol); val t = col(timeCol)
+    def series(p: String) = Window.partitionBy((kc :+ col(p)): _*).orderBy(t)
+    val numbered = df.repartition(kc: _*)
+      .withColumn("_in", v.isNotNull && valid)
+      .withColumn("_rn", row_number().over(series("_in")))
+    // without `minValue` the streaks run over the row-number series and share its sort
+    val (withKept, kept) = minValue.fold((numbered, "_in"))(m =>
+      (numbered.withColumn("_kept", col("_in") && v > m), "_kept"))
+    val wf = series(kept)
     val changed = when(lag(v, 1).over(wf).isNull || lag(v, 1).over(wf) =!= v, 1).otherwise(0)
-    val withSid = filtered.withColumn("_sid",
+    val withSid = withKept.withColumn("_sid",
       sum(changed).over(wf.rowsBetween(Window.unboundedPreceding, 0)))
-    val ws = Window.partitionBy((kc :+ col("_sid")): _*)
-    val t = col(timeCol)
+    val ws = Window.partitionBy((kc ++ Seq(col(kept), col("_sid"))): _*)
     val len = count(lit(1)).over(ws)
-    val bad = SeriesOps.keysNotNull(keys) && len >= minSeqLen &&
+    val bad = col(kept) && SeriesOps.keysNotNull(keys) && len >= minSeqLen &&
       (len > nValues ||
         floor((max(t).over(ws).cast("double") - min(t).over(ws).cast("double")) / 86400.0) > nDays) &&
       (max(col("_rn")).over(ws) - min(col("_rn")).over(ws) + 1 === len)
-    withSid.select((SeriesOps.keysFirst(df, keys) :+ coalesce(bad, lit(false)).as(out)): _*)
+    withSid.select((df.columns.map(col) ++
+      Seq(col(kept).as("_kept"), coalesce(bad, lit(false)).as(out))): _*)
   }
 
   /** W3 composed — straight repeats with thresholds resolved from the reference's

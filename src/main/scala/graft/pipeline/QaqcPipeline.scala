@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{Flags, Lookups}
@@ -12,42 +12,27 @@ import graft.ops._
   * Order is SEMANTIC: later checks consume earlier flags through the `validObs`
   * predicate (`grab_valid_obs`, `qaqc_utils.py:326-378`), so stages compose as an
   * explicit `Seq[Stage]` fold — no reordering freedom — with each stage declaring the
-  * flag codes it writes. The whole pipeline stays ONE lazy Spark plan: every stage is
-  * expressions/windows/joins over the same `(station, time)`-keyed DataFrame, so
-  * Catalyst sees end-to-end column lineage. The station shuffle is NOT reused across
-  * stages: each windowed stage (spikes, straight streaks) shuffles its valid rows on
-  * the station key once — its per-group statistics are window aggregates inside that
-  * partition — and joins its flags back onto the pinned input by `(station, time)`,
-  * which AQE runs as a broadcast of the flagged rows. Measured on `pipe1` at sf0.1:
-  * 2 station exchanges per run, one per windowed stage (SCALE.md).
+  * flag codes it writes. The whole pipeline stays ONE lazy Spark plan that reads its
+  * input once. Every stage is row-preserving: the windowed stages (spikes, straight
+  * streaks) run their operator's body over all rows, with each of the reference's
+  * filters as one more window partition key, and set their flag in place — no stage
+  * filters, joins back or pins. The reference runs every check over one sorted
+  * per-station frame; here one hash exchange on the station key serves both windowed
+  * stages (the hash partitioning satisfies every window keyed on the station plus a
+  * predicate), and each further window costs a local sort (SCALE.md).
   *
   * The reference's per-station SLURM process becomes `Window.partitionBy(station)`;
   * its hard station-abort gates (P4/P5) become semi-join filters.
   */
 object QaqcPipeline {
 
-  /** One pipeline stage: a named DataFrame transform declaring the flags it writes.
-    * `pin = true` marks a stage whose transform references its input MORE THAN ONCE
-    * (aggregate + join-back self-references); [[run]] persists the input ahead of such
-    * stages. Without the pin, every self-referencing stage doubles the upstream plan
-    * tree — a 4-stage pipeline was measured re-scanning the source parquet 36x. */
-  final case class Stage(name: String, writesFlags: Seq[Int],
-                         transform: DataFrame => DataFrame, pin: Boolean = false)
+  /** One pipeline stage: a named, row-preserving DataFrame transform declaring the
+    * flags it writes. */
+  final case class Stage(name: String, writesFlags: Seq[Int], transform: DataFrame => DataFrame)
 
-  /** Fold the stages over `df`. Inputs of `pin` stages are persisted
-    * (MEMORY_AND_DISK — spills, never OOMs), which bounds plan-tree growth: each
-    * self-join reads the pinned intermediate instead of recomputing the full lineage.
-    * Pins are NOT eagerly materialized or unpersisted here — the first action fills
-    * them and the caller (or session teardown) releases them; at production scale
-    * replace pins with parquet checkpoints between stage groups, mirroring the
-    * reference's per-stage zarr materialization (`QAQC_pipeline.py:345-368`). */
+  /** Fold the stages over `df`; the result is one lazy plan over the input. */
   def run(df: DataFrame, stages: Seq[Stage]): DataFrame =
-    stages.foldLeft(df) { (d, s) =>
-      val in = if (s.pin)
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else d
-      s.transform(in)
-    }
+    stages.foldLeft(df)((d, s) => s.transform(d))
 
   /** The canonical single-variable pipeline over an obs table
     * `(station, time, v, v_eraqc)` — the reference's Part 1b → Part 2 → Part 3 order
@@ -60,39 +45,23 @@ object QaqcPipeline {
                      streakNValues: Long = 20, streakNDays: Long = 7,
                      streakMinSeqLen: Long = 10): Seq[Stage] = {
     val flag = v + "_eraqc"
+    // `body` flags only rows that pass `validObs`, so the flag lands on rows no
+    // earlier stage has flagged
+    def setFlag(df: DataFrame, body: DataFrame, code: Int): DataFrame =
+      body.withColumn(flag, when(col("_flag"), lit(code)).otherwise(col(flag)))
+        .select(df.columns.map(col): _*)
+    val valid = CleanOps.validObs(col(flag))
     Seq(
       Stage("world_record", Seq(Flags.WorldRecord),
         df => CleanOps.flagOutOfBounds(df, v, flag, lo, hi)),
       Stage("negative_values", Seq(Flags.NegativePrecip),
         df => LogicOps.flagNegative(df, v, flag)),
-      Stage("spikes", Seq(Flags.Spike), pin = true, transform = { df =>
-        val valid = df.filter(CleanOps.validObs(col(flag)) && col(v).isNotNull)
-        // rename the derived side before the self-join: same-lineage column references
-        // would otherwise resolve ambiguously and the join would never match
-        val spikes = SpikeOps.detectSpikes(valid, Seq(station), timeCol, v,
-            iqrThresh = spikeIqrThresh)
-          .filter(col("spike"))
-          .select(col(station).as("_sp_k"), col(timeCol).as("_sp_t"))
-        df.join(spikes,
-            col(station) === col("_sp_k") && col(timeCol) === col("_sp_t"), "left")
-          .withColumn(flag,
-            when(col("_sp_t").isNotNull && CleanOps.validObs(col(flag)),
-              lit(Flags.Spike).cast("int")).otherwise(col(flag)))
-          .drop("_sp_k", "_sp_t")
-      }),
-      Stage("straight_streaks", Seq(Flags.StraightStreak), pin = true, transform = { df =>
-        val valid = df.filter(CleanOps.validObs(col(flag)) && col(v).isNotNull)
-        val streaks = StreakOps.straightRepeats(valid, Seq(station), timeCol, v,
-            nValues = streakNValues, nDays = streakNDays, minSeqLen = streakMinSeqLen)
-          .filter(col("straight_streak"))
-          .select(col(station).as("_st_k"), col(timeCol).as("_st_t"))
-        df.join(streaks,
-            col(station) === col("_st_k") && col(timeCol) === col("_st_t"), "left")
-          .withColumn(flag,
-            when(col("_st_t").isNotNull && CleanOps.validObs(col(flag)),
-              lit(Flags.StraightStreak).cast("int")).otherwise(col(flag)))
-          .drop("_st_k", "_st_t")
-      }))
+      Stage("spikes", Seq(Flags.Spike), df =>
+        setFlag(df, SpikeOps.body(df, Seq(station), timeCol, v, spikeIqrThresh,
+          minDatapoints = 50, valid && col(v).isNotNull, "_flag"), Flags.Spike)),
+      Stage("straight_streaks", Seq(Flags.StraightStreak), df =>
+        setFlag(df, StreakOps.body(df, Seq(station), timeCol, v, streakNValues,
+          streakNDays, None, streakMinSeqLen, valid, "_flag"), Flags.StraightStreak)))
   }
 
   /** Part 1b sensor-height gates (flags 6–9) as an optional LEADING stage. OFF by
@@ -133,11 +102,11 @@ object QaqcPipeline {
     // [[flagCountReportByStation]] already followed). The counts table is
     // PERSISTED because the union references it twice (its own rows + the
     // total), and unpinned each reference re-evaluates the caller's whole
-    // upstream — in pipe1 that was the QAQC chain's unpinned stage-4 tail
-    // running twice. The cache is flag-cardinality (tiny at any corpus
-    // size); the bench harness clearCache releases it, library callers
-    // unpersist. coalesce keeps the empty-input total at 0 (and the column
-    // non-nullable), exactly as count() was.
+    // upstream — in pipe1 that is the whole QAQC chain running twice. The
+    // cache is flag-cardinality (tiny at any corpus size); the bench harness
+    // clearCache releases it, library callers unpersist. coalesce keeps the
+    // empty-input total at 0 (and the column non-nullable), exactly as count()
+    // was.
     val counted = df
       .withColumn("flag", coalesce(col(flagColName).cast("string"), lit("no_flag")))
       .groupBy(col("flag")).agg(count(lit(1)).as("cnt"))

@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Hamming chassis has one entry per operator (the band layout follows
   * `maxHamming`, so no `…Wide` twin is needed). A window frame that runs to the
   * partition's end starts at its beginning: Spark recomputes a frame with any other
-  * lower bound (a shrinking frame) for every row, O(n²) per partition. */
+  * lower bound (a shrinking frame) for every row, O(n²) per partition. Operators and
+  * kernels do not pin storage: a persist outlives the call, and only a session-wide
+  * cache clear frees it. */
 class ScaffoldingSpec extends AnyFunSuite {
   private val sources: Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")
@@ -54,5 +56,32 @@ class ScaffoldingSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"shrinking frame; take the value over the reversed order instead: $offenders")
+  }
+
+  test("no persist, cache or checkpoint in graft/ops, graft/kernels or QaqcPipeline") {
+    val scoped = sources.filter { case (p, _) =>
+      val f = p.toString
+      f.contains("/graft/ops/") || f.contains("/graft/kernels/") ||
+        f.endsWith("/graft/pipeline/QaqcPipeline.scala")
+    }
+    val files = scoped.map(_._1.getFileName.toString).toSet
+    assert(Set("SpikeOps.scala", "Butterworth.scala", "QaqcPipeline.scala").subsetOf(files),
+      s"scan found no sources: $files")
+    // file -> (method, reason)
+    val allowed = Map("QaqcPipeline.scala" -> ("flagCountReport",
+      "its union reads the flag counts twice (rows and total); a single-reference " +
+        "GROUPING SETS aggregate would retire this entry"))
+    def without(text: String, method: String): String = {
+      val start = text.indexOf(s"def $method(")
+      assert(start >= 0, s"allow-listed $method not found")
+      val ends = Seq("\n  def ", "\n  /**").map(text.indexOf(_, start + 1)).filter(_ >= 0)
+      text.take(start) + (if (ends.isEmpty) "" else text.drop(ends.min))
+    }
+    val pin = """persist\(|\.cache\(\)|checkpoint\(""".r
+    val offenders = scoped.flatMap { case (p, text) =>
+      val scanned = allowed.get(p.getFileName.toString).fold(text)(a => without(text, a._1))
+      pin.findAllIn(scanned).map(m => s"$p: $m")
+    }
+    assert(offenders.isEmpty, s"an operator must not pin storage it cannot release: $offenders")
   }
 }

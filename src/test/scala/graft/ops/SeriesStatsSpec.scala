@@ -83,6 +83,19 @@ class SeriesStatsSpec extends SparkSpec {
       "straight_streak:boolean:false"))
   }
 
+  test("detectSpikes skips a candidate at position 2 and in the last four positions") {
+    // the series kept by the time-step filter starts at hour 1, so position 2 is hour 2
+    // and the last four positions are hours 36-39 (`potential_spike_check`,
+    // qaqc_unusual_large_jumps.py:171-173); hour 3 is a control the guard lets through
+    def flagged(at: Int*): Seq[Timestamp] =
+      SpikeOps.detectSpikes((0 until 40).map(i =>
+          (hr(i), "a", (i % 3).toDouble + (if (at.contains(i)) 100.0 else 0.0)))
+          .toDF("t", "k", "v"), Seq("k"), "t", "v", minDatapoints = 10)
+        .filter(col("spike")).select("t").as[Timestamp].collect().toSeq
+    assert(flagged(2, 36) == Nil)
+    assert(flagged(3) == Seq(hr(3)))
+  }
+
   test("detectSpikes plans one series shuffle and no join") {
     assertOneShuffle(spikes)
   }
