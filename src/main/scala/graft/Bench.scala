@@ -8,6 +8,7 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -28,7 +29,8 @@ object Bench {
     * and spill MiB; the jobs and stages it ran and the sum of the jobs' wall
     * times (the rep's wall minus `jobWallS` is driver time between jobs); and
     * the Exchange, SortMergeJoin and BroadcastHashJoin counts of the final plan
-    * of every action it ran. */
+    * of every action it ran, with the plan behind each cached relation it read
+    * counted once. */
   final case class Detail(cpuS: Double, runS: Double, gcS: Double, inputMb: Double,
       shuffleReadMb: Double, shuffleWriteMb: Double, spillMb: Double,
       jobs: Int, stages: Int, jobWallS: Double, exchanges: Int, smj: Int, bhj: Int)
@@ -46,6 +48,9 @@ object Bench {
     private var cpuNs, runMs, gcMs, inputB, readB, writeB, spillB, jobMs = 0L
     private var jobs, stages, exchanges, smj, bhj = 0
     private var lastPlan: Option[SparkPlan] = None
+    // the plans behind cached relations that this rep has counted
+    private val cached = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
     private val jobStart = mutable.Map.empty[Int, Long]
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
@@ -64,7 +69,7 @@ object Bench {
       jobStart.remove(e.jobId).foreach(t => jobMs += e.time - t)
     }
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = synchronized {
-      val ops = nodes(qe.executedPlan)
+      val ops = nodes(qe.executedPlan, cached)
       exchanges += ops.count(_.isInstanceOf[Exchange])
       smj += ops.count(_.isInstanceOf[SortMergeJoinExec])
       bhj += ops.count(_.isInstanceOf[BroadcastHashJoinExec])
@@ -86,18 +91,25 @@ object Bench {
         }
         cpuNs = 0; runMs = 0; gcMs = 0; inputB = 0; readB = 0; writeB = 0; spillB = 0; jobMs = 0
         jobs = 0; stages = 0; exchanges = 0; smj = 0; bhj = 0; lastPlan = None
+        cached.clear()
         (d, plan)
       }
     }
   }
 
-  /** Every operator of a plan, looking through adaptive wrappers, query stages
-    * and subqueries. */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case s: QueryStageExec => nodes(s.plan)
-    case o => o +: (o.children ++ o.subqueries).flatMap(nodes)
-  }
+  /** Every operator of a plan, looking through adaptive wrappers, query stages,
+    * subqueries and the plans of cached relations; a cached relation's plan is
+    * walked only the first time it appears in `cached`, so a pinned intermediate
+    * counts once however often it is read. */
+  private def nodes(p: SparkPlan, cached: java.util.Set[SparkPlan]): Seq[SparkPlan] =
+    p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan, cached)
+      case s: QueryStageExec => nodes(s.plan, cached)
+      case m: InMemoryTableScanExec =>
+        val plan = m.relation.cachedPlan
+        m +: (if (cached.add(plan)) nodes(plan, cached) else Nil)
+      case o => o +: (o.children ++ o.subqueries).flatMap(nodes(_, cached))
+    }
 
   /** Runs each query `reps` times, in name order, under the repeat protocol
     * described at `reps` in [[main]]. */

@@ -96,25 +96,16 @@ object QaqcPipeline {
   /** A10 report off the pipeline output: flag value counts per variable, including the
     * `no_flag` and `total_obs_count` rows (`merge_eraqc_counts.py:22-84`). */
   def flagCountReport(df: DataFrame, flagColName: String): DataFrame = {
-    // r15 optimization round: the total derives from the aggregated counts,
-    // NOT a second pass over `df` — every row lands in exactly one coalesced
-    // flag group, so sum(cnt) IS count(*) (the rule
-    // [[flagCountReportByStation]] already followed). The counts table is
-    // PERSISTED because the union references it twice (its own rows + the
-    // total), and unpinned each reference re-evaluates the caller's whole
-    // upstream — in pipe1 that is the whole QAQC chain running twice. The
-    // cache is flag-cardinality (tiny at any corpus size); the bench harness
-    // clearCache releases it, library callers unpersist. coalesce keeps the
-    // empty-input total at 0 (and the column non-nullable), exactly as count()
-    // was.
+    // The total derives from the aggregated counts, NOT a second pass over
+    // `df`: every row lands in exactly one coalesced flag group, so sum(cnt) IS
+    // count(*) (the rule [[flagCountReportByStation]] already followed). The
+    // union reads the counts twice, and both branches plan the same
+    // `Exchange hashpartitioning(flag)`, which Spark reuses: the caller's
+    // upstream runs once with nothing pinned. coalesce keeps the empty-input
+    // total at 0 (and the column non-nullable), exactly as count() was.
     val counted = df
       .withColumn("flag", coalesce(col(flagColName).cast("string"), lit("no_flag")))
       .groupBy(col("flag")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager population (the mm10 lesson): the union's two branches are
-    // independent AQE stages submitted concurrently — a lazy cache would let
-    // both re-run the upstream; one count() pins it with one pass
-    counted.count()
     val total = counted.agg(coalesce(sum(col("cnt")), lit(0L)).as("cnt"))
       .withColumn("flag", lit("total_obs_count"))
       .select(col("flag"), col("cnt"))

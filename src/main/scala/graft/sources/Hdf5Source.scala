@@ -6,8 +6,6 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.types._
 
-import graft.core.AttrsTable
-
 /** S5 (netCDF-4 half) — a from-scratch HDF5 reader for the profile libhdf5
   * writes when xarray / netcdf4-python saves a clean-stage station `.nc`
   * without `format='NETCDF3_CLASSIC'` (`/root/reference/scripts/2_clean_data/
@@ -40,6 +38,9 @@ import graft.core.AttrsTable
   * fill-value matches and NaNs -> null, strings null-trimmed; attributes
   * render as strings (numeric lists space-joined). netCDF-4 "phony" dimension
   * datasets (attr NAME starting "This is a netCDF dimension") are dropped.
+  * This module only parses bytes: the decoded variables become [[StationData]]
+  * through [[StationRuns.fromNetcdf]], and [[NcSource]]'s distributed entries
+  * on the [[StationRuns]] chassis read HDF5 files as well as classic ones.
   */
 object Hdf5Source {
 
@@ -59,34 +60,14 @@ object Hdf5Source {
   private final case class DtVlenStr(size: Int) extends Dt // element on disk = 16 bytes
   private final case class DtOpaque(size: Int, cls: Int) extends Dt // refs etc: skipped
 
-  final case class H5Var(name: String, spark: DataType, dtypeStr: String,
-                         values: Array[Any], attrs: Map[String, String])
-
   // ------------------------------------------------------------------ reader
 
-  /** Decode one HDF5 netCDF-4 file into the shared station-data shape (the
-    * [[NcSource.readStation]] contract): `time` + CF units drive the axis,
-    * `station` (char/string var) or the file name names the station, per-step
-    * vars become columns, singletons broadcast. */
-  def readStation(bytes: Array[Byte], fileName: String): ZarrSource.ZarrStationData = {
+  /** Decode one HDF5 netCDF-4 file into station data: its root variables
+    * become [[StationData]] through [[StationRuns.fromNetcdf]], the rules
+    * [[NcSource.readStation]] applies to classic files. */
+  def readStation(bytes: Array[Byte], fileName: String): StationData = {
     val h5 = new H5(bytes)
-    val vars = h5.rootVars()
-    val timeVar = vars.find(_.name == "time")
-      .getOrElse(sys.error("no time variable"))
-    val time = ZarrSource.timeToMicros(timeVar.values, timeVar.dtypeStr, timeVar.attrs)
-    val station = vars.find(v => v.name == "station" && v.spark == StringType)
-      .flatMap(_.values.headOption.map(String.valueOf(_)))
-      .getOrElse(fileName.stripSuffix(".nc"))
-    val dataVars = vars.filterNot(v => v.name == "time" || v.name == "station")
-    val cols = dataVars.flatMap { v =>
-      if (v.values.length == time.length) Some((v.name, v.spark, v.values))
-      else if (v.values.length == 1)
-        Some((v.name, v.spark, Array.fill[Any](time.length)(v.values(0))))
-      else None
-    }
-    val attrs = AttrsTable(h5.rootAttrs(),
-      vars.map(v => v.name -> (v.attrs - "_FillValue")).toMap)
-    ZarrSource.ZarrStationData(station, time, cols, attrs)
+    StationRuns.fromNetcdf(h5.rootVars(), h5.rootAttrs(), fileName)
   }
 
   private[sources] final class H5(bytes: Array[Byte]) {
@@ -687,7 +668,7 @@ object Hdf5Source {
       (compact ++ dense).toMap
     }
 
-    private def readDataset(name: String, ohAddr: Long): Option[H5Var] = {
+    private def readDataset(name: String, ohAddr: Long): Option[StationRuns.Variable] = {
       val msgs = messages(ohAddr)
       val attrs = attrsOf(msgs)
       if (attrs.get("NAME").exists(_.startsWith("This is a netCDF dimension")))
@@ -762,10 +743,10 @@ object Hdf5Source {
         case DtOpaque(_, c) =>
           sys.error(s"dataset '$name' has unsupported datatype class $c")
       }
-      Some(H5Var(name, sparkTypeOf(dt), dtypeStr(dt), values, attrs))
+      Some(StationRuns.Variable(name, sparkTypeOf(dt), dtypeStr(dt), values, attrs))
     }
 
-    def rootVars(): Seq[H5Var] =
+    def rootVars(): Seq[StationRuns.Variable] =
       children(rootHeaderAddr).flatMap { case (name, addr) =>
         val msgs = messages(addr)
         if (msgs.exists(m => m._1 == 0x0011 || m._1 == 0x0002 || m._1 == 0x0006))

@@ -167,10 +167,9 @@ object NcSink {
                    attrs: AttrsTable = AttrsTable(Map.empty, Map.empty)): DataFrame = {
     val attrsB = df.sparkSession.sparkContext.broadcast(attrs)
     StationRuns.mapStations(df) { (station, times, cols, conf) =>
-      val path = s"$outDir/$station.nc"
-      val bytes = StationRuns.writeFile(path, conf,
-        encodeStation(station, times, cols, attrsB.value))
-      Row(station, path, times.length.toLong, 1L, bytes)
+      val bytes = StationRuns.writeFiles(outDir, conf,
+        Seq(s"$station.nc" -> encodeStation(station, times, cols, attrsB.value)))
+      Row(station, s"$outDir/$station.nc", times.length.toLong, 1L, bytes)
     }
   }
 }

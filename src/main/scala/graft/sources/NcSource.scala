@@ -1,22 +1,22 @@
 package graft.sources
 
+import java.io.FileNotFoundException
 import java.nio.{ByteBuffer, ByteOrder}
 
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
-
-import graft.core.AttrsTable
 
 /** S5 (netCDF half) — a from-scratch NetCDF-3 CLASSIC (CDF-1/CDF-2) reader for the
   * QAQC stage's `.nc` on-ramp (`/root/reference/scripts/3_qaqc_data/
   * QAQC_pipeline.py:1058-1065`, the `open_dataset` branch the zarr reader doesn't
-  * cover). Same one-task-per-station shape as [[ZarrSource]]: one `.nc` file = one
-  * station = one executor task, decoded into the shared [[ZarrSource
-  * .ZarrStationData]] so the `readStores`/`writeObs` plumbing is identical.
+  * cover). One `.nc` file = one station = one executor task. This module only
+  * parses bytes: the variables it decodes become [[StationData]] through
+  * [[StationRuns.fromNetcdf]] (the rules it shares with [[Hdf5Source]]), and the
+  * distributed read, file access and ingest are the [[StationRuns]] chassis.
   *
   * Implements the public classic file format (magic `CDF\x01`/`CDF\x02`,
   * big-endian header with dim/attr/var lists, fixed vars at absolute offsets,
@@ -227,87 +227,34 @@ object NcSource {
 
   // --------------------------------------------------------------- station read
 
-  /** Decode one classic `.nc` file into the shared station-data shape (driver- or
-    * executor-side; bounded by one station's bytes — the reference's own task
-    * granularity). Time comes from the CF `units` attr of the `time` variable;
-    * the station id from a `station` char variable or the file name. */
-  def readStation(bytes: Array[Byte], fileName: String): ZarrSource.ZarrStationData = {
-    // NetCDF-4 files are HDF5 containers — dispatch them to the from-scratch
-    // HDF5 reader (r11; previously refused). Classic CDF-1/CDF-2 stays here.
-    if (Hdf5Source.isHdf5(bytes)) return Hdf5Source.readStation(bytes, fileName)
-    val nc = parseHeader(bytes)
-    val timeVar = nc.vars.find(_.name == "time")
-      .getOrElse(sys.error("no time variable"))
-    val timeRaw = readValues(bytes, nc, timeVar)
-    val time = ZarrSource.timeToMicros(timeRaw, "<f8", timeVar.attrs)
-    val station = nc.vars.find(v => v.name == "station" && v.ncType == NcChar)
-      .flatMap(v => readValues(bytes, nc, v).headOption.map(_.toString))
-      .getOrElse(fileName.stripSuffix(".nc"))
-    val dataVars = nc.vars.filterNot(v => v.name == "time" || v.name == "station")
-    val cols = dataVars.flatMap { v =>
-      val vals = readValues(bytes, nc, v)
-      // keep per-timestep columns; singleton non-time vars broadcast to all rows
-      if (vals.length == time.length) Some((v.name, sparkType(v), vals))
-      else if (vals.length == 1) Some((v.name, sparkType(v),
-        Array.fill[Any](time.length)(vals(0))))
-      else None
+  /** Decode one `.nc` file (classic here, HDF5 in [[Hdf5Source]]) into station
+    * data, driver- or executor-side; bounded by one station's bytes. Time keeps
+    * the `<f8` dtype, i.e. it decodes through its CF `units` attr. */
+  def readStation(bytes: Array[Byte], fileName: String): StationData =
+    if (Hdf5Source.isHdf5(bytes)) Hdf5Source.readStation(bytes, fileName)
+    else {
+      val nc = parseHeader(bytes)
+      StationRuns.fromNetcdf(nc.vars.map(v =>
+        StationRuns.Variable(v.name, sparkType(v), "<f8", readValues(bytes, nc, v), v.attrs)),
+        nc.gattrs, fileName)
     }
-    val attrs = AttrsTable(nc.gattrs,
-      nc.vars.map(v => v.name -> (v.attrs - "_FillValue")).toMap)
-    ZarrSource.ZarrStationData(station, time, cols, attrs)
-  }
 
-  // ------------------------------------------------------------- distributed
-
-  private def readBytes(path: String, conf: Configuration): Array[Byte] = {
+  /** Read the `.nc` file at `path` through [[StationRuns.readFile]]; a missing
+    * file is an error that names it. */
+  private[sources] def readFileAt(path: String, conf: Configuration): StationData = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val len = fs.getFileStatus(p).getLen
-    require(len < Int.MaxValue, s"$path: classic file too large for one task")
-    val in = fs.open(p)
-    try { val buf = new Array[Byte](len.toInt); in.readFully(0, buf); buf }
-    finally in.close()
+    readStation(StationRuns.readFile(p.getFileSystem(conf), p)
+      .getOrElse(throw new FileNotFoundException(s"$path: no such .nc file")), p.getName)
   }
 
-  /** Read many `.nc` files distributed — one task per file, no shuffle; schema
-    * from the first file, column-by-name alignment (missing → null) exactly like
-    * [[ZarrSource.readStores]]. */
-  def readFiles(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    require(paths.nonEmpty, "no nc paths")
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val first = readStation(readBytes(paths.head, conf), new Path(paths.head).getName)
-    val schema = ZarrSource.storeSchema(first)
-    val varOrder = first.cols.map(_._1)
-    val confPairs = spark.sparkContext.broadcast(
-      conf.iterator().asScala.map(e => e.getKey -> e.getValue).toSeq)
-    val rows = spark.sparkContext
-      .parallelize(paths, math.min(paths.size, 1024))
-      .flatMap { p =>
-        val c = new Configuration(false)
-        confPairs.value.foreach { case (k, v) => c.set(k, v) }
-        val d = readStation(readBytes(p, c), new Path(p).getName)
-        val byName = d.cols.map(c0 => c0._1 -> c0._3).toMap
-        (0 until d.time.length).iterator.map { i =>
-          Row.fromSeq(
-            d.station +:
-            java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-              d.time(i) / 1000000L, (d.time(i) % 1000000L) * 1000L)) +:
-            varOrder.map(v => byName.get(v).map(_(i)).orNull))
-        }
-      }
-    spark.createDataFrame(rows, schema)
-  }
+  /** Read many `.nc` files distributed, one task per file
+    * ([[StationRuns.readStations]]: schema from the first file, columns aligned
+    * by name). */
+  def readFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
+    StationRuns.readStations(spark, paths)(readFileAt)
 
-  /** `.nc` corpus → the engine's partitioned obs table (the full on-ramp, mirror of
-    * [[ZarrSource.ingest]]). */
+  /** `.nc` corpus → the engine's partitioned obs table ([[StationRuns.ingest]]). */
   def ingest(spark: SparkSession, paths: Seq[String], outPath: String,
-             network: String): Unit = {
-    val df = readFiles(spark, paths)
-      .withColumn("network", org.apache.spark.sql.functions.lit(network))
-    val attrs = readStation(
-      readBytes(paths.head, spark.sparkContext.hadoopConfiguration),
-      new Path(paths.head).getName).attrs
-    Sinks.writeObs(df, outPath, attrs = Some(attrs))
-  }
+             network: String): Unit =
+    StationRuns.ingest(spark, paths, outPath, network)(readFileAt)
 }

@@ -1,21 +1,41 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Shared distributed-writer chassis for the per-station sinks ([[ZarrSink]],
-  * [[NcSink]]): one hash-shuffle on `station`, a per-partition sort on
-  * `(station, time)`, then each task streams consecutive same-station runs into
-  * `(station, time[], columns)` batches and hands them to the format encoder.
-  * This is the write-side mirror of `readStores`' one-task-per-station read
-  * granularity — at 1e5 stations the stores fan out across the cluster with no
-  * driver involvement and no second shuffle. */
+import graft.core.AttrsTable
+
+/** One decoded station container: the station id, its time axis in epoch
+  * microseconds, one flat array per per-step column (Double/Long/String/Boolean
+  * values, null for fill) and the attrs. */
+final case class StationData(station: String, time: Array[Long],
+                             cols: Seq[(String, DataType, Array[Any])],
+                             attrs: AttrsTable)
+
+/** The station-container chassis: everything a per-station store becomes between
+  * its bytes and a DataFrame, in both directions. The format modules only turn
+  * bytes into [[StationData]] ([[ZarrSource]], [[NcSource]], [[Hdf5Source]]) or
+  * [[StationData]] columns into bytes ([[ZarrSink]], [[NcSink]]).
+  *
+  * Write: [[mapStations]] hash-shuffles once on `station`, sorts each partition on
+  * `(station, time)`, streams consecutive same-station runs into `(station, time[],
+  * columns)` batches for the encoder, and [[writeFiles]] lands the encoded files.
+  * Read: [[readStations]] runs one task per container path (the reference's own
+  * per-station task granularity) with no shuffle, decoding with the format's
+  * function and [[readFile]]. Both directions ship the Hadoop conf to executors as
+  * plain pairs, so object-store credentials travel with the tasks; at 1e5 stations
+  * the stores fan out across the cluster with no driver involvement. */
 private[sources] object StationRuns {
+
+  // ------------------------------------------------------------------- write
 
   val ledgerSchema: StructType = StructType(Seq(
     StructField("station", StringType, nullable = false),
@@ -34,9 +54,7 @@ private[sources] object StationRuns {
     require(df.columns.contains("station") && df.columns.contains("time"),
       "per-station sink needs station + time columns")
     val dataCols = df.schema.fields.filter(f => f.name != "station" && f.name != "time")
-    val confPairs = spark.sparkContext.broadcast(
-      spark.sparkContext.hadoopConfiguration.iterator().asScala
-        .map(e => e.getKey -> e.getValue).toSeq)
+    val confPairs = shipConf(spark)
 
     val shuffled = df
       .repartition(col("station"))
@@ -45,8 +63,7 @@ private[sources] object StationRuns {
         dataCols.map(f => col(f.name))): _*)
 
     val ledger = shuffled.queryExecution.toRdd.mapPartitions { it =>
-      val conf = new Configuration(false)
-      confPairs.value.foreach { case (k, v) => conf.set(k, v) }
+      val conf = hadoopConf(confPairs.value)
       val colTypes = dataCols.map(_.dataType)
       // consecutive run of one station = one store (partition is sorted)
       new Iterator[Row] {
@@ -95,8 +112,9 @@ private[sources] object StationRuns {
     spark.createDataFrame(ledger, ledgerSchema)
   }
 
-  /** Write one store's files under `root` through the Hadoop FS (works for
-    * local, HDFS, and object stores alike); returns total bytes. */
+  /** Write one container's files under `rootPath` (a single-file container is one
+    * entry) and return the total bytes. Local paths take the java.nio path of
+    * [[localRoot]]; HDFS and object stores go through the Hadoop FS. */
   def writeFiles(rootPath: String, conf: Configuration,
                  files: Seq[(String, Array[Byte])]): Long = {
     val root = new Path(rootPath)
@@ -128,25 +146,164 @@ private[sources] object StationRuns {
   private def localRoot(p: Path, conf: Configuration): Option[java.nio.file.Path] = {
     val uri = p.toUri
     val schemeLocal = uri.getScheme == null || uri.getScheme == "file"
-    val defaultLocal = org.apache.hadoop.fs.FileSystem.getDefaultUri(conf)
+    val defaultLocal = FileSystem.getDefaultUri(conf)
       .getScheme match { case null | "file" => true; case _ => false }
     if (schemeLocal && (uri.getScheme != null || defaultLocal))
       Some(java.nio.file.Paths.get(uri.getPath))
     else None
   }
 
-  /** Write one flat file. */
-  def writeFile(path: String, conf: Configuration, bytes: Array[Byte]): Long = {
-    val p = new Path(path)
-    localRoot(p, conf) match {
-      case Some(f) =>
-        if (f.getParent != null) java.nio.file.Files.createDirectories(f.getParent)
-        java.nio.file.Files.write(f, bytes)
-      case None =>
-        val fs = p.getFileSystem(conf)
-        val out = fs.create(p, true)
-        try out.write(bytes) finally out.close()
+  // -------------------------------------------------------------------- read
+
+  /** Read one file whole through the Hadoop FS, so a `.crc` sidecar is verified;
+    * `None` when it does not exist. A file of 2 GiB or more does not fit one
+    * array and is refused with an error that names it. */
+  def readFile(fs: FileSystem, path: Path): Option[Array[Byte]] = {
+    val status = try Some(fs.getFileStatus(path))
+      catch { case _: FileNotFoundException => None }
+    status.map { s =>
+      require(s.getLen < Int.MaxValue,
+        s"$path: ${s.getLen} bytes, too large to read into one array")
+      val in = fs.open(path)
+      try { val buf = new Array[Byte](s.getLen.toInt); in.readFully(0, buf); buf }
+      finally in.close()
     }
-    bytes.length.toLong
   }
+
+  /** Spark schema of a station container: (station, time, columns...). */
+  def storeSchema(data: StationData): StructType =
+    StructType(
+      StructField("station", StringType, nullable = false) +:
+      StructField("time", TimestampType, nullable = false) +:
+      data.cols.map { case (n, t, _) => StructField(n, t, nullable = true) })
+
+  /** Read many containers distributed: one task per path, at most 1024
+    * partitions, no shuffle; `decode(path, conf)` turns one path into its
+    * [[StationData]]. The schema comes from the first container; a container
+    * missing one of its columns yields nulls there, and columns it has beyond
+    * them are dropped — the reference's per-network column variance, handled
+    * the way its concat step handles it. */
+  def readStations(spark: SparkSession, paths: Seq[String])(
+      decode: (String, Configuration) => StationData): DataFrame =
+    scan(spark, paths)(decode)._2
+
+  /** Container corpus → the engine's partitioned obs table: [[readStations]],
+    * the `network` stamped on every row, written by [[Sinks.writeObs]] with the
+    * first container's attrs as the sidecar. */
+  def ingest(spark: SparkSession, paths: Seq[String], outPath: String, network: String)(
+      decode: (String, Configuration) => StationData): Unit = {
+    val (first, df) = scan(spark, paths)(decode)
+    Sinks.writeObs(df.withColumn("network", lit(network)), outPath,
+      attrs = Some(first.attrs))
+  }
+
+  /** The first container, decoded on the driver for the schema, and the rows of
+    * all of them. */
+  private def scan(spark: SparkSession, paths: Seq[String])(
+      decode: (String, Configuration) => StationData): (StationData, DataFrame) = {
+    require(paths.nonEmpty, "no station container paths")
+    val first = decode(paths.head, spark.sparkContext.hadoopConfiguration)
+    val varOrder = first.cols.map(_._1)
+    val confPairs = shipConf(spark)
+    val rows = spark.sparkContext
+      .parallelize(paths, math.min(paths.size, 1024))
+      .flatMap { p =>
+        val d = decode(p, hadoopConf(confPairs.value))
+        val byName = d.cols.map(c => c._1 -> c._3).toMap
+        val aligned = varOrder.map(byName.get)
+        (0 until d.time.length).iterator.map { i =>
+          Row.fromSeq(
+            d.station +:
+            java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
+              d.time(i) / 1000000L, (d.time(i) % 1000000L) * 1000L)) +:
+            aligned.map(_.map(_(i)).orNull))
+        }
+      }
+    (first, spark.createDataFrame(rows, storeSchema(first)))
+  }
+
+  private def shipConf(spark: SparkSession): Broadcast[Seq[(String, String)]] =
+    spark.sparkContext.broadcast(
+      spark.sparkContext.hadoopConfiguration.iterator().asScala
+        .map(e => e.getKey -> e.getValue).toSeq)
+
+  private def hadoopConf(pairs: Seq[(String, String)]): Configuration = {
+    val conf = new Configuration(false)
+    pairs.foreach { case (k, v) => conf.set(k, v) }
+    conf
+  }
+
+  // ----------------------------------------------------------- netCDF model
+
+  /** One netCDF variable as the NetCDF-3 or HDF5 reader decoded it: name, Spark
+    * type, numpy-style dtype (read by the time decode), flat values, attrs. */
+  final case class Variable(name: String, spark: DataType, dtype: String,
+                            values: Array[Any], attrs: Map[String, String])
+
+  /** A netCDF file's variables as station data. The `time` variable and its CF
+    * units give the axis; a `station` string variable, or else the file name,
+    * gives the id; variables with one value per step become columns and
+    * single-valued ones are broadcast to every step (others are skipped); the
+    * attrs keep everything except `_FillValue`. */
+  def fromNetcdf(vars: Seq[Variable], globalAttrs: Map[String, String],
+                 fileName: String): StationData = {
+    val timeVar = vars.find(_.name == "time").getOrElse(sys.error("no time variable"))
+    val time = timeToMicros(timeVar.values, timeVar.dtype, timeVar.attrs)
+    val station = vars.find(v => v.name == "station" && v.spark == StringType)
+      .flatMap(_.values.headOption.flatMap(Option(_))).map(_.toString)
+      .getOrElse(fileName.stripSuffix(".nc"))
+    val cols = vars.filterNot(v => v.name == "time" || v.name == "station").flatMap { v =>
+      if (v.values.length == time.length) Some((v.name, v.spark, v.values))
+      else if (v.values.length == 1)
+        Some((v.name, v.spark, Array.fill[Any](time.length)(v.values(0))))
+      else None
+    }
+    StationData(station, time, cols,
+      AttrsTable(globalAttrs, vars.map(v => v.name -> (v.attrs - "_FillValue")).toMap))
+  }
+
+  // ----------------------------------------------------------------- CF time
+
+  /** Parse CF "units since epoch" into micros-per-step and epoch micros. */
+  def parseCfUnits(units: String): (Long, Long) = {
+    val m = "(?i)(seconds?|minutes?|hours?|days?)\\s+since\\s+(.+)".r
+    units.trim match {
+      case m(step, epoch) =>
+        val perStep = step.toLowerCase.stripSuffix("s") match {
+          case "second" => 1000000L
+          case "minute" => 60000000L
+          case "hour" => 3600000000L
+          case "day" => 86400000000L
+        }
+        val e = epoch.trim.replace(" ", "T")
+        val norm = if (e.matches("\\d{4}-\\d{2}-\\d{2}")) e + "T00:00:00" else e
+        val ldt = java.time.LocalDateTime.parse(norm.stripSuffix("Z"))
+        (perStep, ldt.toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L)
+      case _ => sys.error(s"unsupported CF time units '$units'")
+    }
+  }
+
+  /** A decoded time variable as epoch micros: `M8[ns]` directly, anything else
+    * through its CF `units` attr. */
+  def timeToMicros(vals: Array[Any], dtype: String,
+                   attrs: Map[String, String]): Array[Long] =
+    if (dtype.drop(1).startsWith("M8")) {
+      // xarray always encodes datetime64[ns]; any other M8 unit would silently
+      // mis-scale, so refuse it explicitly
+      require(dtype.endsWith("[ns]"), s"unsupported datetime64 unit in $dtype (only [ns])")
+      // mirror the CF branch's null handling (ADVICE r7): a missing chunk / fill
+      // match would unbox to 0L = epoch-1970 silently
+      vals.map {
+        case l: java.lang.Long => l.longValue() / 1000L
+        case null => sys.error("null time coordinate")
+      }
+    } else {
+      val (perStep, epoch) = parseCfUnits(attrs.getOrElse("units",
+        sys.error("time variable has neither M8 dtype nor CF units attr")))
+      vals.map {
+        case l: java.lang.Long => epoch + l * perStep
+        case d: java.lang.Double => epoch + (d * perStep).toLong
+        case null => sys.error("null time coordinate")
+      }
+    }
 }

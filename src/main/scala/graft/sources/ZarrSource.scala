@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.core.AttrsTable
@@ -33,12 +33,10 @@ import graft.core.AttrsTable
   *    <epoch>"` attrs (seconds/minutes/hours/days — the encodings xarray emits).
   *
   * Scale shape: one store = one station = ONE task (the reference's own parallelism
-  * unit — a whole station fits in memory by construction, `QAQC_pipeline.py:463-465`);
-  * [[readStores]] distributes stores over executors via `spark.parallelize(paths)`,
-  * so a 15k-station corpus ingests as 15k independent tasks with no shuffle, and
-  * [[ingest]] lands them in the engine's layout via [[Sinks.writeObs]] (one
-  * partitioned write, attrs sidecar carried from `.zattrs`). The Hadoop conf is
-  * broadcast as key-value pairs so object-store credentials reach executors.
+  * unit — a whole station fits in memory by construction, `QAQC_pipeline.py:463-465`).
+  * This module only turns a store's bytes into [[StationData]]: the distributed
+  * read, the file access, the row schema and the ingest are the
+  * [[StationRuns]] chassis, shared with the NetCDF readers.
   */
 object ZarrSource {
 
@@ -47,11 +45,6 @@ object ZarrSource {
                               compressor: Option[(String, String)], // (id, cname)
                               fillValue: Option[String], dims: Seq[String],
                               vlenUtf8: Boolean)
-
-  /** One decoded store: station id, time axis, flat column arrays, attrs. */
-  final case class ZarrStationData(station: String, time: Array[Long], // epoch micros
-                                   cols: Seq[(String, DataType, Array[Any])],
-                                   attrs: AttrsTable)
 
   // zarr v2 spec encodes NaN/Infinity fill values as STRINGS ("NaN"), but Python
   // json tooling also emits them as bare tokens — accept both
@@ -351,55 +344,12 @@ object ZarrSource {
     out
   }
 
-  // ---------------------------------------------------------------- CF time
-
-  /** Parse CF "units since epoch" into micros-per-step and epoch micros. */
-  private[sources] def parseCfUnits(units: String): (Long, Long) = {
-    val m = "(?i)(seconds?|minutes?|hours?|days?)\\s+since\\s+(.+)".r
-    units.trim match {
-      case m(step, epoch) =>
-        val perStep = step.toLowerCase.stripSuffix("s") match {
-          case "second" => 1000000L
-          case "minute" => 60000000L
-          case "hour" => 3600000000L
-          case "day" => 86400000000L
-        }
-        val e = epoch.trim.replace(" ", "T")
-        val norm = if (e.matches("\\d{4}-\\d{2}-\\d{2}")) e + "T00:00:00" else e
-        val ldt = java.time.LocalDateTime.parse(norm.stripSuffix("Z"))
-        (perStep, ldt.toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L)
-      case _ => sys.error(s"unsupported CF time units '$units'")
-    }
-  }
-
-  private[sources] def timeToMicros(vals: Array[Any], dtype: String,
-                                    attrs: Map[String, String]): Array[Long] =
-    if (dtype.drop(1).startsWith("M8")) {
-      // xarray always encodes datetime64[ns]; any other M8 unit would silently
-      // mis-scale, so refuse it explicitly
-      require(dtype.endsWith("[ns]"), s"unsupported datetime64 unit in $dtype (only [ns])")
-      // mirror the CF branch's null handling (ADVICE r7): a missing chunk / fill
-      // match would unbox to 0L = epoch-1970 silently
-      vals.map {
-        case l: java.lang.Long => l.longValue() / 1000L
-        case null => sys.error("null time coordinate")
-      }
-    } else {
-      val (perStep, epoch) = parseCfUnits(attrs.getOrElse("units",
-        sys.error("time variable has neither M8 dtype nor CF units attr")))
-      vals.map {
-        case l: java.lang.Long => epoch + l * perStep
-        case d: java.lang.Double => epoch + (d * perStep).toLong
-        case null => sys.error("null time coordinate")
-      }
-    }
-
   // ---------------------------------------------------------------- store read
 
   /** Read one consolidated store into flat station data (driver- or executor-side;
     * bounded by one station's size — the reference's own task granularity). */
   def readStore(readFile: String => Option[Array[Byte]],
-                storeName: String): ZarrStationData = {
+                storeName: String): StationData = {
     val meta = readConsolidated(readFile)
     val varNames = meta.keys.filter(_.endsWith("/.zarray")).map(_.dropRight(8)).toSeq.sorted
     val zas = varNames.map(v => v -> parseZArray(meta, v)).toMap
@@ -411,7 +361,7 @@ object ZarrSource {
         attrsOf(meta, s"$v/.zattrs").get("units").exists(_.contains(" since "))))
       .getOrElse(sys.error("no time coordinate variable"))
     val timeAttrs = attrsOf(meta, s"$timeVar/.zattrs")
-    val time = timeToMicros(readArray(readFile, timeVar, zas(timeVar)),
+    val time = StationRuns.timeToMicros(readArray(readFile, timeVar, zas(timeVar)),
       zas(timeVar).dtype, timeAttrs)
     // exact name first (ADVICE r7): another station-dim variable sorting earlier
     // (e.g. "elevation") must not silently become the station id
@@ -429,77 +379,25 @@ object ZarrSource {
     }
     val attrs = AttrsTable(attrsOf(meta, ".zattrs"),
       varNames.map(v => v -> (attrsOf(meta, s"$v/.zattrs") - "_ARRAY_DIMENSIONS")).toMap)
-    ZarrStationData(station, time, cols, attrs)
+    StationData(station, time, cols, attrs)
   }
 
-  /** Hadoop-FS file accessor rooted at a store path. */
-  def hadoopReader(storePath: String, conf: Configuration): String => Option[Array[Byte]] = {
+  /** Read the store at `storePath` through [[StationRuns.readFile]]; a chunk file
+    * that is absent reads as fill, as zarr allows. */
+  private[sources] def readStoreAt(storePath: String, conf: Configuration): StationData = {
     val root = new Path(storePath)
     val fs = root.getFileSystem(conf)
-    (rel: String) => {
-      val p = new Path(root, rel)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try {
-          val len = fs.getFileStatus(p).getLen.toInt
-          val buf = new Array[Byte](len)
-          in.readFully(0, buf)
-          Some(buf)
-        } finally in.close()
-      }
-    }
+    readStore(rel => StationRuns.readFile(fs, new Path(root, rel)), root.getName)
   }
 
-  /** Spark schema for a station store: (station, time, vars...). */
-  def storeSchema(data: ZarrStationData): StructType =
-    StructType(
-      StructField("station", StringType, nullable = false) +:
-      StructField("time", TimestampType, nullable = false) +:
-      data.cols.map { case (n, t, _) => StructField(n, t, nullable = true) })
+  /** Read many stores distributed, one task per store ([[StationRuns.readStations]]:
+    * schema from the first store, columns aligned by name). */
+  def readStores(spark: SparkSession, storePaths: Seq[String]): DataFrame =
+    StationRuns.readStations(spark, storePaths)(readStoreAt)
 
-  /** Read many stores distributed: one task per store (the reference's SLURM-array
-    * granularity), no shuffle. The schema comes from the first store; stores missing
-    * a column yield nulls, extra columns are dropped — the reference's per-network
-    * column variance, handled the same way its concat step handles it. */
-  def readStores(spark: SparkSession, storePaths: Seq[String]): DataFrame = {
-    require(storePaths.nonEmpty, "no store paths")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val first = readStore(hadoopReader(storePaths.head, conf),
-      new Path(storePaths.head).getName)
-    val schema = storeSchema(first)
-    val varOrder = first.cols.map(_._1)
-    // ship the hadoop conf as plain pairs (object-store creds reach executors)
-    val confPairs = spark.sparkContext.broadcast(
-      conf.iterator().asScala.map(e => e.getKey -> e.getValue).toSeq)
-    val rows = spark.sparkContext
-      .parallelize(storePaths, math.min(storePaths.size, 1024))
-      .flatMap { sp =>
-        val c = new Configuration(false)
-        confPairs.value.foreach { case (k, v) => c.set(k, v) }
-        val d = readStore(hadoopReader(sp, c), new Path(sp).getName)
-        val byName = d.cols.map(c0 => c0._1 -> c0._3).toMap
-        (0 until d.time.length).iterator.map { i =>
-          Row.fromSeq(
-            d.station +:
-            java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-              d.time(i) / 1000000L, (d.time(i) % 1000000L) * 1000L)) +:
-            varOrder.map(v => byName.get(v).map(_(i)).orNull))
-        }
-      }
-    spark.createDataFrame(rows, schema)
-  }
-
-  /** zarr corpus -> the engine's partitioned obs table: read stores distributed,
-    * stamp the network, write via [[Sinks.writeObs]] with the first store's attrs
-    * as the sidecar. The complete on-ramp for a reference user's published data. */
+  /** zarr corpus -> the engine's partitioned obs table ([[StationRuns.ingest]]):
+    * the complete on-ramp for a reference user's published data. */
   def ingest(spark: SparkSession, storePaths: Seq[String], outPath: String,
-             network: String): Unit = {
-    val df = readStores(spark, storePaths)
-      .withColumn("network", org.apache.spark.sql.functions.lit(network))
-    val attrs = readStore(
-      hadoopReader(storePaths.head, spark.sparkContext.hadoopConfiguration),
-      new Path(storePaths.head).getName).attrs
-    Sinks.writeObs(df, outPath, attrs = Some(attrs))
-  }
+             network: String): Unit =
+    StationRuns.ingest(spark, storePaths, outPath, network)(readStoreAt)
 }

@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.broadcast
 
 /** `Bench.run` at sf0.001: the per-query record is filled from the rep it
-  * belongs to, and a query that throws is reported as failed. */
+  * belongs to, counts the plan behind a cached relation once, and a query that
+  * throws is reported as failed. */
 class BenchSpec extends SparkSpec {
   private type Query = (SparkSession, String) => DataFrame
 
@@ -21,6 +23,11 @@ class BenchSpec extends SparkSpec {
       Map[String, Query](
         "j1_revenue_by_nation" -> SparkEntry.queries("j1_revenue_by_nation"),
         "k_one_job" -> ((s, _) => s.range(0, 5, 1, 1).toDF()),
+        "p_pinned_join" -> ((s, _) => {
+          val joined = s.range(0, 100).toDF("k")
+            .join(broadcast(s.range(0, 50).toDF("k")), "k").persist()
+          joined.union(joined)
+        }),
         "z_throws" -> ((_, _) => throw new IllegalStateException("injected"))),
       reps = 1).map(r => r.name -> r).toMap
     finally spark.sparkContext.removeSparkListener(slow)
@@ -45,5 +52,12 @@ class BenchSpec extends SparkSpec {
     assert(k.error.isEmpty)
     val d = k.detail
     assert(d.jobs == 1 && d.stages == 1 && d.exchanges == 0 && d.bhj == 0 && d.smj == 0, d)
+  }
+
+  test("a cached join read twice is counted once") {
+    val p = results("p_pinned_join")
+    assert(p.error.isEmpty)
+    assert(p.detail.bhj == 1, p.detail)
+    assert(p.plan.contains("InMemoryTableScan"), p.plan)
   }
 }

@@ -9,9 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * Hamming chassis has one entry per operator (the band layout follows
   * `maxHamming`, so no `…Wide` twin is needed). A window frame that runs to the
   * partition's end starts at its beginning: Spark recomputes a frame with any other
-  * lower bound (a shrinking frame) for every row, O(n²) per partition. Operators and
-  * kernels do not pin storage: a persist outlives the call, and only a session-wide
-  * cache clear frees it. */
+  * lower bound (a shrinking frame) for every row, O(n²) per partition. Operators,
+  * kernels, pipelines and sources do not pin storage: a persist outlives the call,
+  * and only a session-wide cache clear frees it. Station containers are read
+  * through one chassis, `StationRuns`. */
 class ScaffoldingSpec extends AnyFunSuite {
   private val sources: Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")
@@ -58,30 +59,45 @@ class ScaffoldingSpec extends AnyFunSuite {
       s"shrinking frame; take the value over the reversed order instead: $offenders")
   }
 
+  private def assertNoPin(scoped: Seq[(Path, String)], expected: Set[String]): Unit = {
+    val files = scoped.map(_._1.getFileName.toString).toSet
+    assert(expected.subsetOf(files), s"scan found no sources: $files")
+    val pin = """persist\(|\.cache\(\)|checkpoint\(""".r
+    val offenders = scoped.flatMap { case (p, text) =>
+      pin.findAllIn(text).map(m => s"$p: $m")
+    }
+    assert(offenders.isEmpty, s"an operator must not pin storage it cannot release: $offenders")
+  }
+
   test("no persist, cache or checkpoint in graft/ops, graft/kernels or QaqcPipeline") {
     val scoped = sources.filter { case (p, _) =>
       val f = p.toString
       f.contains("/graft/ops/") || f.contains("/graft/kernels/") ||
         f.endsWith("/graft/pipeline/QaqcPipeline.scala")
     }
+    assertNoPin(scoped, Set("SpikeOps.scala", "Butterworth.scala", "QaqcPipeline.scala"))
+  }
+
+  test("no persist, cache or checkpoint in the other graft/pipeline files or graft/sources") {
+    val scoped = sources.filter { case (p, _) =>
+      val f = p.toString
+      (f.contains("/graft/pipeline/") && !f.endsWith("/QaqcPipeline.scala")) ||
+        f.contains("/graft/sources/")
+    }
+    assertNoPin(scoped, Set("MergePipeline.scala", "StationRuns.scala"))
+  }
+
+  test("in graft/sources only the StationRuns chassis distributes paths or defines StationData") {
+    val scoped = sources.filter(_._1.toString.contains("/graft/sources/"))
     val files = scoped.map(_._1.getFileName.toString).toSet
-    assert(Set("SpikeOps.scala", "Butterworth.scala", "QaqcPipeline.scala").subsetOf(files),
-      s"scan found no sources: $files")
-    // file -> (method, reason)
-    val allowed = Map("QaqcPipeline.scala" -> ("flagCountReport",
-      "its union reads the flag counts twice (rows and total); a single-reference " +
-        "GROUPING SETS aggregate would retire this entry"))
-    def without(text: String, method: String): String = {
-      val start = text.indexOf(s"def $method(")
-      assert(start >= 0, s"allow-listed $method not found")
-      val ends = Seq("\n  def ", "\n  /**").map(text.indexOf(_, start + 1)).filter(_ >= 0)
-      text.take(start) + (if (ends.isEmpty) "" else text.drop(ends.min))
+    assert(Set("StationRuns.scala", "ZarrSource.scala", "NcSource.scala", "Hdf5Source.scala")
+      .subsetOf(files), s"scan found no sources: $files")
+    val offenders = scoped.collect {
+      case (p, text) if !p.endsWith("StationRuns.scala") &&
+        (text.contains("parallelize(") || text.contains("case class StationData")) => p.toString
     }
-    val pin = """persist\(|\.cache\(\)|checkpoint\(""".r
-    val offenders = scoped.flatMap { case (p, text) =>
-      val scanned = allowed.get(p.getFileName.toString).fold(text)(a => without(text, a._1))
-      pin.findAllIn(scanned).map(m => s"$p: $m")
-    }
-    assert(offenders.isEmpty, s"an operator must not pin storage it cannot release: $offenders")
+    assert(offenders.isEmpty, s"read station containers through StationRuns.readStations: $offenders")
+    val chassis = scoped.find(_._1.endsWith("StationRuns.scala")).get._2
+    assert("case class StationData".r.findAllIn(chassis).length == 1)
   }
 }

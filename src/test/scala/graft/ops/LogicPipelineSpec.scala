@@ -101,4 +101,11 @@ class LogicPipelineSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got("11") == 1 && got("no_flag") == 2 && got("total_obs_count") == 3)
   }
+
+  test("flagCountReport over empty input is one total row of 0") {
+    val df = Seq.empty[(Int, Option[Int])].toDF("id", "f")
+    val got = QaqcPipeline.flagCountReport(df, "f")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(got == Seq("total_obs_count" -> 0L))
+  }
 }

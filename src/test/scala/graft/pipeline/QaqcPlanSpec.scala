@@ -10,7 +10,8 @@ import graft.kernels.Butterworth
 /** The QAQC pass reads its input once: every stage is row-preserving, so the
   * single-variable pipeline plans one station exchange, no join and no pinned
   * intermediate, and returns exactly its input rows. The Butterworth low-pass streams
-  * every column through its kernel, so it plans one exchange and no join-back. */
+  * every column through its kernel, so it plans one exchange and no join-back. The
+  * flag-count report pins nothing: its total reuses the counts' exchange. */
 class QaqcPlanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -90,5 +91,18 @@ class QaqcPlanSpec extends SparkSpec {
     assert(got.filter(_._2.isEmpty).map(_._3).toSeq == Seq(None))
     assert(got.filter(_._2.nonEmpty).map(r => r._1 -> r._3).sortBy(_._1).toSeq ==
       Seq(0L -> Some(y0), 3600L -> Some(y1), 3600L -> Some(y1), 7200L -> Some(y2)))
+  }
+
+  test("flagCountReport reads its counts twice through one reused flag exchange") {
+    val df = spark.range(0, 2000, 1, 4)
+      .select(when(col("id") % 5 === 0, lit(Flags.WorldRecord)).as("v_eraqc"))
+    val report = QaqcPipeline.flagCountReport(df, "v_eraqc")
+    val rows = report.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(rows == Map("no_flag" -> 1600L, Flags.WorldRecord.toString -> 400L,
+      "total_obs_count" -> 2000L), rows)
+    val plan = report.queryExecution.executedPlan.toString
+    assert(!plan.contains("InMemoryTableScan"), s"nothing is pinned:\n$plan")
+    assert("ReusedExchange[^\n]*hashpartitioning\\(flag".r.findFirstIn(plan).nonEmpty,
+      s"the total reuses the counts' flag exchange:\n$plan")
   }
 }

@@ -3,7 +3,10 @@ package graft.sources
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.file.Files
 
+import org.apache.spark.sql.types.DoubleType
+
 import graft.SparkSpec
+import graft.core.AttrsTable
 
 /** NetCDF-3 classic reader round trip: the spec hand-writes classic-format bytes
   * (big-endian header + fixed/record data sections per the public spec) and the
@@ -120,20 +123,40 @@ class NcSourceSpec extends SparkSpec {
       Seq(290.0, 291.0), Seq("", "")))
     put("CIMIS_7.nc", buildClassicNc("CIMIS_7", Seq(0.0, 1.0, 2.0),
       Seq(280.0, -9999.0, 282.0), Seq("M", "", "")))
-    val paths = Seq(s"$dir/CIMIS_2.nc", s"$dir/CIMIS_7.nc")
+    // no tas_qc, and an rh the first file does not have
+    put("CIMIS_9.nc", NcSink.encodeStation("CIMIS_9", Array(0L, 3600000000L),
+      Seq(("tas", DoubleType, Array[Any](270.0, 271.0)),
+        ("rh", DoubleType, Array[Any](40.0, 41.0))), AttrsTable(Map.empty, Map.empty)))
+    val paths = Seq(s"$dir/CIMIS_2.nc", s"$dir/CIMIS_7.nc", s"$dir/CIMIS_9.nc")
 
     val df = NcSource.readFiles(spark, paths)
-    assert(df.count() == 5)
-    assert(df.columns.toSet == Set("station", "time", "tas", "tas_qc"))
+    assert(df.count() == 7)
+    // schema from the first file: CIMIS_9's rh is dropped, its tas_qc is null
+    assert(df.columns.toSeq == Seq("station", "time", "tas", "tas_qc"))
     import org.apache.spark.sql.functions._
     assert(df.filter(col("station") === "CIMIS_7" && col("tas").isNull).count() == 1)
+    val nine = df.filter(col("station") === "CIMIS_9")
+    assert(nine.filter(col("tas_qc").isNull && col("tas").isNotNull).count() == 2)
 
     val out = Files.createTempDirectory("ncout").toFile.getAbsolutePath + "/obs"
     NcSource.ingest(spark, paths, out, network = "CIMIS")
     val back = spark.read.parquet(out)
-    assert(back.count() == 5)
+    assert(back.count() == 7)
     assert(back.select("network").distinct().head().getString(0) == "CIMIS")
     val attrs = Sinks.readAttrs(back, out)
     assert(attrs.global("title") == "CIMIS cleaned")
+  }
+
+  test("a missing or a 2 GiB .nc file is an error that names it") {
+    val dir = Files.createTempDirectory("nc_err")
+    val missing = s"$dir/CIMIS_404.nc"
+    val e = intercept[java.io.FileNotFoundException](NcSource.readFiles(spark, Seq(missing)))
+    assert(e.getMessage.contains(missing), e.getMessage)
+    Files.write(dir.resolve("CIMIS_2.nc"),
+      buildClassicNc("CIMIS_2", Seq(0.0), Seq(290.0), Seq("")))
+    val huge = s"${TwoGiBFileSystem.Scheme}://$dir/CIMIS_2.nc"
+    val e2 = intercept[IllegalArgumentException](
+      NcSource.readFileAt(huge, TwoGiBFileSystem.conf))
+    assert(e2.getMessage.contains("CIMIS_2.nc"), e2.getMessage)
   }
 }

@@ -59,9 +59,8 @@ class ZarrSinkSpec extends SparkSpec {
     assert(back.collect().toSeq === expected.collect().toSeq)
 
     // attrs survive into the store and back out of readStore
-    val d = ZarrSource.readStore(
-      ZarrSource.hadoopReader(s"$dir/STN_A.zarr",
-        spark.sparkContext.hadoopConfiguration), "STN_A.zarr")
+    val d = ZarrSource.readStoreAt(s"$dir/STN_A.zarr",
+      spark.sparkContext.hadoopConfiguration)
     assert(d.attrs.global("institution") === "graft")
     assert(d.attrs.forVar("tas")("units") === "K")
   }

@@ -1,8 +1,12 @@
 package graft.sources
 
 import java.io.ByteArrayOutputStream
+import java.net.URI
 import java.nio.file.{Files, Path}
 import java.nio.{ByteBuffer, ByteOrder}
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, RawLocalFileSystem, Path => HPath}
 
 import org.apache.spark.sql.functions._
 
@@ -117,9 +121,10 @@ class ZarrSourceSpec extends SparkSpec {
 
   /** Write a consolidated single-station store mirroring the reference's layout:
     * station(U12), time(i8 + CF hours), tas(f8 2-D (1,time) blosc-lz4), pr(f4 gzip,
-    * NaN fill), flag(i4, -9999 fill, one missing chunk), src(vlen-utf8 zlib). */
+    * NaN fill), flag(i4, -9999 fill, one missing chunk), src(vlen-utf8 zlib), and
+    * with `withRh` an uncompressed rh(f8). */
   private def writeStore(dir: Path, station: String, n: Int,
-                         withPr: Boolean = true): Unit = {
+                         withPr: Boolean = true, withRh: Boolean = false): Unit = {
     def arr(shape: String, chunks: String, dtype: String, comp: String,
             fill: String, dims: String) =
       (s"""{"chunks":$chunks,"compressor":$comp,"dtype":"$dtype","fill_value":$fill,
@@ -140,6 +145,7 @@ class ZarrSourceSpec extends SparkSpec {
     if (withPr)
       put("pr", arr(s"[$n]", "[4]", "<f4", """{"id":"gzip","level":1}""", "NaN", """["time"]"""))
     put("flag", arr(s"[$n]", "[5]", "<i4", "null", "-9999", """["time"]"""))
+    if (withRh) put("rh", arr(s"[$n]", s"[$n]", "<f8", "null", "NaN", """["time"]"""))
     put("src", arr(s"[$n]", s"[$n]", "|O", """{"id":"zlib","level":1}""",
       "null", """["time"]""").copy(_1 =
       s"""{"chunks":[$n],"compressor":{"id":"zlib","level":1},"dtype":"|O","fill_value":null,
@@ -170,6 +176,7 @@ class ZarrSourceSpec extends SparkSpec {
     chunk("flag", "0", ByteBuffer.allocate(20).order(ByteOrder.LITTLE_ENDIAN)
       .putInt(100).putInt(101).putInt(-9999).putInt(103).putInt(104).array())
     chunk("src", "0", zlib(vlenUtf8((0 until n).map(i => s"net$i"))))
+    if (withRh) chunk("rh", "0", doublesLE((0 until n).map(i => 50.0 + i)))
   }
 
   // ------------------------------------------------------------------- tests
@@ -194,19 +201,18 @@ class ZarrSourceSpec extends SparkSpec {
   }
 
   test("CF units parse: seconds/hours/days since epoch") {
-    assert(ZarrSource.parseCfUnits("hours since 2000-01-01") ==
+    assert(StationRuns.parseCfUnits("hours since 2000-01-01") ==
       (3600000000L, 946684800000000L))
-    assert(ZarrSource.parseCfUnits("seconds since 1970-01-01 00:00:00") == (1000000L, 0L))
-    assert(ZarrSource.parseCfUnits("days since 1980-01-01T00:00:00") ==
+    assert(StationRuns.parseCfUnits("seconds since 1970-01-01 00:00:00") == (1000000L, 0L))
+    assert(StationRuns.parseCfUnits("days since 1980-01-01T00:00:00") ==
       (86400000000L, 315532800000000L))
   }
 
   test("S5: consolidated store reads with true dtypes, fills, and CF time") {
     val dir = Files.createTempDirectory("zarr_store")
     writeStore(dir.resolve("TEST_001.zarr"), "TEST_001", n = 10)
-    val d = ZarrSource.readStore(
-      ZarrSource.hadoopReader(dir.resolve("TEST_001.zarr").toString,
-        spark.sparkContext.hadoopConfiguration), "TEST_001.zarr")
+    val d = ZarrSource.readStoreAt(dir.resolve("TEST_001.zarr").toString,
+      spark.sparkContext.hadoopConfiguration)
     assert(d.station == "TEST_001")
     assert(d.time.head == 946684800000000L && d.time(1) - d.time(0) == 3600000000L)
     val cols = d.cols.map(c => c._1 -> c._3).toMap
@@ -260,9 +266,7 @@ class ZarrSourceSpec extends SparkSpec {
     Seq(1.5, -2.25, 0.0, 99.75).foreach(beBytes.putDouble)
     Files.createDirectories(dir.resolve("bar"))
     Files.write(dir.resolve("bar").resolve("0"), beBytes.array())
-    val d = ZarrSource.readStore(
-      ZarrSource.hadoopReader(dir.toString, spark.sparkContext.hadoopConfiguration),
-      "M8.zarr")
+    val d = ZarrSource.readStoreAt(dir.toString, spark.sparkContext.hadoopConfiguration)
     assert(d.station == "M8ST")
     assert(d.time.toSeq == (0 until 4).map(i => 1577836800000000L + i * 3600000000L))
     assert(d.cols.find(_._1 == "bar").get._3.toSeq == Seq(1.5, -2.25, 0.0, 99.75))
@@ -271,13 +275,15 @@ class ZarrSourceSpec extends SparkSpec {
   test("S5: multi-store distributed read + ingest round-trip to the obs layout") {
     val dir = Files.createTempDirectory("zarr_corpus")
     writeStore(dir.resolve("ST_A.zarr"), "ST_A", n = 10)
-    writeStore(dir.resolve("ST_B.zarr"), "ST_B", n = 10, withPr = false)
+    writeStore(dir.resolve("ST_B.zarr"), "ST_B", n = 10, withPr = false, withRh = true)
     val paths = Seq(dir.resolve("ST_A.zarr").toString, dir.resolve("ST_B.zarr").toString)
     val df = ZarrSource.readStores(spark, paths)
     assert(df.count() == 20)
+    // ST_B's extra rh is dropped (schema from the first store)
     assert(df.columns.toSeq == Seq("station", "time", "flag", "pr", "src", "tas"))
-    // ST_B has no pr: its rows are null there (schema from the first store)
+    // ST_B has no pr: its rows are null there
     assert(df.filter(col("station") === "ST_B" && col("pr").isNotNull).count() == 0)
+    assert(df.filter(col("station") === "ST_B" && col("tas").isNotNull).count() == 9)
     assert(df.filter(col("station") === "ST_A" && col("pr").isNotNull).count() == 10)
     val out = Files.createTempDirectory("zarr_obs").toString + "/obs"
     ZarrSource.ingest(spark, paths, out, network = "TESTNET")
@@ -288,5 +294,38 @@ class ZarrSourceSpec extends SparkSpec {
       .agg(sum(col("tas"))).first().getDouble(0), 21.0)) // 0.5*sum(0..9 minus idx 3)
     val attrs = Sinks.readAttrs(back, out)
     assert(attrs.global("title") == "graft zarr fixture")
+  }
+
+  test("a file of 2 GiB or more is refused naming its path; an absent chunk is None") {
+    val dir = Files.createTempDirectory("zarr_huge")
+    writeStore(dir.resolve("BIG.zarr"), "BIG", n = 10)
+    val conf = TwoGiBFileSystem.conf
+    val store = s"${TwoGiBFileSystem.Scheme}://${dir.resolve("BIG.zarr")}"
+    val e = intercept[IllegalArgumentException](ZarrSource.readStoreAt(store, conf))
+    assert(e.getMessage.contains("BIG.zarr/.zmetadata"), e.getMessage)
+    // flag's chunk 1 is not written: zarr reads it as fill
+    val chunk = new HPath(s"$store/flag/1")
+    assert(StationRuns.readFile(chunk.getFileSystem(conf), chunk).isEmpty)
+  }
+}
+
+/** A local file system under the `twogib:` scheme that reports every file as
+  * 2 GiB long, so the read guard is reached without writing such a file. */
+class TwoGiBFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create(s"${TwoGiBFileSystem.Scheme}:///")
+  override def getFileStatus(p: HPath): FileStatus = {
+    val s = super.getFileStatus(p)
+    new FileStatus(1L << 31, s.isDirectory, 1, s.getBlockSize, s.getModificationTime, p)
+  }
+}
+
+object TwoGiBFileSystem {
+  val Scheme = "twogib"
+
+  def conf: Configuration = {
+    val c = new Configuration(false)
+    c.set(s"fs.$Scheme.impl", classOf[TwoGiBFileSystem].getName)
+    c.setBoolean(s"fs.$Scheme.impl.disable.cache", true)
+    c
   }
 }
