@@ -22,7 +22,11 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   * a compact totals line. The full line plus a per-query `detail` record goes
   * to `bench_<cpus>c.json` (or `SPARK_GRAFT_BENCH_OUT`), each query's final
   * plan to the `.plans.txt` file beside it. A/B two code shapes by running
-  * the same query list on both commits. */
+  * the same query list on both commits.
+  *
+  * The timed action writes every row to the `noop` sink: a caller collects or
+  * writes the whole result, and `count()` would let column pruning plan a
+  * narrower query than the one that caller runs. */
 object Bench {
 
   /** Resources of one rep: executor CPU, task run time and GC; input, shuffle
@@ -123,7 +127,7 @@ object Bench {
       val runs = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         val err =
-          try { fn(spark, sfDir).count(); None }
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
           catch { case e: Throwable => Some(e.getClass.getSimpleName) }
         val sec = (System.nanoTime() - t0) / 1e9
         // queries that pin intermediates (LSH signature tables, pipeline stages) must
