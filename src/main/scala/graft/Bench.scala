@@ -22,11 +22,8 @@ import org.json4s.jackson.JsonMethods.{compact, render}
   * a compact totals line. The full line plus a per-query `detail` record goes
   * to `bench_<cpus>c.json` (or `SPARK_GRAFT_BENCH_OUT`), each query's final
   * plan to the `.plans.txt` file beside it. A/B two code shapes by running
-  * the same query list on both commits.
-  *
-  * The timed action writes every row to the `noop` sink: a caller collects or
-  * writes the whole result, and `count()` would let column pruning plan a
-  * narrower query than the one that caller runs. */
+  * the same query list on both commits. The timed action writes every row to the
+  * `noop` sink, the plan a caller runs (`count()` lets column pruning narrow it). */
 object Bench {
 
   /** Resources of one rep: executor CPU, task run time and GC; input, shuffle

@@ -70,8 +70,7 @@ object DedupOps {
     val (as, bs) = minhashCoeffs(k)
     val sigs = df
       .select(col(groupCol).as("g"),
-        explode(shingles(col(textCol), shingleN)).as("s"))
-      .select(col("g"), pmod(shingleHash(col("s")), lit(1L << 32)).as("h"))
+        explode(hashedShingles(col(textCol), shingleN)).as("h"))
       .groupBy(col("g"))
       .agg(
         min(pmod(lit(as(0)) * col("h") + lit(bs(0)), lit(MinhashPrime))).as("s0"),
@@ -127,9 +126,10 @@ object DedupOps {
   }
 
   /** Shingle-hash strategy. [[Md5Portable]] routes through md5 so every step has an
-    * exact cross-engine oracle (the verification default). [[XxHash64Fast]] is the
-    * production path: Spark-native, codegen'd, no hex round-trip — same 60-bit
-    * positive range, same downstream pipeline, just not replicable in other engines.
+    * exact cross-engine oracle; it is the default and, with its shingles hashed in
+    * the native KgramMd5 kernel, also the cheaper one (d2 vs d2x, SCALE.md).
+    * [[XxHash64Fast]] hashes each shingle string with Spark's xxhash64 — same 60-bit
+    * positive range, same downstream pipeline, not replicable in other engines.
     * DedupAnnSpec pins that both find the same near-dup pairs. */
   sealed trait HashStrategy
   case object Md5Portable extends HashStrategy
@@ -179,17 +179,24 @@ object DedupOps {
     graft.expr.MinHashSig.expr(h32, as, bs)
   }
 
-  /** Distinct hashed-shingle array (the minhash input) of a text column. The ONE
-    * definition of text→h32 used by both the pair ops (via [[sigTable]]) and the cap
-    * ledger ([[minhashCapStats]]) — sharing it guarantees the ledger audits the exact
-    * band keys the pair ops join on (ADVICE r12: an inlined copy could silently
-    * drift if the hashing or band-key format ever changes). */
-  private def hashedShingles(text: Column, shingleN: Int,
-                             strategy: HashStrategy): Column =
-    array_distinct(transform(shingles(text, shingleN),
-      s => pmod(shingleHash(s, strategy), lit(1L << 32))))
+  /** The set of [[shingleHash]] mod 2^32 over a text's [[shingles]] (the minhash
+    * input): the ONE text→h32 definition, shared by the pair ops ([[sigTable]]), the
+    * cap ledger, [[sourceSimilarity]] and the streaming twins, so audited band keys
+    * cannot drift from join keys. Md5Portable hashes every gram in the native
+    * [[graft.text.TextOps.kgramHashes]] kernel (same set, KgramMd5Spec; the order
+    * may differ, and MinHashSig and [[jaccard]] do not read it). Null text gives
+    * null; the string chain it replaced hashed it as one `""` shingle under
+    * `spark.sql.legacy.sizeOfNull=true`, so all null documents were near-dups. */
+  private[graft] def hashedShingles(text: Column, shingleN: Int,
+                                    strategy: HashStrategy = Md5Portable): Column =
+    array_distinct(strategy match {
+      case Md5Portable =>
+        transform(graft.text.TextOps.kgramHashes(text, shingleN), h => pmod(h, lit(1L << 32)))
+      case XxHash64Fast => transform(shingles(text, shingleN),
+        s => pmod(shingleHash(s, strategy), lit(1L << 32)))
+    })
 
-  /** (id, hashed-shingle array, minhash signature), CACHED. The cache is load-bearing,
+  /** (id, [[hashedShingles]] array, minhash signature), CACHED. The cache is load-bearing,
     * not a convenience: projection collapse inlines the signature expression (and its
     * md5 hash-array child) into every band lambda — `bands` full signature
     * re-evaluations per row (in the pre-r7 k-lambda HOF form this was k × bands md5
@@ -644,17 +651,18 @@ object DedupOps {
     * a cross product). The corpus explodes to one row per distinct n-gram, which is
     * the unavoidable payload and is scanned exactly ONCE: a left join marks the
     * matched grams and a single groupBy carries (total, hits) partial sums back to
-    * (id). Hashes route through md5 (shingleHash), so the score is engine-portable
+    * (id). Each n-gram hashes to its 60-bit md5 [[shingleHash]] in the native
+    * [[graft.text.TextOps.kgramHashes]] kernel, so the score is engine-portable
     * and oracle-checked bit-exactly. */
   def contaminationScore(corpus: DataFrame, reference: DataFrame, idCol: String,
                          textCol: String, n: Int = 13): DataFrame = {
     val refGrams = reference
-      .select(explode(transform(shingles(col(textCol), n), s => shingleHash(s))).as("_g"))
+      .select(explode(graft.text.TextOps.kgramHashes(col(textCol), n)).as("_g"))
       .distinct()
       .withColumn("_m", lit(1L))
     corpus
-      .select(col(idCol), explode(transform(shingles(col(textCol), n),
-        s => shingleHash(s))).as("_g"))
+      .select(col(idCol),
+        explode(array_distinct(graft.text.TextOps.kgramHashes(col(textCol), n))).as("_g"))
       .join(refGrams, Seq("_g"), "left")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("_tot"), sum(coalesce(col("_m"), lit(0L))).as("_hit"))
@@ -681,13 +689,15 @@ object DedupOps {
     *  - small-star: every node u links each smaller-or-equal neighbor (and itself)
     *    to m(u) — operates on (larger → smaller) orientation only.
     *
-    * Both preserve connectivity and strictly shrink non-star components; a fixpoint
-    * is a forest of stars whose centers are the component minima, read out as
-    * (id, cluster) directly from the final edge list. Convergence is detected by an
-    * (edge-count, xxhash64-sum) pair computed in the SAME job that materializes each
-    * round's lazy checkpoint — O(1) driver data, no collect. The per-round
-    * `localCheckpoint` is load-bearing: persist alone caches the DATA but not the
-    * PLAN, so an uncheckpointed iterate's plan grows every round.
+    * Both preserve connectivity and strictly shrink non-star components. The loop
+    * stops after the first round whose output (oriented larger → smaller) is a
+    * star forest — no node has two out-edges or is both a source and a target.
+    * That forest is the fixpoint, each star one component centered on its
+    * minimum, read out as (id, cluster) directly. The test is one grouped
+    * aggregate in the SAME job that materializes the round's lazy checkpoint: one
+    * action per round and none before the first. The per-round `localCheckpoint`
+    * is load-bearing: persist alone caches the DATA but not the PLAN, so an
+    * uncheckpointed iterate's plan grows every round.
     *
     * Output: (id, cluster = component minimum) for every node appearing in
     * `edges`. StarCcSpec pins equality with a label-propagation reference on
@@ -709,8 +719,11 @@ object DedupOps {
     // the round's distinct).
     def starRound(e: DataFrame, bidir: Boolean,
                   keep: (Column, Column) => Column): DataFrame = {
+      // both orientations from ONE read of `e`: a union of two reads would plan
+      // the first round's input (e.g. the whole LSH pair pipeline) twice
       val oriented =
-        if (bidir) e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+        if (bidir) e.select(explode(array(struct(col("src"), col("dst")),
+          struct(col("dst").as("src"), col("src").as("dst")))).as("_o")).select("_o.*")
         else e.select(greatest(col("src"), col("dst")).as("src"),
           least(col("src"), col("dst")).as("dst"))
       val w = Window.partitionBy(col("src"))
@@ -722,36 +735,25 @@ object DedupOps {
         .select(col("_v").as("src"), col("_m").as("dst"))
         .distinct()
     }
-    // canonicalize orientation (larger → smaller) BEFORE distinct so mirrored inputs
-    // (a,b)/(b,a) collapse to one row — the invariant the fingerprint's bit_xor
-    // soundness argument relies on, and the orientation every later round emits
+    def isStarForest(df: DataFrame): Boolean =
+      df.select(explode(array(struct(col("src").as("v"), lit(1).as("out")),
+          struct(col("dst").as("v"), lit(0).as("out")))).as("_e"))
+        .groupBy(col("_e.v"))
+        .agg(sum(col("_e.out")).as("_out"), count(lit(1)).as("_deg"))
+        .where(col("_out") > 1 || (col("_out") === 1 && col("_deg") > 1))
+        .count() == 0
+    // orientation larger → smaller before distinct: mirrored inputs collapse to one row
     var e = edges.select(greatest(col(id1), col(id2)).as("src"),
         least(col(id1), col(id2)).as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
-      .localCheckpoint(true)
-    // fingerprint of the (deduped, orientation-normalized) edge set; equal
-    // fingerprints across a round = fixpoint. bit_xor is overflow-free (sum of
-    // full-range hashes trips ANSI addExact) and sound on a DISTINCT edge set;
-    // collisions at ~2^-64 are below practical concern, and a false "converged"
-    // would still emit consistent star labels — the paper's invariant holds per round
-    def fingerprint(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(bit_xor(xxhash64(least(col("src"), col("dst")),
-          greatest(col("src"), col("dst")))), lit(0L))).first()
-      (r.getLong(0), r.getLong(1))
-    }
-    var fp = fingerprint(e)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
       val ls = starRound(e, bidir = true, keep = (v, u) => v > u)
-      val ss = starRound(ls, bidir = false, keep = (v, u) => v <= u)
+      e = starRound(ls, bidir = false, keep = (v, u) => v <= u)
         .localCheckpoint(false)
-      val nfp = fingerprint(ss) // same job materializes the checkpoint
-      e = ss
-      converged = nfp == fp
-      fp = nfp
+      converged = isStarForest(e) // same job materializes the checkpoint
       iter += 1
     }
     if (!converged)

@@ -116,10 +116,8 @@ object StreamingOps {
                              k: Int = 32, bands: Int = 8,
                              watermarkDelay: String = "1 hour"): DataFrame = {
     import graft.dedup.DedupOps
-    val h32 = array_distinct(transform(DedupOps.shingles(col(textCol), shingleN),
-      s => pmod(DedupOps.shingleHash(s), lit(1L << 32))))
     stream
-      .withColumn("_h32", h32)
+      .withColumn("_h32", DedupOps.hashedShingles(col(textCol), shingleN))
       .withColumn("_sig", DedupOps.minhashSignatureFromHashes(col("_h32"), k))
       .withColumn("band", explode(DedupOps.lshBandKeys(col("_sig"), bands, k / bands)))
       .join(corpusBands, Seq("band"))
@@ -138,9 +136,7 @@ object StreamingOps {
                       shingleN: Int = 3, k: Int = 32, bands: Int = 8): DataFrame = {
     import graft.dedup.DedupOps
     corpus
-      .withColumn("ch32", array_distinct(transform(
-        DedupOps.shingles(col(textCol), shingleN),
-        s => pmod(DedupOps.shingleHash(s), lit(1L << 32)))))
+      .withColumn("ch32", DedupOps.hashedShingles(col(textCol), shingleN))
       .withColumn("_sig", DedupOps.minhashSignatureFromHashes(col("ch32"), k))
       .select(col(idCol).as("cid"),
         explode(DedupOps.lshBandKeys(col("_sig"), bands, k / bands)).as("band"),

@@ -1,6 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 
 /** Large-star/small-star connected components: same (id, cluster) contract as the
@@ -60,5 +63,37 @@ class StarCcSpec extends SparkSpec {
     assert(ccStar(empty).isEmpty)
     val selfOnly = Seq((5L, 5L)).toDF("id1", "id2")
     assert(ccStar(selfOnly).isEmpty)
+  }
+
+  /** The Dataset actions `body` runs, by name, in order. */
+  private def actions(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(funcName)
+    }
+    GraftSqlBridge.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { body; GraftSqlBridge.drainListenerBus(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  test("star CC stops after the one round that leaves a star forest") {
+    // a star forest is already the fixpoint; one round turns the two-hop path
+    // 1-2-3 into the star {2->1, 3->1}
+    val forest = Seq((10L, 11L), (12L, 10L), (10L, 13L), (20L, 21L)).toDF("id1", "id2")
+    val path = Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2")
+    for ((edges, exp) <- Seq(
+        forest -> Set((10L, 10L), (11L, 10L), (12L, 10L), (13L, 10L), (20L, 20L), (21L, 20L)),
+        path -> Set((1L, 1L), (2L, 1L), (3L, 1L)))) {
+      var out: DataFrame = null
+      val ran = actions { out = DedupOps.connectedComponentsStar(edges) }
+      // one round: its lazy checkpoint and the star-forest test, no other action
+      assert(ran == Seq("localCheckpoint", "count"), ran)
+      assert(out.as[(Long, Long)].collect().toSet == exp)
+    }
   }
 }

@@ -3,9 +3,12 @@ package graft.expr
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.dedup.DedupOps
+import graft.text.TextOps
 
-/** Pins [[KgramMd5]] to the slice/concat_ws/md5 HOF chain it replaced, and
-  * codegen to interpreted. */
+/** Pins [[KgramMd5]] to the slice/concat_ws/md5 HOF chain it replaced, codegen to
+  * interpreted, and the dedup shingle hashes built on it to the per-shingle md5
+  * chain they replaced. */
 class KgramMd5Spec extends SparkSpec {
   import spark.implicits._
 
@@ -44,5 +47,52 @@ class KgramMd5Spec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     val g = df.select(KgramMd5.expr(col("toks"), 2)).collect().head.getSeq[Long](0)
     assert(i == g)
+  }
+
+  // the per-shingle chain DedupOps.hashedShingles (h32) and contaminationScore
+  // (60-bit) used before they hashed through the kernel
+  private def chain60(text: org.apache.spark.sql.Column, n: Int) =
+    transform(DedupOps.shingles(text, n), s => DedupOps.shingleHash(s))
+  private def chain32(text: org.apache.spark.sql.Column, n: Int) =
+    array_distinct(transform(chain60(text, n), h => pmod(h, lit(1L << 32))))
+
+  test("shingle hashes through the kernel equal the per-shingle md5 chain, as sets") {
+    val df = Seq(
+      1L -> "two words",                           // fewer tokens than n
+      2L -> "",                                    // empty
+      3L -> "   \t \n  ",                          // whitespace only
+      4L -> "a b c a b c a b c a b",               // repeated shingles
+      5L -> "The Quick brown FOX the quick BROWN fox jumps",  // mixed case
+      6L -> "Ça et là Über straße naïve 東京 東京 東京 😀 café",  // non-ASCII
+      7L -> "alpha beta gamma delta epsilon zeta eta theta iota").toDF("id", "text")
+    for (n <- Seq(1, 3, 5)) {
+      val rows = df.select(col("id"),
+        DedupOps.hashedShingles(col("text"), n), chain32(col("text"), n),
+        array_distinct(TextOps.kgramHashes(col("text"), n)), chain60(col("text"), n))
+        .collect()
+      for (r <- rows) {
+        val Seq(h32, c32, h60, c60) = (1 to 4).map(r.getSeq[Long](_))
+        assert(h32.toSet == c32.toSet && h32.size == h32.toSet.size, s"n=$n id=${r.get(0)}")
+        assert(h60.toSet == c60.toSet && h60.size == c60.size, s"n=$n id=${r.get(0)}")
+      }
+    }
+  }
+
+  test("null text hashes to null; legacy sizeOfNull no longer makes it one \"\" shingle") {
+    val df = Seq((1L, null: String)).toDF("id", "text")
+    def hashes() = df.select(DedupOps.hashedShingles(col("text"), 3), chain32(col("text"), 3))
+      .head()
+    val r = hashes()
+    assert(r.isNullAt(0) && r.isNullAt(1))
+    // under the legacy size(null) = -1 the old chain took the short-text branch
+    // and hashed "" — every null document was a near-duplicate of every other
+    spark.conf.set("spark.sql.legacy.sizeOfNull", "true")
+    try {
+      val l = hashes()
+      assert(l.isNullAt(0))
+      val empty = Seq("").toDF("s").select(pmod(DedupOps.shingleHash(col("s")), lit(1L << 32)))
+        .head().getLong(0)
+      assert(l.getSeq[Long](1) == Seq(empty))
+    } finally spark.conf.set("spark.sql.legacy.sizeOfNull", "false")
   }
 }
