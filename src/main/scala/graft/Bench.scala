@@ -18,8 +18,9 @@ import org.json4s.jackson.JsonMethods.{compact, render}
 /** Times every selected query and records what each one cost.
   *
   * `runMain graft.Bench [query…]` runs the named queries (default: all) at
-  * `SPARK_GRAFT_SF_DIR` and prints two JSON lines: the full per-query map and
-  * a compact totals line. The full line plus a per-query `detail` record goes
+  * `SPARK_GRAFT_SF_DIR` and prints JSON lines: the full per-query map, a
+  * compact totals line, then the per-query map again in `queries_part` lines of
+  * at most 1.5 KB. The full line plus a per-query `detail` record goes
   * to `bench_<cpus>c.json` (or `SPARK_GRAFT_BENCH_OUT`), each query's final
   * plan to the `.plans.txt` file beside it. A/B two code shapes by running
   * the same query list on both commits. The timed action writes every row to the
@@ -147,6 +148,25 @@ object Bench {
 
   private def f3(v: Double): JValue = JDecimal(BigDecimal(f"$v%.3f"))
 
+  /** `queries` as `{"metric":"queries_part","i":i,"of":n,"queries":{…}}` lines of at
+    * most `maxBytes` UTF-8 bytes each (a single entry longer than that gets a line of
+    * its own), in order; their `queries` maps together are `queries`. */
+  private[graft] def queryParts(queries: Seq[(String, JValue)],
+                                maxBytes: Int = 1536): Seq[String] = {
+    def line(i: Int, of: Int, qs: Seq[(String, JValue)]): String = compact(render(JObject(
+      "metric" -> JString("queries_part"), "i" -> JInt(i), "of" -> JInt(of),
+      "queries" -> JObject(qs: _*))))
+    // sized with the widest i/of the lines can carry
+    def fits(qs: Seq[(String, JValue)]): Boolean =
+      line(queries.size + 1, queries.size + 1, qs)
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8).length <= maxBytes
+    val parts = queries.foldLeft(Vector(Vector.empty[(String, JValue)])) { (ps, q) =>
+      if (ps.last.nonEmpty && !fits(ps.last :+ q)) ps :+ Vector(q)
+      else ps.init :+ (ps.last :+ q)
+    }
+    parts.zipWithIndex.map { case (qs, i) => line(i + 1, parts.size, qs) }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
@@ -187,6 +207,9 @@ object Bench {
       "metric" -> JString("total"), "value" -> JDouble(total), "unit" -> JString("sec"),
       "reps" -> JInt(reps), "failed" -> JInt(nFailed), "n" -> JInt(results.size),
       "cpus" -> JInt(cpus.toInt), "sf" -> JString(sfDir)))))
+    // The per-query map again, in lines a captured stdout tail keeps whole: a
+    // parser that only sees the end of stdout still gets every query's number.
+    queryParts(results.map(r => r.name -> f3(r.sec))).foreach(println)
     // ALSO persist the full per-query map plus the per-query detail record: a
     // captured stdout tail has truncated mid-JSON before (BENCH_r10 parsed:
     // null). The default filename is keyed on the core count so runs on different

@@ -1,19 +1,22 @@
 package graft.kernels
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField}
 
 /** W11 — first-order Butterworth low-pass over per-series standardized anomalies
   * (`/root/reference/scripts/3_qaqc_data/qaqc_climatological_outlier.py:148-177`):
   * `signal.butter(1, cutFreq, 'lp', fs=dataFreq)` + `sosfilt`, the reference's only
   * inherently-sequential kernel.
   *
-  * Spark shape: one `mapPartitions` over the time-sorted rows — the one operator
-  * family SQL can't express. The IIR state is two doubles; rows STREAM through the
-  * kernel with all their columns (no per-station materialization, no join-back), so a
-  * station's series can be arbitrarily long at 100 TB. The required secondary sort is
-  * obtained by `repartition(key).sortWithinPartitions(key, time)`: one exchange.
+  * Spark shape: a [[SeriesScan]] — the one operator family SQL can't express. The IIR
+  * state is two doubles; rows STREAM through the kernel with all their columns (no
+  * per-station buffer, no join-back), so a station's series can be arbitrarily long.
+  * The scan declares the (key, time) clustering and sort it needs, so after another
+  * scan over the same key and time ([[graft.ops.SeriesOps.interpolateLinear]], as in
+  * the climatological chain) it adds no exchange and no sort.
   */
 object Butterworth {
 
@@ -49,10 +52,9 @@ object Butterworth {
 
   /** Distributed application: per key group, linear interpolation of the value column
     * is the caller's job (SeriesOps.interpolateLinear, as the reference interpolates
-    * before filtering); here we sort within partitions by (keys, time) after a
-    * repartition on keys and stream each group through the IIR. `dataFreqSecondsCol`
-    * holds the per-series mode of time deltas (A14); the group's first filtered row
-    * sets its coefficients.
+    * before filtering); here each group streams through the IIR in time order.
+    * `dataFreqSecondsCol` holds the per-series mode of time deltas (A14); the group's
+    * first filtered row sets its coefficients.
     *
     * Returns every input row and column plus `out`. A row with a null time, value or
     * frequency passes through with a null `out` and does not advance the filter
@@ -60,36 +62,35 @@ object Butterworth {
     * duplicate timestamps is ill-defined) without advancing the state. */
   def lowPass(df: DataFrame, keys: Seq[String], timeCol: String, valueCol: String,
               dataFreqSecondsCol: String, out: String,
-              cutFreq: Double = OneMonthCutoffHz)(implicit spark: SparkSession): DataFrame = {
-    val keyCols = keys.map(col)
-    val schema = df.schema
-    val ki = keys.map(schema.fieldIndex)
-    val Seq(ti, vi, fi) = Seq(timeCol, valueCol, dataFreqSecondsCol).map(schema.fieldIndex)
-    def num(r: Row, i: Int): Double = r.get(i).asInstanceOf[Number].doubleValue
-    df.repartition(keyCols: _*)
-      .sortWithinPartitions((keyCols :+ col(timeCol)): _*)
-      .mapPartitions { it =>
-        // partition is sorted by (key, time): detect group boundaries on the fly
-        // (null-safe key equality) and keep only the IIR state per group
-        var key: Seq[Any] = null
-        var c: Coeffs = null
-        var t: Any = null
-        var xp = 0.0; var yp = 0.0
-        it.map { r =>
-          val k = ki.map(r.get)
-          if (key == null || k != key) { key = k; c = null; t = null }
-          val y: Any =
-            if (r.isNullAt(ti) || r.isNullAt(vi) || r.isNullAt(fi)) null
-            else if (c != null && r.get(ti) == t) yp
-            else {
-              val x = num(r, vi)
-              yp = if (c == null) { c = coeffs(cutFreq, 1.0 / num(r, fi)); c.b0 * x }
-                   else c.b0 * x + c.b1 * xp - c.a1 * yp
-              xp = x; t = r.get(ti)
-              yp
-            }
-          Row.fromSeq(r.toSeq :+ y)
+              cutFreq: Double = OneMonthCutoffHz)(implicit spark: SparkSession): DataFrame =
+    SeriesScan.over(df, keys, timeCol,
+      Seq(col(timeCol), col(valueCol).cast("double"), col(dataFreqSecondsCol).cast("double")),
+      LowPassKernel(cutFreq, out, df.schema(timeCol).dataType))
+
+  /** Inputs: the time, the value and the frequency in seconds. */
+  private final case class LowPassKernel(cutFreq: Double, out: String, timeType: DataType)
+      extends SeriesKernel {
+    override def outputs: Seq[StructField] = Seq(StructField(out, DoubleType, nullable = true))
+    override def open(firstOut: Int, fifo: () => RowFifo): SeriesRun = new SeriesRun(fifo()) {
+      private var c: Coeffs = null
+      private var t: Any = null
+      private var xp = 0.0
+      private var yp = 0.0
+      override def push(row: UnsafeRow, in: InternalRow): Unit = {
+        if (!(in.isNullAt(0) || in.isNullAt(1) || in.isNullAt(2))) {
+          val ti = in.get(0, timeType)
+          if (c == null || ti != t) {
+            val x = in.getDouble(1)
+            yp = if (c == null) { c = coeffs(cutFreq, 1.0 / in.getDouble(2)); c.b0 * x }
+                 else c.b0 * x + c.b1 * xp - c.a1 * yp
+            xp = x; t = InternalRow.copyValue(ti)
+          }
+          row.setDouble(firstOut, yp)
         }
-      }(Encoders.row(schema.add(out, DoubleType, nullable = true)))
+        put(row)
+      }
+      override def endGroup(): Unit = { c = null; t = null }
+      override protected def finish(row: UnsafeRow): Unit = ()
+    }
   }
 }

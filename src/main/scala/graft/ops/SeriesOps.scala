@@ -1,8 +1,13 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField}
+
+import graft.kernels.{RowFifo, SeriesKernel, SeriesRun, SeriesScan, SqlDouble}
 
 /** Window / time-series operators (SURVEY.md §2.5, W1–W20). Every op partitions by the
   * series key (station/user) — Spark shuffles once on that key and all windows below are
@@ -268,29 +273,140 @@ object SeriesOps {
   /** W12 — linear interpolation of INTERIOR null gaps, time-weighted between the last
     * and next non-null observation (`qaqc_climatological_outlier.py:175`). Pandas
     * `interpolate(method='linear')` leaves leading nulls unfilled but forward-fills
-    * trailing nulls with the last non-null value; matched exactly. Window-only:
-    * the last non-null walking the series forward, then backward, each over a growing
-    * frame (O(n) per series), no sequential kernel needed. The next non-null is not
-    * `first` over a frame running to the partition's end: Spark recomputes such a
-    * shrinking frame for every row, O(n²) per series. */
+    * trailing nulls with the last non-null value; matched exactly.
+    *
+    * One [[graft.kernels.SeriesScan]] pass in time order: a null waits in the scan's
+    * buffer until the next non-null of its series arrives, so the scan holds one gap
+    * at a time, and a following scan over the same keys and time (the Butterworth
+    * low-pass) reuses its exchange and sort. The value of `out` is, with `t` the
+    * time as a double, the previous non-null `v₀` (at `t₀`) and the next `v₁` (at
+    * `t₁`): `v` where it is not null; null with no `v₀`; `v₀` with no `v₁` or where
+    * `t₁ = t₀`; else `v₀ + (v₁ − v₀)·((t − t₀)/(t₁ − t₀))`. Rows that share a time
+    * are taken in the scan's order: a row's next non-null is the last one at or
+    * before it among the rows of its time, else the last one of the first later
+    * time that has one. A row with a null time is its own value. */
   def interpolateLinear(df: DataFrame, keys: Seq[String], timeCol: String, valueCol: String,
-                        out: String): DataFrame = {
-    val past = seriesWindow(keys, timeCol).rowsBetween(Window.unboundedPreceding, 0)
-    // the series in reverse (DESC NULLS LAST reverses ASC NULLS FIRST)
-    val ahead = Window.partitionBy(keys.map(col): _*).orderBy(col(timeCol).desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val t = col(timeCol).cast("double")
-    val prevV = last(col(valueCol), ignoreNulls = true).over(past)
-    val nextV = last(col(valueCol), ignoreNulls = true).over(ahead)
-    val prevT = last(when(col(valueCol).isNotNull, t), ignoreNulls = true).over(past)
-    val nextT = last(when(col(valueCol).isNotNull, t), ignoreNulls = true).over(ahead)
-    val frac = (t - prevT) / (nextT - prevT)
-    df.withColumn(out,
-      when(col(valueCol).isNotNull, col(valueCol))
-        .when(prevV.isNull, lit(null)) // leading nulls stay null (pandas behavior)
-        .when(nextV.isNull, prevV) // trailing nulls forward-fill (pandas behavior)
-        .when(nextT === prevT, prevV)
-        .otherwise(prevV + (nextV - prevV) * frac))
+                        out: String): DataFrame =
+    SeriesScan.over(df, keys, timeCol,
+      Seq(col(timeCol), col(timeCol).cast("double"), col(valueCol).cast("double")),
+      InterpKernel(out, df.schema(timeCol).dataType))
+
+  /** Inputs: the time, the time as a double and the value. */
+  private final case class InterpKernel(out: String, timeType: DataType) extends SeriesKernel {
+    override def outputs: Seq[StructField] = Seq(StructField(out, DoubleType, nullable = true))
+    override def open(firstOut: Int, fifo: () => RowFifo): SeriesRun =
+      new InterpRun(firstOut, timeType, fifo())
+  }
+
+  /** A run of held rows: final ones, or nulls of one time that wait for the next
+    * non-null (`pending`), with the previous non-null they all share. */
+  private final class Held(val pending: Boolean, val tie: Long, val prevV: Double,
+                           val hasPrevT: Boolean, val prevT: Double) {
+    var left = 0
+    var resolved = false
+    var nextV = 0.0
+    var nextT = 0.0
+  }
+
+  private final class InterpRun(firstOut: Int, timeType: DataType, fifo: RowFifo)
+      extends SeriesRun(fifo) {
+    private var hasPrevV = false; private var prevV = 0.0
+    private var hasPrevT = false; private var prevT = 0.0
+    // the current run of rows with one time (a tie); `tie` counts them per group
+    private var started = false
+    private var tie = 0L
+    private var tieNull = false
+    private var tieTime: Any = null
+    private var tieT = 0.0
+    private var tieHasV = false; private var tieV = 0.0
+    private val runs = scala.collection.mutable.ArrayDeque.empty[Held]
+    private var releasedRuns = 0
+
+    override def push(row: UnsafeRow, in: InternalRow): Unit = {
+      val tNull = in.isNullAt(0)
+      if (!started || tNull != tieNull || (!tNull && in.get(0, timeType) != tieTime)) {
+        closeTie()
+        started = true; tie += 1; tieNull = tNull; tieHasV = false
+        tieTime = if (tNull) null else InternalRow.copyValue(in.get(0, timeType))
+        tieT = if (in.isNullAt(1)) Double.NaN else in.getDouble(1)
+      }
+      if (!in.isNullAt(2)) {
+        val v = in.getDouble(2)
+        row.setDouble(firstOut, v)
+        hasPrevV = true; prevV = v
+        if (!in.isNullAt(1)) { hasPrevT = true; prevT = in.getDouble(1) }
+        tieHasV = true; tieV = v
+        emit(row)
+      } else if (tieNull || !hasPrevV) emit(row) // a null time, or a leading null
+      else if (tieHasV) {
+        // an earlier row of this time is the previous and the next non-null
+        row.setDouble(firstOut, tieV)
+        emit(row)
+      } else {
+        // the time waits in the output slot until the next non-null arrives
+        row.setDouble(firstOut, in.getDouble(1))
+        val last = runs.lastOption.orNull
+        if (last != null && last.pending && last.tie == tie && runs.size > releasedRuns)
+          last.left += 1
+        else {
+          val h = new Held(true, tie, prevV, hasPrevT, prevT)
+          h.left = 1
+          runs += h
+        }
+        hold(row)
+      }
+    }
+
+    /** A final row, behind any held ones. */
+    private def emit(row: UnsafeRow): Unit =
+      if (runs.isEmpty) put(row)
+      else {
+        val last = runs.last
+        if (!last.pending && runs.size > releasedRuns) last.left += 1
+        else { val h = new Held(false, tie, 0.0, false, 0.0); h.left = 1; runs += h }
+        hold(row)
+      }
+
+    /** The time run ends: its last non-null is the next non-null of every null that
+      * waits from an earlier time. */
+    private def closeTie(): Unit = {
+      if (started && !tieNull && tieHasV)
+        runs.foreach(h => if (h.pending && !h.resolved && h.tie < tie) {
+          h.resolved = true; h.nextV = tieV; h.nextT = tieT
+        })
+      releaseFinal()
+    }
+
+    private def releaseFinal(): Unit =
+      while (releasedRuns < runs.size &&
+          (!runs(releasedRuns).pending || runs(releasedRuns).resolved)) {
+        release(runs(releasedRuns).left)
+        releasedRuns += 1
+      }
+
+    override def endGroup(): Unit = {
+      closeTie()
+      // the nulls still waiting have no next non-null: they forward-fill
+      releasedRuns until runs.size foreach { i => release(runs(i).left) }
+      releasedRuns = runs.size
+      started = false; tie = 0L; hasPrevV = false; hasPrevT = false
+    }
+
+    override protected def finish(row: UnsafeRow): Unit = {
+      val h = runs.head
+      if (h.pending) {
+        if (!h.resolved || (h.hasPrevT && SqlDouble.equal(h.nextT, h.prevT)))
+          row.setDouble(firstOut, h.prevV)
+        else if (!h.hasPrevT || h.nextT - h.prevT == 0.0) row.setNullAt(firstOut)
+        else {
+          val t = row.getDouble(firstOut)
+          row.setDouble(firstOut,
+            h.prevV + (h.nextV - h.prevV) * ((t - h.prevT) / (h.nextT - h.prevT)))
+        }
+      }
+      h.left -= 1
+      if (h.left == 0) { runs.removeHead(); releasedRuns -= 1 }
+    }
   }
 
   /** Sessionization: consecutive events of a key share a session while each gap to

@@ -1,12 +1,18 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DataType, StructField}
 
-/** W3/W4/W5 — the repeated-streak family (flags 27/28/29), re-expressed as window +
-  * groupBy plans over `(seriesKey, time)`
-  * (`/root/reference/scripts/3_qaqc_data/qaqc_unusual_streaks.py:45-818`).
+import graft.kernels.{RowFifo, SeriesKernel, SeriesRun, SeriesScan, SqlDouble}
+
+/** W3/W4/W5 — the repeated-streak family (flags 27/28/29)
+  * (reference `scripts/3_qaqc_data/qaqc_unusual_streaks.py:45-818`). Straight
+  * repeats are one streaming [[graft.kernels.SeriesScan]] pass per series; the
+  * same-hour and whole-day checks are window + groupBy plans over `(seriesKey, time)`.
   *
   * Every check shuffles once on the series key; all windows and sub-aggregations key on
   * supersets of it, so nothing here assumes single-station cardinality.
@@ -22,9 +28,10 @@ object StreakOps {
     *    (length > `nValues` OR floor(span-in-days) > `nDays`);
     *  - spurious-streak suppression: rows of the streak must be adjacent in the
     *    PRE-minValue-filter valid series (`is_consecutive` — a min_value hole inside a
-    *    run disqualifies it), enforced via a row_number taken before the filter.
-    * Each streak's length, time span and row-number span are window aggregates over
-    * (series, streak id), a sub-partition of the series shuffle: one exchange, no join.
+    *    run disqualifies it).
+    * The kernel walks each series in time order and holds one open streak (with the
+    * rows interleaved in it) in the scan's spillable buffer: a months-long stuck
+    * sensor spills instead of filling the heap. One exchange, no window, no join.
     * Returns the NON-NULL (and, when `minValue` is set, above-`minValue`) input rows,
     * key columns first, with a boolean `out` column (true = member of a flagged
     * streak; always false on a row with a null key). */
@@ -37,35 +44,82 @@ object StreakOps {
 
   /** The row-preserving form of [[straightRepeats]] over the rows where `valid` holds:
     * every row of `df`, with `_kept` (the row is one [[straightRepeats]] would return
-    * for `df.filter(valid)`) and `out`, which is false wherever `_kept` is. The filters
-    * are window partition keys instead — non-null and `valid` for the row number,
-    * `minValue` on top for the streaks — and one `repartition(keys)` serves every
-    * window. */
+    * for `df.filter(valid)`) and `out`, which is false wherever `_kept` is. */
   private[graft] def body(df: DataFrame, keys: Seq[String], timeCol: String,
                           valueCol: String, nValues: Long, nDays: Long,
                           minValue: Option[Double], minSeqLen: Long, valid: Column,
                           out: String): DataFrame = {
-    val kc = keys.map(col)
-    val v = col(valueCol); val t = col(timeCol)
-    def series(p: String) = Window.partitionBy((kc :+ col(p)): _*).orderBy(t)
-    val numbered = df.repartition(kc: _*)
-      .withColumn("_in", v.isNotNull && valid)
-      .withColumn("_rn", row_number().over(series("_in")))
-    // without `minValue` the streaks run over the row-number series and share its sort
-    val (withKept, kept) = minValue.fold((numbered, "_in"))(m =>
-      (numbered.withColumn("_kept", col("_in") && v > m), "_kept"))
-    val wf = series(kept)
-    val changed = when(lag(v, 1).over(wf).isNull || lag(v, 1).over(wf) =!= v, 1).otherwise(0)
-    val withSid = withKept.withColumn("_sid",
-      sum(changed).over(wf.rowsBetween(Window.unboundedPreceding, 0)))
-    val ws = Window.partitionBy((kc ++ Seq(col(kept), col("_sid"))): _*)
-    val len = count(lit(1)).over(ws)
-    val bad = col(kept) && SeriesOps.keysNotNull(keys) && len >= minSeqLen &&
-      (len > nValues ||
-        floor((max(t).over(ws).cast("double") - min(t).over(ws).cast("double")) / 86400.0) > nDays) &&
-      (max(col("_rn")).over(ws) - min(col("_rn")).over(ws) + 1 === len)
-    withSid.select((df.columns.map(col) ++
-      Seq(col(kept).as("_kept"), coalesce(bad, lit(false)).as(out))): _*)
+    val v = col(valueCol)
+    val in = v.isNotNull && valid
+    SeriesScan.over(df, keys, timeCol,
+      Seq(in, minValue.fold(in)(m => in && v > m), v, col(timeCol).cast("double"),
+        SeriesOps.keysNotNull(keys)),
+      StraightKernel(nValues, nDays, minSeqLen, out, df.schema(valueCol).dataType))
+  }
+
+  /** Inputs: in the series, kept (in the series and above `minValue`), the value, the
+    * time as a double, the keys are not null. */
+  private final case class StraightKernel(nValues: Long, nDays: Long, minSeqLen: Long,
+                                          out: String, valueType: DataType)
+      extends SeriesKernel {
+    override def outputs: Seq[StructField] = Seq(
+      StructField("_kept", BooleanType, nullable = false),
+      StructField(out, BooleanType, nullable = false))
+
+    override def open(firstOut: Int, fifo: () => RowFifo): SeriesRun = new SeriesRun(fifo()) {
+      private val KEPT = firstOut; private val OUT = firstOut + 1
+      private var rn = 0L // position in the series (non-null, valid)
+      // the open streak: value, length, first/last position, first/last non-null time
+      private var open = false
+      private var value: Any = null
+      private var len = 0L
+      private var firstRn = 0L; private var lastRn = 0L
+      private var hasT = false; private var minT = 0.0; private var maxT = 0.0
+      private var keysOk = false
+      private var bad = false // the verdict on the streak being released
+
+      override def push(row: UnsafeRow, in: InternalRow): Unit = {
+        if (in.getBoolean(0)) rn += 1
+        val kept = in.getBoolean(1)
+        row.setBoolean(KEPT, kept)
+        row.setBoolean(OUT, false)
+        if (!kept) { if (held == 0) put(row) else hold(row) }
+        else {
+          val v = in.get(2, valueType)
+          if (open && !SqlDouble.same(value, v)) closeStreak()
+          if (!open) {
+            open = true; value = InternalRow.copyValue(v); len = 0L; firstRn = rn
+            hasT = false; keysOk = in.getBoolean(4)
+          }
+          len += 1; lastRn = rn
+          if (!in.isNullAt(3)) {
+            val t = in.getDouble(3)
+            if (!hasT) { hasT = true; minT = t }
+            maxT = t
+          }
+          hold(row)
+        }
+      }
+
+      /** The streak ends: its verdict goes to every kept row held, and all held rows
+        * (the streak and the rows between its members) leave. */
+      private def closeStreak(): Unit = {
+        // spark's floor: a double to a long
+        val longSpan = hasT && math.floor((maxT - minT) / 86400.0).toLong > nDays
+        bad = keysOk && len >= minSeqLen && (len > nValues || longSpan) &&
+          lastRn - firstRn + 1 == len
+        open = false
+        releaseAll()
+      }
+
+      override def endGroup(): Unit = {
+        if (open) closeStreak() else releaseAll()
+        rn = 0L
+      }
+
+      override protected def finish(row: UnsafeRow): Unit =
+        if (row.getBoolean(KEPT)) row.setBoolean(OUT, bad)
+    }
   }
 
   /** W3 composed — straight repeats with thresholds resolved from the reference's

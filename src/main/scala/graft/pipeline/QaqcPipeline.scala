@@ -13,16 +13,16 @@ import graft.ops._
   * predicate (`grab_valid_obs`, `qaqc_utils.py:326-378`), so stages compose as an
   * explicit `Seq[Stage]` fold — no reordering freedom — with each stage declaring the
   * flag codes it writes. The whole pipeline stays ONE lazy Spark plan that reads its
-  * input once. Every stage is row-preserving: the windowed stages (spikes, straight
-  * streaks) run their operator's body over all rows, with each of the reference's
-  * filters as one more window partition key, and set their flag in place — no stage
-  * filters, joins back or pins. The reference runs every check over one sorted
-  * per-station frame; here one hash exchange on the station key serves both windowed
-  * stages (the hash partitioning satisfies every window keyed on the station plus a
-  * predicate), and each further window costs a local sort (SCALE.md).
+  * input once. Every stage is row-preserving: the series stages (spikes, straight
+  * streaks) run their operator's body, a streaming [[graft.kernels.SeriesScan]]
+  * kernel, over all rows and set their flag in place — no stage filters, joins back
+  * or pins. The reference runs every check over one sorted per-station frame, and so
+  * does this plan: each scan asks for its input clustered on the station and sorted
+  * on (station, time) and keeps that order, so the pass plans one station exchange
+  * (none over a table bucketed on the station), one sort and no window, however the
+  * stages are grouped into [[run]] calls.
   *
-  * The reference's per-station SLURM process becomes `Window.partitionBy(station)`;
-  * its hard station-abort gates (P4/P5) become semi-join filters.
+  * The reference's hard station-abort gates (P4/P5) become semi-join filters.
   */
 object QaqcPipeline {
 

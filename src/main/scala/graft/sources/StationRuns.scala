@@ -120,10 +120,12 @@ private[sources] object StationRuns {
     val root = new Path(rootPath)
     localRoot(root, conf) match {
       case Some(dir) =>
+        // each directory once, not a failed mkdir per file
+        files.map { case (rel, _) => dir.resolve(rel).getParent }.distinct.foreach { d =>
+          if (!java.nio.file.Files.isDirectory(d)) java.nio.file.Files.createDirectories(d)
+        }
         files.map { case (rel, bytes) =>
-          val f = dir.resolve(rel)
-          java.nio.file.Files.createDirectories(f.getParent)
-          java.nio.file.Files.write(f, bytes)
+          java.nio.file.Files.write(dir.resolve(rel), bytes)
           bytes.length.toLong
         }.sum
       case None =>
@@ -207,16 +209,19 @@ private[sources] object StationRuns {
     val confPairs = shipConf(spark)
     val rows = spark.sparkContext
       .parallelize(paths, math.min(paths.size, 1024))
-      .flatMap { p =>
-        val d = decode(p, hadoopConf(confPairs.value))
-        val byName = d.cols.map(c => c._1 -> c._3).toMap
-        val aligned = varOrder.map(byName.get)
-        (0 until d.time.length).iterator.map { i =>
-          Row.fromSeq(
-            d.station +:
-            java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-              d.time(i) / 1000000L, (d.time(i) % 1000000L) * 1000L)) +:
-            aligned.map(_.map(_(i)).orNull))
+      .mapPartitions { ps =>
+        val conf = hadoopConf(confPairs.value)
+        ps.flatMap { p =>
+          val d = decode(p, conf)
+          val byName = d.cols.map(c => c._1 -> c._3).toMap
+          val aligned = varOrder.map(byName.get)
+          (0 until d.time.length).iterator.map { i =>
+            Row.fromSeq(
+              d.station +:
+              java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
+                d.time(i) / 1000000L, (d.time(i) % 1000000L) * 1000L)) +:
+              aligned.map(_.map(_(i)).orNull))
+          }
         }
       }
     (first, spark.createDataFrame(rows, storeSchema(first)))

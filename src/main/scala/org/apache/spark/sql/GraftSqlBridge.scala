@@ -2,14 +2,32 @@ package org.apache.spark.sql
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Bridge into Spark's `private[sql]` Column <-> Expression converters — the standard
   * idiom for libraries that define native Catalyst expressions (the public API
   * deliberately hides expression internals; an extension jar re-exports exactly the
-  * two conversions it needs) — and into the `private[spark]` listener bus. */
+  * two conversions it needs) — into the Dataset <-> logical plan pair a library
+  * plan node needs, and into the `private[spark]` listener bus. */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** The analyzed plan of `df`. */
+  def logicalPlan(df: DataFrame): LogicalPlan = df.asInstanceOf[classic.Dataset[_]].logicalPlan
+
+  /** A DataFrame over `plan`, analyzed in `spark`. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Puts `strategy` first among `spark`'s extra planner strategies unless its
+    * planner already has it (through `spark.sql.extensions` or an earlier call). */
+  def addStrategy(spark: SparkSession, strategy: SparkStrategy): Unit = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    if (!s.sessionState.planner.strategies.contains(strategy))
+      s.experimental.extraStrategies = strategy +: s.experimental.extraStrategies
+  }
 
   /** Blocks until every posted listener event has been delivered, so counters
     * a listener keeps are complete for the work that has finished. */

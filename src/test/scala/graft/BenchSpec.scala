@@ -60,4 +60,22 @@ class BenchSpec extends SparkSpec {
     assert(p.detail.bhj == 1, p.detail)
     assert(p.plan.contains("InMemoryTableScan"), p.plan)
   }
+
+  test("the per-query map goes to stdout in queries_part lines of at most 1.5 KB") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    val queries = (1 to 199).map(i =>
+      f"q$i%03d_${"x" * (i % 37)}" -> (JDecimal(BigDecimal(i) / 7): JValue))
+    val lines = Bench.queryParts(queries)
+    assert(lines.size > 1)
+    lines.foreach(l => assert(l.getBytes("UTF-8").length <= 1536, l))
+    val parsed = lines.map(parse(_))
+    assert(parsed.map(p => (p \ "metric", p \ "i", p \ "of")) ==
+      lines.indices.map(i => (JString("queries_part"), JInt(i + 1), JInt(lines.size))))
+    val merged = parsed.flatMap(p => (p \ "queries").asInstanceOf[JObject].obj)
+    assert(merged.map(_._1) == queries.map(_._1))
+    assert(merged.map(_._2.values.toString.toDouble) ==
+      queries.map(_._2.values.toString.toDouble))
+    assert(Bench.queryParts(Nil) == Seq("""{"metric":"queries_part","i":1,"of":1,"queries":{}}"""))
+  }
 }

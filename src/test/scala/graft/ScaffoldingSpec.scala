@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * lower bound (a shrinking frame) for every row, O(n²) per partition. Operators,
   * kernels, pipelines and sources do not pin storage: a persist outlives the call,
   * and only a session-wide cache clear frees it. Station containers are read
-  * through one chassis, `StationRuns`. */
+  * through one chassis, `StationRuns`. The series operators that run as
+  * `SeriesScan` kernels keep no window form beside them. */
 class ScaffoldingSpec extends AnyFunSuite {
   private val sources: Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")
@@ -38,6 +39,25 @@ class ScaffoldingSpec extends AnyFunSuite {
     }
     assert(mains.sorted == Seq("Bench.scala", "Verify.scala"),
       s"measure with Bench, A/B by running it on two commits: $mains")
+  }
+
+  test("the series-scan operators keep no window or mapPartitions twin") {
+    // each operator's source from its def to the next member
+    def member(file: String, name: String): String = {
+      val text = sources.find(_._1.endsWith(file)).map(_._2)
+        .getOrElse(fail(s"scan found no $file"))
+      val from = text.indexOf(s"def $name(")
+      assert(from >= 0, s"$file defines no $name")
+      val next = "\n  (?:/\\*\\*|def |private )".r.findFirstMatchIn(text.substring(from + 1))
+      text.substring(from, next.fold(text.length)(from + 1 + _.start))
+    }
+    val ops = Seq("SpikeOps.scala" -> "detectSpikes", "SpikeOps.scala" -> "body",
+      "StreakOps.scala" -> "straightRepeats", "StreakOps.scala" -> "body",
+      "SeriesOps.scala" -> "interpolateLinear", "Butterworth.scala" -> "lowPass")
+    val twin = """(?<!SeriesScan)\.over\(|Window\.|mapPartitions|repartition\(|sortWithinPartitions""".r
+    val offenders = ops.flatMap { case (f, d) =>
+      twin.findFirstIn(member(f, d)).map(m => s"$f $d: $m") }
+    assert(offenders.isEmpty, s"these operators run as SeriesScan kernels: $offenders")
   }
 
   test("no hamming64 ...Wide twin is defined") {

@@ -7,8 +7,9 @@ import graft.SparkSpec
 
 /** The per-group statistics of the spike, straight-streak and standardized-anomaly
   * operators (monthly spike IQR, streak run lengths, winsorized climatology) are
-  * window aggregates over the partition the series window already shuffled to:
-  * each operator's plan has one hash exchange and no join. The caller-facing
+  * computed where the series already is — inside the spike and streak series-scan
+  * kernels, as window aggregates for the anomaly: each operator's plan has one hash
+  * exchange and no join. The caller-facing
   * contract is pinned alongside: output columns in order with their types, and the
   * null-key rule (spikes and anomaly drop null-key rows; straight repeats return
   * them unflagged). */

@@ -7,11 +7,13 @@ import graft.SparkSpec
 import graft.core.Flags
 import graft.kernels.Butterworth
 
-/** The QAQC pass reads its input once: every stage is row-preserving, so the
-  * single-variable pipeline plans one station exchange, no join and no pinned
-  * intermediate, and returns exactly its input rows. The Butterworth low-pass streams
-  * every column through its kernel, so it plans one exchange and no join-back. The
-  * flag-count report pins nothing: its total reuses the counts' exchange. */
+/** The QAQC pass reads its input once: every stage is row-preserving, and the series
+  * stages are series scans that share one station exchange and one sort, so the
+  * single-variable pipeline plans one exchange, one sort, no window, no join and no
+  * pinned intermediate (and no exchange over a table bucketed on the station), and
+  * returns exactly its input rows. Interpolation and the Butterworth low-pass share
+  * one exchange and one sort the same way. The flag-count report pins nothing: its
+  * total reuses the counts' exchange. */
 class QaqcPlanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -49,6 +51,57 @@ class QaqcPlanSpec extends SparkSpec {
     val flags = out.groupBy("v_eraqc").count().as[(Option[Int], Long)].collect().toMap
     assert(flags(Some(Flags.Spike)) == 2 && flags(Some(Flags.StraightStreak)) == 12, flags)
     assert(flags.values.sum == 160)
+  }
+
+  test("pipe1's chain, one stage per run call, plans 1 exchange, 1 sort, 0 windows") {
+    // as perfbench and the pipe1 query apply it: each stage through its own run call,
+    // then the flag-count report
+    val out = singleVariable(5).foldLeft(obs)((d, s) => QaqcPipeline.run(d, Seq(s)))
+    val chain = out.queryExecution.executedPlan.toString
+    assert(occurrences(chain, "Exchange ") == 1, s"one station exchange:\n$chain")
+    assert(occurrences(chain, "\\bSort \\[") == 1, s"one sort:\n$chain")
+    assert(occurrences(chain, "SeriesScan") == 2, s"the spike and streak scans:\n$chain")
+    assert(!chain.contains("Window") && !chain.contains("Join"), s"no window, no join:\n$chain")
+    val report = QaqcPipeline.flagCountReport(out, "v_eraqc")
+    report.collect()
+    val fin = report.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan.toString
+      case p => p.toString
+    }
+    assert(occurrences(fin, "hashpartitioning\\(station") == 1, s"one station exchange:\n$fin")
+    assert(occurrences(fin, "\\bSort \\[") == 1 && !fin.contains("Window"), fin)
+  }
+
+  test("over a table bucketed on the station the pass plans no exchange") {
+    val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt + 1
+    graft.sources.Sinks.writeObsBucketed(obs.drop("v_eraqc"), "qaqc_bucketed_obs",
+      numBuckets = buckets)
+    try {
+      val in = spark.table("qaqc_bucketed_obs").withColumn("v_eraqc", lit(null).cast("int"))
+      val out = QaqcPipeline.run(in, singleVariable(5))
+      val plan = out.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"the buckets are the station clustering:\n$plan")
+      assert(occurrences(plan, "\\bSort \\[") == 1, s"one sort:\n$plan")
+      val flags = out.groupBy("v_eraqc").count().as[(Option[Int], Long)].collect().toMap
+      assert(flags(Some(Flags.Spike)) == 2 && flags(Some(Flags.StraightStreak)) == 12, flags)
+    } finally spark.sql("DROP TABLE IF EXISTS qaqc_bucketed_obs")
+  }
+
+  test("interpolation then low-pass share one exchange and one sort") {
+    implicit val s = spark
+    val dir = java.nio.file.Files.createTempDirectory("interp-lp").resolve("h").toString
+    (for (k <- Seq("a", "b"); i <- 0 until 48)
+      yield (k, minute(60 * i), if (i % 5 == 2) None else Some(i.toDouble)))
+      .toDF("k", "t", "v").write.parquet(dir)
+    val interp = graft.ops.SeriesOps.interpolateLinear(spark.read.parquet(dir), Seq("k"),
+        "t", "v", "vi")
+      .withColumn("freq_s", lit(3600.0))
+    val out = Butterworth.lowPass(interp, Seq("k"), "t", "vi", "freq_s", "lp")
+    val plan = out.queryExecution.executedPlan.toString
+    assert(occurrences(plan, "Exchange ") == 1, s"one series exchange:\n$plan")
+    assert(occurrences(plan, "\\bSort \\[") == 1, s"one sort:\n$plan")
+    assert(!plan.contains("Window") && !plan.contains("Join"), plan)
+    assert(out.filter(col("lp").isNotNull).count() == 96)
   }
 
   test("a duplicated (station, time) in a streak does not multiply rows") {
