@@ -148,18 +148,20 @@ object Bench {
 
   private def f3(v: Double): JValue = JDecimal(BigDecimal(f"$v%.3f"))
 
+  /** The longest `queries_part` line in UTF-8 bytes. */
+  private val QueryPartMaxBytes = 1536
+
   /** `queries` as `{"metric":"queries_part","i":i,"of":n,"queries":{…}}` lines of at
-    * most `maxBytes` UTF-8 bytes each (a single entry longer than that gets a line of
-    * its own), in order; their `queries` maps together are `queries`. */
-  private[graft] def queryParts(queries: Seq[(String, JValue)],
-                                maxBytes: Int = 1536): Seq[String] = {
+    * most [[QueryPartMaxBytes]] UTF-8 bytes each (a single entry longer than that gets
+    * a line of its own), in order; their `queries` maps together are `queries`. */
+  private[graft] def queryParts(queries: Seq[(String, JValue)]): Seq[String] = {
     def line(i: Int, of: Int, qs: Seq[(String, JValue)]): String = compact(render(JObject(
       "metric" -> JString("queries_part"), "i" -> JInt(i), "of" -> JInt(of),
       "queries" -> JObject(qs: _*))))
     // sized with the widest i/of the lines can carry
     def fits(qs: Seq[(String, JValue)]): Boolean =
       line(queries.size + 1, queries.size + 1, qs)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8).length <= maxBytes
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8).length <= QueryPartMaxBytes
     val parts = queries.foldLeft(Vector(Vector.empty[(String, JValue)])) { (ps, q) =>
       if (ps.last.nonEmpty && !fits(ps.last :+ q)) ps :+ Vector(q)
       else ps.init :+ (ps.last :+ q)

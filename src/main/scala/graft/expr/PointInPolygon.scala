@@ -97,12 +97,10 @@ object PointInPolygon {
   }
 }
 
-/** Session extension registering the native functions for SQL use and the
-  * [[graft.kernels.SeriesScanStrategy]] planner strategy:
+/** Session extension registering the native functions for SQL use:
   * `spark.sql.extensions=graft.expr.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => graft.kernels.SeriesScanStrategy)
     ext.injectFunction((
       new FunctionIdentifier("graft_point_in_polygon"),
       new ExpressionInfo(classOf[PointInPolygon].getName, "graft_point_in_polygon"),

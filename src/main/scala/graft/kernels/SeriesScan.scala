@@ -2,7 +2,7 @@ package graft.kernels
 
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
@@ -182,11 +182,11 @@ object SeriesScan {
   /** `df` with `kernel`'s columns appended, computed over each series of `keys` in
     * `timeCol` order from `inputs` (evaluated per row). A kernel column named like a
     * column of `df` replaces it in place, as `withColumn` does. Installs
-    * [[SeriesScanStrategy]] on sessions built without [[graft.expr.GraftExtensions]]. */
+    * [[SeriesScanStrategy]] in `df`'s session on first use. */
   def over(df: DataFrame, keys: Seq[String], timeCol: String, inputs: Seq[Column],
            kernel: SeriesKernel): DataFrame = {
     val spark = df.sparkSession
-    install(spark)
+    GraftSqlBridge.addStrategy(spark, SeriesScanStrategy)
     val exprs = GraftSqlBridge.logicalPlan(
         df.select((keys.map(col) ++ (col(timeCol) +: inputs)): _*)) match {
       case Project(list, _) => list.map {
@@ -210,34 +210,6 @@ object SeriesScan {
       scanned.select((kept ++ added).map(GraftSqlBridge.column): _*)
     }
   }
-
-  /** Adds [[SeriesScanStrategy]] to `spark`'s planner unless it is there already
-    * (through `GraftExtensions` or an earlier call). */
-  def install(spark: SparkSession): Unit = GraftSqlBridge.addStrategy(spark, SeriesScanStrategy)
-}
-
-/** A growable primitive array (no boxing) for a kernel's per-group scratch values. */
-private[graft] final class DoubleBuf {
-  private var a = new Array[Double](64)
-  var size = 0
-  def +=(x: Double): Unit = {
-    if (size == a.length) a = java.util.Arrays.copyOf(a, size * 2)
-    a(size) = x; size += 1
-  }
-  def apply(i: Int): Double = a(i)
-  def sortedCopy: Array[Double] = { val s = java.util.Arrays.copyOf(a, size); java.util.Arrays.sort(s); s }
-  def clear(): Unit = size = 0
-}
-
-private[graft] final class LongBuf {
-  private var a = new Array[Long](64)
-  var size = 0
-  def +=(x: Long): Unit = {
-    if (size == a.length) a = java.util.Arrays.copyOf(a, size * 2)
-    a(size) = x; size += 1
-  }
-  def apply(i: Int): Long = a(i)
-  def clear(): Unit = size = 0
 }
 
 /** Spark SQL's comparison semantics for doubles: NaN equals NaN and sorts above every

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField}
 
-import graft.kernels.{DoubleBuf, LongBuf, RowFifo, SeriesKernel, SeriesRun, SeriesScan}
+import graft.kernels.{RowFifo, SeriesKernel, SeriesRun, SeriesScan}
 import graft.kernels.SqlDouble.{equal, gt, lt}
 
 /** W6 — spike detection (1–3 point unusual large jumps), flag 23.
@@ -109,8 +109,8 @@ object SpikeOps {
     private var monthKey = 0L
     private var monthFirst = 0L
     private var monthRows = 0
-    private val stepD = new DoubleBuf
-    private val stepSeq = new LongBuf
+    private val stepD = new mutable.ArrayBuilder.ofDouble
+    private val stepSeq = new mutable.ArrayBuilder.ofLong
     private val months = mutable.ArrayDeque.empty[Month]
     // the pattern test: the kept rows not yet decided, the last decided one and the
     // s2/s3 marks of the last two
@@ -173,18 +173,23 @@ object SpikeOps {
     }
 
     private def closeMonth(): Unit = {
-      val n = stepD.size
+      val ds = stepD.result()
+      val n = ds.length
       val critNull = n == 0
       val crit =
         if (critNull) 0.0
         else {
-          val s = stepD.sortedCopy
+          val s = ds.clone()
+          java.util.Arrays.sort(s)
           // `ceil` is Spark's: a double to a long, then cast back to double
           math.ceil(k.iqrThresh * (percentile(s, 0.75) - percentile(s, 0.25))).toLong.toDouble
         }
       val kept = n > k.minDatapoints
       months += new Month(crit, critNull, kept, monthRows)
-      if (kept) (0 until n).foreach(i => addKept(new Kept(stepD(i), crit, stepSeq(i))))
+      if (kept) {
+        val seqs = stepSeq.result()
+        (0 until n).foreach(i => addKept(new Kept(ds(i), crit, seqs(i))))
+      }
       monthOpen = false
       stepD.clear(); stepSeq.clear()
     }

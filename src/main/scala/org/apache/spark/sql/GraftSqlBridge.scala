@@ -21,12 +21,11 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Puts `strategy` first among `spark`'s extra planner strategies unless its
-    * planner already has it (through `spark.sql.extensions` or an earlier call). */
+  /** Puts `strategy` first among `spark`'s extra planner strategies unless an
+    * earlier call put it there. */
   def addStrategy(spark: SparkSession, strategy: SparkStrategy): Unit = {
-    val s = spark.asInstanceOf[classic.SparkSession]
-    if (!s.sessionState.planner.strategies.contains(strategy))
-      s.experimental.extraStrategies = strategy +: s.experimental.extraStrategies
+    val e = spark.asInstanceOf[classic.SparkSession].experimental
+    if (!e.extraStrategies.contains(strategy)) e.extraStrategies = strategy +: e.extraStrategies
   }
 
   /** Blocks until every posted listener event has been delivered, so counters
