@@ -15,6 +15,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.json4s._
 import org.json4s.jackson.JsonMethods.{compact, render}
 
+import graft.sources.StationMetrics
+
 /** Times every selected query and records what each one cost.
   *
   * `runMain graft.Bench [query…]` runs the named queries (default: all) at
@@ -32,10 +34,12 @@ object Bench {
     * times (the rep's wall minus `jobWallS` is driver time between jobs); and
     * the Exchange, SortMergeJoin and BroadcastHashJoin counts of the final plan
     * of every action it ran, with the plan behind each cached relation it read
-    * counted once. */
+    * counted once; and the station-container scans and sinks in those plans with
+    * their summed metrics (containers, bytes and decode or encode nanoseconds). */
   final case class Detail(cpuS: Double, runS: Double, gcS: Double, inputMb: Double,
       shuffleReadMb: Double, shuffleWriteMb: Double, spillMb: Double,
-      jobs: Int, stages: Int, jobWallS: Double, exchanges: Int, smj: Int, bhj: Int)
+      jobs: Int, stages: Int, jobWallS: Double, exchanges: Int, smj: Int, bhj: Int,
+      containerScans: Int, containerSinks: Int, containerMetrics: Map[String, Long])
 
   /** One benched query: the min over successful reps (over all reps when none
     * succeeded), the first rep's time, the first error (a failure is REPORTED,
@@ -48,7 +52,8 @@ object Bench {
   private final class Recorder(spark: SparkSession)
       extends SparkListener with QueryExecutionListener {
     private var cpuNs, runMs, gcMs, inputB, readB, writeB, spillB, jobMs = 0L
-    private var jobs, stages, exchanges, smj, bhj = 0
+    private var jobs, stages, exchanges, smj, bhj, scans, sinks = 0
+    private val containerMetrics = mutable.Map.empty[String, Long]
     private var lastPlan: Option[SparkPlan] = None
     // the plans behind cached relations that this rep has counted
     private val cached = java.util.Collections.newSetFromMap(
@@ -75,6 +80,10 @@ object Bench {
       exchanges += ops.count(_.isInstanceOf[Exchange])
       smj += ops.count(_.isInstanceOf[SortMergeJoinExec])
       bhj += ops.count(_.isInstanceOf[BroadcastHashJoinExec])
+      ops.flatMap(StationMetrics.of).foreach { case (kind, ms) =>
+        if (kind == "scan") scans += 1 else sinks += 1
+        ms.foreach { case (k, v) => containerMetrics(k) = containerMetrics.getOrElse(k, 0L) + v }
+      }
       lastPlan = Some(qe.executedPlan)
     }
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
@@ -86,13 +95,15 @@ object Bench {
       synchronized {
         val mib = 1048576.0
         val d = Detail(cpuNs / 1e9, runMs / 1e3, gcMs / 1e3, inputB / mib, readB / mib,
-          writeB / mib, spillB / mib, jobs, stages, jobMs / 1e3, exchanges, smj, bhj)
+          writeB / mib, spillB / mib, jobs, stages, jobMs / 1e3, exchanges, smj, bhj,
+          scans, sinks, containerMetrics.toMap)
         val plan = lastPlan.fold("") {
           case a: AdaptiveSparkPlanExec => a.executedPlan.treeString
           case p => p.treeString
         }
         cpuNs = 0; runMs = 0; gcMs = 0; inputB = 0; readB = 0; writeB = 0; spillB = 0; jobMs = 0
-        jobs = 0; stages = 0; exchanges = 0; smj = 0; bhj = 0; lastPlan = None
+        jobs = 0; stages = 0; exchanges = 0; smj = 0; bhj = 0; scans = 0; sinks = 0
+        containerMetrics.clear(); lastPlan = None
         cached.clear()
         (d, plan)
       }

@@ -1496,25 +1496,7 @@ object MultimodalOps {
     * Catalyst HOF — hashes at scan speed, no UDF. */
   def dHash(gray: Column, hashW: Int = 8, hashH: Int = 8): Column = {
     require(hashW * hashH == 64, "dHash is a 64-bit code: hashW*hashH must be 64")
-    graft.expr.DHash64.expr(gray, hashW) // native (r13); HOF twin kept below
-  }
-
-  /** The pre-r13 HOF formulation of [[dHash]], kept as the parity reference
-    * (MultimodalSpec pins native == HOF on random rasters): ~64 interpreted
-    * lambda bodies per row made it the measured per-row floor of the image
-    * family at 100×. */
-  private[multimodal] def dHashHof(gray: Column, hashW: Int = 8, hashH: Int = 8): Column = {
-    require(hashW * hashH == 64, "dHash is a 64-bit code: hashW*hashH must be 64")
-    val powers = typedlit((0 until 32).map(1L << _))
-    def half(offset: Int): Column =
-      aggregate(sequence(lit(0), lit(31)), lit(0L), (acc, i) => {
-        val j = i + lit(offset)
-        val base = (j / lit(hashW)).cast("int") * (hashW + 1) +
-          pmod(j, lit(hashW)).cast("int")
-        acc + when(element_at(gray, base + 1) > element_at(gray, base + 2),
-          element_at(powers, i.cast("int") + 1)).otherwise(lit(0L))
-      })
-    struct(half(32).as("hi"), half(0).as("lo"))
+    graft.expr.DHash64.expr(gray, hashW) // native (r13); HOF twin in src/test
   }
 
   /** Perceptual near-duplicate image pairs over a gray-raster column: dHash +

@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.io.ByteArrayOutputStream
-import java.nio.ByteBuffer
+import java.io.{ByteArrayOutputStream, DataOutputStream}
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.DataFrame
 
 import graft.core.AttrsTable
 
@@ -32,8 +30,10 @@ import graft.core.AttrsTable
   * All attrs are written as NC_CHAR text, matching the string-typed
   * [[AttrsTable]] the readers produce.
   *
-  * Scale: same [[StationRuns]] chassis as the zarr sink — one station shuffle,
-  * one `.nc` per station written executor-side, ledger DataFrame back. */
+  * Scale: same [[StationRuns]] sink as the zarr sink — a plan node that needs
+  * one station shuffle and sort on raw input and none on input a series scan
+  * keyed on station has clustered and sorted; one `.nc` per station written
+  * executor-side from unboxed columns, ledger DataFrame back. */
 object NcSink {
 
   private val NcChar = 2; private val NcInt = 4; private val NcDouble = 6
@@ -41,10 +41,13 @@ object NcSink {
 
   private def pad4(n: Int): Int = (n + 3) & ~3
 
+  /** Big-endian, as the classic format is (`DataOutputStream` writes through to
+    * `out` unbuffered, so `out.size()` is always current). */
   private final class Writer(val out: ByteArrayOutputStream = new ByteArrayOutputStream()) {
-    def int(v: Int): Unit = out.write(ByteBuffer.allocate(4).putInt(v).array())
-    def long(v: Long): Unit = out.write(ByteBuffer.allocate(8).putLong(v).array())
-    def double(v: Double): Unit = out.write(ByteBuffer.allocate(8).putDouble(v).array())
+    private val data = new DataOutputStream(out)
+    def int(v: Int): Unit = data.writeInt(v)
+    def long(v: Long): Unit = data.writeLong(v)
+    def double(v: Double): Unit = data.writeDouble(v)
     def bytes(b: Array[Byte]): Unit = out.write(b)
     def padTo4(): Unit = while (out.size() % 4 != 0) out.write(0)
     def name(s: String): Unit = {
@@ -68,10 +71,10 @@ object NcSink {
   private def sorted(m: Map[String, String]): Seq[(String, String)] = m.toSeq.sortBy(_._1)
 
   /** Encode one station to classic CDF-2 bytes. `time` is epoch micros
-    * ascending; `cols` carry Double/Long/String arrays with nulls. */
+    * ascending. */
   private[sources] def encodeStation(
       station: String, time: Array[Long],
-      cols: Seq[(String, DataType, Array[Any])], attrs: AttrsTable): Array[Byte] = {
+      cols: Seq[RunColumn], attrs: AttrsTable): Array[Byte] = {
     val n = time.length
     val stationBytes = station.getBytes("UTF-8")
     require(stationBytes.nonEmpty, "empty station id")
@@ -83,15 +86,14 @@ object NcSink {
     val dims = scala.collection.mutable.ArrayBuffer[(String, Int)]("time" -> n)
     def addDim(nm: String, len: Int): Int = { dims += nm -> len; dims.length - 1 }
 
-    val strCols = cols.collect { case (nm, StringType, vals) =>
-      nm -> math.max(1, vals.map {
-        case null => 0
-        case s => s.toString.getBytes("UTF-8").length
-      }.foldLeft(0)(math.max))
+    // each string encoded once, padded to its column's widest value (at least 1)
+    val strCols = cols.collect { case RunColumn.Strings(nm, vals) =>
+      val enc = vals.map(v => if (v == null) Array.emptyByteArray else v.getBytes("UTF-8"))
+      nm -> (enc, math.max(1, enc.foldLeft(0)((m, b) => math.max(m, b.length))))
     }.toMap
 
     val stationDim = addDim("station_strlen", stationBytes.length)
-    val strDims = strCols.map { case (nm, len) => nm -> addDim(s"${nm}_strlen", len) }
+    val strDims = strCols.map { case (nm, (_, len)) => nm -> addDim(s"${nm}_strlen", len) }
 
     val timeVar = VarSpec("time", NcDouble, Seq(0),
       ("units" -> "seconds since 1970-01-01 00:00:00") +:
@@ -101,32 +103,27 @@ object NcSink {
       sorted(attrs.forVar("station")), pad4(stationBytes.length),
       w => { w.bytes(stationBytes); w.padTo4() })
     val dataVars = cols.map {
-      case (nm, DoubleType, vals) =>
+      case RunColumn.Doubles(nm, vals) =>
         VarSpec(nm, NcDouble, Seq(0), sorted(attrs.forVar(nm)), pad4(n * 8),
-          w => vals.foreach {
-            case null => w.double(Double.NaN)
-            case d => w.double(d.asInstanceOf[java.lang.Double].doubleValue())
-          })
-      case (nm, LongType, vals) =>
+          w => vals.foreach(w.double))
+      case RunColumn.Longs(nm, vals, nulls) =>
         VarSpec(nm, NcInt, Seq(0), sorted(attrs.forVar(nm)), pad4(n * 4),
-          w => { vals.foreach {
-            case null => w.int(FillInt)
-            case l =>
-              val v = l.asInstanceOf[java.lang.Long].longValue()
+          w => { vals.indices.foreach { i =>
+            if (nulls(i)) w.int(FillInt)
+            else {
+              val v = vals(i)
               require(v >= Int.MinValue && v <= Int.MaxValue && v != FillInt,
                 s"$nm: $v outside NC_INT range")
               w.int(v.toInt)
+            }
           }; w.padTo4() })
-      case (nm, StringType, vals) =>
-        val len = strCols(nm)
+      case RunColumn.Strings(nm, _) =>
+        val (enc, len) = strCols(nm)
         VarSpec(nm, NcChar, Seq(0, strDims(nm)), sorted(attrs.forVar(nm)),
           pad4(n * len),
-          w => { vals.foreach { v =>
-            val b = if (v == null) Array.emptyByteArray
-                    else v.toString.getBytes("UTF-8")
+          w => { enc.foreach { b =>
             w.bytes(b); (b.length until len).foreach(_ => w.out.write(0))
           }; w.padTo4() })
-      case (nm, dt, _) => sys.error(s"$nm: unsupported nc write type $dt")
     }
     val vars = Seq(timeVar, stationVar) ++ dataVars
 
@@ -162,14 +159,14 @@ object NcSink {
   }
 
   /** Publish an obs DataFrame (station, time, data vars…) as one classic
-    * `outDir/<station>.nc` per station; ledger DataFrame back (chunks = 1). */
+    * `outDir/<station>.nc` per station through the [[StationRuns]] sink (one
+    * station shuffle and sort, none for input already clustered and sorted that
+    * way); ledger DataFrame back (chunks = 1), each action on it writes the
+    * files. */
   def writeNcFiles(df: DataFrame, outDir: String,
-                   attrs: AttrsTable = AttrsTable(Map.empty, Map.empty)): DataFrame = {
-    val attrsB = df.sparkSession.sparkContext.broadcast(attrs)
-    StationRuns.mapStations(df) { (station, times, cols, conf) =>
-      val bytes = StationRuns.writeFiles(outDir, conf,
-        Seq(s"$station.nc" -> encodeStation(station, times, cols, attrsB.value)))
-      Row(station, s"$outDir/$station.nc", times.length.toLong, 1L, bytes)
+                   attrs: AttrsTable = AttrsTable(Map.empty, Map.empty)): DataFrame =
+    StationRuns.mapStations(df, outDir) { run =>
+      val file = s"${run.station}.nc"
+      Container(file, Seq(file -> encodeStation(run.station, run.time, run.cols, attrs)), 1L)
     }
-  }
 }

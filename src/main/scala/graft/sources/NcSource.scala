@@ -16,7 +16,8 @@ import org.apache.spark.sql.types._
   * cover). One `.nc` file = one station = one executor task. This module only
   * parses bytes: the variables it decodes become [[StationData]] through
   * [[StationRuns.fromNetcdf]] (the rules it shares with [[Hdf5Source]]), and the
-  * distributed read, file access and ingest are the [[StationRuns]] chassis.
+  * distributed read (a scan key-grouped on `station`), file access and ingest are
+  * the [[StationRuns]] chassis.
   *
   * Implements the public classic file format (magic `CDF\x01`/`CDF\x02`,
   * big-endian header with dim/attr/var lists, fixed vars at absolute offsets,
@@ -247,14 +248,14 @@ object NcSource {
       .getOrElse(throw new FileNotFoundException(s"$path: no such .nc file")), p.getName)
   }
 
-  /** Read many `.nc` files distributed, one task per file
-    * ([[StationRuns.readStations]]: schema from the first file, columns aligned
-    * by name). */
+  /** Read many `.nc` files distributed, one input partition per file, keyed by
+    * the station id of its `<station>.nc` name ([[StationRuns.readStations]]:
+    * schema from the first file, columns aligned by name). */
   def readFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
-    StationRuns.readStations(spark, paths)(readFileAt)
+    StationRuns.readStations(spark, paths, ".nc")(readFileAt)
 
   /** `.nc` corpus → the engine's partitioned obs table ([[StationRuns.ingest]]). */
   def ingest(spark: SparkSession, paths: Seq[String], outPath: String,
              network: String): Unit =
-    StationRuns.ingest(spark, paths, outPath, network)(readFileAt)
+    StationRuns.ingest(spark, paths, ".nc", outPath, network)(readFileAt)
 }

@@ -2,14 +2,16 @@ package graft.sources
 
 import java.io.FileNotFoundException
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2Relation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.AttrsTable
 
@@ -20,22 +22,69 @@ final case class StationData(station: String, time: Array[Long],
                              cols: Seq[(String, DataType, Array[Any])],
                              attrs: AttrsTable)
 
+/** The metrics of the station-container nodes in a finished plan. */
+object StationMetrics {
+  /** `("scan", …)` for a [[StationScan]], `("sink", …)` for a [[StationSinkExec]]:
+    * containers, bytes and decode or encode nanoseconds; `None` for other nodes. */
+  def of(p: SparkPlan): Option[(String, Map[String, Long])] = p match {
+    case s: StationSinkExec =>
+      Some("sink" -> (s.metrics - "numOutputRows").map { case (k, m) => k -> m.value })
+    case b: BatchScanExec if b.scan.isInstanceOf[StationScan] =>
+      Some("scan" -> b.customMetrics.map { case (k, m) => k -> m.value })
+    case _ => None
+  }
+}
+
 /** The station-container chassis: everything a per-station store becomes between
   * its bytes and a DataFrame, in both directions. The format modules only turn
-  * bytes into [[StationData]] ([[ZarrSource]], [[NcSource]], [[Hdf5Source]]) or
-  * [[StationData]] columns into bytes ([[ZarrSink]], [[NcSink]]).
+  * bytes into [[StationData]] ([[ZarrSource]], [[NcSource]], [[Hdf5Source]]) or a
+  * [[StationRun]] into bytes ([[ZarrSink]], [[NcSink]]).
   *
-  * Write: [[mapStations]] hash-shuffles once on `station`, sorts each partition on
-  * `(station, time)`, streams consecutive same-station runs into `(station, time[],
-  * columns)` batches for the encoder, and [[writeFiles]] lands the encoded files.
-  * Read: [[readStations]] runs one task per container path (the reference's own
-  * per-station task granularity) with no shuffle, decoding with the format's
-  * function and [[readFile]]. Both directions ship the Hadoop conf to executors as
-  * plain pairs, so object-store credentials travel with the tasks; at 1e5 stations
+  * Read: [[readStations]] plans a [[StationScan]], a DataSource V2 scan with one
+  * input partition per container, keyed by the station id its file name carries
+  * (`<station>.zarr`, `<station>.nc`). It reports key-grouped partitioning on
+  * `station`, so an aggregate or a series scan keyed on `station` (alone or with
+  * more keys) plans no exchange after it. N containers make N input partitions;
+  * containers with the same station id are grouped into one, so N distinct
+  * stations run as N tasks with no cap, the reference's per-station task
+  * granularity. Each reader decodes its container with the format's function and
+  * [[readFile]] and fills `UnsafeRow`s straight from the decoded columns.
+  *
+  * Write: [[mapStations]] plans a [[StationSink]], which asks the planner for its
+  * input clustered on `station` and sorted on `(station, time)`: one hash shuffle
+  * and one sort on raw input, none after a series scan keyed on `station` and
+  * `time`. It streams each station's run into unboxed [[RunColumn]]s for the
+  * encoder and lands the encoded files with [[writeFiles]].
+  *
+  * Both directions broadcast the driver's Hadoop conf, deserialized once per
+  * executor, so object-store credentials travel with the tasks; at 1e5 stations
   * the stores fan out across the cluster with no driver involvement. */
 private[sources] object StationRuns {
 
   // ------------------------------------------------------------------- write
+
+  /** Publish `df` (station, time, data columns…) as one container per station:
+    * `encode` turns a station's run into its container's files under `outDir`.
+    * Data columns are Double/Float, Long/Int/Short/Byte or String; narrower
+    * numerics widen. Returns the ledger (station, path, rows, chunks, bytes) as a
+    * lazy DataFrame: every action on it writes the containers. */
+  def mapStations(df: DataFrame, outDir: String)(encode: StationRun => Container): DataFrame = {
+    val spark = df.sparkSession
+    require(df.columns.contains("station") && df.columns.contains("time"),
+      "per-station sink needs station + time columns")
+    val dataCols = df.schema.fields.filter(f => f.name != "station" && f.name != "time")
+    dataCols.foreach(f => RunColumn.builder(f.dataType))
+    val time = df.schema("time").dataType match {
+      case TimestampType => col("time")
+      case _ => col("time").cast(TimestampType).as("time")
+    }
+    val input = GraftSqlBridge.logicalPlan(
+      df.select((col("station") +: time +: dataCols.map(f => col(f.name))): _*))
+    val Seq(stationAttr, timeAttr, dataAttrs @ _*) = input.output
+    GraftSqlBridge.addStrategy(spark, StationSinkStrategy)
+    GraftSqlBridge.ofRows(spark, StationSink(stationAttr, timeAttr, dataAttrs, outDir, encode,
+      ledgerSchema.map(f => AttributeReference(f.name, f.dataType, f.nullable)()), input))
+  }
 
   val ledgerSchema: StructType = StructType(Seq(
     StructField("station", StringType, nullable = false),
@@ -43,75 +92,6 @@ private[sources] object StationRuns {
     StructField("rows", LongType, nullable = false),
     StructField("chunks", LongType, nullable = false),
     StructField("bytes", LongType, nullable = false)))
-
-  /** Run `write(station, timeMicros, cols, conf)` once per station (cols carry
-    * Double/Long/String values with nulls; narrower numerics widen). Returns the
-    * ledger rows the callback emits, as a DataFrame. */
-  def mapStations(df: DataFrame)(
-      write: (String, Array[Long], Seq[(String, DataType, Array[Any])],
-              Configuration) => Row): DataFrame = {
-    val spark = df.sparkSession
-    require(df.columns.contains("station") && df.columns.contains("time"),
-      "per-station sink needs station + time columns")
-    val dataCols = df.schema.fields.filter(f => f.name != "station" && f.name != "time")
-    val confPairs = shipConf(spark)
-
-    val shuffled = df
-      .repartition(col("station"))
-      .sortWithinPartitions(col("station"), col("time"))
-      .select((col("station") +: col("time").cast(TimestampType) +:
-        dataCols.map(f => col(f.name))): _*)
-
-    val ledger = shuffled.queryExecution.toRdd.mapPartitions { it =>
-      val conf = hadoopConf(confPairs.value)
-      val colTypes = dataCols.map(_.dataType)
-      // consecutive run of one station = one store (partition is sorted)
-      new Iterator[Row] {
-        private val src = it.map { internal =>
-          val station = internal.getUTF8String(0).toString
-          val micros = internal.getLong(1) // TimestampType = epoch micros
-          val vals: Array[Any] = colTypes.zipWithIndex.map { case (dt, i) =>
-            (if (internal.isNullAt(i + 2)) null
-            else dt match {
-              case DoubleType => java.lang.Double.valueOf(internal.getDouble(i + 2))
-              case FloatType => java.lang.Double.valueOf(internal.getFloat(i + 2).toDouble)
-              case LongType => java.lang.Long.valueOf(internal.getLong(i + 2))
-              case IntegerType => java.lang.Long.valueOf(internal.getInt(i + 2).toLong)
-              case ShortType => java.lang.Long.valueOf(internal.getShort(i + 2).toLong)
-              case ByteType => java.lang.Long.valueOf(internal.getByte(i + 2).toLong)
-              case StringType => internal.getUTF8String(i + 2).toString
-              case other => sys.error(s"unsupported per-station sink type $other")
-            }): Any
-          }
-          (station, micros, vals)
-        }.buffered
-        def hasNext: Boolean = src.hasNext
-        def next(): Row = {
-          val station = src.head._1
-          val times = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val data = Array.fill(colTypes.length)(
-            scala.collection.mutable.ArrayBuffer.empty[Any])
-          while (src.hasNext && src.head._1 == station) {
-            val (_, micros, vals) = src.next()
-            times += micros
-            var i = 0
-            while (i < vals.length) { data(i) += vals(i); i += 1 }
-          }
-          val cols = dataCols.zipWithIndex.map { case (f, i) =>
-            val dt = f.dataType match {
-              case FloatType => DoubleType
-              case IntegerType | ShortType | ByteType => LongType
-              case other => other
-            }
-            (f.name, dt, data(i).toArray)
-          }.toSeq
-          write(station, times.toArray, cols, conf)
-        }
-      }
-    }
-    spark.createDataFrame(ledger, ledgerSchema)
-  }
-
   /** Write one container's files under `rootPath` (a single-file container is one
     * entry) and return the total bytes. Local paths take the java.nio path of
     * [[localRoot]]; HDFS and object stores go through the Hadoop FS. */
@@ -179,64 +159,53 @@ private[sources] object StationRuns {
       StructField("time", TimestampType, nullable = false) +:
       data.cols.map { case (n, t, _) => StructField(n, t, nullable = true) })
 
-  /** Read many containers distributed: one task per path, at most 1024
-    * partitions, no shuffle; `decode(path, conf)` turns one path into its
-    * [[StationData]]. The schema comes from the first container; a container
-    * missing one of its columns yields nulls there, and columns it has beyond
-    * them are dropped — the reference's per-network column variance, handled
-    * the way its concat step handles it. */
-  def readStations(spark: SparkSession, paths: Seq[String])(
+  /** Read many containers distributed through a [[StationScan]], one input
+    * partition per path; `decode(path, conf)` turns one path into its
+    * [[StationData]]. The schema comes from the first container, decoded here on
+    * the driver; a container missing one of its columns yields nulls there, and
+    * columns it has beyond them are dropped — the reference's per-network column
+    * variance, handled the way its concat step handles it.
+    *
+    * Partition keys come from file names (the name less `suffix`), as the sinks
+    * and the reference name containers, so no other container is opened on the
+    * driver. When the first container holds the station its name carries, the
+    * scan reports key-grouped partitioning on `station`, and a later container
+    * that holds another station fails its task with an error that names it (the
+    * planner has been promised that key). When the first container is renamed,
+    * the scan reports no partitioning and reads every container as it is. */
+  def readStations(spark: SparkSession, paths: Seq[String], suffix: String)(
       decode: (String, Configuration) => StationData): DataFrame =
-    scan(spark, paths)(decode)._2
+    scan(spark, paths, suffix)(decode)._2
 
   /** Container corpus → the engine's partitioned obs table: [[readStations]],
     * the `network` stamped on every row, written by [[Sinks.writeObs]] with the
     * first container's attrs as the sidecar. */
-  def ingest(spark: SparkSession, paths: Seq[String], outPath: String, network: String)(
-      decode: (String, Configuration) => StationData): Unit = {
-    val (first, df) = scan(spark, paths)(decode)
+  def ingest(spark: SparkSession, paths: Seq[String], suffix: String, outPath: String,
+             network: String)(decode: (String, Configuration) => StationData): Unit = {
+    val (first, df) = scan(spark, paths, suffix)(decode)
     Sinks.writeObs(df.withColumn("network", lit(network)), outPath,
       attrs = Some(first.attrs))
   }
 
   /** The first container, decoded on the driver for the schema, and the rows of
     * all of them. */
-  private def scan(spark: SparkSession, paths: Seq[String])(
+  private def scan(spark: SparkSession, paths: Seq[String], suffix: String)(
       decode: (String, Configuration) => StationData): (StationData, DataFrame) = {
     require(paths.nonEmpty, "no station container paths")
     val first = decode(paths.head, spark.sparkContext.hadoopConfiguration)
-    val varOrder = first.cols.map(_._1)
-    val confPairs = shipConf(spark)
-    val rows = spark.sparkContext
-      .parallelize(paths, math.min(paths.size, 1024))
-      .mapPartitions { ps =>
-        val conf = hadoopConf(confPairs.value)
-        ps.flatMap { p =>
-          val d = decode(p, conf)
-          val byName = d.cols.map(c => c._1 -> c._3).toMap
-          val aligned = varOrder.map(byName.get)
-          (0 until d.time.length).iterator.map { i =>
-            Row.fromSeq(
-              d.station +:
-              java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-                d.time(i) / 1000000L, (d.time(i) % 1000000L) * 1000L)) +:
-              aligned.map(_.map(_(i)).orNull))
-          }
-        }
-      }
-    (first, spark.createDataFrame(rows, storeSchema(first)))
+    val parts = paths.map(p => StationPartition(p, stationOf(p, suffix)))
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    val table = new StationTable(parts, storeSchema(first), decode, conf,
+      keyed = first.station == parts.head.station)
+    (first, GraftSqlBridge.ofRows(spark,
+      DataSourceV2Relation.create(table, None, None, CaseInsensitiveStringMap.empty())))
   }
 
-  private def shipConf(spark: SparkSession): Broadcast[Seq[(String, String)]] =
-    spark.sparkContext.broadcast(
-      spark.sparkContext.hadoopConfiguration.iterator().asScala
-        .map(e => e.getKey -> e.getValue).toSeq)
-
-  private def hadoopConf(pairs: Seq[(String, String)]): Configuration = {
-    val conf = new Configuration(false)
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    conf
-  }
+  /** The station id a container's file name carries, as the decoders fall back
+    * to it. */
+  private def stationOf(path: String, suffix: String): String =
+    new Path(path).getName.stripSuffix(suffix)
 
   // ----------------------------------------------------------- netCDF model
 

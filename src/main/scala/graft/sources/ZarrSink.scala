@@ -4,7 +4,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
 import graft.core.AttrsTable
@@ -33,12 +33,15 @@ import graft.core.AttrsTable
   * the numcodecs Zlib default — obs doubles are noise-dominated, so higher
   * levels buy single-digit % size for multiples of the deflate CPU).
   *
-  * Scale: one hash-shuffle on station, then every store writes from the task
-  * that owns its rows — per-station task granularity, the same unit the
-  * reference schedules per SLURM array element, so 1e5 stations spread over
-  * the cluster with no driver involvement. Returns the write LEDGER (station,
-  * path, rows, chunks, bytes) as a DataFrame — the bookkeeping the reference's
-  * stage scripts keep in stationlist CSVs.
+  * Scale: the write is a plan node, the [[StationRuns]] sink. It asks the
+  * planner for rows clustered on station and sorted on (station, time): raw
+  * input costs one hash-shuffle on station and one sort, and a frame a series
+  * scan keyed on station already holds that way costs neither. Every store then
+  * writes from the task that owns its rows — per-station task granularity, the
+  * same unit the reference schedules per SLURM array element, so 1e5 stations
+  * spread over the cluster with no driver involvement. Returns the write LEDGER
+  * (station, path, rows, chunks, bytes) as a DataFrame — the bookkeeping the
+  * reference's stage scripts keep in stationlist CSVs.
   */
 object ZarrSink {
 
@@ -47,7 +50,7 @@ object ZarrSink {
   /** One encoded store: relative-path -> file bytes, in write order. */
   private[sources] def encodeStore(
       station: String, time: Array[Long], // epoch micros, ascending
-      cols: Seq[(String, DataType, Array[Any])],
+      cols: Seq[RunColumn],
       attrs: AttrsTable, chunkRows: Int, zlibLevel: Int): Seq[(String, Array[Byte])] = {
     val mapper = new ObjectMapper()
     val n = time.length
@@ -111,30 +114,19 @@ object ZarrSink {
         deflate(bb.array())
       }
 
-    def doubleChunks(get: Int => Any): Seq[Array[Byte]] =
+    def doubleChunks(vals: Array[Double]): Seq[Array[Byte]] =
       (0 until n by chunkRows).map { start =>
         val bb = ByteBuffer.allocate(chunkRows * 8).order(ByteOrder.LITTLE_ENDIAN)
         var i = start
         while (i < start + chunkRows) {
-          bb.putDouble(if (i >= n) Double.NaN else get(i) match {
-            case null => Double.NaN
-            case d: java.lang.Double => d.doubleValue()
-            case f: java.lang.Float => f.doubleValue()
-            case other => other.toString.toDouble
-          })
+          bb.putDouble(if (i >= n) Double.NaN else vals(i))
           i += 1
         }
         deflate(bb.array())
       }
 
-    def longChunks(get: Int => Any, fill: Long): Seq[Array[Byte]] =
-      numericChunks(
-        i => get(i) match {
-          case null => fill
-          case l: java.lang.Long => l.longValue()
-          case x: java.lang.Integer => x.longValue()
-          case other => other.toString.toLong
-        },
+    def longChunks(vals: Array[Long], nulls: Array[Boolean], fill: Long): Seq[Array[Byte]] =
+      numericChunks(i => if (nulls(i)) fill else vals(i),
         _.putLong(fill), (bb, l) => bb.putLong(l), 8)
 
     // numcodecs VLenUTF8: [uint32 nitems][per item: uint32 len + utf8]; null → ""
@@ -147,10 +139,9 @@ object ZarrSink {
       deflate(bb.array())
     }
 
-    def vlenChunks(get: Int => Any): Seq[Array[Byte]] =
+    def vlenChunks(vals: Array[String]): Seq[Array[Byte]] =
       (0 until n by chunkRows).map { start =>
-        vlenChunk((start until math.min(start + chunkRows, n))
-          .map(i => get(i) match { case null => null; case s => s.toString }))
+        vlenChunk(vals.slice(start, math.min(start + chunkRows, n)).toSeq)
       }
 
     val files = Seq.newBuilder[(String, Array[Byte])]
@@ -180,19 +171,16 @@ object ZarrSink {
       vlen = false, attrs.forVar("time"),
       numericChunks(i => time(i) * 1000L, _.putLong(0L), (bb, l) => bb.putLong(l), 8))
 
-    cols.foreach { case (name, dt, vals) =>
-      dt match {
-        case DoubleType | FloatType =>
-          writeVar(name, Seq("time"), Seq(n), Seq(chunkRows), "<f8", Some("NaN"),
-            vlen = false, attrs.forVar(name), doubleChunks(vals))
-        case LongType | IntegerType | ShortType | ByteType =>
-          writeVar(name, Seq("time"), Seq(n), Seq(chunkRows), "<i8", Some(FillLong),
-            vlen = false, attrs.forVar(name), longChunks(vals, FillLong))
-        case StringType =>
-          writeVar(name, Seq("time"), Seq(n), Seq(chunkRows), "|O", fill = None,
-            vlen = true, attrs.forVar(name), vlenChunks(vals))
-        case other => sys.error(s"$name: unsupported zarr write type $other")
-      }
+    cols.foreach {
+      case RunColumn.Doubles(name, vals) =>
+        writeVar(name, Seq("time"), Seq(n), Seq(chunkRows), "<f8", Some("NaN"),
+          vlen = false, attrs.forVar(name), doubleChunks(vals))
+      case RunColumn.Longs(name, vals, nulls) =>
+        writeVar(name, Seq("time"), Seq(n), Seq(chunkRows), "<i8", Some(FillLong),
+          vlen = false, attrs.forVar(name), longChunks(vals, nulls, FillLong))
+      case RunColumn.Strings(name, vals) =>
+        writeVar(name, Seq("time"), Seq(n), Seq(chunkRows), "|O", fill = None,
+          vlen = true, attrs.forVar(name), vlenChunks(vals))
     }
 
     val consolidated = obj()
@@ -203,22 +191,20 @@ object ZarrSink {
   }
 
   /** Publish an obs DataFrame (station, time, data vars…) as per-station
-    * consolidated zarr v2 stores `outDir/<station>.zarr`. One shuffle
-    * (hash-partition on station), then each task streams its stations out in
-    * time order ([[StationRuns]]); `attrs` ride into `.zattrs` / per-var
-    * `.zattrs`. Returns the ledger DataFrame (station, path, rows, chunks,
-    * bytes). */
+    * consolidated zarr v2 stores `outDir/<station>.zarr` through the
+    * [[StationRuns]] sink: one hash-shuffle on station and one sort, or none when
+    * the input is already clustered on station and sorted on (station, time);
+    * each task then streams its stations out in time order. `attrs` ride into
+    * `.zattrs` / per-var `.zattrs`. Returns the ledger DataFrame (station, path,
+    * rows, chunks, bytes); each action on it writes the stores. */
   def writeZarrStores(df: DataFrame, outDir: String,
                       attrs: AttrsTable = AttrsTable(Map.empty, Map.empty),
-                      chunkRows: Int = 65536, zlibLevel: Int = 1): DataFrame = {
-    val attrsB = df.sparkSession.sparkContext.broadcast(attrs)
-    StationRuns.mapStations(df) { (station, times, cols, conf) =>
-      val path = s"$outDir/$station.zarr"
-      val files = encodeStore(station, times, cols, attrsB.value,
-        chunkRows, zlibLevel)
-      val bytes = StationRuns.writeFiles(path, conf, files)
-      val nChunks = (times.length + chunkRows - 1) / chunkRows
-      Row(station, path, times.length.toLong, nChunks.toLong, bytes)
+                      chunkRows: Int = 65536, zlibLevel: Int = 1): DataFrame =
+    StationRuns.mapStations(df, outDir) { run =>
+      val store = s"${run.station}.zarr"
+      Container(store,
+        encodeStore(run.station, run.time, run.cols, attrs, chunkRows, zlibLevel)
+          .map { case (rel, bytes) => s"$store/$rel" -> bytes },
+        (run.time.length + chunkRows - 1) / chunkRows)
     }
-  }
 }

@@ -35,7 +35,8 @@ import graft.core.AttrsTable
   * Scale shape: one store = one station = ONE task (the reference's own parallelism
   * unit — a whole station fits in memory by construction, `QAQC_pipeline.py:463-465`).
   * This module only turns a store's bytes into [[StationData]]: the distributed
-  * read, the file access, the row schema and the ingest are the
+  * read (a scan key-grouped on `station`, so a per-station aggregate over it plans
+  * no exchange), the file access, the row schema and the ingest are the
   * [[StationRuns]] chassis, shared with the NetCDF readers.
   */
 object ZarrSource {
@@ -390,14 +391,15 @@ object ZarrSource {
     readStore(rel => StationRuns.readFile(fs, new Path(root, rel)), root.getName)
   }
 
-  /** Read many stores distributed, one task per store ([[StationRuns.readStations]]:
+  /** Read many stores distributed, one input partition per store, keyed by the
+    * station id of its `<station>.zarr` name ([[StationRuns.readStations]]:
     * schema from the first store, columns aligned by name). */
   def readStores(spark: SparkSession, storePaths: Seq[String]): DataFrame =
-    StationRuns.readStations(spark, storePaths)(readStoreAt)
+    StationRuns.readStations(spark, storePaths, ".zarr")(readStoreAt)
 
   /** zarr corpus -> the engine's partitioned obs table ([[StationRuns.ingest]]):
     * the complete on-ramp for a reference user's published data. */
   def ingest(spark: SparkSession, storePaths: Seq[String], outPath: String,
              network: String): Unit =
-    StationRuns.ingest(spark, storePaths, outPath, network)(readStoreAt)
+    StationRuns.ingest(spark, storePaths, ".zarr", outPath, network)(readStoreAt)
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
 /** `Bench.run` at sf0.001: the per-query record is filled from the rep it
-  * belongs to, counts the plan behind a cached relation once, and a query that
-  * throws is reported as failed. */
+  * belongs to, counts the plan behind a cached relation once and the station
+  * containers a query wrote and read, and a query that throws is reported as
+  * failed. */
 class BenchSpec extends SparkSpec {
   private type Query = (SparkSession, String) => DataFrame
 
@@ -28,6 +29,7 @@ class BenchSpec extends SparkSpec {
             .join(broadcast(s.range(0, 50).toDF("k")), "k").persist()
           joined.union(joined)
         }),
+        "s27_nc_publish" -> SparkEntry.queries("s27_nc_publish"),
         "z_throws" -> ((_, _) => throw new IllegalStateException("injected"))),
       reps = 1).map(r => r.name -> r).toMap
     finally spark.sparkContext.removeSparkListener(slow)
@@ -59,6 +61,21 @@ class BenchSpec extends SparkSpec {
     assert(p.error.isEmpty)
     assert(p.detail.bhj == 1, p.detail)
     assert(p.plan.contains("InMemoryTableScan"), p.plan)
+  }
+
+  test("s27's record counts its station sink and scan with their metrics") {
+    val s27 = results("s27_nc_publish")
+    assert(s27.error.isEmpty)
+    val d = s27.detail
+    assert(d.containerSinks == 1 && d.containerScans == 1, d)
+    // the events source's round-robin split and the sink's station shuffle; the
+    // key-grouped read-back, the rep's last plan, adds none
+    assert(d.exchanges == 2, d)
+    assert(s27.plan.contains("StationScan") && !s27.plan.contains("Exchange"), s27.plan)
+    val m = d.containerMetrics
+    assert(m("containersWritten") > 0 && m("containersRead") == m("containersWritten"), m)
+    assert(m("bytesWritten") > 0 && m("bytesRead") == m("bytesWritten"), m)
+    assert(m("encodeNs") > 0 && m("decodeNs") > 0, m)
   }
 
   test("the per-query map goes to stdout in queries_part lines of at most 1.5 KB") {

@@ -12,8 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * lower bound (a shrinking frame) for every row, O(n²) per partition. Operators,
   * kernels, pipelines and sources do not pin storage: a persist outlives the call,
   * and only a session-wide cache clear frees it. Station containers are read
-  * through one chassis, `StationRuns`. The series operators that run as
-  * `SeriesScan` kernels keep no window form beside them. */
+  * through one chassis, `StationRuns`, whose scan is the only place that turns
+  * paths into partitions; no source builds a DataFrame from an `RDD[Row]`. The
+  * series operators that run as `SeriesScan` kernels keep no window form beside
+  * them. */
 class ScaffoldingSpec extends AnyFunSuite {
   private val sources: Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")
@@ -110,14 +112,28 @@ class ScaffoldingSpec extends AnyFunSuite {
   test("in graft/sources only the StationRuns chassis distributes paths or defines StationData") {
     val scoped = sources.filter(_._1.toString.contains("/graft/sources/"))
     val files = scoped.map(_._1.getFileName.toString).toSet
-    assert(Set("StationRuns.scala", "ZarrSource.scala", "NcSource.scala", "Hdf5Source.scala")
-      .subsetOf(files), s"scan found no sources: $files")
+    assert(Set("StationRuns.scala", "StationScan.scala", "ZarrSource.scala", "NcSource.scala",
+      "Hdf5Source.scala").subsetOf(files), s"scan found no sources: $files")
+    // the chassis' scan is the one place that turns container paths into partitions
     val offenders = scoped.collect {
+      case (p, text) if !p.endsWith("StationScan.scala") &&
+        (text.contains("InputPartition") || text.contains("HasPartitionKey")) => p.toString
       case (p, text) if !p.endsWith("StationRuns.scala") &&
-        (text.contains("parallelize(") || text.contains("case class StationData")) => p.toString
+        text.contains("case class StationData") => p.toString
     }
     assert(offenders.isEmpty, s"read station containers through StationRuns.readStations: $offenders")
     val chassis = scoped.find(_._1.endsWith("StationRuns.scala")).get._2
     assert("case class StationData".r.findAllIn(chassis).length == 1)
+  }
+
+  test("graft/sources builds no RDD[Row], createDataFrame or parallelize") {
+    val scoped = sources.filter(_._1.toString.contains("/graft/sources/"))
+    assert(scoped.exists(_._1.endsWith("StationRuns.scala")), "scan found no sources")
+    val rowRdd = """RDD\[Row\]|createDataFrame\(|\.parallelize\(""".r
+    val offenders = scoped.flatMap { case (p, text) =>
+      rowRdd.findAllIn(text).map(m => s"$p: $m")
+    }
+    assert(offenders.isEmpty,
+      s"station containers are a DataSource V2 scan and a plan-node sink: $offenders")
   }
 }

@@ -3,10 +3,10 @@ package graft.expr
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ann.AnnOps
+import graft.ann.{AnnHofReference, AnnOps}
 
 /** Pins [[PqEncodeNative]] / [[IvfAssignNative]] to the HOF folds they replaced
-  * (`AnnOps.pqEncodeHof` / `AnnOps.ivfAssignHof`), the fused residual form to
+  * (`AnnHofReference.pqEncodeHof` / `AnnHofReference.ivfAssignHof`), the fused residual form to
   * the composed `zip_with` + encode expression, and codegen to interpreted. */
 class PqNativeSpec extends SparkSpec {
   import spark.implicits._
@@ -26,9 +26,9 @@ class PqNativeSpec extends SparkSpec {
     val df = rows.toDF("id", "v").withColumn("vf", col("v").cast("array<float>"))
     val cmp = df
       .withColumn("n", AnnOps.pqEncode(col("v"), cbs))
-      .withColumn("h", AnnOps.pqEncodeHof(col("v"), cbs))
+      .withColumn("h", AnnHofReference.pqEncodeHof(col("v"), cbs))
       .withColumn("nf", AnnOps.pqEncode(col("vf"), cbs))
-      .withColumn("hf", AnnOps.pqEncodeHof(col("vf"), cbs))
+      .withColumn("hf", AnnHofReference.pqEncodeHof(col("vf"), cbs))
     assert(cmp.filter(not(col("n.codes") <=> col("h.codes"))).count() == 0, "codes parity")
     assert(cmp.filter(not(col("n.sse") <=> col("h.sse"))).count() == 0, "sse parity")
     assert(cmp.filter(not(col("nf.codes") <=> col("hf.codes"))).count() == 0, "float codes parity")
@@ -41,13 +41,13 @@ class PqNativeSpec extends SparkSpec {
       .withColumn("cell", AnnOps.ivfAssign(col("v"), cents))
     val cmp = df
       .withColumn("n", PqEncodeNative.residualExpr(col("v"), col("cell"), cents, cbs))
-      .withColumn("h", AnnOps.pqEncodeHof(residualHof(col("v"), col("cell")), cbs))
+      .withColumn("h", AnnHofReference.pqEncodeHof(residualHof(col("v"), col("cell")), cbs))
     assert(cmp.filter(not(col("n.codes") <=> col("h.codes"))).count() == 0, "residual codes parity")
     assert(cmp.filter(not(col("n.sse") <=> col("h.sse"))).count() == 0, "residual sse parity")
     // float vector through the residual path: zip_with widens float - double
     val cmpF = df.withColumn("vf", col("v").cast("array<float>"))
       .withColumn("n", PqEncodeNative.residualExpr(col("vf"), col("cell"), cents, cbs))
-      .withColumn("h", AnnOps.pqEncodeHof(residualHof(col("vf"), col("cell")), cbs))
+      .withColumn("h", AnnHofReference.pqEncodeHof(residualHof(col("vf"), col("cell")), cbs))
     assert(cmpF.filter(not(col("n.codes") <=> col("h.codes"))).count() == 0, "float residual parity")
     assert(cmpF.filter(not(col("n.sse") <=> col("h.sse"))).count() == 0, "float residual sse parity")
   }
@@ -57,9 +57,9 @@ class PqNativeSpec extends SparkSpec {
     val df = rows.toDF("id", "v").withColumn("vf", col("v").cast("array<float>"))
     val cmp = df
       .withColumn("n", AnnOps.ivfAssign(col("v"), cents))
-      .withColumn("h", AnnOps.ivfAssignHof(col("v"), cents))
+      .withColumn("h", AnnHofReference.ivfAssignHof(col("v"), cents))
       .withColumn("nf", AnnOps.ivfAssign(col("vf"), cents))
-      .withColumn("hf", AnnOps.ivfAssignHof(col("vf"), cents))
+      .withColumn("hf", AnnHofReference.ivfAssignHof(col("vf"), cents))
     assert(cmp.filter(not(col("n") <=> col("h"))).count() == 0, "assign parity")
     assert(cmp.filter(not(col("nf") <=> col("hf"))).count() == 0, "float assign parity")
     // degenerate contract: Spark comparisons rank NaN LARGEST, so an all-NaN
@@ -67,7 +67,7 @@ class PqNativeSpec extends SparkSpec {
     // (both paths; a valid cell either way, which is what downstream needs)
     val nan = Seq((1L, Seq.fill(dim)(Double.NaN))).toDF("id", "v")
       .select(AnnOps.ivfAssign(col("v"), cents).as("c"),
-        AnnOps.ivfAssignHof(col("v"), cents).as("ch")).collect().head
+        AnnHofReference.ivfAssignHof(col("v"), cents).as("ch")).collect().head
     assert(nan.getInt(0) == cents.size - 1 && nan.getInt(1) == cents.size - 1)
     // single-centroid degenerate: always 0 on both paths
     val one = Seq((1L, Seq.fill(dim)(1.0))).toDF("id", "v")

@@ -2,6 +2,7 @@ package graft.multimodal
 
 import graft.SparkSpec
 import MultimodalOps._
+import DHashHofReference.dHashHof
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._

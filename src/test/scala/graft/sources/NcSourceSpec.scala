@@ -3,7 +3,6 @@ package graft.sources
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.file.Files
 
-import org.apache.spark.sql.types.DoubleType
 
 import graft.SparkSpec
 import graft.core.AttrsTable
@@ -125,8 +124,8 @@ class NcSourceSpec extends SparkSpec {
       Seq(280.0, -9999.0, 282.0), Seq("M", "", "")))
     // no tas_qc, and an rh the first file does not have
     put("CIMIS_9.nc", NcSink.encodeStation("CIMIS_9", Array(0L, 3600000000L),
-      Seq(("tas", DoubleType, Array[Any](270.0, 271.0)),
-        ("rh", DoubleType, Array[Any](40.0, 41.0))), AttrsTable(Map.empty, Map.empty)))
+      Seq(RunColumn.Doubles("tas", Array(270.0, 271.0)),
+        RunColumn.Doubles("rh", Array(40.0, 41.0))), AttrsTable(Map.empty, Map.empty)))
     val paths = Seq(s"$dir/CIMIS_2.nc", s"$dir/CIMIS_7.nc", s"$dir/CIMIS_9.nc")
 
     val df = NcSource.readFiles(spark, paths)
