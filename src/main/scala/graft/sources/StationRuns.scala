@@ -72,8 +72,9 @@ private[sources] object StationRuns {
     val spark = df.sparkSession
     require(df.columns.contains("station") && df.columns.contains("time"),
       "per-station sink needs station + time columns")
+    require(df.schema("station").dataType == StringType, "per-station sink needs a string station")
     val dataCols = df.schema.fields.filter(f => f.name != "station" && f.name != "time")
-    dataCols.foreach(f => RunColumn.builder(f.dataType))
+    dataCols.foreach(f => RunColumn.builder(f.dataType)) // refuse a type here, not in a task
     val time = df.schema("time").dataType match {
       case TimestampType => col("time")
       case _ => col("time").cast(TimestampType).as("time")

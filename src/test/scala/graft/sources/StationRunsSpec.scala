@@ -97,6 +97,12 @@ class StationRunsSpec extends SparkSpec {
     val dir = Files.createTempDirectory("station-sink-raw").toString
     val plan = finalPlan(NcSink.writeNcFiles(obs, dir)).toString
     assert(occurrences(plan, "Exchange ") == 1 && occurrences(plan, "\\bSort \\[") == 1, plan)
+    // a station that is not a string, or a column no encoder takes, is refused when
+    // the write is defined
+    intercept[IllegalArgumentException](
+      NcSink.writeNcFiles(obs.withColumn("station", lit(7)), dir))
+    intercept[IllegalArgumentException](
+      ZarrSink.writeZarrStores(obs.withColumn("ok", lit(true)), dir))
   }
 
   test("1,100 one-row NetCDF files read back as 1,100 stations, grouped with no exchange") {
