@@ -34,8 +34,8 @@ import org.apache.spark.sql.types._
   *    chunk index; filters: deflate, shuffle, fletcher32 (checksum stripped);
   *  - attribute messages v1/v2/v3 (compact storage).
   *
-  * Decode conventions mirror [[NcSource]]: integers -> Long, floats -> Double,
-  * fill-value matches and NaNs -> null, strings null-trimmed; attributes
+  * Decode conventions mirror [[NcSource]], into unboxed columns: integers -> Long,
+  * floats -> Double, fill-value matches and NaNs -> null, strings null-trimmed; attributes
   * render as strings (numeric lists space-joined). netCDF-4 "phony" dimension
   * datasets (attr NAME starting "This is a netCDF dimension") are dropped.
   * This module only parses bytes: the decoded variables become [[StationData]]
@@ -380,15 +380,6 @@ object Hdf5Source {
       }
     }
 
-    private def dtypeStr(dt: Dt): String = dt match {
-      case DtInt(s, true, _) => s"<i$s"
-      case DtInt(s, false, _) => s"<u$s"
-      case DtFloat(s, _) => s"<f$s"
-      case DtString(s) => s"|S$s"
-      case DtVlenStr(_) => "|O"
-      case DtOpaque(s, c) => s"|V$s(class$c)"
-    }
-
     private def sparkTypeOf(dt: Dt): DataType = dt match {
       case _: DtFloat => DoubleType
       case _: DtInt => LongType
@@ -699,13 +690,16 @@ object Hdf5Source {
       val fillMatches = (p: Int) => fill.exists { f =>
         f.length == dt.size && (0 until dt.size).forall(i => f(i) == raw(p + i))
       }
-      val values: Array[Any] = dt match {
-        case DtInt(sz, signed, be) =>
-          val wrapped = ByteBuffer.wrap(raw)
-            .order(if (be) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
-          Array.tabulate[Any](n) { i =>
-            if (fillMatches(i * sz)) null
-            else sz match {
+      val out = StationColumn.allocate(name, sparkTypeOf(dt), n)
+      val wrapped = ByteBuffer.wrap(raw).order(dt match {
+        case DtInt(_, _, true) | DtFloat(_, true) => ByteOrder.BIG_ENDIAN
+        case _ => ByteOrder.LITTLE_ENDIAN
+      })
+      (dt, out) match {
+        case (DtInt(sz, signed, _), StationColumn.Longs(_, vs, nulls)) =>
+          for (i <- 0 until n) {
+            nulls(i) = fillMatches(i * sz)
+            vs(i) = sz match {
               case 1 => if (signed) wrapped.get(i).toLong else (wrapped.get(i) & 0xff).toLong
               case 2 => if (signed) wrapped.getShort(i * 2).toLong
                         else (wrapped.getShort(i * 2) & 0xffff).toLong
@@ -714,36 +708,30 @@ object Hdf5Source {
               case 8 => wrapped.getLong(i * 8)
             }
           }
-        case DtFloat(sz, be) =>
-          val wrapped = ByteBuffer.wrap(raw)
-            .order(if (be) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
-          Array.tabulate[Any](n) { i =>
-            if (fillMatches(i * sz)) null
-            else {
-              val d = if (sz == 4) wrapped.getFloat(i * 4).toDouble else wrapped.getDouble(i * 8)
-              if (d.isNaN) null else d
-            }
+        case (DtFloat(sz, _), StationColumn.Doubles(_, vs, nulls)) =>
+          for (i <- 0 until n) {
+            vs(i) = if (sz == 4) wrapped.getFloat(i * 4).toDouble else wrapped.getDouble(i * 8)
+            nulls(i) = fillMatches(i * sz) || vs(i).isNaN
           }
-        case DtString(sz) =>
-          Array.tabulate[Any](n) { i =>
+        case (DtString(sz), StationColumn.Strings(_, vs)) =>
+          for (i <- 0 until n) {
             val s = new String(raw, i * sz, sz, "UTF-8").takeWhile(_ != '\u0000').trim
-            if (s.isEmpty) null else s
+            vs(i) = if (s.isEmpty) null else s
           }
-        case DtVlenStr(_) =>
+        case (DtVlenStr(_), StationColumn.Strings(_, vs)) =>
           // vlen descriptors point into the file's global heap, so decode from
           // the ORIGINAL bytes (contiguous layout only: a chunked vlen would
           // carry heap ids through filters — out of profile)
           val (_, loff, _) = msgs.find(_._1 == 0x0008).get
           require(u8(loff + 1) == 1, "chunked variable-length strings unsupported")
           val addr = u64(loff + 2)
-          Array.tabulate[Any](n) { i =>
+          for (i <- 0 until n) {
             val s = vlenString(addr + i.toLong * 16).takeWhile(_ != '\u0000').trim
-            if (s.isEmpty) null else s
+            vs(i) = if (s.isEmpty) null else s
           }
-        case DtOpaque(_, c) =>
-          sys.error(s"dataset '$name' has unsupported datatype class $c")
+        case (other, _) => sys.error(s"dataset '$name' has unsupported datatype $other")
       }
-      Some(StationRuns.Variable(name, sparkTypeOf(dt), dtypeStr(dt), values, attrs))
+      Some(StationRuns.Variable(out, attrs))
     }
 
     def rootVars(): Seq[StationRuns.Variable] =

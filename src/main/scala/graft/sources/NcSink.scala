@@ -15,8 +15,8 @@ import graft.core.AttrsTable
   *
   * Emits the public classic file format (big-endian header with dim/attr/var
   * lists, fixed-size vars at absolute 64-bit offsets, data padded to 4-byte
-  * boundaries) that any netCDF tool reads. Encodings, chosen so
-  * [[NcSource.readStation]] round-trips values exactly:
+  * boundaries) that any netCDF tool reads, from one [[StationData]]. Encodings,
+  * chosen so [[NcSource.readStation]] decodes the same value back:
   *   - time    → NC_DOUBLE, CF `units = "seconds since 1970-01-01 00:00:00"`;
   *     integral-second timestamps round-trip exactly (micros are written as
   *     fractional seconds — a double keeps them exact to ±2^53 µs ≈ ±285 yr,
@@ -33,7 +33,7 @@ import graft.core.AttrsTable
   * Scale: same [[StationRuns]] sink as the zarr sink — a plan node that needs
   * one station shuffle and sort on raw input and none on input a series scan
   * keyed on station has clustered and sorted; one `.nc` per station written
-  * executor-side from unboxed columns, ledger DataFrame back. */
+  * executor-side from its [[StationData]], ledger DataFrame back. */
 object NcSink {
 
   private val NcChar = 2; private val NcInt = 4; private val NcDouble = 6
@@ -70,30 +70,21 @@ object NcSink {
 
   private def sorted(m: Map[String, String]): Seq[(String, String)] = m.toSeq.sortBy(_._1)
 
-  /** Encode one station to classic CDF-2 bytes. `time` is epoch micros
-    * ascending. */
-  private[sources] def encodeStation(
-      station: String, time: Array[Long],
-      cols: Seq[RunColumn], attrs: AttrsTable): Array[Byte] = {
+  /** Encode one station (time ascending) to classic CDF-2 bytes. */
+  private[sources] def encodeStation(d: StationData): Array[Byte] = {
+    val StationData(station, time, cols, attrs) = d
     val n = time.length
     val stationBytes = station.getBytes("UTF-8")
     require(stationBytes.nonEmpty, "empty station id")
 
-    // dims: time first, then one strlen dim per char variable
+    // dims: time first, then one strlen dim per char variable, in variable order
     final case class VarSpec(name: String, ncType: Int, dimIds: Seq[Int],
                              vattrs: Seq[(String, String)], vsize: Int,
                              write: Writer => Unit)
     val dims = scala.collection.mutable.ArrayBuffer[(String, Int)]("time" -> n)
     def addDim(nm: String, len: Int): Int = { dims += nm -> len; dims.length - 1 }
 
-    // each string encoded once, padded to its column's widest value (at least 1)
-    val strCols = cols.collect { case RunColumn.Strings(nm, vals) =>
-      val enc = vals.map(v => if (v == null) Array.emptyByteArray else v.getBytes("UTF-8"))
-      nm -> (enc, math.max(1, enc.foldLeft(0)((m, b) => math.max(m, b.length))))
-    }.toMap
-
     val stationDim = addDim("station_strlen", stationBytes.length)
-    val strDims = strCols.map { case (nm, (_, len)) => nm -> addDim(s"${nm}_strlen", len) }
 
     val timeVar = VarSpec("time", NcDouble, Seq(0),
       ("units" -> "seconds since 1970-01-01 00:00:00") +:
@@ -103,10 +94,10 @@ object NcSink {
       sorted(attrs.forVar("station")), pad4(stationBytes.length),
       w => { w.bytes(stationBytes); w.padTo4() })
     val dataVars = cols.map {
-      case RunColumn.Doubles(nm, vals) =>
+      case StationColumn.Doubles(nm, vals, nulls) =>
         VarSpec(nm, NcDouble, Seq(0), sorted(attrs.forVar(nm)), pad4(n * 8),
-          w => vals.foreach(w.double))
-      case RunColumn.Longs(nm, vals, nulls) =>
+          w => vals.indices.foreach(i => w.double(if (nulls(i)) Double.NaN else vals(i))))
+      case StationColumn.Longs(nm, vals, nulls) =>
         VarSpec(nm, NcInt, Seq(0), sorted(attrs.forVar(nm)), pad4(n * 4),
           w => { vals.indices.foreach { i =>
             if (nulls(i)) w.int(FillInt)
@@ -117,13 +108,16 @@ object NcSink {
               w.int(v.toInt)
             }
           }; w.padTo4() })
-      case RunColumn.Strings(nm, _) =>
-        val (enc, len) = strCols(nm)
-        VarSpec(nm, NcChar, Seq(0, strDims(nm)), sorted(attrs.forVar(nm)),
+      case StationColumn.Strings(nm, vals) =>
+        // each string encoded once, padded to its column's widest value (at least 1)
+        val enc = vals.map(v => if (v == null) Array.emptyByteArray else v.getBytes("UTF-8"))
+        val len = math.max(1, enc.foldLeft(0)((m, b) => math.max(m, b.length)))
+        VarSpec(nm, NcChar, Seq(0, addDim(s"${nm}_strlen", len)), sorted(attrs.forVar(nm)),
           pad4(n * len),
           w => { enc.foreach { b =>
             w.bytes(b); (b.length until len).foreach(_ => w.out.write(0))
           }; w.padTo4() })
+      case c => throw new IllegalArgumentException(s"${c.name}: no NetCDF-3 ${c.dataType}")
     }
     val vars = Seq(timeVar, stationVar) ++ dataVars
 
@@ -165,8 +159,8 @@ object NcSink {
     * files. */
   def writeNcFiles(df: DataFrame, outDir: String,
                    attrs: AttrsTable = AttrsTable(Map.empty, Map.empty)): DataFrame =
-    StationRuns.mapStations(df, outDir) { run =>
-      val file = s"${run.station}.nc"
-      Container(file, Seq(file -> encodeStation(run.station, run.time, run.cols, attrs)), 1L)
+    StationRuns.mapStations(df, outDir, attrs) { d =>
+      val file = s"${d.station}.nc"
+      Container(file, Seq(file -> encodeStation(d)), 1L)
     }
 }

@@ -3,8 +3,6 @@ package graft.sources
 import java.io.FileNotFoundException
 import java.nio.{ByteBuffer, ByteOrder}
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,10 +12,10 @@ import org.apache.spark.sql.types._
   * QAQC stage's `.nc` on-ramp (`/root/reference/scripts/3_qaqc_data/
   * QAQC_pipeline.py:1058-1065`, the `open_dataset` branch the zarr reader doesn't
   * cover). One `.nc` file = one station = one executor task. This module only
-  * parses bytes: the variables it decodes become [[StationData]] through
-  * [[StationRuns.fromNetcdf]] (the rules it shares with [[Hdf5Source]]), and the
-  * distributed read (a scan key-grouped on `station`), file access and ingest are
-  * the [[StationRuns]] chassis.
+  * parses bytes: it decodes each variable into an unboxed column, and the
+  * variables become a [[StationData]] through [[StationRuns.fromNetcdf]] (the
+  * rules it shares with [[Hdf5Source]]); the distributed read (a scan key-grouped
+  * on `station`), file access and ingest are the [[StationRuns]] chassis.
   *
   * Implements the public classic file format (magic `CDF\x01`/`CDF\x02`,
   * big-endian header with dim/attr/var lists, fixed vars at absolute offsets,
@@ -153,26 +151,11 @@ object NcSource {
       else ((fileLen - rec.map(_.begin).min) / recordStride(nc)).toInt
     }
 
-  private def decodeOne(bb: ByteBuffer, t: Int): Any = t match {
-    case NcByte => bb.get().toLong
-    case NcShort => bb.getShort().toLong
-    case NcInt => bb.getInt().toLong
-    case NcFloat => bb.getFloat().toDouble
-    case NcDouble => bb.getDouble()
-  }
-
-  private def fillOf(v: NcVar): Option[Any] = v.ncType match {
-    case NcChar => None
-    case NcFloat => Some(v.attrs.get("_FillValue").map(_.toDouble).getOrElse(FillFloat))
-    case NcDouble => Some(v.attrs.get("_FillValue").map(_.toDouble).getOrElse(FillDouble))
-    case NcByte => Some(v.attrs.get("_FillValue").map(_.toLong).getOrElse(FillByte))
-    case NcShort => Some(v.attrs.get("_FillValue").map(_.toLong).getOrElse(FillShort))
-    case NcInt => Some(v.attrs.get("_FillValue").map(_.toLong).getOrElse(FillInt))
-  }
-
-  /** Read a variable's values flattened in row-major order; fill values → null;
-    * char variables decode their trailing string dimension per element. */
-  def readValues(bytes: Array[Byte], nc: NcFile, v: NcVar): Array[Any] = {
+  /** Read a variable's values flattened in row-major order into its column; its
+    * fill (the `_FillValue` attr, else the netcdf.h default of its type, parsed
+    * once) and NaNs read as null; char variables decode their trailing string
+    * dimension per element, an empty one as null. */
+  def readValues(bytes: Array[Byte], nc: NcFile, v: NcVar): StationColumn = {
     val numRecs = resolveNumRecs(nc, bytes.length.toLong)
     val isRec = v.isRecord(nc.dims)
     val shape = v.dimIds.map(d => if (nc.dims(d).length == 0) numRecs else nc.dims(d).length)
@@ -181,26 +164,45 @@ object NcSource {
     val nElems =
       if (v.ncType == NcChar) (shape.product / strLen) max (if (shape.isEmpty) 1 else 0)
       else shape.product
-    val fill = fillOf(v)
-    val out = new ArrayBuffer[Any](nElems)
+    val out = StationColumn.allocate(v.name, sparkType(v), nElems)
+    val fill = v.attrs.get("_FillValue")
+    lazy val fillD = fill.fold(if (v.ncType == NcFloat) FillFloat else FillDouble)(_.toDouble)
+    lazy val fillL = fill.fold(v.ncType match {
+      case NcByte => FillByte
+      case NcShort => FillShort
+      case _ => FillInt
+    })(_.toLong)
+    var k = 0 // next output cell
 
     def decodeRun(bb: ByteBuffer, n: Int): Unit = {
-      var i = 0
-      while (i < n) {
-        if (v.ncType == NcChar) {
-          val raw = new Array[Byte](strLen)
-          bb.get(raw)
-          val s = new String(raw, "UTF-8").takeWhile(_ != '\u0000').trim
-          out += (if (s.isEmpty) null else s)
-        } else {
-          val x = decodeOne(bb, v.ncType)
-          out += (if (fill.contains(x) ||
-            (x.isInstanceOf[Double] && x.asInstanceOf[Double].isNaN)) null else x)
-        }
-        i += 1
+      val end = k + n
+      out match {
+        case StationColumn.Strings(_, vs) =>
+          while (k < end) {
+            val raw = new Array[Byte](strLen)
+            bb.get(raw)
+            val s = new String(raw, "UTF-8").takeWhile(_ != '\u0000').trim
+            vs(k) = if (s.isEmpty) null else s
+            k += 1
+          }
+        case StationColumn.Doubles(_, vs, nulls) =>
+          val f = fillD
+          while (k < end) {
+            vs(k) = if (v.ncType == NcFloat) bb.getFloat().toDouble else bb.getDouble()
+            nulls(k) = vs(k) == f || vs(k).isNaN
+            k += 1
+          }
+        case StationColumn.Longs(_, vs, nulls) =>
+          val f = fillL
+          while (k < end) {
+            vs(k) = if (v.ncType == NcByte) bb.get().toLong
+              else if (v.ncType == NcShort) bb.getShort().toLong else bb.getInt().toLong
+            nulls(k) = vs(k) == f
+            k += 1
+          }
+        case c => sys.error(s"${c.dataType} netCDF variable")
       }
     }
-
     if (!isRec) {
       val bb = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
       bb.position(v.begin.toInt)
@@ -217,7 +219,7 @@ object NcSource {
         rec += 1
       }
     }
-    out.toArray
+    out
   }
 
   private def sparkType(v: NcVar): DataType = v.ncType match {
@@ -229,14 +231,13 @@ object NcSource {
   // --------------------------------------------------------------- station read
 
   /** Decode one `.nc` file (classic here, HDF5 in [[Hdf5Source]]) into station
-    * data, driver- or executor-side; bounded by one station's bytes. Time keeps
-    * the `<f8` dtype, i.e. it decodes through its CF `units` attr. */
+    * data, driver- or executor-side; bounded by one station's bytes. */
   def readStation(bytes: Array[Byte], fileName: String): StationData =
     if (Hdf5Source.isHdf5(bytes)) Hdf5Source.readStation(bytes, fileName)
     else {
       val nc = parseHeader(bytes)
       StationRuns.fromNetcdf(nc.vars.map(v =>
-        StationRuns.Variable(v.name, sparkType(v), "<f8", readValues(bytes, nc, v), v.attrs)),
+        StationRuns.Variable(readValues(bytes, nc, v), v.attrs)),
         nc.gattrs, fileName)
     }
 

@@ -1,26 +1,108 @@
 package graft.sources
 
 import java.io.FileNotFoundException
+import java.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2Relation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.AttrsTable
 
-/** One decoded station container: the station id, its time axis in epoch
-  * microseconds, one flat array per per-step column (Double/Long/String/Boolean
-  * values, null for fill) and the attrs. */
+/** One station container in memory, in both directions: the station id, its
+  * time axis in epoch microseconds, one unboxed column per per-step variable and
+  * the attrs. The decoders fill it, the scan writes rows from it, and the sink
+  * builds it for the encoders. */
 final case class StationData(station: String, time: Array[Long],
-                             cols: Seq[(String, DataType, Array[Any])],
-                             attrs: AttrsTable)
+                             cols: Seq[StationColumn], attrs: AttrsTable)
+
+/** One per-step column of a [[StationData]], unboxed. A null is `nulls(i)` (its
+  * value slot holds anything) or, for strings, a null element. Booleans are zarr
+  * `|b1` and only read: no encoder writes them. */
+sealed abstract class StationColumn(val dataType: DataType) {
+  def name: String
+  def length: Int
+  def isNull(i: Int): Boolean
+  def setNull(i: Int): Unit
+  /** Writes non-null element `i` at `ordinal` (the scan's output row). */
+  private[sources] def write(w: UnsafeRowWriter, ordinal: Int, i: Int): Unit
+  /** Reads non-null element `i` from `ordinal` (the sink's input row). */
+  private[sources] def read(row: InternalRow, ordinal: Int, i: Int): Unit
+  /** The first `n` elements, padded with non-null ones: a sink buffer grown or cut. */
+  private[sources] def resized(n: Int): StationColumn
+  /** `n` copies of element 0: a netCDF variable with one value, broadcast. */
+  private[sources] def broadcast(n: Int): StationColumn
+}
+
+object StationColumn {
+  /** A primitive column: its values and their null mask. */
+  sealed abstract class Masked(t: DataType) extends StationColumn(t) {
+    def nulls: Array[Boolean]
+    def length: Int = nulls.length
+    def isNull(i: Int): Boolean = nulls(i)
+    def setNull(i: Int): Unit = nulls(i) = true
+  }
+  final case class Doubles(name: String, values: Array[Double], nulls: Array[Boolean])
+      extends Masked(DoubleType) {
+    private[sources] def write(w: UnsafeRowWriter, o: Int, i: Int): Unit = w.write(o, values(i))
+    private[sources] def read(r: InternalRow, o: Int, i: Int): Unit = values(i) = r.getDouble(o)
+    private[sources] def resized(n: Int): StationColumn =
+      Doubles(name, util.Arrays.copyOf(values, n), util.Arrays.copyOf(nulls, n))
+    private[sources] def broadcast(n: Int): StationColumn =
+      Doubles(name, Array.fill(n)(values(0)), Array.fill(n)(nulls(0)))
+  }
+  final case class Longs(name: String, values: Array[Long], nulls: Array[Boolean])
+      extends Masked(LongType) {
+    private[sources] def write(w: UnsafeRowWriter, o: Int, i: Int): Unit = w.write(o, values(i))
+    private[sources] def read(r: InternalRow, o: Int, i: Int): Unit = values(i) = r.getLong(o)
+    private[sources] def resized(n: Int): StationColumn =
+      Longs(name, util.Arrays.copyOf(values, n), util.Arrays.copyOf(nulls, n))
+    private[sources] def broadcast(n: Int): StationColumn =
+      Longs(name, Array.fill(n)(values(0)), Array.fill(n)(nulls(0)))
+  }
+  final case class Booleans(name: String, values: Array[Boolean], nulls: Array[Boolean])
+      extends Masked(BooleanType) {
+    private[sources] def write(w: UnsafeRowWriter, o: Int, i: Int): Unit = w.write(o, values(i))
+    private[sources] def read(r: InternalRow, o: Int, i: Int): Unit = values(i) = r.getBoolean(o)
+    private[sources] def resized(n: Int): StationColumn =
+      Booleans(name, util.Arrays.copyOf(values, n), util.Arrays.copyOf(nulls, n))
+    private[sources] def broadcast(n: Int): StationColumn =
+      Booleans(name, Array.fill(n)(values(0)), Array.fill(n)(nulls(0)))
+  }
+  final case class Strings(name: String, values: Array[String])
+      extends StationColumn(StringType) {
+    def length: Int = values.length
+    def isNull(i: Int): Boolean = values(i) == null
+    def setNull(i: Int): Unit = values(i) = null
+    private[sources] def write(w: UnsafeRowWriter, o: Int, i: Int): Unit =
+      w.write(o, UTF8String.fromString(values(i)))
+    private[sources] def read(r: InternalRow, o: Int, i: Int): Unit =
+      values(i) = r.getUTF8String(o).toString
+    private[sources] def resized(n: Int): StationColumn =
+      Strings(name, util.Arrays.copyOf(values, n))
+    private[sources] def broadcast(n: Int): StationColumn =
+      Strings(name, Array.fill(n)(values(0)))
+  }
+
+  /** An all-non-null column of `n` elements for a decoder or the sink to fill. */
+  private[sources] def allocate(name: String, dataType: DataType, n: Int): StationColumn =
+    dataType match {
+      case DoubleType => Doubles(name, new Array[Double](n), new Array[Boolean](n))
+      case LongType => Longs(name, new Array[Long](n), new Array[Boolean](n))
+      case StringType => Strings(name, new Array[String](n))
+      case BooleanType => Booleans(name, new Array[Boolean](n), new Array[Boolean](n))
+    }
+}
 
 /** The metrics of the station-container nodes in a finished plan. */
 object StationMetrics {
@@ -36,9 +118,10 @@ object StationMetrics {
 }
 
 /** The station-container chassis: everything a per-station store becomes between
-  * its bytes and a DataFrame, in both directions. The format modules only turn
-  * bytes into [[StationData]] ([[ZarrSource]], [[NcSource]], [[Hdf5Source]]) or a
-  * [[StationRun]] into bytes ([[ZarrSink]], [[NcSink]]).
+  * its bytes and a DataFrame, in both directions. A container in memory is one
+  * [[StationData]] of unboxed [[StationColumn]]s either way: the format modules
+  * only turn bytes into it ([[ZarrSource]], [[NcSource]], [[Hdf5Source]]) or it
+  * into bytes ([[ZarrSink]], [[NcSink]]).
   *
   * Read: [[readStations]] plans a [[StationScan]], a DataSource V2 scan with one
   * input partition per container, keyed by the station id its file name carries
@@ -48,13 +131,14 @@ object StationMetrics {
   * containers with the same station id are grouped into one, so N distinct
   * stations run as N tasks with no cap, the reference's per-station task
   * granularity. Each reader decodes its container with the format's function and
-  * [[readFile]] and fills `UnsafeRow`s straight from the decoded columns.
+  * [[readFile]] on its first row, checks each column's type once against the
+  * schema, and fills `UnsafeRow`s straight from the typed arrays.
   *
   * Write: [[mapStations]] plans a [[StationSink]], which asks the planner for its
   * input clustered on `station` and sorted on `(station, time)`: one hash shuffle
   * and one sort on raw input, none after a series scan keyed on `station` and
-  * `time`. It streams each station's run into unboxed [[RunColumn]]s for the
-  * encoder and lands the encoded files with [[writeFiles]].
+  * `time`. It streams each station's rows into a [[StationData]] (with the
+  * sink's attrs) for the encoder and lands the encoded files with [[writeFiles]].
   *
   * Both directions broadcast the driver's Hadoop conf, deserialized once per
   * executor, so object-store credentials travel with the tasks; at 1e5 stations
@@ -64,27 +148,36 @@ private[sources] object StationRuns {
   // ------------------------------------------------------------------- write
 
   /** Publish `df` (station, time, data columns…) as one container per station:
-    * `encode` turns a station's run into its container's files under `outDir`.
-    * Data columns are Double/Float, Long/Int/Short/Byte or String; narrower
-    * numerics widen. Returns the ledger (station, path, rows, chunks, bytes) as a
-    * lazy DataFrame: every action on it writes the containers. */
-  def mapStations(df: DataFrame, outDir: String)(encode: StationRun => Container): DataFrame = {
+    * `encode` turns a station's [[StationData]], carrying `attrs`, into its
+    * container's files under `outDir`. Data columns are Double/Float,
+    * Long/Int/Short/Byte or String; narrower numerics widen. Returns the ledger
+    * (station, path, rows, chunks, bytes) as a lazy DataFrame: every action on it
+    * writes the containers. */
+  def mapStations(df: DataFrame, outDir: String, attrs: AttrsTable)(
+      encode: StationData => Container): DataFrame = {
     val spark = df.sparkSession
     require(df.columns.contains("station") && df.columns.contains("time"),
       "per-station sink needs station + time columns")
     require(df.schema("station").dataType == StringType, "per-station sink needs a string station")
-    val dataCols = df.schema.fields.filter(f => f.name != "station" && f.name != "time")
-    dataCols.foreach(f => RunColumn.builder(f.dataType)) // refuse a type here, not in a task
+    // narrower numerics widen here; any other type is refused here, not in a task
+    val dataCols = df.schema.fields.filter(f => f.name != "station" && f.name != "time").map {
+      f => f.dataType match {
+        case DoubleType | LongType | StringType => col(f.name)
+        case FloatType => col(f.name).cast(DoubleType).as(f.name)
+        case IntegerType | ShortType | ByteType => col(f.name).cast(LongType).as(f.name)
+        case t => throw new IllegalArgumentException(s"unsupported per-station sink type $t")
+      }
+    }
     val time = df.schema("time").dataType match {
       case TimestampType => col("time")
       case _ => col("time").cast(TimestampType).as("time")
     }
-    val input = GraftSqlBridge.logicalPlan(
-      df.select((col("station") +: time +: dataCols.map(f => col(f.name))): _*))
+    val input = GraftSqlBridge.logicalPlan(df.select((col("station") +: time +: dataCols): _*))
     val Seq(stationAttr, timeAttr, dataAttrs @ _*) = input.output
     GraftSqlBridge.addStrategy(spark, StationSinkStrategy)
-    GraftSqlBridge.ofRows(spark, StationSink(stationAttr, timeAttr, dataAttrs, outDir, encode,
-      ledgerSchema.map(f => AttributeReference(f.name, f.dataType, f.nullable)()), input))
+    val ledger = ledgerSchema.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
+    GraftSqlBridge.ofRows(spark,
+      StationSink(stationAttr, timeAttr, dataAttrs, outDir, attrs, encode, ledger, input))
   }
 
   val ledgerSchema: StructType = StructType(Seq(
@@ -158,7 +251,7 @@ private[sources] object StationRuns {
     StructType(
       StructField("station", StringType, nullable = false) +:
       StructField("time", TimestampType, nullable = false) +:
-      data.cols.map { case (n, t, _) => StructField(n, t, nullable = true) })
+      data.cols.map(c => StructField(c.name, c.dataType, nullable = true)))
 
   /** Read many containers distributed through a [[StationScan]], one input
     * partition per path; `decode(path, conf)` turns one path into its
@@ -197,7 +290,7 @@ private[sources] object StationRuns {
     val parts = paths.map(p => StationPartition(p, stationOf(p, suffix)))
     val conf = spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-    val table = new StationTable(parts, storeSchema(first), decode, conf,
+    val table = new StationScan(parts, storeSchema(first), decode, conf,
       keyed = first.station == parts.head.station)
     (first, GraftSqlBridge.ofRows(spark,
       DataSourceV2Relation.create(table, None, None, CaseInsensitiveStringMap.empty())))
@@ -210,10 +303,11 @@ private[sources] object StationRuns {
 
   // ----------------------------------------------------------- netCDF model
 
-  /** One netCDF variable as the NetCDF-3 or HDF5 reader decoded it: name, Spark
-    * type, numpy-style dtype (read by the time decode), flat values, attrs. */
-  final case class Variable(name: String, spark: DataType, dtype: String,
-                            values: Array[Any], attrs: Map[String, String])
+  /** One netCDF variable as the NetCDF-3 or HDF5 reader decoded it: its flat
+    * values and attrs. */
+  final case class Variable(values: StationColumn, attrs: Map[String, String]) {
+    def name: String = values.name
+  }
 
   /** A netCDF file's variables as station data. The `time` variable and its CF
     * units give the axis; a `station` string variable, or else the file name,
@@ -223,14 +317,14 @@ private[sources] object StationRuns {
   def fromNetcdf(vars: Seq[Variable], globalAttrs: Map[String, String],
                  fileName: String): StationData = {
     val timeVar = vars.find(_.name == "time").getOrElse(sys.error("no time variable"))
-    val time = timeToMicros(timeVar.values, timeVar.dtype, timeVar.attrs)
-    val station = vars.find(v => v.name == "station" && v.spark == StringType)
-      .flatMap(_.values.headOption.flatMap(Option(_))).map(_.toString)
-      .getOrElse(fileName.stripSuffix(".nc"))
+    // netCDF has no datetime64 dtype: its time decodes through the CF units
+    val time = timeToMicros(timeVar.values, dtype = "", timeVar.attrs)
+    val station = vars.map(_.values).collectFirst {
+      case StationColumn.Strings("station", vs) if vs.nonEmpty && vs(0) != null => vs(0)
+    }.getOrElse(fileName.stripSuffix(".nc"))
     val cols = vars.filterNot(v => v.name == "time" || v.name == "station").flatMap { v =>
-      if (v.values.length == time.length) Some((v.name, v.spark, v.values))
-      else if (v.values.length == 1)
-        Some((v.name, v.spark, Array.fill[Any](time.length)(v.values(0))))
+      if (v.values.length == time.length) Some(v.values)
+      else if (v.values.length == 1) Some(v.values.broadcast(time.length))
       else None
     }
     StationData(station, time, cols,
@@ -259,26 +353,22 @@ private[sources] object StationRuns {
   }
 
   /** A decoded time variable as epoch micros: `M8[ns]` directly, anything else
-    * through its CF `units` attr. */
-  def timeToMicros(vals: Array[Any], dtype: String,
-                   attrs: Map[String, String]): Array[Long] =
-    if (dtype.drop(1).startsWith("M8")) {
-      // xarray always encodes datetime64[ns]; any other M8 unit would silently
-      // mis-scale, so refuse it explicitly
-      require(dtype.endsWith("[ns]"), s"unsupported datetime64 unit in $dtype (only [ns])")
-      // mirror the CF branch's null handling (ADVICE r7): a missing chunk / fill
-      // match would unbox to 0L = epoch-1970 silently
-      vals.map {
-        case l: java.lang.Long => l.longValue() / 1000L
-        case null => sys.error("null time coordinate")
-      }
-    } else {
-      val (perStep, epoch) = parseCfUnits(attrs.getOrElse("units",
-        sys.error("time variable has neither M8 dtype nor CF units attr")))
-      vals.map {
-        case l: java.lang.Long => epoch + l * perStep
-        case d: java.lang.Double => epoch + (d * perStep).toLong
-        case null => sys.error("null time coordinate")
-      }
+    * through its CF `units` attr. A null step (a missing chunk or a fill match)
+    * is an error, not epoch 1970 (ADVICE r7). */
+  def timeToMicros(vals: StationColumn, dtype: String,
+                   attrs: Map[String, String]): Array[Long] = {
+    require((0 until vals.length).forall(!vals.isNull(_)), "null time coordinate")
+    lazy val (perStep, epoch) = parseCfUnits(attrs.getOrElse("units",
+      sys.error("time variable has neither M8 dtype nor CF units attr")))
+    (vals, dtype.drop(1).startsWith("M8")) match {
+      case (StationColumn.Longs(_, ls, _), true) =>
+        // xarray always encodes datetime64[ns]; any other M8 unit would silently
+        // mis-scale, so refuse it explicitly
+        require(dtype.endsWith("[ns]"), s"unsupported datetime64 unit in $dtype (only [ns])")
+        ls.map(_ / 1000L)
+      case (StationColumn.Longs(_, ls, _), false) => ls.map(epoch + _ * perStep)
+      case (StationColumn.Doubles(_, ds, _), false) => ds.map(d => epoch + (d * perStep).toLong)
+      case (c, _) => sys.error(s"${c.dataType} time coordinate")
     }
+  }
 }

@@ -28,35 +28,26 @@ private[sources] final case class StationPartition(path: String, station: String
   override def partitionKey(): InternalRow = InternalRow(UTF8String.fromString(station))
 }
 
-/** Station containers as a DataSource V2 table: `schema` is (station, time,
-  * columns…), and each partition is read with `decode` under the broadcast
-  * Hadoop conf `conf` (deserialized once per executor); `keyed` says whether the
-  * scan reports its partitions' keys. It has no catalog;
-  * [[StationRuns.readStations]] wraps it in a relation directly. */
-private[sources] final class StationTable(
+/** Station containers as a DataSource V2 table that is its own scan (it takes no
+  * options and pushes nothing down): `tableSchema` is (station, time, columns…),
+  * one input partition per container, each read with `decode` under the
+  * broadcast Hadoop conf `conf` (deserialized once per executor). When `keyed`,
+  * it reports the key-grouped partitioning `identity(station)`, so the planner
+  * knows every row of a partition has the partition's station; Spark groups
+  * partitions that share a station into one, and N stations run as N tasks.
+  * Otherwise its partitioning is unknown, and N containers run as N tasks. It has
+  * no catalog; [[StationRuns.readStations]] wraps it in a relation directly. */
+private[sources] final class StationScan(
     partitions: Seq[StationPartition], tableSchema: StructType,
     decode: (String, Configuration) => StationData, conf: Broadcast[SerializableConfiguration],
     keyed: Boolean)
-    extends Table with SupportsRead {
+    extends Table with SupportsRead with Scan with Batch with SupportsReportPartitioning {
   override def name(): String = s"station containers (${partitions.size})"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new StationScan(partitions, tableSchema, decode, conf, keyed)
-}
-
-/** The scan over station containers: one input partition per container. When
-  * `keyed`, it reports the key-grouped partitioning `identity(station)`, so the
-  * planner knows every row of a partition has the partition's station; Spark
-  * groups partitions that share a station into one, and N stations run as N tasks.
-  * Otherwise its partitioning is unknown, and N containers run as N tasks. */
-private[sources] final class StationScan(
-    partitions: Seq[StationPartition], schema: StructType,
-    decode: (String, Configuration) => StationData, conf: Broadcast[SerializableConfiguration],
-    keyed: Boolean)
-    extends Scan with Batch with SupportsReportPartitioning {
-  override def readSchema(): StructType = schema
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = () => this
+  override def readSchema(): StructType = tableSchema
   override def description(): String = s"StationScan ${partitions.size} containers"
   override def toBatch: Batch = this
   override def outputPartitioning(): Partitioning =
@@ -65,45 +56,60 @@ private[sources] final class StationScan(
     else new UnknownPartitioning(partitions.size)
   override def planInputPartitions(): Array[InputPartition] = partitions.toArray
   override def createReaderFactory(): PartitionReaderFactory = {
-    val (s, d, c, k) = (schema, decode, conf, keyed)
+    val (s, d, c, k) = (tableSchema, decode, conf, keyed)
     p => new StationReader(p.asInstanceOf[StationPartition], s, d, c.value.value, k)
   }
   override def supportedCustomMetrics(): Array[CustomMetric] =
     Array(new ContainersReadMetric, new BytesReadMetric, new DecodeNsMetric)
 }
 
-/** Reads one container: decodes it whole, then fills one `UnsafeRow` per time step
-  * from the decoded columns, aligned by name to `schema` (a column the container
-  * lacks reads as null). Any failure names the container's path; so does a
-  * `keyed` read of a container whose station differs from its key. */
+/** Reads one container: on the first `next()` decodes it whole and matches each
+  * schema column by name to a container column of the same type (a column the
+  * container lacks reads as null; one of another type is an error, even when it
+  * is all null), then fills one `UnsafeRow` per time step from the typed arrays.
+  * Decoding there, not in the constructor, lets the task's input metrics see the
+  * bytes: Spark takes their baseline after creating the reader. Any failure names
+  * the container's path; so does a `keyed` read of a container whose station
+  * differs from its key. */
 private[sources] final class StationReader(part: StationPartition, schema: StructType,
     decode: (String, Configuration) => StationData, conf: Configuration, keyed: Boolean)
     extends PartitionReader[InternalRow] {
-  private val bytes0 = threadBytesRead()
-  private val t0 = System.nanoTime()
-  private val data =
-    try decode(part.path, conf) catch {
-      case NonFatal(e) if !String.valueOf(e.getMessage).contains(part.path) =>
-        throw new IllegalStateException(s"${part.path}: ${e.getMessage}", e)
-    }
-  private val decodeNs = System.nanoTime() - t0
-  private val bytesRead = threadBytesRead() - bytes0
-  if (keyed && data.station != part.station)
-    throw new IllegalStateException(s"${part.path}: holds station '${data.station}', " +
-      s"but its file name keys it as '${part.station}': the first container is named " +
-      "after its station, so the read is keyed on file names")
-
-  private val station = UTF8String.fromString(data.station)
-  private val fields = schema.fields.drop(2)
-  private val types = fields.map(_.dataType)
-  private val values: Array[Array[Any]] = {
-    val byName = data.cols.map(c => c._1 -> c._3).toMap
-    fields.map(f => byName.getOrElse(f.name, null))
-  }
+  private var data: StationData = _
+  private var station: UTF8String = _
+  private var cols: Array[StationColumn] = _
+  private var decodeNs, bytesRead = 0L
   private val writer = new UnsafeRowWriter(schema.length, 64)
   private var i = -1
 
-  override def next(): Boolean = { i += 1; i < data.time.length }
+  private def open(): Unit = {
+    val bytes0 = threadBytesRead()
+    val t0 = System.nanoTime()
+    data = try decode(part.path, conf) catch {
+      case NonFatal(e) if !String.valueOf(e.getMessage).contains(part.path) =>
+        throw new IllegalStateException(s"${part.path}: ${e.getMessage}", e)
+    }
+    decodeNs = System.nanoTime() - t0
+    bytesRead = threadBytesRead() - bytes0
+    if (keyed && data.station != part.station)
+      throw new IllegalStateException(s"${part.path}: holds station '${data.station}', " +
+        s"but its file name keys it as '${part.station}': the first container is named " +
+        "after its station, so the read is keyed on file names")
+    station = UTF8String.fromString(data.station)
+    val byName = data.cols.map(c => c.name -> c).toMap
+    cols = schema.fields.drop(2).map { f =>
+      byName.get(f.name).map { c =>
+        if (c.dataType != f.dataType) throw new IllegalArgumentException(
+          s"${part.path}: column ${f.name} holds ${c.dataType}, not ${f.dataType}")
+        c
+      }.orNull
+    }
+  }
+
+  override def next(): Boolean = {
+    if (data == null) open()
+    i += 1
+    i < data.time.length
+  }
 
   override def get(): InternalRow = {
     writer.reset()
@@ -111,26 +117,16 @@ private[sources] final class StationReader(part: StationPartition, schema: Struc
     writer.write(0, station)
     writer.write(1, data.time(i))
     var j = 0
-    while (j < fields.length) {
-      val o = j + 2
-      val vs = values(j)
-      val v = if (vs == null) null else vs(i)
-      v match {
-        case null => writer.setNullAt(o)
-        case d: java.lang.Double if types(j) == DoubleType => writer.write(o, d.doubleValue())
-        case l: java.lang.Long if types(j) == LongType => writer.write(o, l.longValue())
-        case s: String if types(j) == StringType => writer.write(o, UTF8String.fromString(s))
-        case b: java.lang.Boolean if types(j) == BooleanType => writer.write(o, b.booleanValue())
-        case _ => throw new IllegalArgumentException(s"${part.path}: column ${fields(j).name} " +
-          s"holds a ${v.getClass.getSimpleName}, not ${types(j)}")
-      }
+    while (j < cols.length) {
+      val c = cols(j)
+      if (c == null || c.isNull(i)) writer.setNullAt(j + 2) else c.write(writer, j + 2, i)
       j += 1
     }
     writer.getRow
   }
 
   override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-    StationScan.taskMetric("containersRead", 1L),
+    StationScan.taskMetric("containersRead", if (data == null) 0L else 1L),
     StationScan.taskMetric("bytesRead", bytesRead),
     StationScan.taskMetric("decodeNs", decodeNs))
 
@@ -149,17 +145,11 @@ private[sources] object StationScan {
   }
 }
 
-class ContainersReadMetric extends CustomSumMetric {
-  override def name(): String = "containersRead"
-  override def description(): String = "station containers read"
+/** A summed scan metric; Spark builds each subclass by its no-argument constructor. */
+abstract class StationSumMetric(metric: String, text: String) extends CustomSumMetric {
+  override def name(): String = metric
+  override def description(): String = text
 }
-
-class BytesReadMetric extends CustomSumMetric {
-  override def name(): String = "bytesRead"
-  override def description(): String = "station container bytes read"
-}
-
-class DecodeNsMetric extends CustomSumMetric {
-  override def name(): String = "decodeNs"
-  override def description(): String = "station container decode time (ns)"
-}
+class ContainersReadMetric extends StationSumMetric("containersRead", "station containers read")
+class BytesReadMetric extends StationSumMetric("bytesRead", "station container bytes read")
+class DecodeNsMetric extends StationSumMetric("decodeNs", "station container decode time (ns)")

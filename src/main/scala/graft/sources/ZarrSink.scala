@@ -16,8 +16,8 @@ import graft.core.AttrsTable
   * round-trip, so a reference user can both consume AND publish the corpus
   * format without leaving the engine.
   *
-  * Emits exactly what [[ZarrSource.readStore]] consumes (and what zarr-python /
-  * xarray `open_zarr(consolidated=True)` expects): one directory per station
+  * Encodes a [[StationData]] as exactly what [[ZarrSource.readStore]] decodes back
+  * to it (and xarray `open_zarr(consolidated=True)` expects): one directory per station
   * holding `.zgroup` / `.zattrs`, per-variable `.zarray` + `.zattrs`
   * (`_ARRAY_DIMENSIONS` xarray convention) + C-order chunk files, and a
   * consolidated `.zmetadata`. Encodings are the subset the reader round-trips
@@ -47,11 +47,11 @@ object ZarrSink {
 
   private val FillLong = Long.MinValue
 
-  /** One encoded store: relative-path -> file bytes, in write order. */
-  private[sources] def encodeStore(
-      station: String, time: Array[Long], // epoch micros, ascending
-      cols: Seq[RunColumn],
-      attrs: AttrsTable, chunkRows: Int, zlibLevel: Int): Seq[(String, Array[Byte])] = {
+  /** One station's store (time ascending): relative-path -> file bytes, in write
+    * order. */
+  private[sources] def encodeStore(d: StationData, chunkRows: Int,
+                                   zlibLevel: Int): Seq[(String, Array[Byte])] = {
+    val StationData(station, time, cols, attrs) = d
     val mapper = new ObjectMapper()
     val n = time.length
 
@@ -101,33 +101,16 @@ object ZarrSink {
       d.end(); out.toByteArray
     }
 
-    // fixed-width chunk: pad the edge chunk to full size with the fill pattern
-    def numericChunks(vals: Int => Long, putFill: ByteBuffer => Unit,
-                      put: (ByteBuffer, Long) => Unit, width: Int): Seq[Array[Byte]] =
-      (0 until n by chunkRows).map { start =>
-        val bb = ByteBuffer.allocate(chunkRows * width).order(ByteOrder.LITTLE_ENDIAN)
-        var i = start
-        while (i < start + chunkRows) {
-          if (i < n) put(bb, vals(i)) else putFill(bb)
-          i += 1
-        }
-        deflate(bb.array())
-      }
-
-    def doubleChunks(vals: Array[Double]): Seq[Array[Byte]] =
+    // 8-byte elements (a double as its raw bits, as `putDouble` writes it); the
+    // edge chunk is padded to full size with `pad`
+    def chunks8(vals: Int => Long, pad: Long): Seq[Array[Byte]] =
       (0 until n by chunkRows).map { start =>
         val bb = ByteBuffer.allocate(chunkRows * 8).order(ByteOrder.LITTLE_ENDIAN)
         var i = start
-        while (i < start + chunkRows) {
-          bb.putDouble(if (i >= n) Double.NaN else vals(i))
-          i += 1
-        }
+        while (i < start + chunkRows) { bb.putLong(if (i < n) vals(i) else pad); i += 1 }
         deflate(bb.array())
       }
-
-    def longChunks(vals: Array[Long], nulls: Array[Boolean], fill: Long): Seq[Array[Byte]] =
-      numericChunks(i => if (nulls(i)) fill else vals(i),
-        _.putLong(fill), (bb, l) => bb.putLong(l), 8)
+    val nanBits = java.lang.Double.doubleToRawLongBits(Double.NaN)
 
     // numcodecs VLenUTF8: [uint32 nitems][per item: uint32 len + utf8]; null → ""
     def vlenChunk(items: Seq[String]): Array[Byte] = {
@@ -169,18 +152,21 @@ object ZarrSink {
     // epoch micros → datetime64[ns] int64 (xarray's own on-disk time encoding)
     writeVar("time", Seq("time"), Seq(n), Seq(chunkRows), "<M8[ns]", fill = None,
       vlen = false, attrs.forVar("time"),
-      numericChunks(i => time(i) * 1000L, _.putLong(0L), (bb, l) => bb.putLong(l), 8))
+      chunks8(i => time(i) * 1000L, 0L))
 
     cols.foreach {
-      case RunColumn.Doubles(name, vals) =>
+      case StationColumn.Doubles(name, vals, nulls) =>
         writeVar(name, Seq("time"), Seq(n), Seq(chunkRows), "<f8", Some("NaN"),
-          vlen = false, attrs.forVar(name), doubleChunks(vals))
-      case RunColumn.Longs(name, vals, nulls) =>
+          vlen = false, attrs.forVar(name), chunks8(i =>
+            if (nulls(i)) nanBits else java.lang.Double.doubleToRawLongBits(vals(i)), nanBits))
+      case StationColumn.Longs(name, vals, nulls) =>
         writeVar(name, Seq("time"), Seq(n), Seq(chunkRows), "<i8", Some(FillLong),
-          vlen = false, attrs.forVar(name), longChunks(vals, nulls, FillLong))
-      case RunColumn.Strings(name, vals) =>
+          vlen = false, attrs.forVar(name),
+          chunks8(i => if (nulls(i)) FillLong else vals(i), FillLong))
+      case StationColumn.Strings(name, vals) =>
         writeVar(name, Seq("time"), Seq(n), Seq(chunkRows), "|O", fill = None,
           vlen = true, attrs.forVar(name), vlenChunks(vals))
+      case c => throw new IllegalArgumentException(s"${c.name}: no zarr ${c.dataType}")
     }
 
     val consolidated = obj()
@@ -200,11 +186,10 @@ object ZarrSink {
   def writeZarrStores(df: DataFrame, outDir: String,
                       attrs: AttrsTable = AttrsTable(Map.empty, Map.empty),
                       chunkRows: Int = 65536, zlibLevel: Int = 1): DataFrame =
-    StationRuns.mapStations(df, outDir) { run =>
-      val store = s"${run.station}.zarr"
+    StationRuns.mapStations(df, outDir, attrs) { d =>
+      val store = s"${d.station}.zarr"
       Container(store,
-        encodeStore(run.station, run.time, run.cols, attrs, chunkRows, zlibLevel)
-          .map { case (rel, bytes) => s"$store/$rel" -> bytes },
-        (run.time.length + chunkRows - 1) / chunkRows)
+        encodeStore(d, chunkRows, zlibLevel).map { case (rel, bytes) => s"$store/$rel" -> bytes },
+        (d.time.length + chunkRows - 1) / chunkRows)
     }
 }

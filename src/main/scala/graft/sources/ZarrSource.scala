@@ -34,10 +34,10 @@ import graft.core.AttrsTable
   *
   * Scale shape: one store = one station = ONE task (the reference's own parallelism
   * unit — a whole station fits in memory by construction, `QAQC_pipeline.py:463-465`).
-  * This module only turns a store's bytes into [[StationData]]: the distributed
-  * read (a scan key-grouped on `station`, so a per-station aggregate over it plans
-  * no exchange), the file access, the row schema and the ingest are the
-  * [[StationRuns]] chassis, shared with the NetCDF readers.
+  * This module only decodes a store's chunks straight into the unboxed columns of
+  * a [[StationData]] (each array's fill parsed once); the distributed read (a
+  * scan key-grouped on `station`), the file access, the row schema and the ingest
+  * are the [[StationRuns]] chassis, shared with the NetCDF readers.
   */
 object ZarrSource {
 
@@ -225,7 +225,7 @@ object ZarrSource {
 
   // ---------------------------------------------------------------- value decode
 
-  /** numpy dtype string -> (Spark type, element byte width, decoder). Width 0 marks
+  /** numpy dtype string -> (Spark type, element byte width). Width 0 marks
     * vlen-utf8 (decoded separately). */
   private def dtypeInfo(dtype: String, vlen: Boolean): (DataType, Int) = {
     if (vlen) return (StringType, 0)
@@ -246,73 +246,78 @@ object ZarrSource {
   private def byteOrderOf(dtype: String): ByteOrder =
     if (dtype.startsWith(">")) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
 
-  /** Decode `n` elements from uncompressed chunk bytes into boxed values (null for
-    * fill). */
-  private def decodeValues(bytes: Array[Byte], dtype: String, vlen: Boolean,
-                           n: Int, fill: Option[String]): Array[Any] = {
-    if (vlen) { // numcodecs VLenUTF8: [uint32 nitems][per item: uint32 len + utf8]
-      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-      val items = bb.getInt()
-      val out = new Array[Any](n)
+  /** The decoder of `za`'s chunks into `out`: it writes chunk element `i` of the
+    * uncompressed bytes to cell `dst(i)` of `out`, or nowhere when that is -1. The
+    * fill, parsed here once, reads as null; so does a NaN when the fill is NaN. */
+  private def chunkDecoder(za: ZArrayMeta,
+                           out: StationColumn): (Array[Byte], Array[Int]) => Unit = {
+    val (kind, width, fill) = (za.dtype(1), dtypeInfo(za.dtype, za.vlenUtf8)._2, za.fillValue)
+    val nanFill = fill.exists(f => f == "NaN" || f == "nan")
+    lazy val fillD = if (nanFill) Double.NaN else fill.fold(Double.NaN)(_.toDouble)
+    lazy val fillL = fill.map(_.toLong)
+    (bytes, dst) => {
+      val bb = ByteBuffer.wrap(bytes).order(byteOrderOf(za.dtype))
       var i = 0
-      while (i < math.min(items, n)) {
-        val len = bb.getInt()
-        val s = new Array[Byte](len); bb.get(s)
-        out(i) = new String(s, "UTF-8"); i += 1
-      }
-      return out
-    }
-    val bb = ByteBuffer.wrap(bytes).order(byteOrderOf(dtype))
-    val kind = if (dtype.length > 1) dtype(1) else 'f'
-    val (_, width) = dtypeInfo(dtype, vlen = false)
-    val isNaNFill = fill.exists(f => f == "NaN" || f == "nan")
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      val v: Any = kind match {
-        case 'f' =>
-          val d = if (width == 4) bb.getFloat(i * width).toDouble else bb.getDouble(i * width)
-          if (d.isNaN && isNaNFill) null
-          else if (fill.exists(f => f != "NaN" && f != "nan" && f.toDouble == d)) null
-          else d
-        case 'i' | 'M' =>
-          val l = width match {
-            case 1 => bb.get(i).toLong
-            case 2 => bb.getShort(i * 2).toLong
-            case 4 => bb.getInt(i * 4).toLong
-            case 8 => bb.getLong(i * 8)
+      out match {
+        case StationColumn.Strings(_, vs) if za.vlenUtf8 =>
+          // numcodecs VLenUTF8 (little-endian): [uint32 nitems][per item: uint32 len + utf8]
+          val items = math.min(bb.getInt(), dst.length)
+          while (i < items) {
+            val s = new Array[Byte](bb.getInt()); bb.get(s)
+            if (dst(i) >= 0) vs(dst(i)) = new String(s, "UTF-8")
+            i += 1
           }
-          if (fill.exists(_.toLong == l)) null else l
-        case 'u' =>
-          val l = width match {
-            case 1 => (bb.get(i) & 0xff).toLong
-            case 2 => (bb.getShort(i * 2) & 0xffff).toLong
-            case 4 => bb.getInt(i * 4).toLong & 0xffffffffL
-            case _ => bb.getLong(i * 8)
+        case StationColumn.Strings(_, vs) =>
+          while (i < dst.length) {
+            if (dst(i) >= 0) vs(dst(i)) =
+              if (kind == 'S') new String(bytes, i * width, width, "US-ASCII").takeWhile(_ != 0)
+              else { // fixed-width UTF-32 code points
+              val cps = (0 until width / 4).map(j => bb.getInt(i * width + j * 4)).takeWhile(_ != 0)
+              new String(cps.toArray, 0, cps.length)
+            }
+            i += 1
           }
-          if (fill.exists(_.toLong == l)) null else l
-        case 'b' => bb.get(i) != 0
-        case 'S' =>
-          val s = new Array[Byte](width); bb.position(i * width); bb.get(s)
-          new String(s, "US-ASCII").takeWhile(_ != '\u0000')
-        case 'U' => // fixed-width UTF-32LE/BE code points
-          val cps = (0 until width / 4).map(j => bb.getInt(i * width + j * 4))
-            .takeWhile(_ != 0)
-          new String(cps.toArray, 0, cps.length)
+        case StationColumn.Doubles(_, vs, nulls) =>
+          val (fd, nf) = (fillD, nanFill)
+          while (i < dst.length) {
+            if (dst(i) >= 0) {
+              val d = if (width == 4) bb.getFloat(i * 4).toDouble else bb.getDouble(i * 8)
+              vs(dst(i)) = d
+              nulls(dst(i)) = if (d.isNaN) nf else d == fd
+            }
+            i += 1
+          }
+        case StationColumn.Longs(_, vs, nulls) =>
+          val (hasFill, fl, unsigned) = (fillL.isDefined, fillL.getOrElse(0L), kind == 'u')
+          while (i < dst.length) {
+            if (dst(i) >= 0) {
+              val l = width match {
+                case 1 => if (unsigned) (bb.get(i) & 0xff).toLong else bb.get(i).toLong
+                case 2 => if (unsigned) (bb.getShort(i * 2) & 0xffff).toLong
+                          else bb.getShort(i * 2).toLong
+                case 4 => if (unsigned) bb.getInt(i * 4) & 0xffffffffL else bb.getInt(i * 4).toLong
+                case _ => bb.getLong(i * 8)
+              }
+              vs(dst(i)) = l
+              nulls(dst(i)) = hasFill && l == fl
+            }
+            i += 1
+          }
+        case StationColumn.Booleans(_, vs, _) =>
+          while (i < dst.length) { if (dst(i) >= 0) vs(dst(i)) = bb.get(i) != 0; i += 1 }
       }
-      out(i) = v
-      i += 1
     }
-    out
   }
 
-  /** Read one variable's full flat array (C-order) by walking its chunk grid.
-    * Missing chunk files are fill-valued per zarr semantics. */
+  /** Read one variable's full flat array (C-order) by walking its chunk grid,
+    * each chunk decoded straight into its cells. Missing chunk files are
+    * fill-valued per zarr semantics, so null. */
   def readArray(readFile: String => Option[Array[Byte]], name: String,
-                za: ZArrayMeta): Array[Any] = {
+                za: ZArrayMeta): StationColumn = {
     val total = za.shape.product
-    val out = new Array[Any](math.max(total, 0))
+    val out = StationColumn.allocate(name, dtypeInfo(za.dtype, za.vlenUtf8)._1, total)
     if (total == 0) return out
+    val decode = chunkDecoder(za, out)
     val gridDims = za.shape.zip(za.chunks).map { case (s, c) => (s + c - 1) / c }
     val nd = za.shape.size
     def walkGrid(idx: Array[Int], d: Int): Unit =
@@ -322,24 +327,22 @@ object ZarrSource {
       val key = if (nd == 0) "0" else ci.mkString(".")
       val valid = za.shape.indices.map(d =>
         math.min(za.chunks(d), za.shape(d) - ci(d) * za.chunks(d)))
-      val nChunkElems = za.chunks.product
-      val vals = readFile(s"$name/$key") match {
-        case Some(raw) =>
-          decodeValues(decodeChunk(raw, za.compressor), za.dtype, za.vlenUtf8,
-            nChunkElems, za.fillValue)
-        case None => new Array[Any](nChunkElems) // missing chunk = all fill -> null
-      }
-      // scatter the chunk's valid region into the flat C-order output
+      // each chunk element's cell in the flat C-order output; -1 past the edge
+      val dst = Array.fill(za.chunks.product)(-1)
       def scatter(pos: Array[Int], d: Int): Unit =
         if (d == nd) {
-          var src = 0; var dst = 0
+          var src = 0; var cell = 0
           za.shape.indices.foreach { k =>
             src = src * za.chunks(k) + pos(k)
-            dst = dst * za.shape(k) + (ci(k) * za.chunks(k) + pos(k))
+            cell = cell * za.shape(k) + (ci(k) * za.chunks(k) + pos(k))
           }
-          out(dst) = vals(src)
+          dst(src) = cell
         } else (0 until valid(d)).foreach { i => pos(d) = i; scatter(pos, d + 1) }
       scatter(new Array[Int](nd), 0)
+      readFile(s"$name/$key") match {
+        case Some(raw) => decode(decodeChunk(raw, za.compressor), dst)
+        case None => dst.foreach(cell => if (cell >= 0) out.setNull(cell))
+      }
     }
     walkGrid(new Array[Int](nd), 0)
     out
@@ -368,7 +371,12 @@ object ZarrSource {
     // (e.g. "elevation") must not silently become the station id
     val station = varNames.find(_ == "station")
       .orElse(varNames.find(v => zas(v).dims == Seq("station")))
-      .map(v => readArray(readFile, v, zas(v)).head.toString)
+      .map(v => readArray(readFile, v, zas(v)) match {
+        case StationColumn.Strings(_, vs) => vs(0)
+        case StationColumn.Doubles(_, vs, _) => vs(0).toString
+        case StationColumn.Longs(_, vs, _) => vs(0).toString
+        case StationColumn.Booleans(_, vs, _) => vs(0).toString
+      })
       .getOrElse(storeName.stripSuffix(".zarr"))
     val dataVars = varNames.filterNot(v => v == timeVar || zas(v).dims == Seq("station"))
       .filter(v => zas(v).dims.contains("time") || zas(v).shape.product == time.length)
@@ -376,7 +384,7 @@ object ZarrSource {
       val vals = readArray(readFile, v, zas(v))
       require(vals.length == time.length,
         s"$v: ${vals.length} values vs ${time.length} times (non-time dims must be singleton)")
-      (v, dtypeInfo(zas(v).dtype, zas(v).vlenUtf8)._1, vals)
+      vals
     }
     val attrs = AttrsTable(attrsOf(meta, ".zattrs"),
       varNames.map(v => v -> (attrsOf(meta, s"$v/.zattrs") - "_ARRAY_DIMENSIONS")).toMap)

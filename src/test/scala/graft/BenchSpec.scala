@@ -76,6 +76,9 @@ class BenchSpec extends SparkSpec {
     assert(m("containersWritten") > 0 && m("containersRead") == m("containersWritten"), m)
     assert(m("bytesWritten") > 0 && m("bytesRead") == m("bytesWritten"), m)
     assert(m("encodeNs") > 0 && m("decodeNs") > 0, m)
+    // the scan decodes a container on its first row, after Spark takes the task's
+    // input-bytes baseline, so the record's input counts the container bytes
+    assert(d.inputMb > 0 && d.inputMb * 1048576 >= m("bytesRead"), (d.inputMb, m))
   }
 
   test("the per-query map goes to stdout in queries_part lines of at most 1.5 KB") {

@@ -124,6 +124,16 @@ class ScaffoldingSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"read station containers through StationRuns.readStations: $offenders")
     val chassis = scoped.find(_._1.endsWith("StationRuns.scala")).get._2
     assert("case class StationData".r.findAllIn(chassis).length == 1)
+    // one container type, unboxed, in both directions: its column type is defined
+    // next to it, and no boxed column or second container type is left
+    assert("sealed abstract class StationColumn".r.findAllIn(chassis).length == 1)
+    val boxed = scoped.flatMap { case (p, text) =>
+      val other = if (p.endsWith("StationRuns.scala")) Nil
+        else """class StationColumn|class StationData""".r.findAllIn(text).toList
+      ("""Array\[Any\]|\bStationRun\b|\bRunColumn\b""".r.findAllIn(text).toList ++ other)
+        .map(m => s"$p: $m")
+    }
+    assert(boxed.isEmpty, s"station containers are one StationData of StationColumns: $boxed")
   }
 
   test("graft/sources builds no RDD[Row], createDataFrame or parallelize") {

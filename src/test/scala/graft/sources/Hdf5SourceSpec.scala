@@ -809,15 +809,15 @@ class Hdf5SourceSpec extends SparkSpec {
     // CF units: hours since 1990-01-01
     val epoch1990 = java.time.Instant.parse("1990-01-01T00:00:00Z").getEpochSecond * 1000000L
     assert(data.time.toSeq == (0 until 6).map(h => epoch1990 + h * 3600L * 1000000L))
-    val cols = data.cols.map(c => c._1 -> c).toMap
+    val cols = data.cols.map(c => c.name -> c).toMap
     // phony dimension dataset dropped
     assert(!cols.contains("phony_dim"))
     // chunked tas: fill -> null, NaN -> null, edge chunk decoded
-    assert(cols("tas")._2 == DoubleType)
-    assert(cols("tas")._3.toSeq == Seq(10.5, 11.5, 12.5, null, null, 15.5))
+    assert(cols("tas").dataType == DoubleType)
+    assert(ColumnValues(cols("tas")) == Seq(10.5, 11.5, 12.5, null, null, 15.5))
     // BE int16 with fill
-    assert(cols("qc")._2 == LongType)
-    assert(cols("qc")._3.toSeq == Seq(1L, 2L, null, 4L, 5L, 6L))
+    assert(cols("qc").dataType == LongType)
+    assert(ColumnValues(cols("qc")) == Seq(1L, 2L, null, 4L, 5L, 6L))
     // attrs survive (incl. the continuation-block long_name), _FillValue dropped
     assert(data.attrs.forVar("tas")("long_name") == "air temperature")
     assert(!data.attrs.forVar("tas").contains("_FillValue"))
@@ -829,8 +829,8 @@ class Hdf5SourceSpec extends SparkSpec {
     assert(data.station == "B-STATION-9")
     val epoch2000 = java.time.Instant.parse("2000-01-01T00:00:00Z").getEpochSecond * 1000000L
     assert(data.time.toSeq == Seq(0L, 1L, 2L).map(d => epoch2000 + d * 86400L * 1000000L))
-    assert(data.cols.map(_._1) == Seq("pr"))
-    assert(data.cols.head._3.toSeq == Seq(1.5, 2.5, 3.5))
+    assert(data.cols.map(_.name) == Seq("pr"))
+    assert(ColumnValues(data.cols.head) == Seq(1.5, 2.5, 3.5))
   }
 
   test("profile C: dense links (fractal heap + B-tree v2) and dense attributes read") {
@@ -839,10 +839,10 @@ class Hdf5SourceSpec extends SparkSpec {
     val epoch2015 = java.time.Instant.parse("2015-01-01T00:00:00Z").getEpochSecond * 1000000L
     assert(data.time.toSeq == Seq(0L, 1L, 2L, 3L).map(d => epoch2015 + d * 86400L * 1000000L))
     // all 13 dense links resolve: tas + v00..v09 survive as data columns
-    val cols = data.cols.map(c => c._1 -> c).toMap
+    val cols = data.cols.map(c => c.name -> c).toMap
     assert(cols.keySet == (Set("tas") ++ (0 until 10).map(i => f"v$i%02d")))
-    assert(cols("tas")._3.toSeq == Seq(20.0, 21.0, 22.0, 23.0))
-    assert(cols("v07")._3.toSeq == Seq(70.0, 70.25, 70.5, 70.75))
+    assert(ColumnValues(cols("tas")) == Seq(20.0, 21.0, 22.0, 23.0))
+    assert(ColumnValues(cols("v07")) == Seq(70.0, 70.25, 70.5, 70.75))
     // all 10 dense attributes resolve through the root-indirect heap and the
     // depth-1 name B-tree
     val tasAttrs = data.attrs.forVar("tas")
@@ -864,8 +864,8 @@ class Hdf5SourceSpec extends SparkSpec {
       "an attribute fell out of the deep B-tree walk")
     assert(tasAttrs.size == 64)
     // data columns are untouched by the attr-index depth
-    val cols = data.cols.map(c => c._1 -> c).toMap
-    assert(cols("tas")._3.toSeq == Seq(20.0, 21.0, 22.0, 23.0))
+    val cols = data.cols.map(c => c.name -> c).toMap
+    assert(ColumnValues(cols("tas")) == Seq(20.0, 21.0, 22.0, 23.0))
   }
 
   test("profile C wide nodes: header-wide child-count width when leaf/internal widths diverge (ADVICE r13)") {
@@ -960,10 +960,10 @@ class Hdf5SourceSpec extends SparkSpec {
     val data = Hdf5Source.readStation(
       buildProfileC(doubledLinkRoot = true), "stationC2.nc")
     assert(data.station == "C-STATION-42")
-    val cols = data.cols.map(c => c._1 -> c).toMap
+    val cols = data.cols.map(c => c.name -> c).toMap
     assert(cols.keySet == (Set("tas") ++ (0 until 10).map(i => f"v$i%02d")),
       "a link past the starting block size fell out of the heap walk")
-    assert(cols("v09")._3.toSeq == Seq(90.0, 90.25, 90.5, 90.75))
+    assert(ColumnValues(cols("v09")) == Seq(90.0, 90.25, 90.5, 90.75))
   }
 
   test("NcSource dispatches HDF5 transparently; distributed read round-trips") {

@@ -80,10 +80,10 @@ class NcSinkSpec extends SparkSpec {
     NcSink.writeNcFiles(df, dir).collect()
     val d = NcSource.readStation(
       Files.readAllBytes(java.nio.file.Paths.get(dir, "S1.nc")), "S1.nc")
-    val byName = d.cols.map(c => c._1 -> c._3).toMap
-    assert(byName("tas").toSeq === Seq(-273.15, null))
-    assert(byName("pr_count").toSeq === Seq(-2147483646L, 2147483647L))
-    assert(byName("tas_eraqc").toSeq === Seq("snø", null))
+    val byName = d.cols.map(c => c.name -> ColumnValues(c)).toMap
+    assert(byName("tas") === Seq(-273.15, null))
+    assert(byName("pr_count") === Seq(-2147483646L, 2147483647L))
+    assert(byName("tas_eraqc") === Seq("snø", null))
     assert(d.time.toSeq === Seq(1577836800000000L, 1577836830000000L))
 
     val tooBig = spark.createDataFrame(spark.sparkContext.parallelize(Seq(

@@ -93,9 +93,9 @@ class NcSourceSpec extends SparkSpec {
     assert(d.station == "CIMIS_2")
     assert(d.time.toSeq == Seq(0L, 3600L * 1000000L, 7200L * 1000000L)
       .map(_ + java.time.Instant.parse("2014-06-01T00:00:00Z").getEpochSecond * 1000000L))
-    val cols = d.cols.map(c => c._1 -> c._3).toMap
-    assert(cols("tas").toSeq == Seq(293.15, null, 295.15))
-    assert(cols("tas_qc").toSeq == Seq(null, "Y", null))
+    val cols = d.cols.map(c => c.name -> ColumnValues(c)).toMap
+    assert(cols("tas") == Seq(293.15, null, 295.15))
+    assert(cols("tas_qc") == Seq(null, "Y", null))
     assert(d.attrs.global("title") == "CIMIS cleaned")
     assert(d.attrs.perVar("tas")("units") == "degree_Kelvin")
     // _FillValue is consumed, not carried as metadata
@@ -123,9 +123,10 @@ class NcSourceSpec extends SparkSpec {
     put("CIMIS_7.nc", buildClassicNc("CIMIS_7", Seq(0.0, 1.0, 2.0),
       Seq(280.0, -9999.0, 282.0), Seq("M", "", "")))
     // no tas_qc, and an rh the first file does not have
-    put("CIMIS_9.nc", NcSink.encodeStation("CIMIS_9", Array(0L, 3600000000L),
-      Seq(RunColumn.Doubles("tas", Array(270.0, 271.0)),
-        RunColumn.Doubles("rh", Array(40.0, 41.0))), AttrsTable(Map.empty, Map.empty)))
+    put("CIMIS_9.nc", NcSink.encodeStation(StationData("CIMIS_9", Array(0L, 3600000000L),
+      Seq(StationColumn.Doubles("tas", Array(270.0, 271.0), Array(false, false)),
+        StationColumn.Doubles("rh", Array(40.0, 41.0), Array(false, false))),
+      AttrsTable(Map.empty, Map.empty))))
     val paths = Seq(s"$dir/CIMIS_2.nc", s"$dir/CIMIS_7.nc", s"$dir/CIMIS_9.nc")
 
     val df = NcSource.readFiles(spark, paths)

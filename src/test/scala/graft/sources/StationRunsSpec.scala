@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 import graft.{SparkEntry, SparkSpec}
+import graft.core.AttrsTable
 import graft.pipeline.QaqcPipeline
 
 /** The station-container chassis is visible to the planner. Its scan is
@@ -140,6 +141,28 @@ class StationRunsSpec extends SparkSpec {
     Files.write(java.nio.file.Paths.get(bad), "not a netCDF file".getBytes("UTF-8"))
     val e = intercept[SparkException](NcSource.readFiles(spark, Seq(good, bad)).collect())
     assert(messages(e).contains(bad), messages(e))
+  }
+
+  test("a later zarr container whose column has another type fails, naming path and column") {
+    val dir = Files.createTempDirectory("station-scan-types")
+    def store(station: String, tas: StationColumn): String = {
+      val root = dir.resolve(s"$station.zarr")
+      ZarrSink.encodeStore(StationData(station, Array(0L, 60000000L), Seq(tas),
+          AttrsTable(Map.empty, Map.empty)), chunkRows = 2, zlibLevel = 1).foreach {
+        case (rel, bytes) =>
+          Files.createDirectories(root.resolve(rel).getParent)
+          Files.write(root.resolve(rel), bytes)
+      }
+      root.toString
+    }
+    val first = store("AAA", StationColumn.Doubles("tas", Array(1.5, 2.5), Array(false, false)))
+    val longs = store("BBB", StationColumn.Longs("tas", Array(1L, 2L), Array(false, false)))
+    // the type is checked per column, so an all-null column of another type fails too
+    val nulls = store("CCC", StationColumn.Longs("tas", Array(0L, 0L), Array(true, true)))
+    for (bad <- Seq(longs, nulls)) {
+      val e = intercept[SparkException](ZarrSource.readStores(spark, Seq(first, bad)).collect())
+      assert(messages(e).contains(bad) && messages(e).contains("column tas"), messages(e))
+    }
   }
 
   test("a keyed read refuses a later container holding another station, naming it") {

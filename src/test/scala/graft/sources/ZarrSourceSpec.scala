@@ -215,7 +215,7 @@ class ZarrSourceSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration)
     assert(d.station == "TEST_001")
     assert(d.time.head == 946684800000000L && d.time(1) - d.time(0) == 3600000000L)
-    val cols = d.cols.map(c => c._1 -> c._3).toMap
+    val cols = d.cols.map(c => c.name -> ColumnValues(c)).toMap
     assert(cols("tas")(0) == 0.0 && cols("tas")(4) == 2.0 && cols("tas")(3) == null)
     assert(approx(cols("pr")(5).asInstanceOf[Double], 0.5, 1e-6))
     assert(cols("flag")(0) == 100L && cols("flag")(2) == null)
@@ -234,10 +234,10 @@ class ZarrSourceSpec extends SparkSpec {
       // chunk files are FULL chunk size; positions past the shape edge are padding
       s"v/0.$c" -> doublesLE((0 until 4).map(i => (c * 4 + i) * 1.0))
     }.toMap
-    val got = ZarrSource.readArray(files.get(_), "v", za)
-    assert(got.toSeq == (0 until 10).map(_.toDouble))
+    val got = ColumnValues(ZarrSource.readArray(files.get(_), "v", za))
+    assert(got == (0 until 10).map(_.toDouble))
     // missing middle chunk -> fill (null) for exactly its span
-    val got2 = ZarrSource.readArray((files - "v/0.1").get(_), "v", za)
+    val got2 = ColumnValues(ZarrSource.readArray((files - "v/0.1").get(_), "v", za))
     assert(got2.slice(4, 8).forall(_ == null) &&
       got2(3) == 3.0 && got2(8) == 8.0)
   }
@@ -269,7 +269,7 @@ class ZarrSourceSpec extends SparkSpec {
     val d = ZarrSource.readStoreAt(dir.toString, spark.sparkContext.hadoopConfiguration)
     assert(d.station == "M8ST")
     assert(d.time.toSeq == (0 until 4).map(i => 1577836800000000L + i * 3600000000L))
-    assert(d.cols.find(_._1 == "bar").get._3.toSeq == Seq(1.5, -2.25, 0.0, 99.75))
+    assert(ColumnValues(d.cols.find(_.name == "bar").get) == Seq(1.5, -2.25, 0.0, 99.75))
   }
 
   test("S5: multi-store distributed read + ingest round-trip to the obs layout") {
