@@ -2812,7 +2812,7 @@ object QueriesLlm {
                FROM a)
          SELECT vec_id, cid, rep + 0 AS rep FROM r WHERE rk <= 25""",
     // samp6: the exact DSIR pipeline — unigram+bigram hash buckets (15-hex-char
-    // md5 prefix, the fingerprint60 rule), add-1 smoothed target/raw log-ratios
+    // md5 prefix, the shingleHash rule), add-1 smoothed target/raw log-ratios
     // rounded to 6dp decimals before the per-doc sum
     "t20_linear_classifier" -> t20ClassifierSql,
     // mm4: the dHash pipeline replayed — same raster synthesis, halves summed

@@ -82,8 +82,8 @@ object QueriesPipeline {
     }),
 
     // Flags 6-9: sensor-height gates (reference part 1b, inactive in its v2 stage
-    // list — shipped behind the default-off sensorHeightStage for catalog
-    // completeness). Stations synthesized so every code fires: user_id%5==0 with an
+    // list — run here directly for catalog completeness, by no QAQC pipeline).
+    // Stations synthesized so every code fires: user_id%5==0 with an
     // event_id%97 row -> thermometer height null somewhere (6); %5==1 -> 2.5m (7);
     // %3==0 with an event_id%101 row -> anemometer null (8); %3==1 -> FIRST-row
     // height 10.9m (9 — pins the reference's row-0 wind quirk, df[...][0]).

@@ -22,8 +22,6 @@ object AnnOps {
   // HOFs evaluate interpreted, which dominated pair-quadratic verify paths (d12)
   def dot(a: Column, b: Column): Column = graft.expr.VecDot.expr(a, b)
 
-  def l2Norm(a: Column): Column = sqrt(graft.expr.VecDot.expr(a, a))
-
   def cosine(a: Column, b: Column): Column = graft.expr.CosineSim.expr(a, b)
 
   /** Exact brute-force cosine top-k: every query row against every corpus row, ranked
@@ -434,42 +432,6 @@ object AnnOps {
       .select(col(queryId), col(corpusId), round(col("adc"), 6).as("adc"), col("rank"))
   }
 
-  /** L2 k-means assignment (ties to the lowest id) — the PQ-side analog of the
-    * cosine [[ivfAssign]]. */
-  def l2Assign(vec: Column, centroids: Seq[Seq[Double]]): Column = {
-    val dim = centroids.head.size
-    val scored = centroids.zipWithIndex.map { case (c, i) =>
-      val d = (0 until dim).map { j =>
-        val x = element_at(vec, j + 1) - lit(c(j)); x * x
-      }.reduce(_ + _)
-      struct(d.as("dist"), lit(i).as("cid"))
-    }
-    (if (scored.size == 1) scored.head else least(scored: _*)).getField("cid")
-  }
-
-  /** One L2 k-means update over `df(vecCol)`: assign to literal centroids, recompute
-    * per-dimension means (same partial-agg decimal-sum shape as [[kmeansStep]], which
-    * is its spherical twin). Empty cells keep their previous centroid. Returns the
-    * updated centroids driver-side (k×dim doubles — centroid-sized, not data). */
-  def l2KmeansStep(df: DataFrame, vecCol: String,
-                   centroids: Seq[Seq[Double]]): Seq[Seq[Double]] = {
-    val dim = centroids.head.size
-    val sums = (0 until dim).map(j =>
-      sum(element_at(col(vecCol), j + 1).cast("decimal(27,10)")).as(s"_s$j"))
-    val rows = df.withColumn("_cell", l2Assign(col(vecCol), centroids))
-      .groupBy(col("_cell"))
-      .agg(count(lit(1)).as("n"), sums: _*)
-      .collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), (0 until dim).map(j =>
-        r.getDecimal(j + 2).doubleValue()))).toMap
-    centroids.indices.map { ci =>
-      rows.get(ci) match {
-        case Some((n, s)) if n > 0 => s.map(_ / n)
-        case _ => centroids(ci)
-      }
-    }
-  }
-
   /** Train PQ codebooks by per-subspace Lloyd iterations over the corpus — the
     * production path the seeded [[pqCodebooks]] stand in for.
     *
@@ -478,8 +440,8 @@ object AnnOps {
     * k centroids (HOF on the nested codebook literal — same shape as [[pqEncode]]),
     * and a single groupBy(subspace, code) carries m×k×subDim decimal partial sums.
     * The per-iteration collect is codebook-sized. Assignment ties go to the lowest
-    * code (strict <) and sums are order-independent decimals, so results are
-    * bit-identical to training each subspace separately with [[l2KmeansStep]].
+    * code (strict <) and sums are order-independent decimals, so results do not
+    * depend on row order or partitioning.
     * Empty cells keep their previous centroid. */
   def pqTrain(df: DataFrame, vecCol: String, m: Int, k: Int, subDim: Int,
               init: Seq[Seq[Seq[Double]]], iters: Int = 5): Seq[Seq[Seq[Double]]] = {

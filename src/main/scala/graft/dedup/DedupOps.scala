@@ -162,10 +162,9 @@ object DedupOps {
     * (a_i*h32(s) + b_i) mod p, with h32 = 60-bit md5 hash mod 2^32 (keeps a_i*h32
     * within 63 bits -- no overflow, no 128-bit intermediates). One nested transform --
     * O(k*|shingles|) per row, fully codegen'd, no UDF, no shuffle. */
-  def minhashSignature(shingleArr: Column, k: Int = 32, seed: Long = 42L,
-                       strategy: HashStrategy = Md5Portable): Column =
+  def minhashSignature(shingleArr: Column, k: Int = 32, seed: Long = 42L): Column =
     minhashSignatureFromHashes(
-      transform(shingleArr, s => pmod(shingleHash(s, strategy), lit(1L << 32))), k, seed)
+      transform(shingleArr, s => pmod(shingleHash(s), lit(1L << 32))), k, seed)
 
   /** Signature from PRE-hashed 32-bit shingle values, via the native
     * [[graft.expr.MinHashSig]] expression — one pass over the hash array computes
@@ -206,8 +205,7 @@ object DedupOps {
     * and the table is reused by the band explode and both verify joins anyway.
     * Size: id + ~|shingles| longs + k longs per row. */
   private def sigTable(df: DataFrame, idCol: String, textCol: String,
-                       shingleN: Int, k: Int,
-                       strategy: HashStrategy = Md5Portable): DataFrame =
+                       shingleN: Int, k: Int, strategy: HashStrategy): DataFrame =
     df.withColumn("_h32", hashedShingles(col(textCol), shingleN, strategy))
       .withColumn("_sig", minhashSignatureFromHashes(col("_h32"), k))
       .select(col(idCol), col("_h32"), col("_sig"))
@@ -220,6 +218,77 @@ object DedupOps {
       b => concat(b.cast("string"), lit(":"),
         concat_ws(",", slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)))))
 
+  /** The band keys of a [[simhash32]] value: four 8-bit bands, each rendered
+    * "band:value" — the multi-index [[simhashNearDups]] joins on and
+    * [[simhashCapStats]] audits. */
+  def simhashBandKeys(sh: Column): Column =
+    array((0 until 4).map(b =>
+      concat(lit(s"$b:"), shiftright(sh, 8 * b).bitwiseAND(lit(255L)).cast("string"))): _*)
+
+  /** The band keys of a random-hyperplane bit-string signature
+    * ([[graft.ann.AnnOps.rhSignature]]): `bands` contiguous runs of
+    * `nPlanes / bands` bits, each rendered "band:bits" — the keys
+    * [[embeddingNearDups]] joins on and [[embeddingCapStats]] audits. */
+  def rhBandKeys(sig: Column, nPlanes: Int, bands: Int): Column = {
+    require(nPlanes % bands == 0, "nPlanes must be divisible by bands")
+    val rpb = nPlanes / bands
+    array((0 until bands).map(b => concat(lit(s"$b:"), substring(sig, b * rpb + 1, rpb))): _*)
+  }
+
+  /** The band keys of a 64-bit (hi, lo) code — ONE definition shared by every
+    * Hamming pair op, its cap ledger and the streaming catalog, so audited keys
+    * cannot drift from join keys (the minhashCapStats rule). The radius picks
+    * the layout: up to 3, four 16-bit bands; 4 to 7, eight 8-bit bands. Bands
+    * run low bits first (lo before hi), each rendered "band:value". */
+  def hamming64BandKeys(hi: Column, lo: Column, maxHamming: Int = 3): Column = {
+    require(maxHamming >= 0 && maxHamming <= 7,
+      s"banding guarantees recall only for 0 <= maxHamming <= 7, got $maxHamming")
+    val bits = if (maxHamming <= 3) 16 else 8
+    val mask = lit((1L << bits) - 1)
+    val parts = Seq(lo, hi).flatMap(h => (0 until 32 by bits).map(shift =>
+      (if (shift == 0) h else shiftright(h, shift)).bitwiseAND(mask)))
+    array(parts.zipWithIndex.map { case (c, b) =>
+      concat(lit(s"$b:"), c.cast("string")) }: _*)
+  }
+
+  // ───────────────────────── banded pair chassis ─────────────────────────
+
+  private def requireBucketCap(maxBucketSize: Int): Unit =
+    require(maxBucketSize >= 2,
+      s"maxBucketSize must be >= 2 (a smaller bucket holds no pair), got $maxBucketSize")
+
+  /** The one candidate-pair chassis every banded near-dup op pairs through.
+    * `banded` has one row per (member, band key): a `_rec` struct with an `id`
+    * field, and the `_band` key. ONE groupBy(band) shuffle collects each
+    * bucket; buckets of 2 to `maxBucketSize` members (the cap [[bandCapLedger]]
+    * audits) pair up by a double explode into `a` and `b`, keeping the pairs
+    * `pair` accepts. `left` prunes the `a` side before the second explode (the
+    * incremental ops' new-items rule), so a bucket costs |left ∩ bucket| ×
+    * |bucket| candidates, not |bucket|². The in-bucket product never exceeds
+    * cap². A pair sharing several bands appears once per band; callers verify,
+    * project and dedupe. */
+  private[graft] def bandPairs(banded: DataFrame, maxBucketSize: Int, pair: Column,
+                               left: Option[Column] = None): DataFrame = {
+    requireBucketCap(maxBucketSize)
+    val lefts = banded.groupBy(col("_band")).agg(collect_list(col("_rec")).as("_recs"))
+      .filter(size(col("_recs")).between(2, maxBucketSize))
+      .select(explode(col("_recs")).as("a"), col("_recs"))
+    left.fold(lefts)(lefts.filter)
+      .select(col("a"), explode(col("_recs")).as("b"))
+      .filter(pair)
+  }
+
+  /** Exact Hamming distance between two 64-bit codes given as (hi, lo) halves:
+    * the verify of every Hamming pair op and of the streaming code catalog. */
+  private[graft] def hamming64(hi1: Column, lo1: Column, hi2: Column, lo2: Column): Column =
+    (bit_count(hi1.bitwiseXOR(hi2)) + bit_count(lo1.bitwiseXOR(lo2))).cast("long")
+
+  /** Each new item's single best match, the incremental ops' output rule: the
+    * first row per `idCol` in `order`. */
+  private def bestMatch(pairs: DataFrame, idCol: String, order: Column*): DataFrame =
+    pairs.withColumn("_rn", row_number().over(Window.partitionBy(col(idCol)).orderBy(order: _*)))
+      .filter(col("_rn") === 1)
+
   // ───────────────────────── bucket-cap ledgers ─────────────────────────
 
   /** The "no silent caps" contract for the banded-LSH family (the
@@ -229,22 +298,25 @@ object DedupOps {
     * whole buckets (a viral boilerplate string, a constant-color image) and
     * under-reported duplicates — the caller decides whether to raise the cap,
     * pre-dedup exactly, or accept the recall loss. Aggregation-only (two
-    * partial-agg stages, model-sized output), never generates pairs. */
-  def bandCapLedger(banded: DataFrame, bandCol: String, maxBucketSize: Int): DataFrame =
+    * partial-agg stages, model-sized output), never generates pairs. A cap
+    * below 2 is refused, as by the pair ops. */
+  def bandCapLedger(banded: DataFrame, bandCol: String, maxBucketSize: Int): DataFrame = {
+    requireBucketCap(maxBucketSize)
     banded.groupBy(col(bandCol)).agg(count(lit(1)).as("_n"))
       .agg(count(lit(1)).as("n_buckets"),
         count(when(col("_n") > maxBucketSize, lit(1))).as("n_buckets_capped"),
         coalesce(sum(when(col("_n") > maxBucketSize, col("_n"))), lit(0L))
           .as("n_members_excluded"),
         coalesce(max(col("_n")), lit(0L)).as("max_bucket"))
+  }
 
-  /** Over-cap ledger for [[lshCandidatePairs]] / [[minhashNearDups]] given a
-    * CALLER-SUPPLIED signature table (any frame with `idCol` and a `_sig`
-    * array column — i.e. the persisted [[sigTable]] a pair op in the same job
-    * already built). This is the genuine-sharing path (ADVICE r13): running
-    * the audit alongside `lshCandidatePairs` adds zero cached footprint, and
-    * the audited band keys are BY CONSTRUCTION the join keys (same `_sig`,
-    * same [[lshBandKeys]] rendering). Lazy; no pairs. */
+  /** Over-cap ledger for [[minhashNearDups]] given a CALLER-SUPPLIED
+    * signature table (any frame with `idCol` and a `_sig` array column — i.e.
+    * the persisted [[sigTable]] a pair op in the same job already built). This
+    * is the genuine-sharing path (ADVICE r13): running the audit alongside the
+    * pair op adds zero cached footprint, and the audited band keys are BY
+    * CONSTRUCTION the join keys (same `_sig`, same [[lshBandKeys]] rendering).
+    * Lazy; no pairs. */
   def minhashCapStatsFromSig(sig: DataFrame, idCol: String,
                              k: Int = 32, bands: Int = 8,
                              maxBucketSize: Int = 500): DataFrame =
@@ -253,8 +325,7 @@ object DedupOps {
         explode(lshBandKeys(col("_sig"), bands, k / bands)).as("_band")),
       "_band", maxBucketSize)
 
-  /** Self-contained over-cap ledger for [[lshCandidatePairs]] /
-    * [[minhashNearDups]] (and the corpus∪shard union of
+  /** Self-contained over-cap ledger for [[minhashNearDups]] (and the corpus∪shard union of
     * [[incrementalNearDups]] when passed pre-unioned). The signature must
     * still evaluate exactly once per row — an earlier inline form put the
     * signature expression inside the band lambda, where projection collapse
@@ -270,13 +341,11 @@ object DedupOps {
     * [[minhashCapStatsFromSig]] instead. */
   def minhashCapStats(df: DataFrame, idCol: String, textCol: String,
                       shingleN: Int = 3, k: Int = 32, bands: Int = 8,
-                      maxBucketSize: Int = 500,
-                      strategy: HashStrategy = Md5Portable): DataFrame = {
+                      maxBucketSize: Int = 500): DataFrame = {
     val spark = df.sparkSession
     val sig = df
       .withColumn("_sig",
-        minhashSignatureFromHashes(
-          hashedShingles(col(textCol), shingleN, strategy), k))
+        minhashSignatureFromHashes(hashedShingles(col(textCol), shingleN), k))
       .select(col(idCol), col("_sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -286,9 +355,9 @@ object DedupOps {
     } finally sig.unpersist(blocking = false)
   }
 
-  /** Banded-Hamming pair chassis over PRECOMPUTED 64-bit codes, split as two
+  /** Banded-Hamming pairs over PRECOMPUTED 64-bit codes, split as two
     * signed 32-bit-halves-in-long columns (hi = bits 32..63, lo = 0..31): the
-    * shared candidate engine behind image dHash/pHash near-dup
+    * shared pair op behind image dHash/pHash near-dup
     * ([[graft.multimodal.MultimodalOps.dHashNearDups]]), audio energy-hash
     * near-dup (mm7), pooled video hashes, and any future 64-bit perceptual
     * code. Multi-index bands whose layout follows the radius
@@ -309,43 +378,16 @@ object DedupOps {
     * shard the corpus before pairing.
     * Output: (id1, id2, hamming), id1 < id2, distinct. */
   def hamming64Pairs(df: DataFrame, idCol: String, hiCol: String, loCol: String,
-                     maxHamming: Int = 3, maxBucketSize: Int = 2000): DataFrame = {
-    requireBucketCap(maxBucketSize)
-    df.select(struct(col(idCol).as("id"), col(hiCol).as("hi"), col(loCol).as("lo"))
+                     maxHamming: Int = 3, maxBucketSize: Int = 2000): DataFrame =
+    bandPairs(
+      df.select(struct(col(idCol).as("id"), col(hiCol).as("hi"), col(loCol).as("lo"))
           .as("_rec"),
-        explode(hamming64BandKeys(col(hiCol), col(loCol), maxHamming)).as("_band"))
-      .groupBy(col("_band")).agg(collect_list(col("_rec")).as("_recs"))
-      .filter(size(col("_recs")).between(2, maxBucketSize))
-      .select(explode(col("_recs")).as("a"), col("_recs"))
-      .select(col("a"), explode(col("_recs")).as("b"))
-      .filter(col("a.id") < col("b.id"))
-      .withColumn("hamming",
-        (bit_count(col("a.hi").bitwiseXOR(col("b.hi"))) +
-          bit_count(col("a.lo").bitwiseXOR(col("b.lo")))).cast("long"))
+        explode(hamming64BandKeys(col(hiCol), col(loCol), maxHamming)).as("_band")),
+      maxBucketSize, col("a.id") < col("b.id"))
+      .withColumn("hamming", hamming64(col("a.hi"), col("a.lo"), col("b.hi"), col("b.lo")))
       .filter(col("hamming") <= maxHamming)
       .select(col("a.id").as("id1"), col("b.id").as("id2"), col("hamming"))
       .distinct()
-  }
-
-  private def requireBucketCap(maxBucketSize: Int): Unit =
-    require(maxBucketSize >= 2,
-      s"maxBucketSize must be >= 2 (a smaller bucket holds no pair), got $maxBucketSize")
-
-  /** The band keys of a 64-bit (hi, lo) code — ONE definition shared by every
-    * Hamming pair op, its cap ledger and the streaming catalog, so audited keys
-    * cannot drift from join keys (the minhashCapStats rule). The radius picks
-    * the layout: up to 3, four 16-bit bands; 4 to 7, eight 8-bit bands. Bands
-    * run low bits first (lo before hi), each rendered "band:value". */
-  def hamming64BandKeys(hi: Column, lo: Column, maxHamming: Int = 3): Column = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"banding guarantees recall only for 0 <= maxHamming <= 7, got $maxHamming")
-    val bits = if (maxHamming <= 3) 16 else 8
-    val mask = lit((1L << bits) - 1)
-    val parts = Seq(lo, hi).flatMap(h => (0 until 32 by bits).map(shift =>
-      (if (shift == 0) h else shiftright(h, shift)).bitwiseAND(mask)))
-    array(parts.zipWithIndex.map { case (c, b) =>
-      concat(lit(s"$b:"), c.cast("string")) }: _*)
-  }
 
   /** Incremental (shard-vs-corpus) form of [[hamming64Pairs]] — the
     * [[incrementalNearDups]] contract for 64-bit perceptual codes (image
@@ -370,31 +412,21 @@ object DedupOps {
   def hamming64IncrementalNearDups(corpus: DataFrame, shard: DataFrame,
       idCol: String, hiCol: String, loCol: String,
       maxHamming: Int = 3, maxBucketSize: Int = 2000): DataFrame = {
-    requireBucketCap(maxBucketSize)
     def side(df: DataFrame, isNew: Boolean): DataFrame =
       df.select(col(idCol).as("_id"), col(hiCol).as("_hi"),
         col(loCol).as("_lo"), lit(isNew).as("_new"))
     val prep = side(corpus, isNew = false).unionByName(side(shard, isNew = true))
-    prep
-      .select(struct(col("_id").as("id"), col("_hi").as("hi"),
+    val pairs = bandPairs(
+      prep.select(struct(col("_id").as("id"), col("_hi").as("hi"),
           col("_lo").as("lo"), col("_new").as("isNew")).as("_rec"),
-        explode(hamming64BandKeys(col("_hi"), col("_lo"), maxHamming)).as("_band"))
-      .groupBy(col("_band")).agg(collect_list(col("_rec")).as("_recs"))
-      .filter(size(col("_recs")).between(2, maxBucketSize))
-      .select(explode(col("_recs")).as("a"), col("_recs"))
-      .filter(col("a.isNew"))
-      .select(col("a"), explode(col("_recs")).as("b"))
-      .filter(!col("b.isNew") || col("b.id") < col("a.id"))
-      .withColumn("hamming",
-        (bit_count(col("a.hi").bitwiseXOR(col("b.hi"))) +
-          bit_count(col("a.lo").bitwiseXOR(col("b.lo")))).cast("long"))
+        explode(hamming64BandKeys(col("_hi"), col("_lo"), maxHamming)).as("_band")),
+      maxBucketSize, !col("b.isNew") || col("b.id") < col("a.id"), Some(col("a.isNew")))
+      .withColumn("hamming", hamming64(col("a.hi"), col("a.lo"), col("b.hi"), col("b.lo")))
       .filter(col("hamming") <= maxHamming)
       .select(col("a.id").as("_aid"), col("b.id").as("matched_id"),
         col("hamming"), (!col("b.isNew")).as("vs_corpus"))
       .distinct()
-      .withColumn("_rn", row_number().over(Window.partitionBy(col("_aid"))
-        .orderBy(col("hamming"), col("matched_id"))))
-      .filter(col("_rn") === 1)
+    bestMatch(pairs, "_aid", col("hamming"), col("matched_id"))
       .select(col("_aid").as(idCol), col("matched_id"), col("hamming"),
         col("vs_corpus"))
   }
@@ -405,62 +437,28 @@ object DedupOps {
     * same band layout the pair op joins on, so audited keys cannot drift from
     * join keys. */
   def hamming64CapStats(df: DataFrame, idCol: String, hiCol: String, loCol: String,
-                        maxHamming: Int = 3, maxBucketSize: Int = 2000): DataFrame = {
-    requireBucketCap(maxBucketSize)
+                        maxHamming: Int = 3, maxBucketSize: Int = 2000): DataFrame =
     bandCapLedger(
       df.select(col(idCol),
         explode(hamming64BandKeys(col(hiCol), col(loCol), maxHamming)).as("_band")),
       "_band", maxBucketSize)
-  }
 
   /** Over-cap ledger for [[simhashNearDups]]'s 4×8-bit multi-index. */
   def simhashCapStats(df: DataFrame, idCol: String, textCol: String,
-                      maxBucketSize: Int = 2000): DataFrame = {
-    val bandKeys = (0 until 4).map(b =>
-      concat(lit(s"$b:"),
-        shiftright(simhash32(col(textCol)), 8 * b).bitwiseAND(lit(255L)).cast("string")))
+                      maxBucketSize: Int = 2000): DataFrame =
     bandCapLedger(
-      df.select(col(idCol), explode(array(bandKeys: _*)).as("_band")),
+      df.select(col(idCol), explode(simhashBandKeys(simhash32(col(textCol)))).as("_band")),
       "_band", maxBucketSize)
-  }
 
   /** Over-cap ledger for [[embeddingNearDups]]'s hyperplane bands. */
   def embeddingCapStats(df: DataFrame, idCol: String, vecCol: String,
                         nPlanes: Int = 48, bands: Int = 3, dim: Int = 64,
                         seed: Long = 42L, maxBucketSize: Int = 2000): DataFrame = {
-    require(nPlanes % bands == 0, "nPlanes must be divisible by bands")
-    val rpb = nPlanes / bands
-    val planes = graft.ann.AnnOps.hyperplanes(nPlanes, dim, seed)
-    val sig = graft.ann.AnnOps.rhSignature(col(vecCol), planes)
-    val bandKeys = (0 until bands).map(b =>
-      concat(lit(s"$b:"), substring(sig, b * rpb + 1, rpb)))
+    val sig = graft.ann.AnnOps.rhSignature(col(vecCol),
+      graft.ann.AnnOps.hyperplanes(nPlanes, dim, seed))
     bandCapLedger(
-      df.select(col(idCol), explode(array(bandKeys: _*)).as("_band")),
+      df.select(col(idCol), explode(rhBandKeys(sig, nPlanes, bands)).as("_band")),
       "_band", maxBucketSize)
-  }
-
-  /** Candidate pairs from banded LSH: explode band keys, self-join per bucket with
-    * id1 < id2, distinct. Buckets larger than `maxBucketSize` are dropped (skew guard --
-    * at 100 TB a boilerplate-heavy bucket would otherwise go quadratic; its members
-    * still meet in other bands or exact dedup; the drop is AUDITABLE via
-    * [[minhashCapStats]]/[[bandCapLedger]] — the "no silent caps" rule). */
-  def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = 3, k: Int = 32, bands: Int = 8,
-                        maxBucketSize: Int = 500,
-                        strategy: HashStrategy = Md5Portable): DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
-    // materialize the hash array ONCE, then ONE groupBy(bucket) shuffle; pairs are
-    // generated from each bucket's collected id array (bounded by maxBucketSize —
-    // the local product never exceeds cap^2)
-    val withBands = sigTable(df, idCol, textCol, shingleN, k, strategy)
-      .select(col(idCol), explode(lshBandKeys(col("_sig"), bands, k / bands)).as("_band"))
-    withBands
-      .groupBy(col("_band")).agg(collect_list(col(idCol)).as("_ids"))
-      .filter(size(col("_ids")).between(2, maxBucketSize))
-      .select(explode(col("_ids")).as("id1"), col("_ids"))
-      .select(col("id1"), explode(col("_ids")).as("id2"))
-      .filter(col("id1") < col("id2"))
-      .distinct()
   }
 
   /** Exact n-gram Jaccard similarity of two shingle arrays. */
@@ -468,6 +466,27 @@ object DedupOps {
     when(size(array_union(a, b)) === 0, 0.0)
       .otherwise(size(array_intersect(a, b)).cast("double") /
         size(array_union(a, b)))
+
+  /** The verify both minhash pair ops share. On the chassis' (a, b) pairs, the
+    * signature-agreement estimate (matching `sig` positions / k) must reach
+    * `estCutoff`; the survivors are deduped as (id1, id2, `keep`…), and only
+    * then do the wide `_h32` shingle arrays join back from the signature table
+    * `sigs` for the exact [[jaccard]], kept at >= `threshold`. */
+  private def minhashVerify(pairs: DataFrame, sigs: DataFrame, idCol: String, k: Int,
+                            estCutoff: Double, threshold: Double,
+                            keep: Column*): DataFrame = {
+    val est = size(filter(zip_with(col("a.sig"), col("b.sig"), (x, y) => x === y),
+      x => x)).cast("double") / k
+    val h32 = sigs.select(col(idCol), col("_h32"))
+    pairs
+      .filter(est >= estCutoff)
+      .select(Seq(col("a.id").as("id1"), col("b.id").as("id2")) ++ keep: _*)
+      .distinct()
+      .join(h32.select(col(idCol).as("id1"), col("_h32").as("_a1")), "id1")
+      .join(h32.select(col(idCol).as("id2"), col("_h32").as("_a2")), "id2")
+      .withColumn("jaccard", jaccard(col("_a1"), col("_a2")))
+      .filter(col("jaccard") >= threshold)
+  }
 
   /** MinHash near-dup pairs: banded-LSH candidates verified by exact shingle Jaccard >=
     * `threshold`.
@@ -492,38 +511,14 @@ object DedupOps {
                       estCutoff: Double = 0.2,
                       strategy: HashStrategy = Md5Portable): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
+    requireBucketCap(maxBucketSize) // before the persist: a refused call pins nothing
     val prep = sigTable(df, idCol, textCol, shingleN, k, strategy)
-    val est = size(filter(zip_with(col("a.sig"), col("b.sig"), (a, b) => a === b),
-      x => x)).cast("double") / k
-    val pairs = prep
-      .select(struct(col(idCol).as("id"), col("_sig").as("sig")).as("_rec"),
-        explode(lshBandKeys(col("_sig"), bands, k / bands)).as("_band"))
-      .groupBy(col("_band")).agg(collect_list(col("_rec")).as("_recs"))
-      .filter(size(col("_recs")).between(2, maxBucketSize))
-      .select(explode(col("_recs")).as("a"), col("_recs"))
-      .select(col("a"), explode(col("_recs")).as("b"))
-      .filter(col("a.id") < col("b.id"))
-      .filter(est >= estCutoff)
-      .select(col("a.id").as("id1"), col("b.id").as("id2"))
-      .distinct()
-    pairs
-      .join(prep.select(col(idCol).as("id1"), col("_h32").as("_a1")), "id1")
-      .join(prep.select(col(idCol).as("id2"), col("_h32").as("_a2")), "id2")
-      .withColumn("jaccard", jaccard(col("_a1"), col("_a2")))
-      .filter(col("jaccard") >= threshold)
+    val pairs = bandPairs(
+      prep.select(struct(col(idCol).as("id"), col("_sig").as("sig")).as("_rec"),
+        explode(lshBandKeys(col("_sig"), bands, k / bands)).as("_band")),
+      maxBucketSize, col("a.id") < col("b.id"))
+    minhashVerify(pairs, prep, idCol, k, estCutoff, threshold)
       .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
-  }
-
-  /** Plane count for [[embeddingNearDups]] sized to the corpus: bits-per-band
-    * r = log2(n / targetBucket) (min 8), so expected bucket size stays ~targetBucket
-    * and candidate generation stays linear in n instead of going quadratic when a
-    * fixed key space saturates. Callers trade the recall loss of wider bands by
-    * raising `bands` (recall per band = (1-theta/pi)^r). */
-  def suggestedRhPlanes(corpusSize: Long, bands: Int = 3,
-                        targetBucket: Int = 100): Int = {
-    val r = math.max(8,
-      math.ceil(math.log(corpusSize.toDouble / targetBucket) / math.log(2)).toInt)
-    r * bands
   }
 
   /** Embedding-cosine near-duplicate pairs: banded random-hyperplane LSH candidates
@@ -533,9 +528,12 @@ object DedupOps {
     * pairs generated inside buckets only (capped by `maxBucketSize`), with the exact
     * cosine verify applied at pair generation (see body note).
     *
-    * SIZE THE BAND KEY TO THE CORPUS ([[suggestedRhPlanes]]): a band of `r` bits has
+    * SIZE THE BAND KEY TO THE CORPUS: a band of `r` bits has
     * only 2^r distinct keys, so expected bucket size is n/2^r and candidate pairs per
     * band grow ~n²/2^r — a fixed `r` turns the op quadratic once n approaches 2^r.
+    * Take r = max(8, ceil(log2(n / targetBucket))) bits per band and
+    * `nPlanes = r * bands`: expected bucket size stays ~targetBucket (100 is a
+    * sound default) and candidate generation stays linear in n.
     * Measured (SCALE.md r6): 8-bit bands went 711× slower on 50× data; 16-bit bands
     * restored linear scaling at identical recall for the planted near-dups. Recall
     * per band is (1 - theta/pi)^r (theta = angle at the cosine threshold), so wider
@@ -551,31 +549,25 @@ object DedupOps {
                         threshold: Double = 0.8, nPlanes: Int = 48, bands: Int = 3,
                         dim: Int = 64, seed: Long = 42L,
                         maxBucketSize: Int = 2000): DataFrame = {
-    require(nPlanes % bands == 0, "nPlanes must be divisible by bands")
-    val rpb = nPlanes / bands
+    // both checks run before the persist: a refused call pins nothing
+    val bandKeys = rhBandKeys(col("_sig"), nPlanes, bands)
+    requireBucketCap(maxBucketSize)
     val planes = graft.ann.AnnOps.hyperplanes(nPlanes, dim, seed)
-    // (bits-per-band sizing: see scaladoc + suggestedRhPlanes)
     // persist pins the signature: without the cache, projection collapse would
     // re-evaluate all nPlanes dot products once per band key (see sigTable note
     // above); the verify reads vectors from the same pinned table via the buckets
     val vecs = df.select(col(idCol), col(vecCol))
       .withColumn("_sig", graft.ann.AnnOps.rhSignature(col(vecCol), planes))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bandKeys = (0 until bands).map(b =>
-      concat(lit(s"$b:"), substring(col("_sig"), b * rpb + 1, rpb)))
     // the vector rides inside the bucket structs and the cosine verify runs at pair
     // generation (same rationale as simhashNearDups: the distinct then dedupes the
     // small true-near-dup set, not the candidate firehose, and both verify join-backs
     // disappear); a pair surviving in multiple bands costs one redundant 64-dim
     // cosine per extra band
-    vecs
-      .select(struct(col(idCol).as("id"), col(vecCol).as("v")).as("_rec"),
-        explode(array(bandKeys: _*)).as("_band"))
-      .groupBy(col("_band")).agg(collect_list(col("_rec")).as("_recs"))
-      .filter(size(col("_recs")).between(2, maxBucketSize))
-      .select(explode(col("_recs")).as("a"), col("_recs"))
-      .select(col("a"), explode(col("_recs")).as("b"))
-      .filter(col("a.id") < col("b.id"))
+    bandPairs(
+      vecs.select(struct(col(idCol).as("id"), col(vecCol).as("v")).as("_rec"),
+        explode(bandKeys).as("_band")),
+      maxBucketSize, col("a.id") < col("b.id"))
       .withColumn("cos", round(graft.ann.AnnOps.cosine(col("a.v"), col("b.v")), 6))
       .filter(col("cos") >= threshold)
       .select(col("a.id").as("id1"), col("b.id").as("id2"), col("cos"))
@@ -799,15 +791,10 @@ object DedupOps {
                       maxHamming: Int = 3, maxBucketSize: Int = 2000): DataFrame = {
     require(maxHamming <= 3, "4x8-bit banding guarantees recall only for maxHamming <= 3")
     val sh = df.select(col(idCol), simhash32(col(textCol)).as("_sh"))
-    val bandKeys = (0 until 4).map(b =>
-      concat(lit(s"$b:"), shiftright(col("_sh"), 8 * b).bitwiseAND(lit(255L)).cast("string")))
-    sh.select(struct(col(idCol).as("id"), col("_sh").as("sh")).as("_rec"),
-        explode(array(bandKeys: _*)).as("_band"))
-      .groupBy(col("_band")).agg(collect_list(col("_rec")).as("_recs"))
-      .filter(size(col("_recs")).between(2, maxBucketSize))
-      .select(explode(col("_recs")).as("a"), col("_recs"))
-      .select(col("a"), explode(col("_recs")).as("b"))
-      .filter(col("a.id") < col("b.id"))
+    bandPairs(
+      sh.select(struct(col(idCol).as("id"), col("_sh").as("sh")).as("_rec"),
+        explode(simhashBandKeys(col("_sh"))).as("_band")),
+      maxBucketSize, col("a.id") < col("b.id"))
       .withColumn("hamming", hammingDistance(col("a.sh"), col("b.sh")))
       .filter(col("hamming") <= maxHamming)
       .select(col("a.id").as("id1"), col("b.id").as("id2"),
@@ -1077,40 +1064,23 @@ object DedupOps {
                           idCol: String, textCol: String,
                           threshold: Double = 0.7, shingleN: Int = 3,
                           k: Int = 32, bands: Int = 8, maxBucketSize: Int = 500,
-                          estCutoff: Double = 0.2,
-                          strategy: HashStrategy = Md5Portable): DataFrame = {
+                          estCutoff: Double = 0.2): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
-    val prep = sigTable(corpus, idCol, textCol, shingleN, k, strategy)
+    requireBucketCap(maxBucketSize) // before the persists: a refused call pins nothing
+    val prep = sigTable(corpus, idCol, textCol, shingleN, k, Md5Portable)
       .withColumn("_new", lit(false))
-      .unionByName(sigTable(shard, idCol, textCol, shingleN, k, strategy)
+      .unionByName(sigTable(shard, idCol, textCol, shingleN, k, Md5Portable)
         .withColumn("_new", lit(true)))
-    val est = size(filter(zip_with(col("a.sig"), col("b.sig"), (x, y) => x === y),
-      x => x)).cast("double") / k
-    val pairs = prep
-      .select(struct(col(idCol).as("id"), col("_sig").as("sig"),
+    val pairs = bandPairs(
+      prep.select(struct(col(idCol).as("id"), col("_sig").as("sig"),
           col("_new").as("isNew")).as("_rec"),
-        explode(lshBandKeys(col("_sig"), bands, k / bands)).as("_band"))
-      .groupBy(col("_band")).agg(collect_list(col("_rec")).as("_recs"))
-      .filter(size(col("_recs")).between(2, maxBucketSize))
-      .select(explode(col("_recs")).as("a"), col("_recs"))
-      .filter(col("a.isNew"))
-      .select(col("a"), explode(col("_recs")).as("b"))
-      .filter(!col("b.isNew") || col("b.id") < col("a.id"))
-      .filter(est >= estCutoff)
-      .select(col("a.id").as("_id"), col("b.id").as("matched_id"),
-        col("b.isNew").as("_bNew"))
-      .distinct()
-    val h32 = prep.select(col(idCol), col("_h32"))
-    pairs
-      .join(h32.select(col(idCol).as("_id"), col("_h32").as("_a1")), "_id")
-      .join(h32.select(col(idCol).as("matched_id"), col("_h32").as("_a2")), "matched_id")
-      .withColumn("_j", jaccard(col("_a1"), col("_a2")))
-      .filter(col("_j") >= threshold)
-      .withColumn("_rn", row_number().over(Window.partitionBy(col("_id"))
-        .orderBy(col("_j").desc, col("matched_id"))))
-      .filter(col("_rn") === 1)
-      .select(col("_id").as(idCol), col("matched_id"),
-        round(col("_j"), 6).as("best_jaccard"), (!col("_bNew")).as("vs_corpus"))
+        explode(lshBandKeys(col("_sig"), bands, k / bands)).as("_band")),
+      maxBucketSize, !col("b.isNew") || col("b.id") < col("a.id"), Some(col("a.isNew")))
+    bestMatch(
+      minhashVerify(pairs, prep, idCol, k, estCutoff, threshold, col("b.isNew").as("_bNew")),
+      "id1", col("jaccard").desc, col("id2"))
+      .select(col("id1").as(idCol), col("id2").as("matched_id"),
+        round(col("jaccard"), 6).as("best_jaccard"), (!col("_bNew")).as("vs_corpus"))
   }
 
   /** Quality-aware cluster resolution (the FineWeb/Gopher curation rule): given

@@ -49,7 +49,7 @@ object VecOps {
 
   /** Fused cosine: one pass, three ordered accumulators (ab, aa, bb); each
     * accumulator follows its own array's float-product rule (aa rounds to float
-    * iff `a` is a float array, etc. — exactly the composed l2Norm/dot chain). */
+    * iff `a` is a float array, etc. — exactly the composed `sqrt(dot(a, a))`/dot chain). */
   def cosineBoxed(a: ArrayData, b: ArrayData, aF: Boolean, bF: Boolean): java.lang.Double = {
     val n = a.numElements()
     if (n != b.numElements()) return null

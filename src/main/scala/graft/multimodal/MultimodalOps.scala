@@ -1760,8 +1760,8 @@ object MultimodalOps {
     * sharing most keyframe codes are duplicates; re-encodes, resolution
     * twins, trims): a CALLER-SUPPLIED [[videoKeyframeHashes]] table →
     * banded-Hamming keyframe pairs across DIFFERENT videos (the
-    * [[graft.dedup.DedupOps.hamming64Pairs]] chassis inlined so video
-    * identity rides the bucket records; same radius-selected
+    * [[graft.dedup.DedupOps.hamming64Pairs]] chassis and verify, with video
+    * identity riding the bucket records; same radius-selected
     * [[graft.dedup.DedupOps.hamming64BandKeys]] and pigeonhole-exact recall
     * at hamming ≤ 7) → video-level roll-up: per ordered video pair, how many of
     * each side's keyframes found a partner, similarity = matched keyframes /
@@ -1781,18 +1781,13 @@ object MultimodalOps {
   def videoNearDupsFromKeyframes(kf: DataFrame,
                     maxHamming: Int = 3, maxBucketSize: Int = 2000,
                     minSim: Double = 0.5): DataFrame = {
+    import graft.dedup.DedupOps.{bandPairs, hamming64, hamming64BandKeys}
     val nkf = kf.groupBy(col("id")).agg(count(lit(1)).as("nkf"))
-    val pairs = kf
-      .select(struct(col("id"), col("frame_idx"), col("hi"), col("lo")).as("_rec"),
-        explode(graft.dedup.DedupOps.hamming64BandKeys(col("hi"), col("lo"), maxHamming))
-          .as("_band"))
-      .groupBy(col("_band")).agg(collect_list(col("_rec")).as("_recs"))
-      .filter(size(col("_recs")).between(2, maxBucketSize))
-      .select(explode(col("_recs")).as("a"), col("_recs"))
-      .select(col("a"), explode(col("_recs")).as("b"))
-      .filter(col("a.id") < col("b.id")) // ordered pairs, never within one video
-      .filter(bit_count(col("a.hi").bitwiseXOR(col("b.hi"))) +
-        bit_count(col("a.lo").bitwiseXOR(col("b.lo"))) <= maxHamming)
+    val pairs = bandPairs(
+      kf.select(struct(col("id"), col("frame_idx"), col("hi"), col("lo")).as("_rec"),
+        explode(hamming64BandKeys(col("hi"), col("lo"), maxHamming)).as("_band")),
+      maxBucketSize, col("a.id") < col("b.id")) // ordered pairs, never within one video
+      .filter(hamming64(col("a.hi"), col("a.lo"), col("b.hi"), col("b.lo")) <= maxHamming)
       .select(col("a.id").as("vid1"), col("b.id").as("vid2"),
         col("a.frame_idx").as("f1"), col("b.frame_idx").as("f2"))
       .distinct()
@@ -1865,9 +1860,8 @@ object MultimodalOps {
     def codes(df: DataFrame, side: String, pre: String): DataFrame =
       df.select(col("id").as(side),
         col("hi").as(s"_${pre}h$side"), col("lo").as(s"_${pre}l$side"))
-    def ham(pre: String): Column =
-      (bit_count(col(s"_${pre}hid1").bitwiseXOR(col(s"_${pre}hid2"))) +
-        bit_count(col(s"_${pre}lid1").bitwiseXOR(col(s"_${pre}lid2")))).cast("long")
+    def ham(pre: String): Column = graft.dedup.DedupOps.hamming64(
+      col(s"_${pre}hid1"), col(s"_${pre}lid1"), col(s"_${pre}hid2"), col(s"_${pre}lid2"))
     vp.unionByName(ap).distinct()
       .join(codes(visual, "id1", "v"), Seq("id1"), "left")
       .join(codes(visual, "id2", "v"), Seq("id2"), "left")

@@ -64,17 +64,6 @@ object QaqcPipeline {
           streakNDays, None, streakMinSeqLen, valid, "_flag"), Flags.StraightStreak)))
   }
 
-  /** Part 1b sensor-height gates (flags 6–9) as an optional LEADING stage. OFF by
-    * default everywhere: the reference defines both checks but leaves them out of
-    * its v2 stage list (`qaqc_wholestation.py:579-686` — "many networks do not
-    * report sensor height"). Prepend to [[singleVariable]]'s stages when a corpus
-    * carries `thermometer_height_m` / `anemometer_height_m`. */
-  def sensorHeightStage(station: String = "station", timeCol: String = "time"): Stage =
-    Stage("sensor_heights",
-      Seq(Flags.ThermometerHeightMissing, Flags.ThermometerHeightNot2m,
-        Flags.AnemometerHeightMissing, Flags.AnemometerHeightNot10m),
-      df => CleanOps.sensorHeightFlags(df, station, timeCol))
-
   /** Part 1a buoy checks (flags 1/2) as a LEADING stage, network-gated by
     * construction: [[graft.core.Lookups.buoyCutoffsDf]] /
     * [[graft.core.Lookups.buoyIssueHoursDf]] list only MARITIME/NDBC stations, so

@@ -165,8 +165,7 @@ object StreamingOps {
         graft.dedup.DedupOps.hamming64BandKeys(col(hiCol), col(loCol), maxHamming)))
       .join(catalogBands, Seq("band"))
       .withColumn("hamming",
-        (bit_count(col(hiCol).bitwiseXOR(col("chi"))) +
-          bit_count(col(loCol).bitwiseXOR(col("clo")))).cast("long"))
+        graft.dedup.DedupOps.hamming64(col(hiCol), col(loCol), col("chi"), col("clo")))
       .filter(col("hamming") <= maxHamming)
       .withWatermark(timeCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(idCol, "cid")

@@ -169,11 +169,6 @@ object TextOps {
   def fingerprint(text: Column): Column =
     graft.expr.NormFingerprint.expr(text)
 
-  /** 60-bit integer fingerprint (rolling-hash analog through md5, cross-engine):
-    * `conv(substr(md5(normalized),1,15),16,10)`. */
-  def fingerprint60(text: Column): Column =
-    conv(substring(fingerprint(text), 1, 15), 16, 10).cast("long")
-
   /** Rolling k-gram hashes of the token stream (60-bit, md5-derived so the values are
     * engine-portable; a production system would swap in a true Rabin-Karp rolling
     * hash — the downstream winnowing contract is identical). Short texts (< k tokens)

@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * through one chassis, `StationRuns`, whose scan is the only place that turns
   * paths into partitions; no source builds a DataFrame from an `RDD[Row]`. The
   * series operators that run as `SeriesScan` kernels keep no window form beside
-  * them. */
+  * them. The banded near-dup operators pair through one bucket chassis, and each
+  * band-key family has one definition that its pair operator, cap ledger and
+  * streaming twin share. */
 class ScaffoldingSpec extends AnyFunSuite {
   private val sources: Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")
@@ -23,6 +25,21 @@ class ScaffoldingSpec extends AnyFunSuite {
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
     finally walk.close()
+  }
+
+  private def source(file: String): String =
+    sources.find(_._1.endsWith(file)).map(_._2).getOrElse(fail(s"scan found no $file"))
+
+  private def occurrences(text: String, literal: String): Seq[Int] =
+    java.util.regex.Pattern.quote(literal).r.findAllMatchIn(text).map(_.start).toSeq
+
+  // a member's source from its def to the next member
+  private def member(file: String, name: String): String = {
+    val text = source(file)
+    val from = text.indexOf(s"def $name(")
+    assert(from >= 0, s"$file defines no $name")
+    val next = "\n  (?:/\\*\\*|def |private )".r.findFirstMatchIn(text.substring(from + 1))
+    text.substring(from, next.fold(text.length)(from + 1 + _.start))
   }
 
   test("SparkSession.builder() appears only in GraftSession.scala") {
@@ -44,15 +61,6 @@ class ScaffoldingSpec extends AnyFunSuite {
   }
 
   test("the series-scan operators keep no window or mapPartitions twin") {
-    // each operator's source from its def to the next member
-    def member(file: String, name: String): String = {
-      val text = sources.find(_._1.endsWith(file)).map(_._2)
-        .getOrElse(fail(s"scan found no $file"))
-      val from = text.indexOf(s"def $name(")
-      assert(from >= 0, s"$file defines no $name")
-      val next = "\n  (?:/\\*\\*|def |private )".r.findFirstMatchIn(text.substring(from + 1))
-      text.substring(from, next.fold(text.length)(from + 1 + _.start))
-    }
     val ops = Seq("SpikeOps.scala" -> "detectSpikes", "SpikeOps.scala" -> "body",
       "StreakOps.scala" -> "straightRepeats", "StreakOps.scala" -> "body",
       "SeriesOps.scala" -> "interpolateLinear", "Butterworth.scala" -> "lowPass")
@@ -68,6 +76,50 @@ class ScaffoldingSpec extends AnyFunSuite {
       case (p, text) if wide.findFirstIn(text).nonEmpty => p.toString
     }
     assert(offenders.isEmpty, s"the band layout follows maxHamming: $offenders")
+  }
+
+  test("the banded near-dup operators pair through one bucket chassis") {
+    val collects = sources.flatMap { case (p, text) =>
+      occurrences(text, "collect_list(col(\"_rec\"))").map(_ => p.getFileName.toString)
+    }
+    assert(collects == Seq("DedupOps.scala"),
+      s"pair bucket members through DedupOps.bandPairs: $collects")
+    assert(member("DedupOps.scala", "bandPairs").contains("collect_list(col(\"_rec\"))"))
+    val ops = Seq("hamming64Pairs", "hamming64IncrementalNearDups", "minhashNearDups",
+      "incrementalNearDups", "simhashNearDups", "embeddingNearDups")
+      .map("DedupOps.scala" -> _) :+ ("MultimodalOps.scala" -> "videoNearDupsFromKeyframes")
+    val bypass = ops.collect { case (f, op) if !member(f, op).contains("bandPairs(") => op }
+    assert(bypass.isEmpty, s"these banded ops do not pair through bandPairs: $bypass")
+  }
+
+  test("each band-key family is defined once and shared by its pair op and ledger") {
+    val dedup = source("DedupOps.scala")
+    // the simhash band shift and the hyperplane band substring live only in their
+    // key functions (the oracle SQL in QueriesLlm is not scanned)
+    for ((keys, form) <- Seq("simhashBandKeys" -> """8 \* b\b""",
+                             "rhBandKeys" -> """substring\(\w+, b \* """)) {
+      val all = form.r.findAllIn(dedup).length
+      assert(all == 1 && form.r.findAllIn(member("DedupOps.scala", keys)).length == 1,
+        s"$form appears $all times in DedupOps.scala; define it only in $keys")
+    }
+    val users = Seq(
+      "lshBandKeys" -> Seq("DedupOps.scala" -> "minhashNearDups",
+        "DedupOps.scala" -> "incrementalNearDups", "DedupOps.scala" -> "minhashCapStatsFromSig",
+        "StreamingOps.scala" -> "incrementalDedupStream",
+        "StreamingOps.scala" -> "corpusBandTable"),
+      "simhashBandKeys" -> Seq("DedupOps.scala" -> "simhashNearDups",
+        "DedupOps.scala" -> "simhashCapStats"),
+      "rhBandKeys" -> Seq("DedupOps.scala" -> "embeddingNearDups",
+        "DedupOps.scala" -> "embeddingCapStats"),
+      "hamming64BandKeys" -> Seq("DedupOps.scala" -> "hamming64Pairs",
+        "DedupOps.scala" -> "hamming64IncrementalNearDups", "DedupOps.scala" -> "hamming64CapStats",
+        "MultimodalOps.scala" -> "videoNearDupsFromKeyframes",
+        "StreamingOps.scala" -> "codeDedupStream", "StreamingOps.scala" -> "codeBandTable"))
+    val missing = users.flatMap { case (keys, ops) =>
+      assert(sources.flatMap(s => occurrences(s._2, s"def $keys(")).length == 1, keys)
+      ops.collect { case (f, op) if !member(f, op).contains(s"$keys(") => s"$op: $keys" }
+    }
+    assert(missing.isEmpty, s"audited keys must be the join keys: $missing")
   }
 
   test("a frame running to unboundedFollowing starts at unboundedPreceding") {

@@ -737,6 +737,39 @@ class DedupAnnSpec extends SparkSpec {
     assert(eled.getAs[Long]("n_buckets_capped") >= 3L, eled.toString)
   }
 
+  test("every banded pair op and cap ledger refuses maxBucketSize < 2") {
+    // a cap below 2 admits no bucket, so the op would answer with no pairs at all
+    val docs = Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
+    val vecs = Seq((1L, Seq.fill(64)(0.5)), (2L, Seq.fill(64)(0.5))).toDF("id", "v")
+    val codes = Seq((1L, 0L, 0L), (2L, 0L, 1L)).toDF("id", "hi", "lo")
+    val kf = Seq((1L, 0L, 0L, 0L), (2L, 0L, 0L, 1L)).toDF("id", "frame_idx", "hi", "lo")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "minhashNearDups" -> (() => DedupOps.minhashNearDups(docs, "doc_id", "text",
+        maxBucketSize = 1)),
+      "incrementalNearDups" -> (() => DedupOps.incrementalNearDups(docs, docs,
+        "doc_id", "text", maxBucketSize = 1)),
+      "simhashNearDups" -> (() => DedupOps.simhashNearDups(docs, "doc_id", "text",
+        maxBucketSize = 1)),
+      "embeddingNearDups" -> (() => DedupOps.embeddingNearDups(vecs, "id", "v",
+        maxBucketSize = 1)),
+      "videoNearDupsFromKeyframes" -> (() =>
+        graft.multimodal.MultimodalOps.videoNearDupsFromKeyframes(kf, maxBucketSize = 1)),
+      "hamming64Pairs" -> (() => DedupOps.hamming64Pairs(codes, "id", "hi", "lo",
+        maxBucketSize = 1)),
+      "hamming64IncrementalNearDups" -> (() => DedupOps.hamming64IncrementalNearDups(
+        codes, codes, "id", "hi", "lo", maxBucketSize = 1)),
+      "minhashCapStats" -> (() => DedupOps.minhashCapStats(docs, "doc_id", "text",
+        maxBucketSize = 1)),
+      "simhashCapStats" -> (() => DedupOps.simhashCapStats(docs, "doc_id", "text",
+        maxBucketSize = 1)),
+      "embeddingCapStats" -> (() => DedupOps.embeddingCapStats(vecs, "id", "v",
+        maxBucketSize = 1)))
+    for ((name, call) <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("maxBucketSize"), s"$name: ${e.getMessage}")
+    }
+  }
+
   test("snapshotDiff classifies added/removed/changed/unchanged; normalization-insensitive") {
     val old = Seq((1L, "a b c"), (2L, "keep me"), (3L, "gone soon")).toDF("id", "text")
     val cur = Seq((1L, "a b  C"), // whitespace/case only -> same fingerprint
