@@ -31,6 +31,123 @@ object QueriesClean {
 
   private def r4(c: Column): Column = round(c, 4)
 
+  /** s26/s27: the read-back stations summarized as their oracles aggregate the
+    * source rows (exact decimal value sums). */
+  private def publishSummary(readBack: DataFrame): DataFrame =
+    readBack.groupBy(col("station")).agg(
+        count(lit(1)).as("n"),
+        sum(col("val").cast("decimal(18,2)")).cast("double").as("sval"),
+        sum(col("evt")).as("sevt"),
+        max(unix_micros(col("time"))).as("max_us"),
+        countDistinct(col("flag")).as("nflags"))
+
+  /** One station-list ledger stage over the events fixture: the stage's
+    * status column `flag`, its time column `time` (emitted as epoch seconds
+    * `out`), the passed stations (uid % passMod != 0), the errors (event_id %
+    * errMod == 0, one per (uid, event_type)) on file `prefix<uid>suffix`, and
+    * whether passed stations missing from the list are appended. */
+  private case class LedgerStage(flag: String, time: String, out: String, passMod: Int,
+      errMod: Int, prefix: String, suffix: String, appendUnlisted: Boolean)
+
+  private val CleanLedger =
+    LedgerStage("cleaned", "time_cleaned", "tc_s", 3, 101, "raw_", "_x.csv", appendUnlisted = true)
+  private val QaqcLedger =
+    LedgerStage("qaqc", "time_qaqc", "tq_s", 3, 101, "raw_", "_x.csv", appendUnlisted = false)
+  private val MergeLedger =
+    LedgerStage("merged", "time_merge", "tm_s", 5, 97, "merge_", "_x.zarr", appendUnlisted = false)
+
+  /** s12/s13/s18: the listed stations `NET_<uid>` (uid%29==0 unlisted), the
+    * stage's passed ids (`NET_<uid>` plus `idSuffix`) and errors, through
+    * `update`. */
+  private def stationLedger(s: SparkSession, dir: String, st: LedgerStage,
+      idSuffix: Option[Column],
+      update: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val e = t(s, dir, "events")
+    val stations = e.filter(col("user_id") % 29 =!= 0)
+      .select(concat(lit("NET_"), col("user_id").cast("string")).as("era_id"))
+      .distinct()
+    val passed = e.filter(col("user_id") % st.passMod =!= 0)
+      .groupBy(col("user_id"))
+      .agg(date_trunc("SECOND", min(col("ts"))).as(st.time))
+      .select(concat(Seq(lit("NET_"), col("user_id").cast("string")) ++ idSuffix: _*).as("id"),
+        col(st.time))
+    val errors = e.filter(col("event_id") % st.errMod === 0)
+      .groupBy(col("user_id"), col("event_type"))
+      .agg(date_trunc("SECOND", min(col("ts"))).as("time"))
+      .select(concat(lit(st.prefix), col("user_id").cast("string"), lit(st.suffix)).as("file"),
+        col("time"), col("event_type").as("error"))
+    update(stations, passed, errors)
+      .select(col("era_id"), col(st.flag), unix_timestamp(col(st.time)).as(st.out),
+        col("errors_str"))
+  }
+
+  /** s12/s13/s18's oracle: the stage ledger replayed — listed stations, the
+    * stage's passed ids, the bare-id substring error attach with
+    * last-match-wins and time gating, and the multi-error concat. */
+  private def stationLedgerSql(st: LedgerStage): String = {
+    val (eraId, join) =
+      if (st.appendUnlisted) ("COALESCE(st.era_id, cl.id) AS era_id", "FULL OUTER")
+      else ("st.era_id", "LEFT")
+    val m = "m_" + st.out.stripSuffix("_s")
+    s"""WITH st AS (
+           SELECT DISTINCT 'NET_' || CAST(user_id AS VARCHAR) AS era_id
+           FROM events WHERE user_id % 29 <> 0),
+         cl AS (
+           SELECT 'NET_' || CAST(user_id AS VARCHAR) AS id,
+                  date_trunc('second', min(ts)) AS ${st.time}
+           FROM events WHERE user_id % ${st.passMod} <> 0 GROUP BY user_id),
+         er AS (
+           SELECT '${st.prefix}' || CAST(user_id AS VARCHAR) || '${st.suffix}' AS file,
+                  date_trunc('second', min(ts)) AS time, event_type AS error
+           FROM events WHERE event_id % ${st.errMod} = 0 GROUP BY user_id, event_type),
+         base AS (
+           SELECT $eraId,
+                  CASE WHEN cl.id IS NULL THEN 'N' ELSE 'Y' END AS ${st.flag},
+                  cl.${st.time}
+           FROM st $join JOIN cl ON st.era_id = cl.id),
+         cand AS (
+           SELECT er.file, er.error, er.time, b.era_id AS m_era_id,
+                  b.${st.time} AS $m,
+                  row_number() OVER (PARTITION BY er.file, er.error
+                                     ORDER BY b.era_id DESC) AS rn
+           FROM er JOIN base b
+             ON er.file LIKE '%' || regexp_extract(b.era_id, '([^_]+)$$', 1) || '%'),
+         att AS (
+           SELECT * FROM cand
+           WHERE rn = 1 AND ($m IS NULL OR time IS NULL OR time >= $m)),
+         per AS (
+           SELECT m_era_id AS era_id,
+                  CASE WHEN COUNT(*) = 1 THEN MIN(error)
+                       ELSE string_agg(file || ': ' || error, ' '
+                                       ORDER BY file, error) END AS errors_str
+           FROM att GROUP BY m_era_id)
+         SELECT b.era_id, b.${st.flag},
+                CAST(epoch(b.${st.time}) AS BIGINT) AS ${st.out}, p.errors_str
+         FROM base b LEFT JOIN per p USING (era_id)"""
+  }
+
+  /** s23/s24's ISD pull fixture over the event stations: a station list
+    * (string start/end stamps; some pre-1980 starts exercise the floor, some
+    * end-before-start windows the empty range) and the raw-prefix object
+    * listing, with deterministic per-year gaps ((year+uid)%3==0 missing) and
+    * no files at all for uid%13==0 stations. */
+  private def isdPullFixture(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val uids = t(s, dir, "events").select(col("user_id").as("uid")).distinct()
+    val stations = uids.select(
+      concat(lit("ISD"), col("uid").cast("string")).as("isd_id"),
+      (col("uid") % 99999).as("wban"),
+      concat((lit(1975) + col("uid") % 10).cast("string"),
+        lit("-01-01 00:00:00")).as("start_time"),
+      concat((lit(1982) + col("uid") % 7).cast("string"),
+        lit("-12-31 23:00:00")).as("end_time"))
+    val files = uids.filter(col("uid") % 13 =!= 0)
+      .select(col("uid"), explode(sequence(lit(1979), lit(1990))).as("y"))
+      .filter((col("y") + col("uid")) % 3 =!= 0)
+      .select(concat(lit("1_raw_wx/ISD/ISD"), col("uid").cast("string"),
+        lit("-"), col("y").cast("string"), lit(".gz")).as("file"))
+    (stations, files)
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // CIMIS (`CIMIS_clean.py:58-734`): 1–24h PST convention (2400 -> next-day
     // 00:00), +8 h to UTC, sentinel −9998 family -> null, °C -> K, QC shadow.
@@ -251,25 +368,8 @@ object QueriesClean {
     // The fixture exercises every branch: uid%29==0 stations are unlisted,
     // uid%3==0 are uncleaned, single-digit bare ids force ambiguous substring
     // matches resolved by the last-match rule.
-    "s12_stnlist_status" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val stations = e.filter(col("user_id") % 29 =!= 0)
-        .select(concat(lit("NET_"), col("user_id").cast("string")).as("era_id"))
-        .distinct()
-      val cleanedIds = e.filter(col("user_id") % 3 =!= 0)
-        .groupBy(col("user_id"))
-        .agg(date_trunc("SECOND", min(col("ts"))).as("time_cleaned"))
-        .select(concat(lit("NET_"), col("user_id").cast("string")).as("id"),
-          col("time_cleaned"))
-      val errors = e.filter(col("event_id") % 101 === 0)
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(date_trunc("SECOND", min(col("ts"))).as("time"))
-        .select(concat(lit("raw_"), col("user_id").cast("string"), lit("_x.csv")).as("file"),
-          col("time"), col("event_type").as("error"))
-      StationStatus.updateStationList(stations, cleanedIds, errors)
-        .select(col("era_id"), col("cleaned"),
-          unix_timestamp(col("time_cleaned")).as("tc_s"), col("errors_str"))
-    }),
+    "s12_stnlist_status" -> ((s, dir) =>
+      stationLedger(s, dir, CleanLedger, None, StationStatus.updateStationList)),
 
     // QAQC-stage ledger (`stnlist_update_qaqc.py:1-380`): same shape as s12 with
     // the stage deltas — `_c` concatenated-station suffix normalized back to the
@@ -277,96 +377,34 @@ object QueriesClean {
     // station list DROPPED instead of appended (uid%29==0 passed-ids are unlisted
     // and must not surface). The merge ledger shares this code path minus the `_c`
     // rule (StationStatusSpec pins it).
-    "s13_stnlist_qaqc" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val stations = e.filter(col("user_id") % 29 =!= 0)
-        .select(concat(lit("NET_"), col("user_id").cast("string")).as("era_id"))
-        .distinct()
-      val passed = e.filter(col("user_id") % 3 =!= 0)
-        .groupBy(col("user_id"))
-        .agg(date_trunc("SECOND", min(col("ts"))).as("time_qaqc"))
-        .select(concat(lit("NET_"), col("user_id").cast("string"),
-          when(col("user_id") % 7 === 0, "_c").otherwise("")).as("id"),
-          col("time_qaqc"))
-      val errors = e.filter(col("event_id") % 101 === 0)
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(date_trunc("SECOND", min(col("ts"))).as("time"))
-        .select(concat(lit("raw_"), col("user_id").cast("string"), lit("_x.csv")).as("file"),
-          col("time"), col("event_type").as("error"))
-      StationStatus.updateStationListQaqc(stations, passed, errors)
-        .select(col("era_id"), col("qaqc"),
-          unix_timestamp(col("time_qaqc")).as("tq_s"), col("errors_str"))
-    }),
+    "s13_stnlist_qaqc" -> ((s, dir) =>
+      stationLedger(s, dir, QaqcLedger,
+        Some(when(col("user_id") % 7 === 0, "_c").otherwise("")),
+        StationStatus.updateStationListQaqc)),
 
     // Merge-stage ledger (`stnlist_update_merge.py` merge_qa): the s13 shape
     // minus the `_c` normalization — unlisted stage outputs still DROPPED
     // (uid%29==0 ids pass merge but are not in the station list and must not
     // surface); distinct moduli from s13 so the two ledgers don't share a
     // fixture
-    "s18_stnlist_merge" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val stations = e.filter(col("user_id") % 29 =!= 0)
-        .select(concat(lit("NET_"), col("user_id").cast("string")).as("era_id"))
-        .distinct()
-      val passed = e.filter(col("user_id") % 5 =!= 0)
-        .groupBy(col("user_id"))
-        .agg(date_trunc("SECOND", min(col("ts"))).as("time_merge"))
-        .select(concat(lit("NET_"), col("user_id").cast("string")).as("id"),
-          col("time_merge"))
-      val errors = e.filter(col("event_id") % 97 === 0)
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(date_trunc("SECOND", min(col("ts"))).as("time"))
-        .select(concat(lit("merge_"), col("user_id").cast("string"),
-          lit("_x.zarr")).as("file"), col("time"), col("event_type").as("error"))
-      StationStatus.updateStationListMerge(stations, passed, errors)
-        .select(col("era_id"), col("merged"),
-          unix_timestamp(col("time_merge")).as("tm_s"), col("errors_str"))
-    }),
+    "s18_stnlist_merge" -> ((s, dir) =>
+      stationLedger(s, dir, MergeLedger, None, StationStatus.updateStationListMerge)),
 
     // Pull-stage ledger (`stnlist_update_pull.py:479-558` isd_retry_downloads):
-    // completes the 4-stage ledger family. The fixture derives a station list
-    // (string start/end stamps; some pre-1980 starts exercise the floor, some
-    // end-before-start windows exercise the empty range) and a raw-prefix
-    // object listing with deterministic per-year gaps ((year+uid)%3==0 missing)
-    // plus non-.gz junk; uid%13==0 stations have no files at all and belong to
-    // the s24 missed report, not this gap report.
+    // completes the 4-stage ledger family over the ISD fixture plus one non-.gz
+    // junk file; uid%13==0 stations have no files at all and belong to the s24
+    // missed report, not this gap report.
     "s23_stnlist_pull" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val uids = e.select(col("user_id").as("uid")).distinct()
-      val stations = uids.select(
-        concat(lit("ISD"), col("uid").cast("string")).as("isd_id"),
-        (col("uid") % 99999).as("wban"),
-        concat((lit(1975) + col("uid") % 10).cast("string"),
-          lit("-01-01 00:00:00")).as("start_time"),
-        concat((lit(1982) + col("uid") % 7).cast("string"),
-          lit("-12-31 23:00:00")).as("end_time"))
-      val files = uids.filter(col("uid") % 13 =!= 0)
-        .select(col("uid"), explode(sequence(lit(1979), lit(1990))).as("y"))
-        .filter((col("y") + col("uid")) % 3 =!= 0)
-        .select(concat(lit("1_raw_wx/ISD/ISD"), col("uid").cast("string"),
-          lit("-"), col("y").cast("string"), lit(".gz")).as("file"))
-        .union(s.range(1).select(lit("1_raw_wx/ISD/isd-history-stations.csv").as("file")))
-      StationStatus.pullMissingFiles(stations, files)
+      val (stations, files) = isdPullFixture(s, dir)
+      StationStatus.pullMissingFiles(stations,
+        files.union(s.range(1).select(lit("1_raw_wx/ISD/isd-history-stations.csv").as("file"))))
     }),
 
     // Pull-stage ledger part 2: stations with NO downloaded file (the retry
     // list the reference re-fetches; fetcher itself is the S10 cut). WBAN
     // zero-pads to 5, the reference's `:522-524` fixup.
     "s24_pull_missed" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val uids = e.select(col("user_id").as("uid")).distinct()
-      val stations = uids.select(
-        concat(lit("ISD"), col("uid").cast("string")).as("isd_id"),
-        (col("uid") % 99999).as("wban"),
-        concat((lit(1975) + col("uid") % 10).cast("string"),
-          lit("-01-01 00:00:00")).as("start_time"),
-        concat((lit(1982) + col("uid") % 7).cast("string"),
-          lit("-12-31 23:00:00")).as("end_time"))
-      val files = uids.filter(col("uid") % 13 =!= 0)
-        .select(col("uid"), explode(sequence(lit(1979), lit(1990))).as("y"))
-        .filter((col("y") + col("uid")) % 3 =!= 0)
-        .select(concat(lit("1_raw_wx/ISD/ISD"), col("uid").cast("string"),
-          lit("-"), col("y").cast("string"), lit(".gz")).as("file"))
+      val (stations, files) = isdPullFixture(s, dir)
       StationStatus.pullMissedStations(stations, files)
         .select(col("isd_id"), col("wban"))
     }),
@@ -411,13 +449,7 @@ object QueriesClean {
       val ledger = graft.sources.ZarrSink.writeZarrStores(obs, out, chunkRows = chunkRows)
       // ledger is station-cardinality (40 rows) — model-sized driver collect
       val paths = ledger.select("path").collect().map(_.getString(0)).toSeq
-      graft.sources.ZarrSource.readStores(s, paths)
-        .groupBy(col("station")).agg(
-          count(lit(1)).as("n"),
-          sum(col("val").cast("decimal(18,2)")).cast("double").as("sval"),
-          sum(col("evt")).as("sevt"),
-          max(unix_micros(col("time"))).as("max_us"),
-          countDistinct(col("flag")).as("nflags"))
+      publishSummary(graft.sources.ZarrSource.readStores(s, paths))
     }),
 
     // S8 publish round-trip, netCDF half (`ASOSAWOS_clean.py:~750-1106`
@@ -433,13 +465,7 @@ object QueriesClean {
       val out = java.nio.file.Files.createTempDirectory("graft-s27").toString
       val ledger = graft.sources.NcSink.writeNcFiles(obs, out)
       val paths = ledger.select("path").collect().map(_.getString(0)).toSeq
-      graft.sources.NcSource.readFiles(s, paths)
-        .groupBy(col("station")).agg(
-          count(lit(1)).as("n"),
-          sum(col("val").cast("decimal(18,2)")).cast("double").as("sval"),
-          sum(col("evt")).as("sevt"),
-          max(unix_micros(col("time"))).as("max_us"),
-          countDistinct(col("flag")).as("nflags"))
+      publishSummary(graft.sources.NcSource.readFiles(s, paths))
     }),
 
     // All-network station-list generation (`stationlist_generator.py:144-529`):
@@ -882,114 +908,9 @@ object QueriesClean {
                 ROUND(ps, 4) + 0 AS ps, ROUND(pr, 4) + 0 AS pr,
                 ROUND(sfcWind, 4) + 0 AS sfcWind
          FROM parsed""",
-    "s13_stnlist_qaqc" ->
-      """WITH st AS (
-           SELECT DISTINCT 'NET_' || CAST(user_id AS VARCHAR) AS era_id
-           FROM events WHERE user_id % 29 <> 0),
-         cl AS (
-           SELECT 'NET_' || CAST(user_id AS VARCHAR) AS id,
-                  date_trunc('second', min(ts)) AS time_qaqc
-           FROM events WHERE user_id % 3 <> 0 GROUP BY user_id),
-         er AS (
-           SELECT 'raw_' || CAST(user_id AS VARCHAR) || '_x.csv' AS file,
-                  date_trunc('second', min(ts)) AS time, event_type AS error
-           FROM events WHERE event_id % 101 = 0 GROUP BY user_id, event_type),
-         base AS (
-           SELECT st.era_id,
-                  CASE WHEN cl.id IS NULL THEN 'N' ELSE 'Y' END AS qaqc,
-                  cl.time_qaqc
-           FROM st LEFT JOIN cl ON st.era_id = cl.id),
-         cand AS (
-           SELECT er.file, er.error, er.time, b.era_id AS m_era_id,
-                  b.time_qaqc AS m_tq,
-                  row_number() OVER (PARTITION BY er.file, er.error
-                                     ORDER BY b.era_id DESC) AS rn
-           FROM er JOIN base b
-             ON er.file LIKE '%' || regexp_extract(b.era_id, '([^_]+)$', 1) || '%'),
-         att AS (
-           SELECT * FROM cand
-           WHERE rn = 1 AND (m_tq IS NULL OR time IS NULL OR time >= m_tq)),
-         per AS (
-           SELECT m_era_id AS era_id,
-                  CASE WHEN COUNT(*) = 1 THEN MIN(error)
-                       ELSE string_agg(file || ': ' || error, ' '
-                                       ORDER BY file, error) END AS errors_str
-           FROM att GROUP BY m_era_id)
-         SELECT b.era_id, b.qaqc,
-                CAST(epoch(b.time_qaqc) AS BIGINT) AS tq_s, p.errors_str
-         FROM base b LEFT JOIN per p USING (era_id)""",
-    "s18_stnlist_merge" ->
-      """WITH st AS (
-           SELECT DISTINCT 'NET_' || CAST(user_id AS VARCHAR) AS era_id
-           FROM events WHERE user_id % 29 <> 0),
-         cl AS (
-           SELECT 'NET_' || CAST(user_id AS VARCHAR) AS id,
-                  date_trunc('second', min(ts)) AS time_merge
-           FROM events WHERE user_id % 5 <> 0 GROUP BY user_id),
-         er AS (
-           SELECT 'merge_' || CAST(user_id AS VARCHAR) || '_x.zarr' AS file,
-                  date_trunc('second', min(ts)) AS time, event_type AS error
-           FROM events WHERE event_id % 97 = 0 GROUP BY user_id, event_type),
-         base AS (
-           SELECT st.era_id,
-                  CASE WHEN cl.id IS NULL THEN 'N' ELSE 'Y' END AS merged,
-                  cl.time_merge
-           FROM st LEFT JOIN cl ON st.era_id = cl.id),
-         cand AS (
-           SELECT er.file, er.error, er.time, b.era_id AS m_era_id,
-                  b.time_merge AS m_tm,
-                  row_number() OVER (PARTITION BY er.file, er.error
-                                     ORDER BY b.era_id DESC) AS rn
-           FROM er JOIN base b
-             ON er.file LIKE '%' || regexp_extract(b.era_id, '([^_]+)$', 1) || '%'),
-         att AS (
-           SELECT * FROM cand
-           WHERE rn = 1 AND (m_tm IS NULL OR time IS NULL OR time >= m_tm)),
-         per AS (
-           SELECT m_era_id AS era_id,
-                  CASE WHEN COUNT(*) = 1 THEN MIN(error)
-                       ELSE string_agg(file || ': ' || error, ' '
-                                       ORDER BY file, error) END AS errors_str
-           FROM att GROUP BY m_era_id)
-         SELECT b.era_id, b.merged,
-                CAST(epoch(b.time_merge) AS BIGINT) AS tm_s, p.errors_str
-         FROM base b LEFT JOIN per p USING (era_id)""",
-    "s12_stnlist_status" ->
-      """WITH st AS (
-           SELECT DISTINCT 'NET_' || CAST(user_id AS VARCHAR) AS era_id
-           FROM events WHERE user_id % 29 <> 0),
-         cl AS (
-           SELECT 'NET_' || CAST(user_id AS VARCHAR) AS id,
-                  date_trunc('second', min(ts)) AS time_cleaned
-           FROM events WHERE user_id % 3 <> 0 GROUP BY user_id),
-         er AS (
-           SELECT 'raw_' || CAST(user_id AS VARCHAR) || '_x.csv' AS file,
-                  date_trunc('second', min(ts)) AS time, event_type AS error
-           FROM events WHERE event_id % 101 = 0 GROUP BY user_id, event_type),
-         base AS (
-           SELECT COALESCE(st.era_id, cl.id) AS era_id,
-                  CASE WHEN cl.id IS NULL THEN 'N' ELSE 'Y' END AS cleaned,
-                  cl.time_cleaned
-           FROM st FULL OUTER JOIN cl ON st.era_id = cl.id),
-         cand AS (
-           SELECT er.file, er.error, er.time, b.era_id AS m_era_id,
-                  b.time_cleaned AS m_tc,
-                  row_number() OVER (PARTITION BY er.file, er.error
-                                     ORDER BY b.era_id DESC) AS rn
-           FROM er JOIN base b
-             ON er.file LIKE '%' || regexp_extract(b.era_id, '([^_]+)$', 1) || '%'),
-         att AS (
-           SELECT * FROM cand
-           WHERE rn = 1 AND (m_tc IS NULL OR time IS NULL OR time >= m_tc)),
-         per AS (
-           SELECT m_era_id AS era_id,
-                  CASE WHEN COUNT(*) = 1 THEN MIN(error)
-                       ELSE string_agg(file || ': ' || error, ' '
-                                       ORDER BY file, error) END AS errors_str
-           FROM att GROUP BY m_era_id)
-         SELECT b.era_id, b.cleaned,
-                CAST(epoch(b.time_cleaned) AS BIGINT) AS tc_s, p.errors_str
-         FROM base b LEFT JOIN per p USING (era_id)""",
+    "s13_stnlist_qaqc" -> stationLedgerSql(QaqcLedger),
+    "s18_stnlist_merge" -> stationLedgerSql(MergeLedger),
+    "s12_stnlist_status" -> stationLedgerSql(CleanLedger),
     "s23_stnlist_pull" ->
       """WITH u AS (SELECT DISTINCT user_id AS uid FROM events),
          st AS (SELECT 'ISD' || CAST(uid AS VARCHAR) AS isd_id,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.CaseStudyOps
@@ -16,12 +16,35 @@ object QueriesEval {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     SparkEntry.loadTableFanout(s, dir, name)
 
+  /** The obs fixture's station id and its two QC flag columns over `events`:
+    * tas_eraqc (25 above 300, 10 above 150) and pr_eraqc (31 on
+    * event_id%97 == 0, else 34 on event_id%89 == 0). */
+  private def station: Column = concat(lit("NET_"), col("user_id").cast("string")).as("station")
+  private def tasFlag: Column =
+    when(col("value") > 300, 25).when(col("value") > 150, 10).as("tas_eraqc")
+  private def prFlag: Column =
+    when(col("event_id") % 97 === 0, 31).when(col("event_id") % 89 === 0, 34).as("pr_eraqc")
+
+  /** ev5/ev6/ev7: per-station flag counts of both flag columns. */
+  private def stationFlagCounts(s: SparkSession, dir: String): DataFrame =
+    graft.pipeline.QaqcPipeline.flagCountReportByStation(
+      t(s, dir, "events").select(station, tasFlag, prFlag), "station", Seq("tas_eraqc", "pr_eraqc"))
+
+  /** ev5/ev6/ev7's oracle obs: `key` plus each flag as a string, 'no_flag' when unset. */
+  private def flagObsCte(key: String): String =
+    s"""obs AS (
+           SELECT $key,
+                  CASE WHEN value > 300 THEN '25'
+                       WHEN value > 150 THEN '10' ELSE 'no_flag' END AS tflag,
+                  CASE WHEN event_id % 97 = 0 THEN '31'
+                       WHEN event_id % 89 = 0 THEN '34' ELSE 'no_flag' END AS pflag
+           FROM events)"""
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // event_subset + flags_during_event: range predicate (pushes to the scan)
     // then one distinct over the flag column, null no-flag row included.
     "ev1_event_flags" -> ((s, dir) => {
-      val obs = t(s, dir, "events").select(col("ts").as("time"),
-        when(col("value") > 300, 25).when(col("value") > 150, 10).as("tas_eraqc"))
+      val obs = t(s, dir, "events").select(col("ts").as("time"), tasFlag)
       val sub = CaseStudyOps.eventSubset(obs, "time", "alternative",
         bufferDays = 2, altStart = Some("2024-01-10"), altEnd = Some("2024-01-12"))
       CaseStudyOps.flagsDuringEvent(sub, "tas")
@@ -59,56 +82,29 @@ object QueriesEval {
     }),
 
     // id_all_flags: every _eraqc variable's distinct values in ONE stacked pass.
-    "ev4_id_flags" -> ((s, dir) => {
-      val obs = t(s, dir, "events").select(
-        when(col("value") > 300, 25).when(col("value") > 150, 10).as("tas_eraqc"),
-        when(col("event_id") % 97 === 0, 31).when(col("event_id") % 89 === 0, 34)
-          .as("pr_eraqc"))
-      CaseStudyOps.idAllFlags(obs)
-    }),
+    "ev4_id_flags" -> ((s, dir) =>
+      CaseStudyOps.idAllFlags(t(s, dir, "events").select(tasFlag, prFlag))),
 
     // data-confidence ranking: per-station flag counts in one stacked pass, then
     // qc_percent = 1 - no_flag/total — the notebook's ~30-min per-station CSV
     // loop as two aggregations.
-    "ev5_station_confidence" -> ((s, dir) => {
-      val obs = t(s, dir, "events").select(
-        concat(lit("NET_"), col("user_id").cast("string")).as("station"),
-        when(col("value") > 300, 25).when(col("value") > 150, 10).as("tas_eraqc"),
-        when(col("event_id") % 97 === 0, 31).when(col("event_id") % 89 === 0, 34)
-          .as("pr_eraqc"))
-      val counts = graft.pipeline.QaqcPipeline.flagCountReportByStation(
-        obs, "station", Seq("tas_eraqc", "pr_eraqc"))
-      graft.pipeline.QaqcPipeline.stationConfidence(counts)
+    "ev5_station_confidence" -> ((s, dir) =>
+      graft.pipeline.QaqcPipeline.stationConfidence(stationFlagCounts(s, dir))
         .select(col("station"), col("no_flag"), col("total_obs_count"),
-          round(col("qc_percent"), 4).as("qc_percent"))
-    }),
+          round(col("qc_percent"), 4).as("qc_percent"))),
 
     // per-(station, variable) flag-rate table off the same long-format counts —
     // the reference's ~37-min per-station CSV loop as one groupBy.
-    "ev6_flag_rates" -> ((s, dir) => {
-      val obs = t(s, dir, "events").select(
-        concat(lit("NET_"), col("user_id").cast("string")).as("station"),
-        when(col("value") > 300, 25).when(col("value") > 150, 10).as("tas_eraqc"),
-        when(col("event_id") % 97 === 0, 31).when(col("event_id") % 89 === 0, 34)
-          .as("pr_eraqc"))
-      val counts = graft.pipeline.QaqcPipeline.flagCountReportByStation(
-        obs, "station", Seq("tas_eraqc", "pr_eraqc"))
-      graft.pipeline.QaqcPipeline.flagRateTable(counts)
+    "ev6_flag_rates" -> ((s, dir) =>
+      graft.pipeline.QaqcPipeline.flagRateTable(stationFlagCounts(s, dir))
         .select(col("station"), col("variable"), col("total_flag"),
-          col("total_obs_count"), round(col("flag_rate"), 4).as("flag_rate"))
-    }),
+          col("total_obs_count"), round(col("flag_rate"), 4).as("flag_rate"))),
 
     // corpus-level flag-count roll-up with meanings join: never-fired flag 99
     // surfaces with count 0, unknown flags fill meaning "0" (fillna parity).
     "ev7_flag_count_rollup" -> ((s, dir) => {
       import s.implicits._
-      val obs = t(s, dir, "events").select(
-        concat(lit("NET_"), col("user_id").cast("string")).as("station"),
-        when(col("value") > 300, 25).when(col("value") > 150, 10).as("tas_eraqc"),
-        when(col("event_id") % 97 === 0, 31).when(col("event_id") % 89 === 0, 34)
-          .as("pr_eraqc"))
-      val counts = graft.pipeline.QaqcPipeline.flagCountReportByStation(
-        obs, "station", Seq("tas_eraqc", "pr_eraqc"))
+      val counts = stationFlagCounts(s, dir)
       val meanings = Seq((25, "unusual_large"), (31, "frequent_values"),
         (99, "never_fires")).toDF("flag_value", "qaqc_function")
       graft.pipeline.QaqcPipeline.sumFlagCounts(counts, meanings)
@@ -135,12 +131,7 @@ object QueriesEval {
     // stations that set any flag in the event window, with their distinct flag
     // sets — the notebook's one-zarr-open-per-station loop as one scan + groupBy.
     "ev9_stations_with_flags" -> ((s, dir) => {
-      val obs = t(s, dir, "events").select(
-        concat(lit("NET_"), col("user_id").cast("string")).as("station"),
-        col("ts").as("time"),
-        when(col("value") > 300, 25).when(col("value") > 150, 10).as("tas_eraqc"),
-        when(col("event_id") % 97 === 0, 31).when(col("event_id") % 89 === 0, 34)
-          .as("pr_eraqc"))
+      val obs = t(s, dir, "events").select(station, col("ts").as("time"), tasFlag, prFlag)
       CaseStudyOps.stationsWithFlags(obs, "station",
           Seq("tas_eraqc", "pr_eraqc"), "time", "2024-01-10", "2024-01-12",
           bufferDays = 2)
@@ -189,13 +180,7 @@ object QueriesEval {
                      AS VARCHAR)
          FROM events""",
     "ev5_station_confidence" ->
-      """WITH obs AS (
-           SELECT 'NET_' || CAST(user_id AS VARCHAR) AS station,
-                  CASE WHEN value > 300 THEN '25'
-                       WHEN value > 150 THEN '10' ELSE 'no_flag' END AS tflag,
-                  CASE WHEN event_id % 97 = 0 THEN '31'
-                       WHEN event_id % 89 = 0 THEN '34' ELSE 'no_flag' END AS pflag
-           FROM events),
+      s"""WITH ${flagObsCte("'NET_' || CAST(user_id AS VARCHAR) AS station")},
          per AS (
            SELECT station,
                   SUM(CASE WHEN tflag = 'no_flag' THEN 1 ELSE 0 END) +
@@ -208,13 +193,7 @@ object QueriesEval {
                   AS qc_percent
          FROM per""",
     "ev6_flag_rates" ->
-      """WITH obs AS (
-           SELECT 'NET_' || CAST(user_id AS VARCHAR) AS station,
-                  CASE WHEN value > 300 THEN '25'
-                       WHEN value > 150 THEN '10' ELSE 'no_flag' END AS tflag,
-                  CASE WHEN event_id % 97 = 0 THEN '31'
-                       WHEN event_id % 89 = 0 THEN '34' ELSE 'no_flag' END AS pflag
-           FROM events),
+      s"""WITH ${flagObsCte("'NET_' || CAST(user_id AS VARCHAR) AS station")},
          per AS (
            SELECT station, 'tas_eraqc' AS variable,
                   SUM(CASE WHEN tflag <> 'no_flag' THEN 1 ELSE 0 END) AS total_flag,
@@ -231,13 +210,7 @@ object QueriesEval {
                   AS flag_rate
          FROM per""",
     "ev7_flag_count_rollup" ->
-      """WITH obs AS (
-           SELECT user_id,
-                  CASE WHEN value > 300 THEN '25'
-                       WHEN value > 150 THEN '10' ELSE 'no_flag' END AS tflag,
-                  CASE WHEN event_id % 97 = 0 THEN '31'
-                       WHEN event_id % 89 = 0 THEN '34' ELSE 'no_flag' END AS pflag
-           FROM events),
+      s"""WITH ${flagObsCte("user_id")},
          stacked AS (
            SELECT tflag AS flag FROM obs
            UNION ALL SELECT pflag FROM obs),

@@ -1,11 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ann.AnnOps
 import graft.dedup.DedupOps
+import graft.multimodal.MultimodalOps
+import graft.multimodal.MultimodalOps.MediaRow
 import graft.text.TextOps
 
 /** Batch C query instantiations — the LLM-training-data quadrant (text analysis,
@@ -26,14 +28,10 @@ object QueriesLlm {
     SparkEntry.loadTableFanout(s, dir, name)
 
   /** d7/d7s body: MinHash near-dup pairs -> star-contraction components. */
-  private def dedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val pairs = DedupOps.minhashNearDups(t(s, dir, "documents"), "doc_id", "text",
-        threshold = 0.4, shingleN = 3, k = 32, bands = 8)
-      .select(col("id1"), col("id2"))
-    DedupOps.connectedComponentsStar(pairs)
+  private def dedupClusters(s: SparkSession, dir: String): DataFrame =
+    minhashClusters(t(s, dir, "documents"))
       .select(col("id").as("doc_id"), col("cluster"),
         (col("id") === col("cluster")).as("keep"))
-  }
 
   private def r4(c: Column): Column = round(c, 4)
 
@@ -64,21 +62,189 @@ object QueriesLlm {
     * tmp parquet and re-read on later runs — so the timed query measures the
     * real operator (container/codec decode + features), never the fixture
     * synthesis (VERDICT r10 bench-hygiene rule). `tag` carries the fixture
-    * version token: any synthesis change must bump it. */
-  private def mediaFixture(s: SparkSession, dir: String, tag: String,
-      synth: Long => graft.multimodal.MultimodalOps.MediaRow)
-      : org.apache.spark.sql.Dataset[graft.multimodal.MultimodalOps.MediaRow] = {
+    * version token: any synthesis change must bump it, so each tag is
+    * written at exactly one call site (the fixture defs below). */
+  private def mediaFixture(s: SparkSession, dir: String, tag: String, kind: String,
+      payload: Long => Array[Byte]): Dataset[MediaRow] = {
     import s.implicits._
     val cache = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_${tag}_${math.abs(dir.hashCode)}_${corpusDigest(s, dir)}.parquet")
     if (!cache.exists()) {
       t(s, dir, "documents")
         .select(col("doc_id").cast("long").as("id")).as[Long]
-        .map(synth)
+        .map(did => MediaRow(did, kind, payload(did), Map.empty))
         .write.mode("overwrite").parquet(cache.getAbsolutePath)
     }
-    s.read.parquet(cache.getAbsolutePath)
-      .as[graft.multimodal.MultimodalOps.MediaRow]
+    s.read.parquet(cache.getAbsolutePath).as[MediaRow]
+  }
+
+  /** mm4r/pipe6: each doc's md5 grid as a real 9×8 truecolor PNG. */
+  private def mm4rImages(s: SparkSession, dir: String): Dataset[MediaRow] =
+    mediaFixture(s, dir, "mm4r_png_v1", "image", MultimodalOps.mm4FixturePng)
+
+  /** mm6/pipe7/mm8/mm9: MJPEG-AVI videos with shots shared per 4-doc group. */
+  private def mm6Videos(s: SparkSession, dir: String): Dataset[MediaRow] =
+    mediaFixture(s, dir, "mm6_avi_v2", "video", MultimodalOps.mm6FixtureAvi)
+
+  /** mm7/pipe8: step WAVs whose 256-sample blocks hold md5-derived levels. */
+  private def mm7Wavs(s: SparkSession, dir: String): Dataset[MediaRow] =
+    mediaFixture(s, dir, "mm7_wav_v1", "audio", MultimodalOps.mm7FixtureWav)
+
+  /** Persist `df` and populate the cache before its consumers run: a lazy
+    * cache first touched by concurrently submitted AQE jobs is computed once
+    * per job (the mm10 lesson, measured at 100×). Released by the harness
+    * clearCache; library callers unpersist. */
+  private def pinned(df: DataFrame): DataFrame = {
+    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    p.count()
+    p
+  }
+
+  /** mm6/pipe7's keyframe dHash table over the mm6 videos, pinned: it feeds
+    * both the pairing and the per-video counts. */
+  private def mm6Keyframes(s: SparkSession, dir: String): DataFrame = {
+    implicit val sp: SparkSession = s
+    pinned(MultimodalOps.videoKeyframeHashes(MultimodalOps.videoGrayRasters(mm6Videos(s, dir))))
+  }
+
+  /** mm8/mm9's pooled 64-bit code per mm6 video (majority over keyframes). */
+  private def mm6VideoHashes(s: SparkSession, dir: String): DataFrame = {
+    implicit val sp: SparkSession = s
+    MultimodalOps.videoHash64(MultimodalOps.videoKeyframeHashes(
+      MultimodalOps.videoGrayRasters(mm6Videos(s, dir))))
+  }
+
+  /** mm4w/mm9w's analytic 64-bit codes: per group of 4 docs a shared
+    * md5-derived base code, with disjoint per-member bit flips (member 1 flips
+    * 4 bits, member 2 five, member 3 seven). */
+  private def wideCodes(s: SparkSession, dir: String): DataFrame = {
+    val g = md5(concat(lit("w"), (col("doc_id") / 4).cast("long").cast("string")))
+    t(s, dir, "documents")
+      .select(col("doc_id"),
+        conv(substring(g, 1, 8), 16, 10).cast("long").as("hi0"),
+        conv(substring(g, 9, 8), 16, 10).cast("long").as("lo0"),
+        pmod(col("doc_id"), lit(4)).as("m"))
+      .select(col("doc_id"),
+        when(col("m") === 3, col("hi0").bitwiseXOR(lit(0x7f00L)))
+          .otherwise(col("hi0")).as("hi"),
+        when(col("m") === 1, col("lo0").bitwiseXOR(lit(0xfL)))
+          .when(col("m") === 2, col("lo0").bitwiseXOR(lit(0x1f00000L)))
+          .otherwise(col("lo0")).as("lo"))
+  }
+
+  /** pipe6/pipe8's funnel row over `items(id, …)`: the input count, the ids
+    * dropped for a near-dup partner of smaller id (keep-smallest-id), and the
+    * survivors split by two quality gates. The dropped ids are flagged by one
+    * left join, so `pairs` is planned once, and one aggregate counts them all. */
+  private def dropFunnel(items: DataFrame, pairs: DataFrame,
+      low: (String, Column), kept: (String, Column)): DataFrame = {
+    val dropped = pairs.select(col("id2").as("id"), lit(true).as("_dropped")).distinct()
+    val survivor = col("_dropped").isNull
+    items.join(dropped, Seq("id"), "left").agg(
+      count(lit(1)).as("n_input"), count(col("_dropped")).as("n_dup_dropped"),
+      count(when(survivor && low._2, lit(1))).as(low._1),
+      count(when(survivor && kept._2, lit(1))).as(kept._1))
+  }
+
+  /** `embeddings` with the vector cast to `v: array<double>`. */
+  private def vectors(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings").withColumn("v", col("embedding").cast("array<double>"))
+
+  /** The ANN queries' two sides of `emb(vec_id, v)`: every vector as the
+    * corpus `(cid, cv)`, the first ten as the queries `(qid, qv)`. */
+  private def annSides(emb: DataFrame): (DataFrame, DataFrame) =
+    (emb.select(col("vec_id").as("cid"), col("v").as("cv")),
+      emb.filter(col("vec_id") < 10).select(col("vec_id").as("qid"), col("v").as("qv")))
+
+  /** The 8 deterministic basis-vector centroids of the IVF queries (cosine
+    * argmax == component argmax, so their oracles are plain SQL). */
+  private val basisCentroids: Seq[Seq[Double]] =
+    (0 until 8).map(i => Seq.tabulate(64)(j => if (j == i) 1.0 else 0.0))
+
+  /** e7/e8/e8t/e11's product-quantization codebooks (8x16x8, seed 7). */
+  private val pqBooks = AnnOps.pqCodebooks(m = 8, k = 16, subDim = 8, seed = 7L)
+
+  /** d5/d12's corpus: the raw embeddings are mutually random (max pairwise
+    * cos ~0.51), so a perturbed near-copy (0.9*v + 0.1*shift(v), cos ~0.99 to
+    * its source, id + 100000) of each of the first 50 vectors is planted. */
+  private def plantedEmbeddings(s: SparkSession, dir: String): DataFrame = {
+    val base = t(s, dir, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    base.unionByName(base.filter(col("vec_id") < 50)
+      .select((col("vec_id") + 100000).as("vec_id"),
+        transform(sequence(lit(1), lit(64)), j =>
+          lit(0.9) * element_at(col("v"), j) +
+          lit(0.1) * element_at(col("v"), pmod(j, lit(64)) + 1)).as("v")))
+  }
+
+  /** d13/d15's corpus: the documents plus, for every 20th, a planted doc
+    * replicating its 60-token prefix (>= k+w-1 = 50 tokens, so the winnowing
+    * guarantee forces a shared fingerprint). */
+  private def plantedSpans(s: SparkSession, dir: String): DataFrame = {
+    val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    base.unionByName(base.filter(col("doc_id") % 20 === 0)
+      .select((col("doc_id") + 100000).as("doc_id"),
+        concat(concat_ws(" ", slice(TextOps.tokens(col("text")), 1, 60)),
+          lit(" planted tail marker "), col("doc_id").cast("string")).as("text")))
+  }
+
+  /** The d2 MinHash near-dup pairs (threshold 0.4, 3-shingles, k=32, 8 bands). */
+  private def minhashPairs(docs: DataFrame): DataFrame =
+    DedupOps.minhashNearDups(docs, "doc_id", "text",
+      threshold = 0.4, shingleN = 3, k = 32, bands = 8)
+
+  /** d7/d18/pipe3: the d2 pairs contracted to components `(id, cluster)` by
+    * star contraction, the 100x-adjudicated CC default (SCALE.md r11 — 85 s
+    * vs label-propagation's 322 s at 100x; identical output contract). */
+  private def minhashClusters(docs: DataFrame): DataFrame =
+    DedupOps.connectedComponentsStar(minhashPairs(docs).select(col("id1"), col("id2")))
+
+  /** samp10/samp11's input: `(doc_id, lang, text)`. */
+  private def langTexts(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
+
+  /** The documents with their normalized 10-token prefix `text10`. */
+  private def text10(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .withColumn("text10", concat_ws(" ", slice(TextOps.tokens(lower(col("text"))), 1, 10)))
+
+  /** t9/samp4: `(doc_id, lang, <name>)` with the regex-heavy quality score
+    * computed once and pinned — the consumers scan it twice (threshold agg +
+    * join-probe; 10× bench min-of-2 7.4 s → 1.5 s, cold 10.1 s → 4.7 s). */
+  private def langQuality(s: SparkSession, dir: String, name: String): DataFrame =
+    pinned(t(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), TextOps.qualityScore(col("text")).as(name)))
+
+  /** e10/pipe5's BM25 queries: tokens `from`..`from + n - 1` of every 100th
+    * document below 5000, so the right doc (or chunk) should surface. */
+  private def bm25Queries(docs: DataFrame, from: Int, n: Int): DataFrame =
+    docs.filter(col("doc_id") % 100 === 0 && col("doc_id") < 5000)
+      .select(col("doc_id").as("qid"),
+        concat_ws(" ", slice(TextOps.tokens(lower(col("text"))), from, n)).as("qtext"))
+
+  /** t15/pipe5: sentence-boundary chunks to 32-token windows — the corpus has
+    * no punctuation, so sentence ends are planted on every 'table'. */
+  private def sentenceChunks(docs: DataFrame): DataFrame =
+    TextOps.chunkBySentences(
+      docs.withColumn("text2", regexp_replace(col("text"), "\\btable\\b", "table.")),
+      "doc_id", "text2", maxTokens = 32)
+
+  /** a19-a21's precip observations: the day's total `dayTotal(day of month)`
+    * rides on each (user, day)'s first event (the rest are zero), so daily sums
+    * are the exact planted values; `flag` runs over `(user_id, ts, pr,
+    * pr_eraqc)` and its output is projected to the oracle's columns. */
+  private def precipFlags(s: SparkSession, dir: String, dayTotal: Column => Column,
+      flag: (DataFrame, Seq[String], String, String, String) => DataFrame): DataFrame = {
+    val rn = row_number().over(Window.partitionBy(col("user_id"), to_date(col("ts")))
+      .orderBy(col("ts"), col("event_id")))
+    val obs = t(s, dir, "events").select(col("user_id"), col("event_id"), col("ts"),
+        when(rn === 1, dayTotal(dayofmonth(col("ts")))).otherwise(0.0).as("pr"),
+        lit(null).cast("int").as("pr_eraqc"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    flag(obs, Seq("user_id"), "ts", "pr", "pr_eraqc")
+      .select(col("user_id"), col("event_id"),
+        unix_timestamp(col("ts")).as("time_s"),
+        round(col("pr"), 4).as("pr"), col("pr_eraqc").as("flag"))
   }
 
   /** Marker sets chosen from the synthetic documents' vocabulary so language-ID is
@@ -137,18 +303,11 @@ object QueriesLlm {
     }),
 
     // Exact dedup on a 10-token prefix (24 collision groups in sf0.01)
-    "d1_dedup_exact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .withColumn("text10",
-          concat_ws(" ", slice(TextOps.tokens(lower(col("text"))), 1, 10)))
-      DedupOps.exactDedup(docs, "doc_id", "text10").select(col("doc_id"))
-    }),
+    "d1_dedup_exact" -> ((s, dir) =>
+      DedupOps.exactDedup(text10(s, dir), "doc_id", "text10").select(col("doc_id"))),
 
     // MinHash + banded LSH near-duplicate pairs, Jaccard-verified
-    "d2_minhash_neardups" -> ((s, dir) => {
-      DedupOps.minhashNearDups(t(s, dir, "documents"), "doc_id", "text",
-        threshold = 0.4, shingleN = 3, k = 32, bands = 8)
-    }),
+    "d2_minhash_neardups" -> ((s, dir) => minhashPairs(t(s, dir, "documents"))),
 
     // d22: the r12 bucket-cap LEDGER itself under the cross-engine gate — the
     // "no silent caps" audit companion to d2's banded LSH. The cap is
@@ -185,73 +344,34 @@ object QueriesLlm {
     // first obs (rest zero), so daily sums are exact planted values: uid%7==0
     // gets a 6-day run of 20.5 (flagged), uid%7==3 a 3-day run of 25.0 (below
     // dayThresh), zeros exercise the non-zero-day sequence, the rest are distinct
-    "a19_frequent_precip" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val day = to_date(col("ts"))
-      val di = dayofmonth(col("ts"))
-      val rn = row_number().over(Window.partitionBy(col("user_id"), day)
-        .orderBy(col("ts"), col("event_id")))
-      val tot = when(col("user_id") % 7 === 0 && di.between(10, 15), 20.5)
+    "a19_frequent_precip" -> ((s, dir) => precipFlags(s, dir, di =>
+      when(col("user_id") % 7 === 0 && di.between(10, 15), 20.5)
         .when(col("user_id") % 7 === 3 && di.between(10, 12), 25.0)
         .when(col("user_id") % 7 === 0 || col("user_id") % 7 === 3, di + 0.5)
         .when(di % 5 === 0, 0.0)
-        .otherwise(di * 1.5)
-      val obs = e.select(col("user_id"), col("event_id"), col("ts"),
-          when(rn === 1, tot).otherwise(0.0).as("pr"),
-          lit(null).cast("int").as("pr_eraqc"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.ops.AggOps.frequentPrecipFlag(obs, Seq("user_id"), "ts", "pr", "pr_eraqc")
-        .select(col("user_id"), col("event_id"),
-          unix_timestamp(col("ts")).as("time_s"),
-          round(col("pr"), 4).as("pr"), col("pr_eraqc").as("flag"))
-    }),
+        .otherwise(di * 1.5),
+      graft.ops.AggOps.frequentPrecipFlag(_, _, _, _, _))),
 
     // a20 / flag 32: daily-precip climatological outlier — ordinary days (1..5 mm)
     // anchor the monthly nonzero p95 at <= 5 (>= 21 ordinaries per user at sf0.01),
     // so 9*p95 <= 45 and the planted 100 mm day flags; di%7==3 zero days exercise
     // the nonzero-population filter
-    "a20_clim_precip" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val day = to_date(col("ts"))
-      val di = dayofmonth(col("ts"))
-      val rn = row_number().over(Window.partitionBy(col("user_id"), day)
-        .orderBy(col("ts"), col("event_id")))
-      val tot = when(col("user_id") % 6 === 0 && di === 14, 100.0)
+    "a20_clim_precip" -> ((s, dir) => precipFlags(s, dir, di =>
+      when(col("user_id") % 6 === 0 && di === 14, 100.0)
         .when(di % 7 === 3, 0.0)
-        .otherwise((di % 5).cast("double") + 1.0)
-      val obs = e.select(col("user_id"), col("event_id"), col("ts"),
-          when(rn === 1, tot).otherwise(0.0).as("pr"),
-          lit(null).cast("int").as("pr_eraqc"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.ops.AggOps.climOutlierPrecipFlag(obs, Seq("user_id"), "ts", "pr", "pr_eraqc")
-        .select(col("user_id"), col("event_id"),
-          unix_timestamp(col("ts")).as("time_s"),
-          round(col("pr"), 4).as("pr"), col("pr_eraqc").as("flag"))
-    }),
+        .otherwise((di % 5).cast("double") + 1.0),
+      graft.ops.AggOps.climOutlierPrecipFlag(_, _, _, _, _))),
 
     // a21 / flag 33: daily-precip unusual gap — the planted lone 500 mm day is
     // > 200 from every other daily total (incl. the zero grid days) and flags;
     // uid%11==5 plants TWO 500 days whose mutual gap is 0, so neither flags
     // (the all-others-differ rule); the op's sorted-neighbor window replaces the
     // reference's O(n^2) difference matrix
-    "a21_gap_precip" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val day = to_date(col("ts"))
-      val di = dayofmonth(col("ts"))
-      val rn = row_number().over(Window.partitionBy(col("user_id"), day)
-        .orderBy(col("ts"), col("event_id")))
-      val tot = when(col("user_id") % 11 === 0 && di === 25, 500.0)
+    "a21_gap_precip" -> ((s, dir) => precipFlags(s, dir, di =>
+      when(col("user_id") % 11 === 0 && di === 25, 500.0)
         .when(col("user_id") % 11 === 5 && (di === 24 || di === 25), 500.0)
-        .otherwise(((di % 9) * 4).cast("double"))
-      val obs = e.select(col("user_id"), col("event_id"), col("ts"),
-          when(rn === 1, tot).otherwise(0.0).as("pr"),
-          lit(null).cast("int").as("pr_eraqc"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.ops.AggOps.unusualGapsPrecipFlag(obs, Seq("user_id"), "ts", "pr", "pr_eraqc")
-        .select(col("user_id"), col("event_id"),
-          unix_timestamp(col("ts")).as("time_s"),
-          round(col("pr"), 4).as("pr"), col("pr_eraqc").as("flag"))
-    }),
+        .otherwise(((di % 9) * 4).cast("double")),
+      graft.ops.AggOps.unusualGapsPrecipFlag(_, _, _, _, _))),
 
     // d11: paragraph-level boilerplate removal — a constant banner paragraph planted
     // on every third doc survives only in its first corpus-wide occurrence
@@ -294,13 +414,7 @@ object QueriesLlm {
     // with the ads, not the original
     "d18_cluster_quality_keep" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val pairs = DedupOps.minhashNearDups(docs, "doc_id", "text",
-          threshold = 0.4, shingleN = 3, k = 32, bands = 8)
-        .select(col("id1"), col("id2"))
-      // star contraction: the 100x-adjudicated CC default (SCALE.md r11 —
-      // 85 s vs label-propagation's 322 s at 100x; identical output contract)
-      val clusters = DedupOps.connectedComponentsStar(pairs)
-        .withColumnRenamed("id", "doc_id")
+      val clusters = minhashClusters(docs).withColumnRenamed("id", "doc_id")
       DedupOps.resolveClustersByQuality(clusters,
           docs.select(col("doc_id"), col("n_chars")), "doc_id", "n_chars")
         .select(col("doc_id"), col("cluster"), col("keep"),
@@ -341,11 +455,7 @@ object QueriesLlm {
 
     // Brute-force cosine top-5 for 10 query vectors (exact ANN baseline)
     "e1_ann_brute" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .withColumn("v", col("embedding").cast("array<double>"))
-      val corpus = emb.select(col("vec_id").as("cid"), col("v").as("cv"))
-      val queries = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
+      val (corpus, queries) = annSides(vectors(s, dir))
       // the op already rounds cos to 6dp — re-rounding to 4dp would DOUBLE-round
       // (0.30624989 -> 0.306250 -> 0.3063) while the oracle's single ROUND(raw, 4)
       // gives 0.3062; emit the op's 6dp value and round ONCE on both sides
@@ -356,78 +466,46 @@ object QueriesLlm {
     // LSH-bucketed ANN (rows-only check here; recall >= 0.9 property-tested in
     // AnnOpsSpec against the brute-force baseline)
     "e2_ann_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .withColumn("v", col("embedding").cast("array<double>"))
-      val corpus = emb.select(col("vec_id").as("cid"), col("v").as("cv"))
-      val queries = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
+      val (corpus, queries) = annSides(vectors(s, dir))
       AnnOps.lshTopK(corpus, "cid", "cv", queries, "qid", "qv",
         k = 5, nPlanes = 10, dim = 64)
     }),
 
     // IVF coarse quantization: assign each vector to its nearest of 8 deterministic
     // basis-vector centroids (cosine argmax == component argmax, so the oracle is SQL)
-    "e3_ivf_assign" -> ((s, dir) => {
-      val dim = 64
-      val centroids = (0 until 8).map(i =>
-        Seq.tabulate(dim)(j => if (j == i) 1.0 else 0.0))
-      t(s, dir, "embeddings")
-        .withColumn("v", col("embedding").cast("array<double>"))
-        .withColumn("cid", AnnOps.ivfAssign(col("v"), centroids).cast("long"))
-        .groupBy(col("cid")).agg(count(lit(1)).as("n"))
-    }),
+    "e3_ivf_assign" -> ((s, dir) =>
+      vectors(s, dir)
+        .withColumn("cid", AnnOps.ivfAssign(col("v"), basisCentroids).cast("long"))
+        .groupBy(col("cid")).agg(count(lit(1)).as("n"))),
 
-    // Embedding-cosine near-dup: banded random-hyperplane LSH + exact cosine verify.
-    // The raw embeddings are mutually random (max pairwise cos ~0.51), so the query
-    // plants a perturbed near-copy of the first 50 vectors (0.9*v + 0.1*shift(v),
-    // cos ~0.99 to its source) — the op must recover those pairs through the buckets.
-    "d5_embed_neardups" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val planted = base.filter(col("vec_id") < 50)
-        .select((col("vec_id") + 100000).as("vec_id"),
-          transform(sequence(lit(1), lit(64)), j =>
-            lit(0.9) * element_at(col("v"), j) +
-            lit(0.1) * element_at(col("v"), pmod(j, lit(64)) + 1)).as("v"))
-      // 16-bit bands (48 planes / 3 bands): 8-bit keys saturate once the corpus
-      // approaches 2^8 per bucket — measured 711x slowdown at 50x data (SCALE.md r6)
-      DedupOps.embeddingNearDups(base.unionByName(planted), "vec_id", "v",
-        threshold = 0.8, nPlanes = 48, bands = 3, dim = 64)
-    }),
+    // Embedding-cosine near-dup: banded random-hyperplane LSH + exact cosine verify;
+    // the op must recover the planted near-copies through the buckets.
+    // 16-bit bands (48 planes / 3 bands): 8-bit keys saturate once the corpus
+    // approaches 2^8 per bucket — measured 711x slowdown at 50x data (SCALE.md r6)
+    "d5_embed_neardups" -> ((s, dir) =>
+      DedupOps.embeddingNearDups(plantedEmbeddings(s, dir), "vec_id", "v",
+        threshold = 0.8, nPlanes = 48, bands = 3, dim = 64)),
 
     // IVF search: probe the 2 nearest posting lists per query, brute-force within
     // e9: IVF RANGE search -- every corpus vector with cos >= 0.2 of each query
     // via the e4 posting-list plan; threshold filter instead of rank window, so
     // the op is shuffle-free (broadcast probes, argmax cells meet once)
     "e9_ivf_range" -> ((s, dir) => {
-      val centroids = (0 until 8).map(i =>
-        Seq.tabulate(64)(j => if (j == i) 1.0 else 0.0))
-      val emb = t(s, dir, "embeddings")
-        .withColumn("v", col("embedding").cast("array<double>"))
-      val corpus = emb.select(col("vec_id").as("cid"), col("v").as("cv"))
-      val queries = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
+      val (corpus, queries) = annSides(vectors(s, dir))
       AnnOps.ivfRangeSearch(corpus, "cid", "cv", queries, "qid", "qv",
-        centroids, nProbe = 2, minCos = 0.2)
+        basisCentroids, nProbe = 2, minCos = 0.2)
     }),
 
     "e4_ivf_topk" -> ((s, dir) => {
-      val centroids = (0 until 8).map(i =>
-        Seq.tabulate(64)(j => if (j == i) 1.0 else 0.0))
-      val emb = t(s, dir, "embeddings")
-        .withColumn("v", col("embedding").cast("array<double>"))
-      val corpus = emb.select(col("vec_id").as("cid"), col("v").as("cv"))
-      val queries = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
+      val (corpus, queries) = annSides(vectors(s, dir))
       AnnOps.ivfTopK(corpus, "cid", "cv", queries, "qid", "qv",
-        centroids, nProbe = 2, k = 5)
+        basisCentroids, nProbe = 2, k = 5)
     }),
 
     // Int8 scalar quantization round-trip: cosine(original, dequantized) and max
     // per-component reconstruction error — the embedding storage path at scale
     "e5_quantize" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .withColumn("v", col("embedding").cast("array<double>"))
+      val emb = vectors(s, dir)
         .withColumn("q", AnnOps.quantizeInt8(col("v")))
         .withColumn("dq", AnnOps.dequantizeInt8(col("q")))
       emb.select(col("vec_id"),
@@ -443,28 +521,19 @@ object QueriesLlm {
     // float64 brute force at identical ranking (property-pinned in
     // DedupAnnSpec; composes with e4's IVF cell pruning like e8 does for PQ)
     "e12_sq_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .withColumn("v", col("embedding").cast("array<double>"))
+      val emb = vectors(s, dir)
       val corpus = emb.select(col("vec_id").as("cid"),
         AnnOps.quantizeInt8(col("v")).as("sq"))
-      val queries = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      AnnOps.sqTopK(corpus, "cid", "sq", queries, "qid", "qv", k = 5)
+      AnnOps.sqTopK(corpus, "cid", "sq", annSides(emb)._2, "qid", "qv", k = 5)
     }),
 
     // e13: IVF + SQ top-k (r15) — e12's quantized scoring behind e4's cell
     // pruning, the SQ row of the quantized-index matrix (IVF+PQ = e8): the
     // index stores only (id, cell, int8 codes), queries scan nProbe cells
     "e13_ivfsq_topk" -> ((s, dir) => {
-      val centroids = (0 until 8).map(i =>
-        Seq.tabulate(64)(j => if (j == i) 1.0 else 0.0))
-      val emb = t(s, dir, "embeddings")
-        .withColumn("v", col("embedding").cast("array<double>"))
-      val corpus = emb.select(col("vec_id").as("cid"), col("v").as("cv"))
-      val queries = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
+      val (corpus, queries) = annSides(vectors(s, dir))
       AnnOps.ivfSqTopK(corpus, "cid", "cv", queries, "qid", "qv",
-        centroids, nProbe = 2, k = 5)
+        basisCentroids, nProbe = 2, k = 5)
     }),
 
     // Multimodal plumbing: byte-length accounting through the typed mapPartitions path
@@ -525,22 +594,18 @@ object QueriesLlm {
     // d9: benchmark decontamination — drop corpus docs whose normalized 10-token
     // prefix collides with the held-out set (source src0)
     "d9_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .withColumn("text10",
-          concat_ws(" ", slice(TextOps.tokens(lower(col("text"))), 1, 10)))
+      val docs = text10(s, dir)
       DedupOps.decontaminate(
         docs.filter(col("source") =!= "src0"),
         docs.filter(col("source") === "src0"), "text10")
         .select(col("doc_id"))
     }),
 
-    // d16: two-stage Bloom decontamination — result bit-identical to d9 (the
-    // oracle is d9's SQL verbatim); the bloom stage only routes rows around the
-    // anti-join shuffle.
+    // d16: two-stage Bloom decontamination — result bit-identical to d9 (both
+    // share one oracle); the bloom stage only routes rows around the anti-join
+    // shuffle.
     "d16_bloom_decontam" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .withColumn("text10",
-          concat_ws(" ", slice(TextOps.tokens(lower(col("text"))), 1, 10)))
+      val docs = text10(s, dir)
       DedupOps.decontaminateBloom(
         docs.filter(col("source") =!= "src0"),
         docs.filter(col("source") === "src0"), "text10",
@@ -578,11 +643,7 @@ object QueriesLlm {
     // beyond the d2/d7 stages themselves.
     "pipe3_near_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val pairs = DedupOps.minhashNearDups(docs, "doc_id", "text",
-          threshold = 0.4, shingleN = 3, k = 32, bands = 8)
-        .select(col("id1"), col("id2"))
-      // star contraction: the 100x-adjudicated CC default (SCALE.md r11)
-      val dropped = DedupOps.connectedComponentsStar(pairs)
+      val dropped = minhashClusters(docs)
         .filter(col("id") =!= col("cluster"))
         .select(col("id").as("doc_id"))
       docs.join(dropped, Seq("doc_id"), "left_anti")
@@ -601,10 +662,8 @@ object QueriesLlm {
     // e7: product quantization — 8 subspaces x 16 centroids (8 bytes/vector);
     // mse is exact (distance to the chosen centroid IS the reconstruction error)
     "e7_pq_encode" -> ((s, dir) => {
-      val cbs = AnnOps.pqCodebooks(m = 8, k = 16, subDim = 8, seed = 7L)
-      t(s, dir, "embeddings")
-        .withColumn("v", col("embedding").cast("array<double>"))
-        .withColumn("pq", AnnOps.pqEncode(col("v"), cbs))
+      vectors(s, dir)
+        .withColumn("pq", AnnOps.pqEncode(col("v"), pqBooks))
         .select(col("vec_id"),
           element_at(col("pq.codes"), 1).as("c0"),
           element_at(col("pq.codes"), 2).as("c1"),
@@ -613,31 +672,17 @@ object QueriesLlm {
 
     // e8: IVF-ADC — PQ codes in cosine cells, per-query L2 lookup tables
     "e8_ivfpq_topk" -> ((s, dir) => {
-      val dim = 64
-      val centroids = (0 until 8).map(i => Seq.tabulate(dim)(j => if (j == i) 1.0 else 0.0))
-      val cbs = AnnOps.pqCodebooks(m = 8, k = 16, subDim = 8, seed = 7L)
-      val emb = t(s, dir, "embeddings")
-        .withColumn("v", col("embedding").cast("array<double>"))
-      val corpus = emb.select(col("vec_id").as("cid"), col("v").as("cv"))
-      val queries = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
+      val (corpus, queries) = annSides(vectors(s, dir))
       AnnOps.ivfPqTopK(corpus, "cid", "cv", queries, "qid", "qv",
-        centroids, cbs, nProbe = 2, k = 5)
+        basisCentroids, pqBooks, nProbe = 2, k = 5)
     }),
 
     // e11: RESIDUAL IVF-PQ (FAISS IndexIVFPQ semantics) — PQ codes quantize
     // v − centroid(cell); one ADC LUT per probed cell from the query residual
     "e11_ivfpq_residual" -> ((s, dir) => {
-      val dim = 64
-      val centroids = (0 until 8).map(i => Seq.tabulate(dim)(j => if (j == i) 1.0 else 0.0))
-      val cbs = AnnOps.pqCodebooks(m = 8, k = 16, subDim = 8, seed = 7L)
-      val emb = t(s, dir, "embeddings")
-        .withColumn("v", col("embedding").cast("array<double>"))
-      val corpus = emb.select(col("vec_id").as("cid"), col("v").as("cv"))
-      val queries = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
+      val (corpus, queries) = annSides(vectors(s, dir))
       AnnOps.ivfPqResidualTopK(corpus, "cid", "cv", queries, "qid", "qv",
-        centroids, cbs, nProbe = 2, k = 5)
+        basisCentroids, pqBooks, nProbe = 2, k = 5)
     }),
 
     // e8t: the TRAINED IVF-ADC serving path — spherical-k-means cells (kmeansTrain,
@@ -649,17 +694,14 @@ object QueriesLlm {
     "e8t_ivfpq_trained" -> ((s, dir) => {
       // persisted across the 5 training jobs (3 k-means + 2 PQ iterations) so each
       // reads the cast projection from cache instead of re-scanning parquet
-      val emb = t(s, dir, "embeddings")
-        .withColumn("v", col("embedding").cast("array<double>"))
+      val emb = vectors(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val init: Seq[Seq[Double]] = emb.orderBy("vec_id").limit(8)
         .select(col("v")).collect().map(_.getSeq[Double](0).toSeq).toSeq
       val centroids = AnnOps.kmeansTrain(emb, "v", init, iters = 3)
       val cbs = AnnOps.pqTrain(emb, "v", m = 8, k = 16, subDim = 8,
-        init = AnnOps.pqCodebooks(m = 8, k = 16, subDim = 8, seed = 7L), iters = 2)
-      val corpus = emb.select(col("vec_id").as("cid"), col("v").as("cv"))
-      val queries = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
+        init = pqBooks, iters = 2)
+      val (corpus, queries) = annSides(emb)
       val result = AnnOps.ivfPqTopK(corpus, "cid", "cv", queries, "qid", "qv",
         centroids, cbs, nProbe = 2, k = 5)
       // the training collects above already ran eagerly, so the cache has served
@@ -708,39 +750,19 @@ object QueriesLlm {
     }),
 
     // t9: per-language quality floor — drop the bottom quartile of quality per
-    // lang. quantileGate scans its input twice (threshold agg + join-probe), so
-    // the regex-heavy qualityScore is materialized ONCE into a narrow persisted
-    // (doc_id, lang, quality) projection first — the same caller-unpersist cache
-    // contract as samp2/d2 (harness clears per query; 10× bench min-of-2
-    // 7.4 s → 1.5 s, cold 10.1 s → 4.7 s).
-    "t9_quantile_gate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          TextOps.qualityScore(col("text")).as("quality"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eager population (the mm10 lesson): the gate's threshold agg and its
-      // join-probe are concurrent AQE jobs — lazy, each re-ran the regex pass
-      docs.count()
-      graft.ops.AggOps.quantileGate(docs, Seq("lang"), "quality", 0.25)
-        .select(col("doc_id"))
-    }),
+    // lang over the pinned quality projection.
+    "t9_quantile_gate" -> ((s, dir) =>
+      graft.ops.AggOps.quantileGate(langQuality(s, dir, "quality"), Seq("lang"), "quality", 0.25)
+        .select(col("doc_id"))),
 
     // samp4: CCNet head/middle/tail buckets — per-language score terciles
-    // (quality stands in for the LM perplexity; lowerIsBetter flipped). Narrow
-    // persisted projection: the tercile agg and the bucket probe both consume
-    // the regex-heavy score, computed once (the t9 pattern).
-    "samp4_ccnet_buckets" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          TextOps.qualityScore(col("text")).as("q"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eager population (the t9 rationale)
-      docs.count()
-      TextOps.perplexityBuckets(docs, Seq("lang"), "q", lowerIsBetter = false)
+    // (quality stands in for the LM perplexity; lowerIsBetter flipped) over the
+    // pinned quality projection t9 uses.
+    "samp4_ccnet_buckets" -> ((s, dir) =>
+      TextOps.perplexityBuckets(langQuality(s, dir, "q"), Seq("lang"), "q", lowerIsBetter = false)
         .groupBy(col("lang"), col("ccnet_bucket"))
         .agg(count(lit(1)).as("n"),
-          sum(col("q").cast("decimal(18,6)")).cast("double").as("q_sum"))
-    }),
+          sum(col("q").cast("decimal(18,6)")).cast("double").as("q_sum"))),
 
     // samp5: XLM-R alpha-smoothed language sampling weights (alpha = 0.3) — the
     // tail languages get boost > 1, the head language < 1
@@ -784,11 +806,8 @@ object QueriesLlm {
       // timed query measures the real operator (container decode + PCM feature
       // pass), not javax.sound ENCODING of the fixture — exactly how a real
       // corpus would arrive (payloads on disk, not synthesized in-plan).
-      val rows = mediaFixture(s, dir, "mm3_wav_v2", did =>
-        graft.multimodal.MultimodalOps.MediaRow(did, "audio",
-          graft.multimodal.MultimodalOps.sineWav(
-            51 + (did % 7).toInt, 800 + (did % 5).toInt * 160),
-          Map.empty))
+      val rows = mediaFixture(s, dir, "mm3_wav_v2", "audio", did =>
+        MultimodalOps.sineWav(51 + (did % 7).toInt, 800 + (did % 5).toInt * 160))
       graft.multimodal.MultimodalOps.audioFrameFeatures(rows, windowSamples = 256)
         .toDF()
         .select(col("id").as("doc_id"), col("sampleRate").as("sample_rate"),
@@ -825,9 +844,8 @@ object QueriesLlm {
     // ledger twin samp10a shows its boundary accounting). Integer token
     // counts and integer order keys make both queries exactly SQL-portable.
     "samp10_token_budget" -> ((s, dir) => {
-      val (kept, _) = TextOps.tokenBudgetFill(
-        t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text")),
-        "doc_id", "lang", "text", samp10Budgets)
+      val (kept, _) = TextOps.tokenBudgetFill(langTexts(s, dir), "doc_id", "lang", "text",
+        samp10Budgets)
       kept.select(col("doc_id"), col("lang"), col("n_tokens"), col("cum_tokens"))
     }),
 
@@ -836,9 +854,8 @@ object QueriesLlm {
     // doc (first excluded in stream order; null = source exhausted under
     // budget, budget-0 sources surface their whole stream head here)
     "samp10a_budget_ledger" -> ((s, dir) => {
-      val (_, ledger) = TextOps.tokenBudgetFill(
-        t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text")),
-        "doc_id", "lang", "text", samp10Budgets)
+      val (_, ledger) = TextOps.tokenBudgetFill(langTexts(s, dir), "doc_id", "lang", "text",
+        samp10Budgets)
       ledger.select(col("lang"), col("budget"), col("n_kept"),
         col("tokens_filled"), col("boundary_id"), col("boundary_tokens"))
     }),
@@ -850,9 +867,8 @@ object QueriesLlm {
     // (full=0), es 2 full epochs + mid-stream partial, fr capped at 3 epochs
     // (filled < budget), zh an exact 2-epoch fill (rem=0), de absent -> 0
     "samp11_epoch_plan" -> ((s, dir) => {
-      val (plan, _) = TextOps.tokenBudgetEpochPlan(
-        t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text")),
-        "doc_id", "lang", "text", samp11Budgets, maxEpochs = 3)
+      val (plan, _) = TextOps.tokenBudgetEpochPlan(langTexts(s, dir), "doc_id", "lang", "text",
+        samp11Budgets, maxEpochs = 3)
       plan.select(col("doc_id"), col("lang"), col("n_tokens"), col("n_epochs"))
     }),
 
@@ -861,9 +877,8 @@ object QueriesLlm {
     // only when the epoch CAP, not the budget, stopped the fill — fr here;
     // zh's exact 2-epoch fill reports the would-be-epoch-3 head as boundary)
     "samp11a_epoch_ledger" -> ((s, dir) => {
-      val (_, ledger) = TextOps.tokenBudgetEpochPlan(
-        t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text")),
-        "doc_id", "lang", "text", samp11Budgets, maxEpochs = 3)
+      val (_, ledger) = TextOps.tokenBudgetEpochPlan(langTexts(s, dir), "doc_id", "lang", "text",
+        samp11Budgets, maxEpochs = 3)
       ledger.select(col("lang"), col("budget"), col("total_tokens"),
         col("full_epochs"), col("n_partial"), col("tokens_filled"),
         col("boundary_id"), col("boundary_tokens"))
@@ -887,12 +902,8 @@ object QueriesLlm {
     // WindowGroupLimit cap: mega-cells ship 25 rows per map task, never the
     // cell's full membership.
     "samp7_cluster_cap" -> ((s, dir) => {
-      val dim = 64
-      val centroids = (0 until 8).map(i =>
-        Seq.tabulate(dim)(j => if (j == i) 1.0 else 0.0))
-      val emb = t(s, dir, "embeddings")
-        .withColumn("v", col("embedding").cast("array<double>"))
-        .withColumn("cid", AnnOps.ivfAssign(col("v"), centroids).cast("long"))
+      val emb = vectors(s, dir)
+        .withColumn("cid", AnnOps.ivfAssign(col("v"), basisCentroids).cast("long"))
         .withColumn("rep", round(
           when(AnnOps.dot(col("v"), col("v")) === 0, 0.0)
             .otherwise(element_at(col("v"), col("cid").cast("int") + 1) /
@@ -982,21 +993,8 @@ object QueriesLlm {
     // member 3 seven), so the kept pairs are the three member-0 pairs at
     // hamming 4/5/7 while the 1-2/1-3/2-3 pairs (hamming 9/11/12) prove the
     // verify filter, not the bands, draws the line.
-    "mm4w_wide_neardups" -> ((s, dir) => {
-      val g = md5(concat(lit("w"), (col("doc_id") / 4).cast("long").cast("string")))
-      val codes = t(s, dir, "documents")
-        .select(col("doc_id"),
-          conv(substring(g, 1, 8), 16, 10).cast("long").as("hi0"),
-          conv(substring(g, 9, 8), 16, 10).cast("long").as("lo0"),
-          pmod(col("doc_id"), lit(4)).as("m"))
-        .select(col("doc_id"),
-          when(col("m") === 3, col("hi0").bitwiseXOR(lit(0x7f00L)))
-            .otherwise(col("hi0")).as("hi"),
-          when(col("m") === 1, col("lo0").bitwiseXOR(lit(0xfL)))
-            .when(col("m") === 2, col("lo0").bitwiseXOR(lit(0x1f00000L)))
-            .otherwise(col("lo0")).as("lo"))
-      DedupOps.hamming64Pairs(codes, "doc_id", "hi", "lo", maxHamming = 7)
-    }),
+    "mm4w_wide_neardups" -> ((s, dir) =>
+      DedupOps.hamming64Pairs(wideCodes(s, dir), "doc_id", "hi", "lo", maxHamming = 7)),
 
     // mm4p: pHash (DCT) perceptual near-dup pairs (r15) — the industry-
     // standard ROBUST image hash: dHash's local gradients flip on small
@@ -1010,10 +1008,8 @@ object QueriesLlm {
     // jitters), 8-20 filtered (strong) — both sides of the verify line.
     "mm4p_phash_neardups" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      val rows = mediaFixture(s, dir, "mm4p_png_v1", did =>
-        graft.multimodal.MultimodalOps.MediaRow(did, "image",
-          graft.multimodal.MultimodalOps.mm4pFixturePng(did), Map.empty))
-      val h = graft.multimodal.MultimodalOps.imagePHashes(rows)
+      val rows = mediaFixture(s, dir, "mm4p_png_v1", "image", MultimodalOps.mm4pFixturePng)
+      val h = MultimodalOps.imagePHashes(rows)
       DedupOps.hamming64Pairs(h, "id", "hi", "lo", maxHamming = 7)
     }),
 
@@ -1027,11 +1023,8 @@ object QueriesLlm {
     "mm4r_dhash_decode" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       import sp.implicits._
-      val rows = mediaFixture(s, dir, "mm4r_png_v1", did =>
-        graft.multimodal.MultimodalOps.MediaRow(did, "image",
-          graft.multimodal.MultimodalOps.mm4FixturePng(did), Map.empty))
-      val gray = graft.multimodal.MultimodalOps.imageGrayRaster(rows)
-      graft.multimodal.MultimodalOps.dHashNearDups(gray, "id", "gray")
+      val gray = MultimodalOps.imageGrayRaster(mm4rImages(s, dir))
+      MultimodalOps.dHashNearDups(gray, "id", "gray")
     }),
 
     // pipe6: image-curation funnel (VERDICT r12 #6 — the cap-ledger audit
@@ -1043,25 +1036,14 @@ object QueriesLlm {
     // same row as the counts it would distort.
     "pipe6_image_curation" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      val rows = mediaFixture(s, dir, "mm4r_png_v1", did =>
-        graft.multimodal.MultimodalOps.MediaRow(did, "image",
-          graft.multimodal.MultimodalOps.mm4FixturePng(did), Map.empty))
       // one decode pass feeds all three consumers (pairs, ledger, contrast)
-      val gray = graft.multimodal.MultimodalOps.imageGrayRaster(rows)
+      val gray = MultimodalOps.imageGrayRaster(mm4rImages(s, dir))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pairs = graft.multimodal.MultimodalOps.dHashNearDups(gray, "id", "gray")
-      // keep-smallest-id: any image with a near-dup partner of smaller id drops
-      val dropped = pairs.select(col("id2").as("id")).distinct()
-      val survivors = gray.join(dropped, Seq("id"), "left_anti")
-        .select(col("id"),
-          (array_max(col("gray")) - array_min(col("gray"))).as("_contrast"))
-      val funnel = gray.agg(count(lit(1)).as("n_input"))
-        .crossJoin(dropped.agg(count(lit(1)).as("n_dup_dropped")))
-        .crossJoin(survivors.agg(
-          count(when(col("_contrast") < 128, lit(1))).as("n_low_contrast"),
-          count(when(col("_contrast") >= 128, lit(1))).as("n_kept")))
-      funnel.crossJoin(
-        graft.multimodal.MultimodalOps.dHashCapStats(gray, "id", "gray"))
+      val contrast = array_max(col("gray")) - array_min(col("gray"))
+      dropFunnel(gray.select(col("id"), contrast.as("_contrast")),
+          MultimodalOps.dHashNearDups(gray, "id", "gray"),
+          "n_low_contrast" -> (col("_contrast") < 128), "n_kept" -> (col("_contrast") >= 128))
+        .crossJoin(MultimodalOps.dHashCapStats(gray, "id", "gray"))
     }),
 
     // mm5: the VIDEO on-ramp under the gate (VERDICT r12 #1) — real MJPEG-AVI
@@ -1079,9 +1061,7 @@ object QueriesLlm {
       // r14: per-parity containers — even docs RIFF/AVI, odd docs ISO-BMFF/MP4
       // — so the query exercises BOTH from-scratch container walks under the
       // same container-independent analytic oracle
-      val rows = mediaFixture(s, dir, "mm5_av_v2", did =>
-        graft.multimodal.MultimodalOps.MediaRow(did, "video",
-          graft.multimodal.MultimodalOps.mm5FixtureVideo(did), Map.empty))
+      val rows = mediaFixture(s, dir, "mm5_av_v2", "video", MultimodalOps.mm5FixtureVideo)
       // fused walk→decode→raster kernel (r13): one typed boundary per frame
       // instead of three (tuple → MediaRow → row re-serialized the ~KB frame
       // payload twice per frame)
@@ -1109,39 +1089,18 @@ object QueriesLlm {
     // with a small per-video brightness jitter), so the four group members
     // pair at sim 1.0-ish while groups stay independent. Analytic oracle:
     // rebuilds every keyframe hash in SQL and does the (tiny) all-pairs rollup.
-    "mm6_video_neardups" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rows = mediaFixture(s, dir, "mm6_avi_v2", did =>
-        graft.multimodal.MultimodalOps.MediaRow(did, "video",
-          graft.multimodal.MultimodalOps.mm6FixtureAvi(did), Map.empty))
-      // caller-held persist (the videoNearDupsFromKeyframes contract): the
-      // keyframe table feeds both the pairing and the per-video counts; the
-      // harness clears the cache per query, library callers unpersist
-      val kf = graft.multimodal.MultimodalOps.videoKeyframeHashes(
-          graft.multimodal.MultimodalOps.videoGrayRasters(rows))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eager population (the mm10 lesson, measured at 100×): a lazy cache
-      // first-touched by concurrently-submitted AQE jobs decodes once PER JOB
-      kf.count()
-      graft.multimodal.MultimodalOps.videoNearDupsFromKeyframes(kf)
-    }),
+    // The keyframe table is a caller-held persist (the
+    // videoNearDupsFromKeyframes contract).
+    "mm6_video_neardups" -> ((s, dir) =>
+      MultimodalOps.videoNearDupsFromKeyframes(mm6Keyframes(s, dir))),
 
     // pipe7: video-curation funnel (pipe6's contract for video) — ONE persisted
     // keyframe table (behind the container-walk+decode pass) feeds the
     // cross-video pair op, the keep-smallest-id drop, the survivor count, AND
     // the hamming-band cap ledger, all in one audit row.
     "pipe7_video_curation" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rows = mediaFixture(s, dir, "mm6_avi_v2", did =>
-        graft.multimodal.MultimodalOps.MediaRow(did, "video",
-          graft.multimodal.MultimodalOps.mm6FixtureAvi(did), Map.empty))
-      val kf = graft.multimodal.MultimodalOps.videoKeyframeHashes(
-          graft.multimodal.MultimodalOps.videoGrayRasters(rows))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eager population (the mm10 lesson): four consumers land on this cache
-      // as concurrently-submitted broadcast-build jobs — lazy, each re-decoded
-      kf.count()
-      val pairs = graft.multimodal.MultimodalOps.videoNearDupsFromKeyframes(kf)
+      val kf = mm6Keyframes(s, dir)
+      val pairs = MultimodalOps.videoNearDupsFromKeyframes(kf)
       val dropped = pairs.select(col("vid2").as("id")).distinct()
       kf.select(col("id")).distinct().agg(count(lit(1)).as("n_input"))
         .crossJoin(dropped.agg(count(lit(1)).as("n_dup_dropped")))
@@ -1153,17 +1112,9 @@ object QueriesLlm {
     // 64-bit code per video (TMK-style temporal pooling of keyframe dHashes)
     // through the same banded chassis, so candidate volume is O(videos) and
     // independent of video length. Shares mm6's fixture corpus and oracle CTEs.
-    "mm8_video_hash_neardups" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rows = mediaFixture(s, dir, "mm6_avi_v2", did =>
-        graft.multimodal.MultimodalOps.MediaRow(did, "video",
-          graft.multimodal.MultimodalOps.mm6FixtureAvi(did), Map.empty))
-      val vh = graft.multimodal.MultimodalOps.videoHash64(
-        graft.multimodal.MultimodalOps.videoKeyframeHashes(
-          graft.multimodal.MultimodalOps.videoGrayRasters(rows)))
-      DedupOps.hamming64Pairs(vh, "id", "hi", "lo")
-        .select(col("id1"), col("id2"), col("hamming"))
-    }),
+    "mm8_video_hash_neardups" -> ((s, dir) =>
+      DedupOps.hamming64Pairs(mm6VideoHashes(s, dir), "id", "hi", "lo")
+        .select(col("id1"), col("id2"), col("hamming"))),
 
     // mm9: INCREMENTAL video dedup — d19's contract on pooled video hashes:
     // a new crawl drop (every 10th video) checks against the stored corpus
@@ -1174,19 +1125,8 @@ object QueriesLlm {
     // capped band can hide a new item's ONLY match, so the incremental
     // contract surfaces the audit with every drop, not as a separate query.
     "mm9_incremental_video" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rows = mediaFixture(s, dir, "mm6_avi_v2", did =>
-        graft.multimodal.MultimodalOps.MediaRow(did, "video",
-          graft.multimodal.MultimodalOps.mm6FixtureAvi(did), Map.empty))
-      // one decode feeds both sides (the d2 persist contract); eagerly
-      // populated (the mm10 lesson) — the cap-stats crossJoin's broadcast
-      // build is submitted concurrently with the incremental chain, and a
-      // lazy cache would decode once per job
-      val vh = graft.multimodal.MultimodalOps.videoHash64(
-          graft.multimodal.MultimodalOps.videoKeyframeHashes(
-            graft.multimodal.MultimodalOps.videoGrayRasters(rows)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      vh.count()
+      // one pinned decode feeds both sides and the cap-stats crossJoin
+      val vh = pinned(mm6VideoHashes(s, dir))
       DedupOps.hamming64IncrementalNearDups(
           vh.filter(col("id") % 10 =!= 0), vh.filter(col("id") % 10 === 0),
           "id", "hi", "lo")
@@ -1203,18 +1143,7 @@ object QueriesLlm {
     // 5, member-3 stays novel (7 > 6) — and the shard∪catalog WIDE cap
     // ledger rides the row (the incremental audit contract).
     "mm9w_incremental_wide" -> ((s, dir) => {
-      val g = md5(concat(lit("w"), (col("doc_id") / 4).cast("long").cast("string")))
-      val codes = t(s, dir, "documents")
-        .select(col("doc_id"),
-          conv(substring(g, 1, 8), 16, 10).cast("long").as("hi0"),
-          conv(substring(g, 9, 8), 16, 10).cast("long").as("lo0"),
-          pmod(col("doc_id"), lit(4)).as("m"))
-        .select(col("doc_id"),
-          when(col("m") === 3, col("hi0").bitwiseXOR(lit(0x7f00L)))
-            .otherwise(col("hi0")).as("hi"),
-          when(col("m") === 1, col("lo0").bitwiseXOR(lit(0xfL)))
-            .when(col("m") === 2, col("lo0").bitwiseXOR(lit(0x1f00000L)))
-            .otherwise(col("lo0")).as("lo"))
+      val codes = wideCodes(s, dir)
       DedupOps.hamming64IncrementalNearDups(
           codes.filter(col("doc_id") % 10 =!= 0),
           codes.filter(col("doc_id") % 10 === 0),
@@ -1235,9 +1164,7 @@ object QueriesLlm {
     // 4-halves of an 8-group match audio-only.
     "mm10_av_neardups" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      val rows = mediaFixture(s, dir, "mm10_av_v1", did =>
-        graft.multimodal.MultimodalOps.MediaRow(did, "video",
-          graft.multimodal.MultimodalOps.mm10FixtureVideo(did), Map.empty))
+      val rows = mediaFixture(s, dir, "mm10_av_v1", "video", MultimodalOps.mm10FixtureVideo)
       // caller-held persists (r15 optimization round): avNearDups consumes each
       // code table THREE times (banded pairing + two id-keyed join-backs), and
       // each table sits behind a full container decode pass — unpersisted, the
@@ -1259,24 +1186,17 @@ object QueriesLlm {
       // videoAvRasters emits rasters + window-RMS from a single walk; the
       // per-video A/V feature cache is released as soon as the two code
       // tables are pinned.
-      val av = graft.multimodal.MultimodalOps.videoAvRasters(rows)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      av.count()
-      val vh = graft.multimodal.MultimodalOps.videoHash64(
-          graft.multimodal.MultimodalOps.videoKeyframeHashes(
+      val av = pinned(MultimodalOps.videoAvRasters(rows))
+      val vh = pinned(MultimodalOps.videoHash64(
+          MultimodalOps.videoKeyframeHashes(
             av.select(col("id"), explode(col("frames")).as("_f"))
               .select(col("id"), col("_f._1").as("frame_idx"), col("_f._2").as("gray"))))
-        .select(col("id"), col("hi"), col("lo"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      vh.count()
-      val eh = av.filter(col("window_rms").isNotNull)
-        .select(col("id"),
-          graft.multimodal.MultimodalOps.energyHash64(col("window_rms")).as("_eh"))
-        .select(col("id"), col("_eh.hi").as("hi"), col("_eh.lo").as("lo"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      eh.count()
+        .select(col("id"), col("hi"), col("lo")))
+      val eh = pinned(av.filter(col("window_rms").isNotNull)
+        .select(col("id"), MultimodalOps.energyHash64(col("window_rms")).as("_eh"))
+        .select(col("id"), col("_eh.hi").as("hi"), col("_eh.lo").as("lo")))
       av.unpersist()
-      graft.multimodal.MultimodalOps.avNearDups(vh, eh)
+      MultimodalOps.avNearDups(vh, eh)
     }),
 
     // mm7: AUDIO near-dup pairs (VERDICT r13 #3) — sign-of-delta energy hash
@@ -1288,11 +1208,7 @@ object QueriesLlm {
     "mm7_audio_neardups" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       import sp.implicits._
-      val rows = mediaFixture(s, dir, "mm7_wav_v1", did =>
-        graft.multimodal.MultimodalOps.MediaRow(did, "audio",
-          graft.multimodal.MultimodalOps.mm7FixtureWav(did), Map.empty))
-      val h = graft.multimodal.MultimodalOps
-        .audioFrameFeatures(rows, windowSamples = 256).toDF()
+      val h = MultimodalOps.audioFrameFeatures(mm7Wavs(s, dir), windowSamples = 256).toDF()
         .select(col("id"),
           graft.multimodal.MultimodalOps.energyHash64(col("windowRms")).as("_eh"))
         .select(col("id"), col("_eh.hi").as("_hi"), col("_eh.lo").as("_lo"))
@@ -1308,26 +1224,14 @@ object QueriesLlm {
     // all in one audit row.
     "pipe8_audio_curation" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      val rows = mediaFixture(s, dir, "mm7_wav_v1", did =>
-        graft.multimodal.MultimodalOps.MediaRow(did, "audio",
-          graft.multimodal.MultimodalOps.mm7FixtureWav(did), Map.empty))
-      val feats = graft.multimodal.MultimodalOps
-        .audioFrameFeatures(rows, windowSamples = 256).toDF()
+      val feats = pinned(MultimodalOps.audioFrameFeatures(mm7Wavs(s, dir), windowSamples = 256)
+        .toDF()
         .select(col("id"), col("rms"),
-          graft.multimodal.MultimodalOps.energyHash64(col("windowRms")).as("_eh"))
+          MultimodalOps.energyHash64(col("windowRms")).as("_eh"))
         .select(col("id"), col("rms"),
-          col("_eh.hi").as("hi"), col("_eh.lo").as("lo"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eager population (the mm10 lesson): five consumers, concurrent builds
-      feats.count()
-      val pairs = DedupOps.hamming64Pairs(feats, "id", "hi", "lo")
-      val dropped = pairs.select(col("id2").as("id")).distinct()
-      val survivors = feats.join(dropped, Seq("id"), "left_anti")
-      feats.agg(count(lit(1)).as("n_input"))
-        .crossJoin(dropped.agg(count(lit(1)).as("n_dup_dropped")))
-        .crossJoin(survivors.agg(
-          count(when(col("rms") < 17000.0, lit(1))).as("n_low_energy"),
-          count(when(col("rms") >= 17000.0, lit(1))).as("n_kept")))
+          col("_eh.hi").as("hi"), col("_eh.lo").as("lo")))
+      dropFunnel(feats, DedupOps.hamming64Pairs(feats, "id", "hi", "lo"),
+          "n_low_energy" -> (col("rms") < 17000.0), "n_kept" -> (col("rms") >= 17000.0))
         .crossJoin(DedupOps.hamming64CapStats(feats, "id", "hi", "lo"))
     }),
 
@@ -1343,11 +1247,8 @@ object QueriesLlm {
     // top (self-retrieval sanity built into the fixture)
     "e10_bm25" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val qs = docs.filter(col("doc_id") % 100 === 0 && col("doc_id") < 5000)
-        .select(col("doc_id").as("qid"),
-          concat_ws(" ",
-            slice(TextOps.tokens(lower(col("text"))), 1, 6)).as("qtext"))
-      TextOps.bm25Retrieve(docs, "doc_id", "text", qs, "qid", "qtext", k = 3)
+      TextOps.bm25Retrieve(docs, "doc_id", "text", bm25Queries(docs, 1, 6),
+        "qid", "qtext", k = 3)
     }),
 
     // pipe5: the RAG serving slice as ONE plan — long documents chunked to
@@ -1363,22 +1264,11 @@ object QueriesLlm {
       // CHUNK table, so unpinned each consumer re-ran the whole sentence-chunk
       // derivation (posexplode + per-doc window + reassembly groupBy). One
       // chunking pass now feeds both; harness clearCache releases it.
-      val chunks = TextOps.chunkBySentences(
-          docs.withColumn("text2",
-            regexp_replace(col("text"), "\\btable\\b", "table.")),
-          "doc_id", "text2", maxTokens = 32)
+      val chunks = pinned(sentenceChunks(docs)
         .select(concat(col("doc_id").cast("string"), lit("#"),
-          col("chunk_id").cast("string")).as("cid"), col("chunk_text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // eager population (the mm10 lesson): bm25Retrieve's stats agg and
-      // postings build are submitted as concurrent AQE jobs — a lazy cache
-      // first-touched by both re-runs the chunk derivation once per job
-      chunks.count()
-      val qs = docs.filter(col("doc_id") % 100 === 0 && col("doc_id") < 5000)
-        .select(col("doc_id").as("qid"),
-          concat_ws(" ",
-            slice(TextOps.tokens(lower(col("text"))), 7, 5)).as("qtext"))
-      TextOps.bm25Retrieve(chunks, "cid", "chunk_text", qs, "qid", "qtext", k = 3)
+          col("chunk_id").cast("string")).as("cid"), col("chunk_text")))
+      TextOps.bm25Retrieve(chunks, "cid", "chunk_text", bm25Queries(docs, 7, 5),
+        "qid", "qtext", k = 3)
     }),
 
     // t14: C4 line+page cleaning rules — planted lines exercise every rule:
@@ -1403,11 +1293,7 @@ object QueriesLlm {
 
     // t15: intra-doc sentence-boundary chunking to 32-token context windows — the
     // corpus has no punctuation, so sentence ends are planted on every 'table'
-    "t15_sentence_chunks" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .withColumn("text2", regexp_replace(col("text"), "\\btable\\b", "table."))
-      TextOps.chunkBySentences(docs, "doc_id", "text2", maxTokens = 32)
-    }),
+    "t15_sentence_chunks" -> ((s, dir) => sentenceChunks(t(s, dir, "documents"))),
 
     // samp1: deterministic hash-based stratified sampling by language
     "samp1_stratified" -> ((s, dir) => {
@@ -1468,32 +1354,16 @@ object QueriesLlm {
     // d12: SemDeDup semantic near-dup removal — the d5 planted corpus (0.9v +
     // 0.1 shifted twins of vec_id < 50), basis-vector cells (e4's centroid set;
     // kmeansTrain supplies real centroids in production), cosine >= 0.85
-    "d12_semdedup" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val planted = base.filter(col("vec_id") < 50)
-        .select((col("vec_id") + 100000).as("vec_id"),
-          transform(sequence(lit(1), lit(64)), j =>
-            lit(0.9) * element_at(col("v"), j) +
-            lit(0.1) * element_at(col("v"), pmod(j, lit(64)) + 1)).as("v"))
-      val centroids = (0 until 8).map(i =>
-        Seq.tabulate(64)(j => if (j == i) 1.0 else 0.0))
-      DedupOps.semanticDedup(base.unionByName(planted), "vec_id", "v",
-        centroids, threshold = 0.85)
-    }),
+    "d12_semdedup" -> ((s, dir) =>
+      DedupOps.semanticDedup(plantedEmbeddings(s, dir), "vec_id", "v",
+        basisCentroids, threshold = 0.85)),
 
     // d13: duplicated-span detection — planted docs replicate a 60-token prefix
     // of every 20th source doc (>= k+w-1 = 50 tokens, so the winnowing guarantee
     // forces a shared fingerprint); output = docs sharing any >=50-token run
-    "d13_dup_spans" -> ((s, dir) => {
-      val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val planted = base.filter(col("doc_id") % 20 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          concat(concat_ws(" ", slice(TextOps.tokens(col("text")), 1, 60)),
-            lit(" planted tail marker "), col("doc_id").cast("string")).as("text"))
-      DedupOps.duplicatedSpans(base.unionByName(planted), "doc_id", "text")
-        .filter(col("n_shared_spans") > 0)
-    }),
+    "d13_dup_spans" -> ((s, dir) =>
+      DedupOps.duplicatedSpans(plantedSpans(s, dir), "doc_id", "text")
+        .filter(col("n_shared_spans") > 0)),
 
     // d15: duplicated-span REMOVAL (the Lee et al. second half over d13's planted
     // fixture). Rows-only BY DESIGN: the positional argmin's rightmost-tie rule
@@ -1501,12 +1371,7 @@ object QueriesLlm {
     // WinnowSelectPosSpec pin the semantics; d13 IS the oracle-checked detection
     // path over the same fingerprints).
     "d15_span_removal" -> ((s, dir) => {
-      val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val planted = base.filter(col("doc_id") % 20 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          concat(concat_ws(" ", slice(TextOps.tokens(col("text")), 1, 60)),
-            lit(" planted tail marker "), col("doc_id").cast("string")).as("text"))
-      DedupOps.removeDuplicatedSpans(base.unionByName(planted), "doc_id", "text")
+      DedupOps.removeDuplicatedSpans(plantedSpans(s, dir), "doc_id", "text")
         .filter(col("n_tokens_dropped") > 0)
         .select(col("doc_id"), md5(col("text")).as("text_md5"),
           col("n_tokens_dropped"))
@@ -1515,7 +1380,7 @@ object QueriesLlm {
 
   // ---- oracle SQL ------------------------------------------------------------
 
-  /** The g1 PageRank oracle, rounds unrolled mechanically (the d5PlanesSql
+  /** The g1 PageRank oracle, rounds unrolled mechanically (the planesSql
     * pattern: generated SQL mirroring the exact Spark computation). Explicit
     * `::DOUBLE` casts keep DuckDB's decimal literals out of the float path so
     * `(1-d)/N + d*m` is the identical IEEE expression on both engines. */
@@ -1576,18 +1441,25 @@ object QueriesLlm {
         GROUP BY p.d"""
   }
 
-  /** mm4 AND mm4r oracle: the dHash pipeline replayed — same md5 raster
-    * synthesis, halves summed from shifted-1 powers (never bit 63 in one
-    * code), band self-join, bit_count(xor) verify. mm4r's payloads are real
-    * PNGs of the same grid (r=g=b=v, 9×8 identity box-mean), so the decoded
-    * raster equals the synthesized one value-for-value. */
-  /** Shared CTE block for mm4/mm4r/pipe6: the md5 grid, its dHash halves, and
-    * the 4×16-bit band explode — the analytic twin of mm4FixturePng →
-    * imageGrayRaster → dHash. The bc CTE replicates Spark's
-    * maxBucketSize=2000 skew cap so both engines compute the identical pair
-    * set at ANY scale factor (ADVICE r11). */
+  /** Pairs `p(id1, id2, hamming)` of the band table `b(doc_id, hi, lo,
+    * band)`; `bc` replicates Spark's maxBucketSize=2000 skew cap so both
+    * engines compute the identical pair set at ANY scale factor (ADVICE r11). */
+  private val bandPairCtes: String =
+    """bc AS (SELECT band FROM b GROUP BY band HAVING COUNT(*) <= 2000),
+        p AS (
+          SELECT DISTINCT a.doc_id AS id1, b2.doc_id AS id2,
+            bit_count(xor(a.hi, b2.hi)) + bit_count(xor(a.lo, b2.lo)) AS hamming
+          FROM b a JOIN b b2 USING (band) JOIN bc USING (band)
+          WHERE a.doc_id < b2.doc_id)"""
+
+  /** mm4/mm4r/pipe6 oracle CTEs: the md5 grid `g`, its dHash halves `h`
+    * (summed from shifted-1 powers, never bit 63 in one code) and the
+    * 4×16-bit band explode `b` — the analytic twin of mm4FixturePng →
+    * imageGrayRaster → dHash. mm4r's payloads are real PNGs of the same grid
+    * (r=g=b=v, 9×8 identity box-mean), so the decoded raster equals the
+    * synthesized one value-for-value. */
   private val mm4GridCtes: String =
-    """g AS (
+    s"""g AS (
           SELECT doc_id, doc_id // 4 AS gid,
             list_transform(generate_series(0, 71), p ->
               CAST(((('0x' || substring(md5(gid::VARCHAR || ':' || p::VARCHAR),
@@ -1613,12 +1485,7 @@ object QueriesLlm {
                     '2:' || CAST(hi & 65535 AS VARCHAR),
                     '3:' || CAST((hi >> 16) & 65535 AS VARCHAR)]) AS band
           FROM h),
-        bc AS (SELECT band FROM b GROUP BY band HAVING COUNT(*) <= 2000),
-        p AS (
-          SELECT DISTINCT a.doc_id AS id1, b2.doc_id AS id2,
-            bit_count(xor(a.hi, b2.hi)) + bit_count(xor(a.lo, b2.lo)) AS hamming
-          FROM b a JOIN b b2 USING (band) JOIN bc USING (band)
-          WHERE a.doc_id < b2.doc_id)"""
+        $bandPairCtes"""
 
   private val mm4PairsSql: String =
     s"""WITH $mm4GridCtes
@@ -1637,12 +1504,7 @@ object QueriesLlm {
           WHERE dropped.doc_id IS NULL),
         bn AS (SELECT band, COUNT(*) AS n FROM b GROUP BY band),
         ledger AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets,
-                 CAST(SUM(CASE WHEN n > 2000 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_buckets_capped,
-                 CAST(COALESCE(SUM(CASE WHEN n > 2000 THEN n END), 0) AS BIGINT)
-                   AS n_members_excluded,
-                 CAST(MAX(n) AS BIGINT) AS max_bucket
+          SELECT ${capLedgerSql(2000)}
           FROM bn)
         SELECT (SELECT COUNT(*) FROM g) AS n_input,
                (SELECT COUNT(*) FROM dropped) AS n_dup_dropped,
@@ -1651,21 +1513,99 @@ object QueriesLlm {
                n_buckets, n_buckets_capped, n_members_excluded, max_bucket
         FROM ledger"""
 
-  /** mm5's analytic twin: rebuild each (video, frame)'s flat-block gray grid
-    * from the md5(doc:shot:cell)+jitter synthesis (exact through the JPEG
-    * round-trip and the 72×64→9×8 box mean — both identities by construction,
-    * see mm5FixtureAvi), dHash it with mm4's SQL formula, and lag-window the
-    * hamming per video for the keyframe flag. */
-  private val mm5KeyframesSql: String =
-    """WITH fr AS (
+  /** The 8×8-bit band keys of a 64-bit code `(hi, lo)`: the layout the
+    * hamming64 chassis picks above radius 3. */
+  private val band8Sql: String =
+    """unnest([
+             '0:' || CAST(lo & 255 AS VARCHAR),
+             '1:' || CAST((lo >> 8) & 255 AS VARCHAR),
+             '2:' || CAST((lo >> 16) & 255 AS VARCHAR),
+             '3:' || CAST((lo >> 24) & 255 AS VARCHAR),
+             '4:' || CAST(hi & 255 AS VARCHAR),
+             '5:' || CAST((hi >> 8) & 255 AS VARCHAR),
+             '6:' || CAST((hi >> 16) & 255 AS VARCHAR),
+             '7:' || CAST((hi >> 24) & 255 AS VARCHAR)]) AS band"""
+
+  /** pipe7/mm9/pipe8: the 4×16-bit band keys `bands(doc_id, band)` of `src`. */
+  private def band4Cte(src: String): String =
+    s"""bands AS (
+            SELECT doc_id, '0:' || (lo & 65535)::VARCHAR AS band FROM $src
+            UNION ALL SELECT doc_id, '1:' || ((lo >> 16) & 65535)::VARCHAR FROM $src
+            UNION ALL SELECT doc_id, '2:' || (hi & 65535)::VARCHAR FROM $src
+            UNION ALL SELECT doc_id, '3:' || ((hi >> 16) & 65535)::VARCHAR FROM $src)"""
+
+  /** The bandCapLedger columns over bucket sizes `n`, capped at `cap`. */
+  private def capLedgerSql(cap: Int): String =
+    s"""CAST(COUNT(*) AS BIGINT) AS n_buckets,
+                 CAST(SUM(CASE WHEN n > $cap THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_buckets_capped,
+                 CAST(COALESCE(SUM(CASE WHEN n > $cap THEN n END), 0) AS BIGINT)
+                   AS n_members_excluded,
+                 CAST(MAX(n) AS BIGINT) AS max_bucket"""
+
+  /** All pairs of `tbl(doc_id, hi, lo)` within hamming 3 (brute force at
+    * this scale), with the distance as `hamming` when `withHamming`. */
+  private def brutePairsSql(tbl: String, withHamming: Boolean): String = {
+    val hamming = if (!withHamming) "" else """,
+          CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo))
+            AS BIGINT) AS hamming"""
+    s"""SELECT a.doc_id AS id1, b.doc_id AS id2$hamming
+          FROM $tbl a JOIN $tbl b ON a.doc_id < b.doc_id
+          WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 3"""
+  }
+
+  /** mm4w/mm9w: the wide fixture's codes `h(doc_id, hi, lo …)` — the md5
+    * group base split as two non-negative 32-bit halves, disjoint per-member
+    * XOR flips (4/5/7 bits) — with `extra` columns appended. */
+  private def wideCodeCtes(extra: String): String =
+    s"""c AS (
+           SELECT doc_id, doc_id % 4 AS m,
+             ('0x' || substring(md5('w' || (doc_id // 4)::VARCHAR), 1, 8))::BIGINT AS hi0,
+             ('0x' || substring(md5('w' || (doc_id // 4)::VARCHAR), 9, 8))::BIGINT AS lo0
+           FROM documents),
+         h AS (
+           SELECT doc_id,
+             CASE WHEN m = 3 THEN xor(hi0, 32512) ELSE hi0 END AS hi,
+             CASE WHEN m = 1 THEN xor(lo0, 15)
+                  WHEN m = 2 THEN xor(lo0, 32505856) ELSE lo0 END AS lo$extra
+           FROM c)"""
+
+  /** mm9/mm9w: each new (`isnew`) code of `tbl`'s best match within
+    * `radius` — against the stored corpus or an earlier new code — ranked
+    * `r(id, matched_id, hamming, vs_corpus, rn)`. */
+  private def incrementalMatchCtes(tbl: String, radius: Int): String =
+    s"""p AS (
+            SELECT a.doc_id AS id, b.doc_id AS matched_id,
+              CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo))
+                AS BIGINT) AS hamming,
+              NOT b.isnew AS vs_corpus
+            FROM $tbl a JOIN $tbl b ON a.doc_id <> b.doc_id
+            WHERE a.isnew AND (NOT b.isnew OR b.doc_id < a.doc_id)
+              AND bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= $radius),
+          r AS (SELECT *, row_number() OVER (
+                  PARTITION BY id ORDER BY hamming, matched_id) AS rn FROM p)"""
+
+  /** mm9/mm9w: the best matches with the `bands` cap ledger on every row. */
+  private def incrementalLedgerSql(id: String): String =
+    s"""led AS (
+            SELECT ${capLedgerSql(2000)}
+            FROM (SELECT band, COUNT(*) AS n FROM bands GROUP BY band))
+          SELECT $id, matched_id, hamming, vs_corpus,
+                 n_buckets, n_buckets_capped, n_members_excluded, max_bucket
+          FROM r CROSS JOIN led WHERE rn = 1"""
+
+  /** mm5/mm6: each video's 6 frames (shots `sid` of 3), frame f's 72-cell
+    * gray grid from `cell` over (doc_id, f, sid, p), its dHash halves
+    * `h(doc_id, frame_idx, hi, lo)` (mm4's formula), and the lag-window
+    * hamming to the video's previous frame `k(…, hamming)`. */
+  private def keyframeCtes(cell: String): String =
+    s"""fr AS (
           SELECT doc_id, t.f, t.f // 3 AS sid
           FROM documents CROSS JOIN generate_series(0, 5) t(f)),
         g AS (
           SELECT doc_id, f,
             list_transform(generate_series(0, 71), p ->
-              CAST(((('0x' || substring(md5(doc_id::VARCHAR || ':' ||
-                        sid::VARCHAR || ':' || p::VARCHAR), 1, 4))::BIGINT % 256)
-                    + (f % 3) * ((p*13 + f) % 2) * 2) % 256 AS INT)) AS gray
+              $cell) AS gray
           FROM fr),
         h AS (
           SELECT doc_id, f AS frame_idx,
@@ -1682,7 +1622,16 @@ object QueriesLlm {
           SELECT doc_id, frame_idx, hi, lo,
             bit_count(xor(hi, lag(hi) OVER w)) +
               bit_count(xor(lo, lag(lo) OVER w)) AS hamming
-          FROM h WINDOW w AS (PARTITION BY doc_id ORDER BY frame_idx))
+          FROM h WINDOW w AS (PARTITION BY doc_id ORDER BY frame_idx))"""
+
+  /** mm5's analytic twin: rebuild each (video, frame)'s flat-block gray grid
+    * from the md5(doc:shot:cell)+jitter synthesis (exact through the JPEG
+    * round-trip and the 72×64→9×8 box mean — both identities by construction,
+    * see mm5FixtureAvi), dHash it, and flag keyframes off the lag hamming. */
+  private val mm5KeyframesSql: String =
+    s"""WITH ${keyframeCtes("""CAST(((('0x' || substring(md5(doc_id::VARCHAR || ':' ||
+                        sid::VARCHAR || ':' || p::VARCHAR), 1, 4))::BIGINT % 256)
+                    + (f % 3) * ((p*13 + f) % 2) * 2) % 256 AS INT)""")}
         SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx, hi, lo,
           CAST(CASE WHEN hamming IS NULL OR hamming > 10 THEN 1 ELSE 0 END AS INT)
             AS is_keyframe
@@ -1691,36 +1640,13 @@ object QueriesLlm {
   /** mm6/pipe7 shared analytic CTEs: rebuild every video's keyframe dHash
     * from the group-keyed md5 synthesis (mm5's oracle with gid = doc//4 shot
     * grids and the mm4-style per-video jitter — both exact through the JPEG
-    * round-trip and box mean), ending in `kf(doc_id, frame_idx, hi, lo)` and
-    * `nkf(doc_id, nkf)`. */
+    * round-trip and box mean), ending in `kf(doc_id, frame_idx, hi, lo)`,
+    * `nkf(doc_id, nkf)` and the video-pair roll-up `rolled`. */
   private val mm6KfCtes: String =
-    """fr AS (
-          SELECT doc_id, t.f, t.f // 3 AS sid
-          FROM documents CROSS JOIN generate_series(0, 5) t(f)),
-        g AS (
-          SELECT doc_id, f,
-            list_transform(generate_series(0, 71), p ->
-              CAST((('0x' || substring(md5('g' || (doc_id // 4)::VARCHAR || ':' ||
+    s"""${keyframeCtes("""CAST((('0x' || substring(md5('g' || (doc_id // 4)::VARCHAR || ':' ||
                         sid::VARCHAR || ':' || p::VARCHAR), 1, 4))::BIGINT % 240)
                     + (f % 3) * ((p*13 + f) % 2) * 2
-                    + (doc_id % 4) * ((p*7 + doc_id) % 2) * 2 AS INT)) AS gray
-          FROM fr),
-        h AS (
-          SELECT doc_id, f AS frame_idx,
-            CAST(list_sum(list_transform(generate_series(0, 31), i ->
-              CASE WHEN gray[((i+32) // 8) * 9 + ((i+32) % 8) + 1] >
-                        gray[((i+32) // 8) * 9 + ((i+32) % 8) + 2]
-                   THEN (1::BIGINT << i) ELSE 0 END)) AS BIGINT) AS hi,
-            CAST(list_sum(list_transform(generate_series(0, 31), i ->
-              CASE WHEN gray[(i // 8) * 9 + (i % 8) + 1] >
-                        gray[(i // 8) * 9 + (i % 8) + 2]
-                   THEN (1::BIGINT << i) ELSE 0 END)) AS BIGINT) AS lo
-          FROM g),
-        k AS (
-          SELECT doc_id, frame_idx, hi, lo,
-            bit_count(xor(hi, lag(hi) OVER w)) +
-              bit_count(xor(lo, lag(lo) OVER w)) AS hamming
-          FROM h WINDOW w AS (PARTITION BY doc_id ORDER BY frame_idx)),
+                    + (doc_id % 4) * ((p*7 + doc_id) % 2) * 2 AS INT)""")},
         kf AS (
           SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx, hi, lo
           FROM k WHERE hamming IS NULL OR hamming > 10),
@@ -1744,32 +1670,35 @@ object QueriesLlm {
           WHERE ROUND((p.n_shared1 + p.n_shared2)::DOUBLE /
                       (n1.nkf + n2.nkf), 4) >= 0.5)"""
 
-  /** mm7/pipe8 shared analytic CTEs: rebuild the step-WAV block levels from
-    * the group-keyed md5 synthesis (`lv`), the sign-of-delta bits (`d`), and
-    * the 64-bit energy hash halves (`eh(doc_id, hi, lo)`) — the SQL twin of
-    * `energyHash64` over `mm7FixtureWav`. */
-  private val mm7EhCtes: String =
-    """lv AS (
+  /** mm7/pipe8 (and mm10's soundtrack, prefix "a"): rebuild the step-WAV
+    * block levels from the md5 synthesis keyed on `key` and doc_id // `group`
+    * (`lv`), the sign-of-delta bits (`d`), and the 64-bit energy hash halves
+    * (`eh(doc_id, hi, lo)`) — the SQL twin of `energyHash64` over
+    * `mm7FixtureWav`. */
+  private def energyHashCtes(prefix: String, key: String, group: Int): String =
+    s"""${prefix}lv AS (
           SELECT doc_id, t.w,
-            CAST(1000 + (('0x' || substring(md5('a' || (doc_id // 4)::VARCHAR ||
+            CAST(1000 + (('0x' || substring(md5('$key' || (doc_id // $group)::VARCHAR ||
                      ':' || w::VARCHAR), 1, 6))::BIGINT % 28000)
-              + (doc_id % 4) * ((w*13 + doc_id) % 2) * 2 AS BIGINT) AS lvl
+              + (doc_id % $group) * ((w*13 + doc_id) % 2) * 2 AS BIGINT) AS lvl
           FROM documents CROSS JOIN generate_series(0, 64) t(w)),
-        d AS (
+        ${prefix}d AS (
           SELECT c.doc_id, c.w, CASE WHEN n.lvl > c.lvl THEN 1 ELSE 0 END AS bit
-          FROM lv c JOIN lv n ON n.doc_id = c.doc_id AND n.w = c.w + 1
+          FROM ${prefix}lv c JOIN ${prefix}lv n ON n.doc_id = c.doc_id AND n.w = c.w + 1
           WHERE c.w < 64),
-        eh AS (
+        ${prefix}eh AS (
           SELECT doc_id,
             CAST(COALESCE(SUM(CASE WHEN w >= 32 AND bit = 1
                    THEN (1::BIGINT << (w - 32)) END), 0) AS BIGINT) AS hi,
             CAST(COALESCE(SUM(CASE WHEN w < 32 AND bit = 1
                    THEN (1::BIGINT << w) END), 0) AS BIGINT) AS lo
-          FROM d GROUP BY doc_id)"""
+          FROM ${prefix}d GROUP BY doc_id)"""
 
   /** mm8/mm9 shared pooling CTEs (appended after [[mm6KfCtes]]): per-video
     * strict-majority 64-bit code over the keyframe hashes — `vh(doc_id, hi,
     * lo)`, the SQL twin of `videoHash64` (ties clear the bit). */
+  private val mm7EhCtes: String = energyHashCtes("", "a", 4)
+
   private val mm8VhCtes: String =
     """vb AS (
             SELECT doc_id, list(hi) AS his, list(lo) AS los, COUNT(*) AS cnt
@@ -1949,15 +1878,7 @@ object QueriesLlm {
             THEN (1::BIGINT << (s.i - 1)) END), 0) AS BIGINT) AS lo
         FROM hm CROSS JOIN generate_series(1, 64) s(i) GROUP BY doc_id),
       bands AS (
-        SELECT doc_id, hi, lo, unnest([
-          '0:' || CAST(lo & 255 AS VARCHAR),
-          '1:' || CAST((lo >> 8) & 255 AS VARCHAR),
-          '2:' || CAST((lo >> 16) & 255 AS VARCHAR),
-          '3:' || CAST((lo >> 24) & 255 AS VARCHAR),
-          '4:' || CAST(hi & 255 AS VARCHAR),
-          '5:' || CAST((hi >> 8) & 255 AS VARCHAR),
-          '6:' || CAST((hi >> 16) & 255 AS VARCHAR),
-          '7:' || CAST((hi >> 24) & 255 AS VARCHAR)]) AS band
+        SELECT doc_id, hi, lo, $band8Sql
         FROM hl),
       bc AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) <= 2000),
       p2 AS (
@@ -1969,11 +1890,12 @@ object QueriesLlm {
       SELECT id1, id2, hamming FROM p2 WHERE hamming <= 7"""
   }
 
-  /** The d5 hyperplanes, inlined as literals so DuckDB replicates the exact LSH
-    * pipeline (same seeded constants as the Spark op). Dot products are written as
-    * ordered list_sum folds on both sides, so the sign bits agree bit-for-bit. */
-  private val d5PlanesSql: String =
-    graft.ann.AnnOps.hyperplanes(48, 64, 42L).zipWithIndex.map { case (p, i) =>
+  /** The first `n` seeded hyperplanes of the LSH ops (d5: 48, e2: 10), inlined
+    * as literals so DuckDB replicates the exact LSH pipeline. Dot products are
+    * written as ordered list_sum folds on both sides, so the sign bits agree
+    * bit-for-bit. */
+  private def planesSql(n: Int): String =
+    graft.ann.AnnOps.hyperplanes(n, 64, 42L).zipWithIndex.map { case (p, i) =>
       s"($i, ${p.mkString("[", ", ", "]")})"
     }.mkString(",\n             ")
 
@@ -1985,11 +1907,137 @@ object QueriesLlm {
       }
     }.mkString(",\n             ")
 
-  /** The e2 LSH planes (nPlanes=10), same seeded constants as the Spark op. */
-  private val e2PlanesSql: String =
-    graft.ann.AnnOps.hyperplanes(10, 64, 42L).zipWithIndex.map { case (p, i) =>
-      s"($i, ${p.mkString("[", ", ", "]")})"
-    }.mkString(",\n             ")
+  /** e7/e8/e11: the codebook table `cb(s, ci, c)`. */
+  private val pqCbCte: String =
+    s"""cb(s, ci, c) AS (VALUES
+             $pqCbSql)"""
+
+  /** Squared L2 distance of subvector `s` of `v` to codebook centroid `c`
+    * (columns of `cb`, qualified by `cb` when given). */
+  private def pqDistSql(v: String, cb: String = ""): String =
+    s"""list_sum(list_transform(generate_series(1, 8),
+                    j -> ($v[${cb}s * 8 + j] - ${cb}c[j]) * ($v[${cb}s * 8 + j] - ${cb}c[j])))"""
+
+  /** e8/e11: each vector of `src` PQ-encoded — `code(vec_id, s, code)`. */
+  private def pqCodeCtes(src: String, v: String): String =
+    s"""dist AS (SELECT vec_id, s, ci,
+                  ${pqDistSql(v)} AS d
+                FROM $src CROSS JOIN cb),
+          code AS (SELECT vec_id, s, ci AS code FROM (
+              SELECT vec_id, s, ci,
+                row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, ci ASC) AS rn
+              FROM dist) WHERE rn = 1)"""
+
+  /** e8/e11: asymmetric distance of each candidate through the query LUTs
+    * (joined on `lutOn` besides the query id), ranked top-5 per query. */
+  private def pqAdcRankSql(lutOn: String): String =
+    s"""adc AS (SELECT cd.qid, cd.cid, list_sum(list(l.ld ORDER BY l.s)) AS adc
+                FROM cands cd
+                JOIN code co ON co.vec_id = cd.cid
+                JOIN lutd l ON l.qid = cd.qid AND $lutOn
+                GROUP BY cd.qid, cd.cid),
+          r AS (SELECT qid, cid, adc,
+                  row_number() OVER (PARTITION BY qid ORDER BY adc ASC, cid ASC) AS rank
+                FROM adc)
+          SELECT qid, cid, ROUND(adc, 6) AS adc, rank FROM r WHERE rank <= 5"""
+
+  /** e4/e8/e9/e11/e13: the basis-cell IVF chain — vectors `e(vec_id, v)`,
+    * norms, cell cosines, each vector's cell `assign(cid, cell)` and the
+    * first ten vectors' two probed cells `probes(qid, cell)` (ties to the
+    * higher cell, the e3 rule). */
+  private val ivfCellCtes: String =
+    """e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+          norm AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nv FROM e),
+          cscore AS (
+            SELECT vec_id, i AS cell,
+              CASE WHEN nv = 0 THEN 0.0 ELSE v[i + 1] / nv END AS cos
+            FROM norm CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS i)),
+          assign AS (SELECT vec_id AS cid, cell FROM (
+              SELECT vec_id, cell,
+                row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
+              FROM cscore) WHERE rn = 1),
+          probes AS (SELECT vec_id AS qid, cell FROM (
+              SELECT vec_id, cell,
+                row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
+              FROM cscore WHERE vec_id < 10) WHERE rn <= 2)"""
+
+  /** e4/e8/e9/e13: the corpus ids in each query's probed cells. */
+  private val ivfCandsCte: String =
+    "cands AS (SELECT p.qid, a.cid FROM probes p JOIN assign a ON p.cell = a.cell)"
+
+  /** e4/e9: exact cosine of each probed candidate. */
+  private val ivfScoredCte: String =
+    """scored AS (
+            SELECT c.qid, c.cid,
+              CASE WHEN q.nv = 0 OR t.nv = 0 THEN 0.0
+                   ELSE list_dot_product(q.v, t.v) / (q.nv * t.nv) END AS cos
+            FROM cands c
+            JOIN norm q ON c.qid = q.vec_id
+            JOIN norm t ON c.cid = t.vec_id)"""
+
+  /** e3/samp7: each embedding's cosine to each basis cell `scored(vec_id, cid, cos)`. */
+  private val basisCosCte: String =
+    """scored AS (
+           SELECT vec_id, i AS cid,
+                  CASE WHEN list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) = 0 THEN 0.0
+                       ELSE embedding[i + 1] / sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) END AS cos
+           FROM embeddings CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS i))"""
+
+  /** d5/d12: the planted corpus `corpus(vec_id, v)` (see [[plantedEmbeddings]]). */
+  private val plantedCorpusCtes: String =
+    """base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+          planted AS (
+            SELECT vec_id + 100000 AS vec_id,
+              list_transform(generate_series(1, 64),
+                j -> 0.9 * v[j] + 0.1 * v[(j % 64) + 1]) AS v
+            FROM base WHERE vec_id < 50),
+          corpus AS (SELECT * FROM base UNION ALL SELECT * FROM planted)"""
+
+  /** e1/e2: the corpus `c(cid, cv)` and the first ten vectors as `q(qid, qv)`. */
+  private val annSidesCtes: String =
+    """c AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cv FROM embeddings),
+          q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 10)"""
+
+  /** t3/d13: winnowing fingerprints of the token lists `toks(doc_id, tk)` —
+    * k-token grams, md5 60-bit hashes, the min of every w-hash window `sel(doc_id, s)`. */
+  private def winnowCtes(k: Int, w: Int): String =
+    s"""grams AS (SELECT doc_id,
+              CASE WHEN len(tk) < $k THEN [array_to_string(tk, ' ')]
+                   ELSE list_transform(generate_series(1, len(tk) - ${k - 1}),
+                          i -> array_to_string(list_slice(tk, i, i + ${k - 1}), ' ')) END AS g
+            FROM toks),
+          h AS (SELECT doc_id,
+              list_transform(g, x -> ('0x' || substring(md5(x), 1, 15))::BIGINT) AS h
+            FROM grams),
+          sel AS (SELECT doc_id,
+              CASE WHEN len(h) <= $w THEN [list_min(h)]
+                   ELSE list_transform(generate_series(1, len(h) - ${w - 1}),
+                          i -> list_min(list_slice(h, i, i + ${w - 1}))) END AS s
+            FROM h)"""
+
+  /** e12/e13: each vector of `e(vec_id, v)` SQ8-quantized `cq(cid, mn, mx, codes)`
+    * (the e5 quantize replica). */
+  private val sqCodesCte: String =
+    """cq AS (SELECT vec_id AS cid, list_min(v) AS mn, list_max(v) AS mx,
+              list_transform(v, x -> CASE WHEN list_max(v) = list_min(v) THEN 0
+                ELSE CAST(round((x - list_min(v)) / (list_max(v) - list_min(v)) * 255)
+                     - 128 AS INT) END) AS codes
+            FROM e)"""
+
+  /** e12/e13: top-5 per query on the 6dp-rounded integer-fold score `s.score0`. */
+  private val sqRankSql: String =
+    """r AS (SELECT qid, cid, ROUND(score0, 6) + 0 AS score,
+                  row_number() OVER (PARTITION BY qid
+                    ORDER BY ROUND(score0, 6) DESC, cid ASC) AS rank
+                FROM s)
+          SELECT qid, cid, score, rank FROM r WHERE rank <= 5"""
+
+  /** t11/t13: per-document term counts `tf(doc_id, term, tf)`. */
+  private val termFreqCte: String =
+    s"""tf AS (
+            SELECT doc_id, term, COUNT(*) AS tf
+            FROM (SELECT doc_id, unnest($toksSql) AS term FROM documents)
+            GROUP BY 1, 2)"""
 
   private def dotSql(a: String, b: String): String =
     s"list_sum(list_transform(generate_series(1, 64), j -> $a[j] * $b[j]))"
@@ -2052,30 +2100,209 @@ object QueriesLlm {
                         / len(list_distinct(list_concat(a1, a2))) END AS j
             FROM prefiltered)"""
 
-  /** d7/d7s oracle: the recursive-CTE walk is algorithm-independent. */
-  private val dedupClustersOracle: String =
-    s"""WITH RECURSIVE $minhashVerifiedCte,
+  /** d7/pipe3/d18: the verified pairs' recursive-CTE walk `walk(id, r)` —
+    * algorithm-independent; LEAST(id, MIN(r)) is each id's component. */
+  private val minhashWalkCtes: String =
+    s"""$minhashVerifiedCte,
           nd AS (SELECT id1, id2 FROM verified WHERE j >= 0.4),
           e2 AS (SELECT id1 AS s, id2 AS d FROM nd
                  UNION SELECT id2, id1 FROM nd),
           walk(id, r) AS (
             SELECT s, d FROM e2
             UNION
-            SELECT w.id, e.d FROM walk w JOIN e2 e ON w.r = e.s)
+            SELECT w.id, e.d FROM walk w JOIN e2 e ON w.r = e.s)"""
+
+  /** d9/d16 oracle (d16's bloom stage only routes rows around the anti-join):
+    * drop corpus docs whose normalized 10-token prefix matches a src0 doc's. */
+  private val decontaminateSql: String =
+      s"""WITH p AS (
+            SELECT doc_id, source,
+              md5(array_to_string(list_filter(
+                regexp_split_to_array(trim(lower(t10)), '\\s+'), x -> len(x) > 0), ' ')) AS fp
+            FROM (SELECT doc_id, source,
+                    array_to_string(list_slice($toksSql, 1, 10), ' ') AS t10
+                  FROM documents))
+          SELECT doc_id FROM p c
+          WHERE source != 'src0'
+            AND NOT EXISTS (SELECT 1 FROM p r WHERE r.source = 'src0' AND r.fp = c.fp)"""
+
+  /** d3/d6: the SimHash-32 bit votes `bits(doc_id, i, cnt)` over md5 token hashes. */
+  private val simhashBitsCtes: String =
+    s"""toks AS (
+            SELECT doc_id, unnest($toksSql) AS tok FROM documents),
+          th AS (SELECT doc_id,
+                   ('0x' || substring(md5(tok), 1, 15))::BIGINT % 4294967296 AS h
+                 FROM toks),
+          bits AS (SELECT doc_id, i,
+                   SUM(CASE WHEN CAST(floor(h / pow(2, i)) AS BIGINT) % 2 = 1
+                            THEN 1 ELSE -1 END) AS cnt
+                 FROM th CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS i)
+                 GROUP BY 1, 2)"""
+
+  /** t4/pipe2: qualityScore's parts per document in `m` — mean token length
+    * `mtl`, punctuation ratio `pr`, stopword ratio `sw` — carrying `keep`. */
+  private def qualityPartsCtes(keep: String): String =
+    s"""t AS (SELECT doc_id, text, $toksSql AS tk FROM documents),
+          m AS (SELECT doc_id, text, $keep
+              CASE WHEN len(tk) = 0 THEN 0.0
+                   ELSE CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE)
+                        / len(tk) END AS mtl,
+              CASE WHEN length(text) = 0 THEN 0.0
+                   ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()\\-]', '', 'g')) AS DOUBLE)
+                        / length(text) END AS pr,
+              CASE WHEN len(tk) = 0 THEN 0.0
+                   ELSE CAST(len(list_filter(tk, x -> x IN ($stopwordsSql))) AS DOUBLE)
+                        / len(tk) END AS sw
+            FROM t)"""
+
+  /** t4/pipe2: the quality score over [[qualityPartsCtes]]' columns. */
+  private val qualitySql: String =
+    """ROUND(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) * 0.3
+                  + (1.0 - least(pr * 5.0, 1.0)) * 0.2
+                  + least(sw * 4.0, 1.0) * 0.2
+                  + (CASE WHEN mtl >= 3.0 AND mtl <= 10.0 THEN 1.0 ELSE 0.5 END) * 0.3,
+                  6)"""
+
+  /** t9/samp4: `m(doc_id, lang, quality)`, the qualityScore replica inlined. */
+  private val langQualityCtes: String =
+    s"""t AS (SELECT doc_id, lang, text, $toksSql AS tk FROM documents),
+          m AS (SELECT doc_id, lang,
+              ROUND(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) * 0.3
+                    + (1.0 - least(
+                        (CASE WHEN length(text) = 0 THEN 0.0
+                              ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()\\-]', '', 'g')) AS DOUBLE)
+                                   / length(text) END) * 5.0, 1.0)) * 0.2
+                    + least((CASE WHEN len(tk) = 0 THEN 0.0
+                             ELSE CAST(len(list_filter(tk, x -> x IN ($stopwordsSql))) AS DOUBLE)
+                                  / len(tk) END) * 4.0, 1.0) * 0.2
+                    + (CASE WHEN (CASE WHEN len(tk) = 0 THEN 0.0
+                                  ELSE CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE)
+                                       / len(tk) END) BETWEEN 3.0 AND 10.0
+                            THEN 1.0 ELSE 0.5 END) * 0.3,
+                    6) AS quality
+            FROM t)"""
+
+  /** d7/d7s oracle. */
+  private val dedupClustersOracle: String =
+    s"""WITH RECURSIVE $minhashWalkCtes
           SELECT id AS doc_id,
             LEAST(id, MIN(r)) AS cluster,
             (id = LEAST(id, MIN(r))) AS keep
           FROM walk GROUP BY id"""
+
+  /** a19-a21: the planted per-day totals (`total`, a CASE over `user_id` and
+    * the day of month `di`) on each (user, day)'s first event, their exact
+    * daily sums `daily(user_id, d, dtot)`, and each event flagged `flag` on the
+    * flagged days `fd(user_id, d)` that `flagCtes` derive. */
+  private def precipSql(total: String, flagCtes: String, flag: Int): String =
+    s"""WITH base AS (
+           SELECT user_id, event_id, ts, CAST(ts AS DATE) AS d,
+                  day(CAST(ts AS DATE)) AS di,
+                  row_number() OVER (PARTITION BY user_id, CAST(ts AS DATE)
+                                     ORDER BY ts, event_id) AS rn
+           FROM events),
+         obs AS (
+           SELECT user_id, event_id, ts, d,
+             CASE WHEN rn = 1 THEN
+               $total
+             ELSE 0.0 END AS pr
+           FROM base),
+         daily AS (
+           SELECT user_id, d,
+                  CAST(SUM(CAST(pr AS DECIMAL(18,2))) AS DOUBLE) AS dtot
+           FROM obs GROUP BY 1, 2),
+         $flagCtes
+         SELECT o.user_id, o.event_id,
+                CAST(epoch(date_trunc('second', o.ts)) AS BIGINT) AS time_s,
+                ROUND(o.pr, 4) + 0 AS pr,
+                CASE WHEN fd.user_id IS NOT NULL THEN $flag END AS flag
+         FROM obs o LEFT JOIN fd ON o.user_id = fd.user_id AND o.d = fd.d"""
+
+  /** t19/t21: the merge table as nested plain-string replaces over the
+    * wrapped symbols `s`, in rank order. */
+  private val t19MergedSql: String = t19Merges.foldLeft("s") { case (acc, (a, b)) =>
+    s"replace($acc, chr(1)||'$a'||chr(2)||chr(1)||'$b'||chr(2), chr(1)||'$a$b'||chr(2))"
+  }
+
+  /** t15/pipe5: sentences planted on every 'table', split, token-counted,
+    * with each sentence's exclusive running token total `cum(…, bef)`. */
+  private val sentenceCumCtes: String =
+    """d AS (
+            SELECT doc_id,
+              regexp_replace(text, '\btable\b', 'table.', 'g') AS t2
+            FROM documents),
+          sa AS (
+            SELECT doc_id,
+              list_filter(list_transform(
+                regexp_extract_all(t2, '[^.!?]+[.!?]*'), s -> trim(s)),
+                s -> len(s) > 0) AS ss
+            FROM d),
+          sents AS (
+            SELECT doc_id,
+              unnest(generate_series(1, len(ss))) - 1 AS pos,
+              unnest(ss) AS sent
+            FROM sa),
+          tok AS (
+            SELECT doc_id, pos, sent,
+              CAST(len(list_filter(regexp_split_to_array(trim(sent), '\s+'),
+                w -> len(w) > 0)) AS BIGINT) AS ntok
+            FROM sents),
+          cum AS (
+            SELECT doc_id, pos, sent, ntok,
+              COALESCE(SUM(ntok) OVER (PARTITION BY doc_id ORDER BY pos
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef
+            FROM tok)"""
+
+  /** e10/pipe5: BM25 top-3 of `table(id, text)` for the token slice
+    * `from`..`to` of every 100th document below 5000 — idf and per-term
+    * contributions rounded to 6dp decimals before the (query, doc) sum; rank
+    * on the 4dp score with an id tiebreak. */
+  private def bm25Ctes(id: String, text: String, table: String, from: Int, to: Int): String =
+    s"""tf AS (
+            SELECT $id, term, COUNT(*) AS tf
+            FROM (SELECT $id,
+                    unnest(list_filter(
+                      regexp_split_to_array(trim(lower($text)), '\\s+'),
+                      x -> len(x) > 0)) AS term
+                  FROM $table)
+            GROUP BY 1, 2),
+          dl AS (SELECT $id, SUM(tf) AS dl FROM tf GROUP BY 1),
+          stats AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
+          q AS (
+            SELECT doc_id AS qid,
+              list_slice(list_filter(
+                regexp_split_to_array(trim(lower(text)), '\\s+'),
+                x -> len(x) > 0), $from, $to) AS qt
+            FROM documents WHERE doc_id % 100 = 0 AND doc_id < 5000),
+          qterms AS (SELECT DISTINCT qid, unnest(qt) AS term FROM q),
+          dfreq AS (
+            SELECT term, COUNT(*) AS df FROM tf
+            WHERE term IN (SELECT term FROM qterms) GROUP BY 1),
+          scored AS (
+            SELECT qt.qid, tf.$id, tf.tf, dfreq.df, dl.dl,
+                   stats.n_docs, stats.avgdl
+            FROM tf JOIN qterms qt USING (term) JOIN dfreq USING (term)
+                    JOIN dl USING ($id) CROSS JOIN stats),
+          contrib AS (
+            SELECT qid, $id,
+              CAST(ROUND(ROUND(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)), 6)
+                   * tf / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)), 6)
+                   AS DECIMAL(14,6)) AS c
+            FROM scored),
+          s AS (SELECT qid, $id, ROUND(CAST(SUM(c) AS DOUBLE), 4) + 0 AS score
+                FROM contrib GROUP BY 1, 2),
+          r AS (SELECT qid, $id, score,
+                  row_number() OVER (PARTITION BY qid
+                                     ORDER BY score DESC, $id) AS rank
+                FROM s)
+          SELECT qid, $id, score, rank FROM r WHERE rank <= 3"""
 
   def oracles: Map[String, String] = Map(
     // Segmentation replayed in pure SQL: symbols ride as chr(1)||sym||chr(2)
     // wrapped tokens (unambiguous boundaries, so a merge can never match across
     // symbols), each merge is one plain-string replace() — non-overlapping
     // left-to-right, the greedy-pass contract — nested in rank order.
-    "t19_bpe_segment" -> {
-      val replaced = t19Merges.foldLeft("s") { case (acc, (a, b)) =>
-        s"replace($acc, chr(1)||'$a'||chr(2)||chr(1)||'$b'||chr(2), chr(1)||'$a$b'||chr(2))"
-      }
+    "t19_bpe_segment" ->
       s"""WITH words AS (
             SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
             FROM documents),
@@ -2083,17 +2310,13 @@ object QueriesLlm {
             SELECT regexp_replace(w, '(.)', chr(1) || '\\1' || chr(2), 'g')
                    || chr(1) || '</w>' || chr(2) AS s
             FROM words WHERE w <> ''),
-          merged AS (SELECT $replaced AS m FROM wrapped),
+          merged AS (SELECT $t19MergedSql AS m FROM wrapped),
           syms AS (
             SELECT unnest(string_split(substr(m, 2, length(m) - 2),
                                        chr(2) || chr(1))) AS sym
             FROM merged)
-          SELECT sym, COUNT(*) AS cnt FROM syms GROUP BY sym"""
-    },
-    "t21_bpe_fertility" -> {
-      val replaced = t19Merges.foldLeft("s") { case (acc, (a, b)) =>
-        s"replace($acc, chr(1)||'$a'||chr(2)||chr(1)||'$b'||chr(2), chr(1)||'$a$b'||chr(2))"
-      }
+          SELECT sym, COUNT(*) AS cnt FROM syms GROUP BY sym""",
+    "t21_bpe_fertility" ->
       s"""WITH words AS (
             SELECT doc_id,
               unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
@@ -2103,7 +2326,7 @@ object QueriesLlm {
               regexp_replace(w, '(.)', chr(1) || '\\1' || chr(2), 'g')
                    || chr(1) || '</w>' || chr(2) AS s
             FROM words WHERE w <> ''),
-          merged AS (SELECT doc_id, $replaced AS m FROM wrapped),
+          merged AS (SELECT doc_id, $t19MergedSql AS m FROM wrapped),
           persym AS (
             SELECT doc_id,
               SUM(len(string_split(substr(m, 2, length(m) - 2),
@@ -2117,8 +2340,7 @@ object QueriesLlm {
                  CAST(SUM(ns) AS BIGINT) AS n_syms,
                  ROUND(CAST(SUM(nc) AS DOUBLE) / CAST(SUM(ns) AS DOUBLE), 6) + 0
                    AS chars_per_sym
-          FROM perdoc GROUP BY source"""
-    },
+          FROM perdoc GROUP BY source""",
     "t1_text_stats" ->
       s"""SELECT doc_id,
             len($toksSql) AS n_tok,
@@ -2152,40 +2374,12 @@ object QueriesLlm {
           FROM best WHERE rn = 1 GROUP BY 1""",
     "t3_winnowing" ->
       s"""WITH toks AS (SELECT doc_id, $toksSql AS tk FROM documents),
-          grams AS (SELECT doc_id,
-              CASE WHEN len(tk) < 5 THEN [array_to_string(tk, ' ')]
-                   ELSE list_transform(generate_series(1, len(tk) - 4),
-                          i -> array_to_string(list_slice(tk, i, i + 4), ' ')) END AS g
-            FROM toks),
-          h AS (SELECT doc_id,
-              list_transform(g, x -> ('0x' || substring(md5(x), 1, 15))::BIGINT) AS h
-            FROM grams),
-          sel AS (SELECT doc_id,
-              CASE WHEN len(h) <= 4 THEN [list_min(h)]
-                   ELSE list_transform(generate_series(1, len(h) - 3),
-                          i -> list_min(list_slice(h, i, i + 3))) END AS s
-            FROM h),
+          ${winnowCtes(5, 4)},
           fp AS (SELECT doc_id, list_sort(list_distinct(s)) AS fp FROM sel)
           SELECT doc_id, len(fp) AS n_fp, fp[1] AS min_fp, fp[-1] AS max_fp FROM fp""",
     "t4_quality" ->
-      s"""WITH t AS (SELECT doc_id, text, $toksSql AS tk FROM documents),
-          m AS (SELECT doc_id, text,
-              CASE WHEN len(tk) = 0 THEN 0.0
-                   ELSE CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE)
-                        / len(tk) END AS mtl,
-              CASE WHEN length(text) = 0 THEN 0.0
-                   ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()\\-]', '', 'g')) AS DOUBLE)
-                        / length(text) END AS pr,
-              CASE WHEN len(tk) = 0 THEN 0.0
-                   ELSE CAST(len(list_filter(tk, x -> x IN ($stopwordsSql))) AS DOUBLE)
-                        / len(tk) END AS sw
-            FROM t)
-          SELECT doc_id,
-            ROUND(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) * 0.3
-                  + (1.0 - least(pr * 5.0, 1.0)) * 0.2
-                  + least(sw * 4.0, 1.0) * 0.2
-                  + (CASE WHEN mtl >= 3.0 AND mtl <= 10.0 THEN 1.0 ELSE 0.5 END) * 0.3,
-                  6) AS quality
+      s"""WITH ${qualityPartsCtes("")}
+          SELECT doc_id, $qualitySql AS quality
           FROM m""",
     "t5_split_assign" ->
       s"""WITH u AS (
@@ -2214,24 +2408,12 @@ object QueriesLlm {
     "d22_cap_ledger" ->
       s"""WITH $minhashBandsCte,
           bc AS (SELECT band, COUNT(*) AS n FROM bands GROUP BY band)
-          SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets,
-                 CAST(SUM(CASE WHEN n > 4 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_buckets_capped,
-                 CAST(COALESCE(SUM(CASE WHEN n > 4 THEN n END), 0) AS BIGINT)
-                   AS n_members_excluded,
-                 CAST(MAX(n) AS BIGINT) AS max_bucket
+          SELECT ${capLedgerSql(4)}
           FROM bc""",
     "d7_dedup_clusters" -> dedupClustersOracle,
     // the d7 clustering CTE feeding a survivors anti-join + per-source stats
     "pipe3_near_dedup" ->
-      s"""WITH RECURSIVE $minhashVerifiedCte,
-          nd AS (SELECT id1, id2 FROM verified WHERE j >= 0.4),
-          e2 AS (SELECT id1 AS s, id2 AS d FROM nd
-                 UNION SELECT id2, id1 FROM nd),
-          walk(id, r) AS (
-            SELECT s, d FROM e2
-            UNION
-            SELECT w.id, e.d FROM walk w JOIN e2 e ON w.r = e.s)
+      s"""WITH RECURSIVE $minhashWalkCtes
           SELECT source, COUNT(*) AS n_survivors,
             CAST(SUM(n_chars) AS BIGINT) AS chars_kept
           FROM documents
@@ -2264,28 +2446,8 @@ object QueriesLlm {
                 || ' ip 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.17' AS d
             FROM documents)
           SELECT doc_id, ${redactSql("d")} AS red FROM dirty""",
-    "d9_decontaminate" ->
-      s"""WITH p AS (
-            SELECT doc_id, source,
-              md5(array_to_string(list_filter(
-                regexp_split_to_array(trim(lower(t10)), '\\s+'), x -> len(x) > 0), ' ')) AS fp
-            FROM (SELECT doc_id, source,
-                    array_to_string(list_slice($toksSql, 1, 10), ' ') AS t10
-                  FROM documents))
-          SELECT doc_id FROM p c
-          WHERE source != 'src0'
-            AND NOT EXISTS (SELECT 1 FROM p r WHERE r.source = 'src0' AND r.fp = c.fp)""",
-    "d16_bloom_decontam" ->
-      s"""WITH p AS (
-            SELECT doc_id, source,
-              md5(array_to_string(list_filter(
-                regexp_split_to_array(trim(lower(t10)), '\\s+'), x -> len(x) > 0), ' ')) AS fp
-            FROM (SELECT doc_id, source,
-                    array_to_string(list_slice($toksSql, 1, 10), ' ') AS t10
-                  FROM documents))
-          SELECT doc_id FROM p c
-          WHERE source != 'src0'
-            AND NOT EXISTS (SELECT 1 FROM p r WHERE r.source = 'src0' AND r.fp = c.fp)""",
+    "d9_decontaminate" -> decontaminateSql,
+    "d16_bloom_decontam" -> decontaminateSql,
     "e6_kmeans_step" ->
       """WITH c AS (
             SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding::DOUBLE[] AS cv
@@ -2311,24 +2473,8 @@ object QueriesLlm {
             ROUND(CAST(SUM(CAST(v[2] AS DECIMAL(27,10))) AS DOUBLE) / COUNT(*), 4) + 0 AS c2
           FROM m GROUP BY cid""",
     "pipe2_curation" ->
-      s"""WITH t AS (SELECT doc_id, text, $toksSql AS tk FROM documents),
-          m AS (SELECT doc_id, text, tk,
-              CASE WHEN len(tk) = 0 THEN 0.0
-                   ELSE CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE)
-                        / len(tk) END AS mtl,
-              CASE WHEN length(text) = 0 THEN 0.0
-                   ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()\\-]', '', 'g')) AS DOUBLE)
-                        / length(text) END AS pr,
-              CASE WHEN len(tk) = 0 THEN 0.0
-                   ELSE CAST(len(list_filter(tk, x -> x IN ($stopwordsSql))) AS DOUBLE)
-                        / len(tk) END AS sw
-            FROM t),
-          q AS (SELECT doc_id, tk,
-              ROUND(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) * 0.3
-                    + (1.0 - least(pr * 5.0, 1.0)) * 0.2
-                    + least(sw * 4.0, 1.0) * 0.2
-                    + (CASE WHEN mtl >= 3.0 AND mtl <= 10.0 THEN 1.0 ELSE 0.5 END) * 0.3,
-                    6) AS quality,
+      s"""WITH ${qualityPartsCtes("tk,")},
+          q AS (SELECT doc_id, tk, $qualitySql AS quality,
               md5(array_to_string(tk, ' ')) AS fp
             FROM m),
           hits AS (
@@ -2388,12 +2534,10 @@ object QueriesLlm {
                       ELSE ((cb + n_tok - 1) // 512) - (cb // 512) + 1 END AS BIGINT) AS n_packs
           FROM c""",
     "e7_pq_encode" ->
-      s"""WITH cb(s, ci, c) AS (VALUES
-             $pqCbSql),
+      s"""WITH $pqCbCte,
           v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           d AS (SELECT vec_id, s, ci,
-                  list_sum(list_transform(generate_series(1, 8),
-                    j -> (v[s * 8 + j] - c[j]) * (v[s * 8 + j] - c[j]))) AS dist
+                  ${pqDistSql("v")} AS dist
                 FROM v CROSS JOIN cb),
           best AS (SELECT vec_id, s, ci, dist,
                      row_number() OVER (PARTITION BY vec_id, s ORDER BY dist ASC, ci ASC) AS rn
@@ -2407,97 +2551,36 @@ object QueriesLlm {
             ROUND(sse / 64, 6) AS mse
           FROM agg""",
     "e8_ivfpq_topk" ->
-      s"""WITH cb(s, ci, c) AS (VALUES
-             $pqCbSql),
-          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          norm AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nv FROM e),
-          cscore AS (
-            SELECT vec_id, i AS cell,
-              CASE WHEN nv = 0 THEN 0.0 ELSE v[i + 1] / nv END AS cos
-            FROM norm CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS i)),
-          assign AS (SELECT vec_id AS cid, cell FROM (
-              SELECT vec_id, cell,
-                row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
-              FROM cscore) WHERE rn = 1),
-          probes AS (SELECT vec_id AS qid, cell FROM (
-              SELECT vec_id, cell,
-                row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
-              FROM cscore WHERE vec_id < 10) WHERE rn <= 2),
-          dist AS (SELECT vec_id, s, ci,
-                  list_sum(list_transform(generate_series(1, 8),
-                    j -> (v[s * 8 + j] - c[j]) * (v[s * 8 + j] - c[j]))) AS d
-                FROM e CROSS JOIN cb),
-          code AS (SELECT vec_id, s, ci AS code FROM (
-              SELECT vec_id, s, ci,
-                row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, ci ASC) AS rn
-              FROM dist) WHERE rn = 1),
+      s"""WITH $pqCbCte,
+          $ivfCellCtes,
+          ${pqCodeCtes("e", "v")},
           lutd AS (SELECT q.vec_id AS qid, cb.s, cb.ci,
-                  list_sum(list_transform(generate_series(1, 8),
-                    j -> (q.v[cb.s * 8 + j] - cb.c[j]) * (q.v[cb.s * 8 + j] - cb.c[j]))) AS ld
+                  ${pqDistSql("q.v", "cb.")} AS ld
                 FROM e q CROSS JOIN cb WHERE q.vec_id < 10),
-          cands AS (SELECT p.qid, a.cid FROM probes p JOIN assign a ON p.cell = a.cell),
-          adc AS (SELECT cd.qid, cd.cid, list_sum(list(l.ld ORDER BY l.s)) AS adc
-                FROM cands cd
-                JOIN code co ON co.vec_id = cd.cid
-                JOIN lutd l ON l.qid = cd.qid AND l.s = co.s AND l.ci = co.code
-                GROUP BY cd.qid, cd.cid),
-          r AS (SELECT qid, cid, adc,
-                  row_number() OVER (PARTITION BY qid ORDER BY adc ASC, cid ASC) AS rank
-                FROM adc)
-          SELECT qid, cid, ROUND(adc, 6) AS adc, rank FROM r WHERE rank <= 5""",
+          $ivfCandsCte,
+          ${pqAdcRankSql("l.s = co.s AND l.ci = co.code")}""",
     // e11: the e8 pipeline with residual encoding — corpus codes and query
     // LUTs both computed on v − basis(cell); the LUT join carries the cell key
     "e11_ivfpq_residual" ->
-      s"""WITH cb(s, ci, c) AS (VALUES
-             $pqCbSql),
-          e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          norm AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nv FROM e),
-          cscore AS (
-            SELECT vec_id, i AS cell,
-              CASE WHEN nv = 0 THEN 0.0 ELSE v[i + 1] / nv END AS cos
-            FROM norm CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS i)),
-          assign AS (SELECT vec_id AS cid, cell FROM (
-              SELECT vec_id, cell,
-                row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
-              FROM cscore) WHERE rn = 1),
-          probes AS (SELECT vec_id AS qid, cell FROM (
-              SELECT vec_id, cell,
-                row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
-              FROM cscore WHERE vec_id < 10) WHERE rn <= 2),
+      s"""WITH $pqCbCte,
+          $ivfCellCtes,
           rescorp AS (
             SELECT e.vec_id, a.cell,
               list_transform(generate_series(1, 64),
                 j -> e.v[j] - CASE WHEN j = a.cell + 1 THEN 1.0 ELSE 0.0 END) AS rv
             FROM e JOIN assign a ON a.cid = e.vec_id),
-          dist AS (SELECT vec_id, s, ci,
-                  list_sum(list_transform(generate_series(1, 8),
-                    j -> (rv[s * 8 + j] - c[j]) * (rv[s * 8 + j] - c[j]))) AS d
-                FROM rescorp CROSS JOIN cb),
-          code AS (SELECT vec_id, s, ci AS code FROM (
-              SELECT vec_id, s, ci,
-                row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, ci ASC) AS rn
-              FROM dist) WHERE rn = 1),
+          ${pqCodeCtes("rescorp", "rv")},
           resq AS (
             SELECT p.qid, p.cell,
               list_transform(generate_series(1, 64),
                 j -> q.v[j] - CASE WHEN j = p.cell + 1 THEN 1.0 ELSE 0.0 END) AS rq
             FROM probes p JOIN e q ON q.vec_id = p.qid),
           lutd AS (SELECT r.qid, r.cell, cb.s, cb.ci,
-                  list_sum(list_transform(generate_series(1, 8),
-                    j -> (r.rq[cb.s * 8 + j] - cb.c[j]) * (r.rq[cb.s * 8 + j] - cb.c[j]))) AS ld
+                  ${pqDistSql("r.rq", "cb.")} AS ld
                 FROM resq r CROSS JOIN cb),
           cands AS (SELECT p.qid, p.cell, a.cid
                 FROM probes p JOIN assign a ON p.cell = a.cell),
-          adc AS (SELECT cd.qid, cd.cid, list_sum(list(l.ld ORDER BY l.s)) AS adc
-                FROM cands cd
-                JOIN code co ON co.vec_id = cd.cid
-                JOIN lutd l ON l.qid = cd.qid AND l.cell = cd.cell
-                           AND l.s = co.s AND l.ci = co.code
-                GROUP BY cd.qid, cd.cid),
-          r AS (SELECT qid, cid, adc,
-                  row_number() OVER (PARTITION BY qid ORDER BY adc ASC, cid ASC) AS rank
-                FROM adc)
-          SELECT qid, cid, ROUND(adc, 6) AS adc, rank FROM r WHERE rank <= 5""",
+          ${pqAdcRankSql("l.cell = cd.cell AND l.s = co.s AND l.ci = co.code")}""",
     "t10_corpus_stats" ->
       s"""WITH t AS (SELECT source,
               md5(array_to_string($toksSql, ' ')) AS fp,
@@ -2522,41 +2605,11 @@ object QueriesLlm {
             CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
           FROM k GROUP BY source""",
     "t9_quantile_gate" ->
-      s"""WITH t AS (SELECT doc_id, lang, text, $toksSql AS tk FROM documents),
-          m AS (SELECT doc_id, lang,
-              ROUND(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) * 0.3
-                    + (1.0 - least(
-                        (CASE WHEN length(text) = 0 THEN 0.0
-                              ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()\\-]', '', 'g')) AS DOUBLE)
-                                   / length(text) END) * 5.0, 1.0)) * 0.2
-                    + least((CASE WHEN len(tk) = 0 THEN 0.0
-                             ELSE CAST(len(list_filter(tk, x -> x IN ($stopwordsSql))) AS DOUBLE)
-                                  / len(tk) END) * 4.0, 1.0) * 0.2
-                    + (CASE WHEN (CASE WHEN len(tk) = 0 THEN 0.0
-                                  ELSE CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE)
-                                       / len(tk) END) BETWEEN 3.0 AND 10.0
-                            THEN 1.0 ELSE 0.5 END) * 0.3,
-                    6) AS quality
-            FROM t),
+      s"""WITH $langQualityCtes,
           thr AS (SELECT lang, quantile_cont(quality, 0.25) AS t FROM m GROUP BY lang)
           SELECT doc_id FROM m JOIN thr USING (lang) WHERE quality >= thr.t""",
     "samp4_ccnet_buckets" ->
-      s"""WITH t AS (SELECT doc_id, lang, text, $toksSql AS tk FROM documents),
-          m AS (SELECT doc_id, lang,
-              ROUND(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) * 0.3
-                    + (1.0 - least(
-                        (CASE WHEN length(text) = 0 THEN 0.0
-                              ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()\\-]', '', 'g')) AS DOUBLE)
-                                   / length(text) END) * 5.0, 1.0)) * 0.2
-                    + least((CASE WHEN len(tk) = 0 THEN 0.0
-                             ELSE CAST(len(list_filter(tk, x -> x IN ($stopwordsSql))) AS DOUBLE)
-                                  / len(tk) END) * 4.0, 1.0) * 0.2
-                    + (CASE WHEN (CASE WHEN len(tk) = 0 THEN 0.0
-                                  ELSE CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE)
-                                       / len(tk) END) BETWEEN 3.0 AND 10.0
-                            THEN 1.0 ELSE 0.5 END) * 0.3,
-                    6) AS quality
-            FROM t),
+      s"""WITH $langQualityCtes,
           thr AS (SELECT lang,
                     quantile_cont(quality, 0.3333333333333333) AS p33,
                     quantile_cont(quality, 0.6666666666666666) AS p67
@@ -2796,11 +2849,7 @@ object QueriesLlm {
     // samp7: e3's argmax assignment (ties cid DESC), representativeness =
     // own-centroid cosine rounded 6dp BEFORE the per-cell rank
     "samp7_cluster_cap" ->
-      """WITH scored AS (
-           SELECT vec_id, i AS cid,
-                  CASE WHEN list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) = 0 THEN 0.0
-                       ELSE embedding[i + 1] / sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) END AS cos
-           FROM embeddings CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS i)),
+      s"""WITH $basisCosCte,
          best AS (
            SELECT vec_id, cid, cos,
                   row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid DESC) AS rn
@@ -2826,34 +2875,11 @@ object QueriesLlm {
     // non-negative 32-bit halves, disjoint per-member XOR flips (4/5/7
     // bits), 8x8-bit band self-join, bit_count verify at <= 7
     "mm4w_wide_neardups" ->
-      """WITH c AS (
-           SELECT doc_id, doc_id % 4 AS m,
-             ('0x' || substring(md5('w' || (doc_id // 4)::VARCHAR), 1, 8))::BIGINT AS hi0,
-             ('0x' || substring(md5('w' || (doc_id // 4)::VARCHAR), 9, 8))::BIGINT AS lo0
-           FROM documents),
-         h AS (
-           SELECT doc_id,
-             CASE WHEN m = 3 THEN xor(hi0, 32512) ELSE hi0 END AS hi,
-             CASE WHEN m = 1 THEN xor(lo0, 15)
-                  WHEN m = 2 THEN xor(lo0, 32505856) ELSE lo0 END AS lo
-           FROM c),
+      s"""WITH ${wideCodeCtes("")},
          b AS (
-           SELECT doc_id, hi, lo, unnest([
-             '0:' || CAST(lo & 255 AS VARCHAR),
-             '1:' || CAST((lo >> 8) & 255 AS VARCHAR),
-             '2:' || CAST((lo >> 16) & 255 AS VARCHAR),
-             '3:' || CAST((lo >> 24) & 255 AS VARCHAR),
-             '4:' || CAST(hi & 255 AS VARCHAR),
-             '5:' || CAST((hi >> 8) & 255 AS VARCHAR),
-             '6:' || CAST((hi >> 16) & 255 AS VARCHAR),
-             '7:' || CAST((hi >> 24) & 255 AS VARCHAR)]) AS band
+           SELECT doc_id, hi, lo, $band8Sql
            FROM h),
-         bc AS (SELECT band FROM b GROUP BY band HAVING COUNT(*) <= 2000),
-         p AS (
-           SELECT DISTINCT a.doc_id AS id1, b2.doc_id AS id2,
-             bit_count(xor(a.hi, b2.hi)) + bit_count(xor(a.lo, b2.lo)) AS hamming
-           FROM b a JOIN b b2 USING (band) JOIN bc USING (band)
-           WHERE a.doc_id < b2.doc_id)
+         $bandPairCtes
          SELECT id1, id2, CAST(hamming AS BIGINT) AS hamming
          FROM p WHERE hamming <= 7""",
     "mm4p_phash_neardups" -> mm4pSql,
@@ -2864,109 +2890,35 @@ object QueriesLlm {
     "pipe7_video_curation" ->
       s"""WITH $mm6KfCtes,
           dropped AS (SELECT DISTINCT vid2 FROM rolled),
-          bands AS (
-            SELECT doc_id, '0:' || (lo & 65535)::VARCHAR AS band FROM kf
-            UNION ALL SELECT doc_id, '1:' || ((lo >> 16) & 65535)::VARCHAR FROM kf
-            UNION ALL SELECT doc_id, '2:' || (hi & 65535)::VARCHAR FROM kf
-            UNION ALL SELECT doc_id, '3:' || ((hi >> 16) & 65535)::VARCHAR FROM kf),
+          ${band4Cte("kf")},
           bc AS (SELECT band, COUNT(*) AS n FROM bands GROUP BY band),
           vids AS (SELECT COUNT(DISTINCT doc_id) AS nv FROM kf)
           SELECT (SELECT nv FROM vids) AS n_input,
                  (SELECT COUNT(*) FROM dropped) AS n_dup_dropped,
                  (SELECT nv FROM vids) - (SELECT COUNT(*) FROM dropped) AS n_kept,
-                 CAST(COUNT(*) AS BIGINT) AS n_buckets,
-                 CAST(SUM(CASE WHEN n > 2000 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_buckets_capped,
-                 CAST(COALESCE(SUM(CASE WHEN n > 2000 THEN n END), 0) AS BIGINT)
-                   AS n_members_excluded,
-                 CAST(MAX(n) AS BIGINT) AS max_bucket
+                 ${capLedgerSql(2000)}
           FROM bc""",
     "mm8_video_hash_neardups" ->
       s"""WITH $mm6KfCtes,
           $mm8VhCtes
-          SELECT a.doc_id AS id1, b.doc_id AS id2,
-            CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo))
-              AS BIGINT) AS hamming
-          FROM vh a JOIN vh b ON a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 3""",
+          ${brutePairsSql("vh", withHamming = true)}""",
     "mm9_incremental_video" ->
       s"""WITH $mm6KfCtes,
           $mm8VhCtes,
           t AS (SELECT doc_id, hi, lo, (doc_id % 10 = 0) AS isnew FROM vh),
-          p AS (
-            SELECT a.doc_id AS id, b.doc_id AS matched_id,
-              CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo))
-                AS BIGINT) AS hamming,
-              NOT b.isnew AS vs_corpus
-            FROM t a JOIN t b ON a.doc_id <> b.doc_id
-            WHERE a.isnew AND (NOT b.isnew OR b.doc_id < a.doc_id)
-              AND bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 3),
-          r AS (SELECT *, row_number() OVER (
-                  PARTITION BY id ORDER BY hamming, matched_id) AS rn FROM p),
-          bands AS (
-            SELECT doc_id, '0:' || (lo & 65535)::VARCHAR AS band FROM vh
-            UNION ALL SELECT doc_id, '1:' || ((lo >> 16) & 65535)::VARCHAR FROM vh
-            UNION ALL SELECT doc_id, '2:' || (hi & 65535)::VARCHAR FROM vh
-            UNION ALL SELECT doc_id, '3:' || ((hi >> 16) & 65535)::VARCHAR FROM vh),
-          led AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets,
-                   CAST(SUM(CASE WHEN n > 2000 THEN 1 ELSE 0 END) AS BIGINT)
-                     AS n_buckets_capped,
-                   CAST(COALESCE(SUM(CASE WHEN n > 2000 THEN n END), 0) AS BIGINT)
-                     AS n_members_excluded,
-                   CAST(MAX(n) AS BIGINT) AS max_bucket
-            FROM (SELECT band, COUNT(*) AS n FROM bands GROUP BY band))
-          SELECT id, matched_id, hamming, vs_corpus,
-                 n_buckets, n_buckets_capped, n_members_excluded, max_bucket
-          FROM r CROSS JOIN led WHERE rn = 1""",
+          ${incrementalMatchCtes("t", 3)},
+          ${band4Cte("vh")},
+          ${incrementalLedgerSql("id")}""",
     // mm9w: the wide-radius incremental contract replayed brute-force (the
     // 8x8 banding is recall-exact at <= 7 >= the query's radius 6, so the
     // banded result == the all-pairs result), plus the wide cap ledger
     "mm9w_incremental_wide" ->
-      """WITH c AS (
-           SELECT doc_id, doc_id % 4 AS m,
-             ('0x' || substring(md5('w' || (doc_id // 4)::VARCHAR), 1, 8))::BIGINT AS hi0,
-             ('0x' || substring(md5('w' || (doc_id // 4)::VARCHAR), 9, 8))::BIGINT AS lo0
-           FROM documents),
-         h AS (
-           SELECT doc_id,
-             CASE WHEN m = 3 THEN xor(hi0, 32512) ELSE hi0 END AS hi,
-             CASE WHEN m = 1 THEN xor(lo0, 15)
-                  WHEN m = 2 THEN xor(lo0, 32505856) ELSE lo0 END AS lo,
-             (doc_id % 10 = 0) AS isnew
-           FROM c),
-         p AS (
-           SELECT a.doc_id AS id, b.doc_id AS matched_id,
-             CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo))
-               AS BIGINT) AS hamming,
-             NOT b.isnew AS vs_corpus
-           FROM h a JOIN h b ON a.doc_id <> b.doc_id
-           WHERE a.isnew AND (NOT b.isnew OR b.doc_id < a.doc_id)
-             AND bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 6),
-         r AS (SELECT *, row_number() OVER (
-                 PARTITION BY id ORDER BY hamming, matched_id) AS rn FROM p),
+      s"""WITH ${wideCodeCtes(",\n (doc_id % 10 = 0) AS isnew")},
+         ${incrementalMatchCtes("h", 6)},
          bands AS (
-           SELECT doc_id, unnest([
-             '0:' || CAST(lo & 255 AS VARCHAR),
-             '1:' || CAST((lo >> 8) & 255 AS VARCHAR),
-             '2:' || CAST((lo >> 16) & 255 AS VARCHAR),
-             '3:' || CAST((lo >> 24) & 255 AS VARCHAR),
-             '4:' || CAST(hi & 255 AS VARCHAR),
-             '5:' || CAST((hi >> 8) & 255 AS VARCHAR),
-             '6:' || CAST((hi >> 16) & 255 AS VARCHAR),
-             '7:' || CAST((hi >> 24) & 255 AS VARCHAR)]) AS band
+           SELECT doc_id, $band8Sql
            FROM h),
-         led AS (
-           SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets,
-                  CAST(SUM(CASE WHEN n > 2000 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS n_buckets_capped,
-                  CAST(COALESCE(SUM(CASE WHEN n > 2000 THEN n END), 0) AS BIGINT)
-                    AS n_members_excluded,
-                  CAST(MAX(n) AS BIGINT) AS max_bucket
-           FROM (SELECT band, COUNT(*) AS n FROM bands GROUP BY band))
-         SELECT id AS doc_id, matched_id, hamming, vs_corpus,
-                n_buckets, n_buckets_capped, n_members_excluded, max_bucket
-         FROM r CROSS JOIN led WHERE rn = 1""",
+         ${incrementalLedgerSql("id AS doc_id")}""",
     // mm10: both channels rebuilt analytically — the visual pooled hash via
     // the mm6/mm8 CTEs (mm10's frames ARE mm6's synthesis), the soundtrack
     // energy hash via the mm7 CTE shape re-keyed on docId/8 with the %8
@@ -2975,31 +2927,11 @@ object QueriesLlm {
     "mm10_av_neardups" ->
       s"""WITH $mm6KfCtes,
           $mm8VhCtes,
-          alv AS (
-            SELECT doc_id, t.w,
-              CAST(1000 + (('0x' || substring(md5('v' || (doc_id // 8)::VARCHAR ||
-                       ':' || w::VARCHAR), 1, 6))::BIGINT % 28000)
-                + (doc_id % 8) * ((w*13 + doc_id) % 2) * 2 AS BIGINT) AS lvl
-            FROM documents CROSS JOIN generate_series(0, 64) t(w)),
-          ad AS (
-            SELECT c.doc_id, c.w, CASE WHEN n.lvl > c.lvl THEN 1 ELSE 0 END AS bit
-            FROM alv c JOIN alv n ON n.doc_id = c.doc_id AND n.w = c.w + 1
-            WHERE c.w < 64),
-          aeh AS (
-            SELECT doc_id,
-              CAST(COALESCE(SUM(CASE WHEN w >= 32 AND bit = 1
-                     THEN (1::BIGINT << (w - 32)) END), 0) AS BIGINT) AS hi,
-              CAST(COALESCE(SUM(CASE WHEN w < 32 AND bit = 1
-                     THEN (1::BIGINT << w) END), 0) AS BIGINT) AS lo
-            FROM ad GROUP BY doc_id),
+          ${energyHashCtes("a", "v", 8)},
           vp AS (
-            SELECT a.doc_id AS id1, b.doc_id AS id2
-            FROM vh a JOIN vh b ON a.doc_id < b.doc_id
-            WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 3),
+            ${brutePairsSql("vh", withHamming = false)}),
           ap AS (
-            SELECT a.doc_id AS id1, b.doc_id AS id2
-            FROM aeh a JOIN aeh b ON a.doc_id < b.doc_id
-            WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 3),
+            ${brutePairsSql("aeh", withHamming = false)}),
           u AS (SELECT id1, id2 FROM vp UNION SELECT id1, id2 FROM ap),
           j AS (
             SELECT u.id1, u.id2,
@@ -3016,29 +2948,19 @@ object QueriesLlm {
           FROM j""",
     "mm7_audio_neardups" ->
       s"""WITH $mm7EhCtes
-        SELECT a.doc_id AS id1, b.doc_id AS id2,
-          CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) AS BIGINT)
-            AS hamming
-        FROM eh a JOIN eh b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 3""",
+        ${brutePairsSql("eh", withHamming = true)}""",
     "pipe8_audio_curation" ->
       s"""WITH $mm7EhCtes,
         rmsq AS (
           SELECT doc_id, sqrt(SUM(lvl * lvl)::DOUBLE / 65) AS rms
           FROM lv GROUP BY doc_id),
         p AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM eh a JOIN eh b ON a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 3),
+          ${brutePairsSql("eh", withHamming = false)}),
         dropped AS (SELECT DISTINCT id2 FROM p),
         surv AS (
           SELECT r.doc_id, r.rms FROM rmsq r
           WHERE r.doc_id NOT IN (SELECT id2 FROM dropped)),
-        bands AS (
-          SELECT doc_id, '0:' || (lo & 65535)::VARCHAR AS band FROM eh
-          UNION ALL SELECT doc_id, '1:' || ((lo >> 16) & 65535)::VARCHAR FROM eh
-          UNION ALL SELECT doc_id, '2:' || (hi & 65535)::VARCHAR FROM eh
-          UNION ALL SELECT doc_id, '3:' || ((hi >> 16) & 65535)::VARCHAR FROM eh),
+        ${band4Cte("eh")},
         bc AS (SELECT band, COUNT(*) AS n FROM bands GROUP BY band)
         SELECT (SELECT COUNT(*) FROM eh) AS n_input,
                (SELECT COUNT(*) FROM dropped) AS n_dup_dropped,
@@ -3046,12 +2968,7 @@ object QueriesLlm {
                  AS n_low_energy,
                (SELECT COUNT(*) FROM surv WHERE rms >= 17000.0::DOUBLE)
                  AS n_kept,
-               CAST(COUNT(*) AS BIGINT) AS n_buckets,
-               CAST(SUM(CASE WHEN n > 2000 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_buckets_capped,
-               CAST(COALESCE(SUM(CASE WHEN n > 2000 THEN n END), 0) AS BIGINT)
-                 AS n_members_excluded,
-               CAST(MAX(n) AS BIGINT) AS max_bucket
+               ${capLedgerSql(2000)}
         FROM bc""",
     "pipe6_image_curation" -> pipe6Sql,
     "samp6_dsir" ->
@@ -3084,119 +3001,17 @@ object QueriesLlm {
                  ROUND(CAST(SUM(lw) AS DOUBLE), 4) + 0 AS dsir_weight
           FROM ex e JOIN bw USING (b)
           GROUP BY 1""",
-    // e10: the exact BM25 pipeline — idf and per-term contributions rounded to
-    // 6dp decimals before the (query, doc) sum; rank on the 4dp score with a
-    // doc-id tiebreak
-    "e10_bm25" ->
-      """WITH tf AS (
-            SELECT doc_id, term, COUNT(*) AS tf
-            FROM (SELECT doc_id,
-                    unnest(list_filter(
-                      regexp_split_to_array(trim(lower(text)), '\s+'),
-                      x -> len(x) > 0)) AS term
-                  FROM documents)
-            GROUP BY 1, 2),
-          dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
-          stats AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
-          q AS (
-            SELECT doc_id AS qid,
-              list_slice(list_filter(
-                regexp_split_to_array(trim(lower(text)), '\s+'),
-                x -> len(x) > 0), 1, 6) AS qt
-            FROM documents WHERE doc_id % 100 = 0 AND doc_id < 5000),
-          qterms AS (SELECT DISTINCT qid, unnest(qt) AS term FROM q),
-          dfreq AS (
-            SELECT term, COUNT(*) AS df FROM tf
-            WHERE term IN (SELECT term FROM qterms) GROUP BY 1),
-          scored AS (
-            SELECT qt.qid, tf.doc_id, tf.tf, dfreq.df, dl.dl,
-                   stats.n_docs, stats.avgdl
-            FROM tf JOIN qterms qt USING (term) JOIN dfreq USING (term)
-                    JOIN dl USING (doc_id) CROSS JOIN stats),
-          contrib AS (
-            SELECT qid, doc_id,
-              CAST(ROUND(ROUND(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)), 6)
-                   * tf / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)), 6)
-                   AS DECIMAL(14,6)) AS c
-            FROM scored),
-          s AS (SELECT qid, doc_id, ROUND(CAST(SUM(c) AS DOUBLE), 4) + 0 AS score
-                FROM contrib GROUP BY 1, 2),
-          r AS (SELECT qid, doc_id, score,
-                  row_number() OVER (PARTITION BY qid
-                                     ORDER BY score DESC, doc_id) AS rank
-                FROM s)
-          SELECT qid, doc_id, score, rank FROM r WHERE rank <= 3""",
+    "e10_bm25" -> s"WITH ${bm25Ctes("doc_id", "text", "documents", 1, 6)}",
     // pipe5: the t15 chunking chain feeding the e10 BM25 chain, chunk ids as
     // doc#chunk strings
     "pipe5_rag_slice" ->
-      """WITH d AS (
-            SELECT doc_id,
-              regexp_replace(text, '\btable\b', 'table.', 'g') AS t2
-            FROM documents),
-          sa AS (
-            SELECT doc_id,
-              list_filter(list_transform(
-                regexp_extract_all(t2, '[^.!?]+[.!?]*'), s -> trim(s)),
-                s -> len(s) > 0) AS ss
-            FROM d),
-          sents AS (
-            SELECT doc_id,
-              unnest(generate_series(1, len(ss))) - 1 AS pos,
-              unnest(ss) AS sent
-            FROM sa),
-          tok AS (
-            SELECT doc_id, pos, sent,
-              CAST(len(list_filter(regexp_split_to_array(trim(sent), '\s+'),
-                w -> len(w) > 0)) AS BIGINT) AS ntok
-            FROM sents),
-          cum AS (
-            SELECT doc_id, pos, sent, ntok,
-              COALESCE(SUM(ntok) OVER (PARTITION BY doc_id ORDER BY pos
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef
-            FROM tok),
+      s"""WITH $sentenceCumCtes,
           chunks AS (
             SELECT CAST(doc_id AS VARCHAR) || '#' ||
                      CAST(CAST(FLOOR(bef / 32) AS BIGINT) AS VARCHAR) AS cid,
                    string_agg(sent, ' ' ORDER BY pos) AS chunk_text
             FROM cum GROUP BY doc_id, FLOOR(bef / 32)),
-          tf AS (
-            SELECT cid, term, COUNT(*) AS tf
-            FROM (SELECT cid,
-                    unnest(list_filter(
-                      regexp_split_to_array(trim(lower(chunk_text)), '\s+'),
-                      x -> len(x) > 0)) AS term
-                  FROM chunks)
-            GROUP BY 1, 2),
-          dl AS (SELECT cid, SUM(tf) AS dl FROM tf GROUP BY 1),
-          stats AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
-          q AS (
-            SELECT doc_id AS qid,
-              list_slice(list_filter(
-                regexp_split_to_array(trim(lower(text)), '\s+'),
-                x -> len(x) > 0), 7, 11) AS qt
-            FROM documents WHERE doc_id % 100 = 0 AND doc_id < 5000),
-          qterms AS (SELECT DISTINCT qid, unnest(qt) AS term FROM q),
-          dfreq AS (
-            SELECT term, COUNT(*) AS df FROM tf
-            WHERE term IN (SELECT term FROM qterms) GROUP BY 1),
-          scored AS (
-            SELECT qt.qid, tf.cid, tf.tf, dfreq.df, dl.dl,
-                   stats.n_docs, stats.avgdl
-            FROM tf JOIN qterms qt USING (term) JOIN dfreq USING (term)
-                    JOIN dl USING (cid) CROSS JOIN stats),
-          contrib AS (
-            SELECT qid, cid,
-              CAST(ROUND(ROUND(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)), 6)
-                   * tf / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)), 6)
-                   AS DECIMAL(14,6)) AS c
-            FROM scored),
-          s AS (SELECT qid, cid, ROUND(CAST(SUM(c) AS DOUBLE), 4) + 0 AS score
-                FROM contrib GROUP BY 1, 2),
-          r AS (SELECT qid, cid, score,
-                  row_number() OVER (PARTITION BY qid
-                                     ORDER BY score DESC, cid) AS rank
-                FROM s)
-          SELECT qid, cid, score, rank FROM r WHERE rank <= 3""",
+          ${bm25Ctes("cid", "chunk_text", "chunks", 7, 11)}""",
     // t14: the line rules as a list_filter lambda — terminal punctuation regex,
     // 5-word floor on whitespace tokens, javascript kill; page gates on the
     // kept-line count and the raw text
@@ -3231,31 +3046,7 @@ object QueriesLlm {
     // t15: lockstep unnest for sentence positions; stride chunk id from the
     // exclusive running token total
     "t15_sentence_chunks" ->
-      """WITH d AS (
-            SELECT doc_id,
-              regexp_replace(text, '\btable\b', 'table.', 'g') AS t2
-            FROM documents),
-          sa AS (
-            SELECT doc_id,
-              list_filter(list_transform(
-                regexp_extract_all(t2, '[^.!?]+[.!?]*'), s -> trim(s)),
-                s -> len(s) > 0) AS ss
-            FROM d),
-          sents AS (
-            SELECT doc_id,
-              unnest(generate_series(1, len(ss))) - 1 AS pos,
-              unnest(ss) AS sent
-            FROM sa),
-          tok AS (
-            SELECT doc_id, pos, sent,
-              CAST(len(list_filter(regexp_split_to_array(trim(sent), '\s+'),
-                w -> len(w) > 0)) AS BIGINT) AS ntok
-            FROM sents),
-          cum AS (
-            SELECT doc_id, pos, sent, ntok,
-              COALESCE(SUM(ntok) OVER (PARTITION BY doc_id ORDER BY pos
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS bef
-            FROM tok)
+      s"""WITH $sentenceCumCtes
           SELECT doc_id, CAST(FLOOR(bef / 32) AS BIGINT) AS chunk_id,
                  COUNT(*) AS n_sentences, CAST(SUM(ntok) AS BIGINT) AS n_tokens,
                  string_agg(sent, ' ' ORDER BY pos) AS chunk_text
@@ -3283,10 +3074,7 @@ object QueriesLlm {
     // round-before-rank mirrors tfIdfTopK exactly: 1-ulp libm-`ln` differences
     // die in ROUND(_, 6) before the window ordering ever sees them
     "t11_tfidf" ->
-      s"""WITH tf AS (
-            SELECT doc_id, term, COUNT(*) AS tf
-            FROM (SELECT doc_id, unnest($toksSql) AS term FROM documents)
-            GROUP BY 1, 2),
+      s"""WITH $termFreqCte,
           n AS (SELECT COUNT(DISTINCT doc_id) AS n FROM tf),
           dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
           scored AS (
@@ -3300,10 +3088,7 @@ object QueriesLlm {
             FROM scored)
           SELECT doc_id, term, tfidf FROM ranked WHERE rn <= 5""",
     "t13_lm_quality" ->
-      s"""WITH tf AS (
-            SELECT doc_id, term, COUNT(*) AS tf
-            FROM (SELECT doc_id, unnest($toksSql) AS term FROM documents)
-            GROUP BY 1, 2),
+      s"""WITH $termFreqCte,
           n AS (SELECT SUM(tf) AS total FROM tf),
           tc AS (SELECT term, SUM(tf) AS c FROM tf GROUP BY 1),
           scored AS (
@@ -3388,13 +3173,7 @@ object QueriesLlm {
     // list_dot_product, so the 0.85 threshold compare is bit-identical to Spark's
     // zip_with/aggregate fold; cell argmax ties go to the HIGHER cid (e3 rule)
     "d12_semdedup" ->
-      s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          planted AS (
-            SELECT vec_id + 100000 AS vec_id,
-              list_transform(generate_series(1, 64),
-                j -> 0.9 * v[j] + 0.1 * v[(j % 64) + 1]) AS v
-            FROM base WHERE vec_id < 50),
-          corpus AS (SELECT * FROM base UNION ALL SELECT * FROM planted),
+      s"""WITH $plantedCorpusCtes,
           scored AS (
             SELECT vec_id, v, i AS cid,
               CASE WHEN ${dotSql("v", "v")} = 0 THEN 0.0
@@ -3428,19 +3207,7 @@ object QueriesLlm {
             FROM base WHERE doc_id % 20 = 0),
           corpus AS (SELECT * FROM base UNION ALL SELECT * FROM planted),
           toks AS (SELECT doc_id, $toksSql AS tk FROM corpus),
-          grams AS (SELECT doc_id,
-              CASE WHEN len(tk) < 20 THEN [array_to_string(tk, ' ')]
-                   ELSE list_transform(generate_series(1, len(tk) - 19),
-                          i -> array_to_string(list_slice(tk, i, i + 19), ' ')) END AS g
-            FROM toks),
-          h AS (SELECT doc_id,
-              list_transform(g, x -> ('0x' || substring(md5(x), 1, 15))::BIGINT) AS h
-            FROM grams),
-          sel AS (SELECT doc_id,
-              CASE WHEN len(h) <= 31 THEN [list_min(h)]
-                   ELSE list_transform(generate_series(1, len(h) - 30),
-                          i -> list_min(list_slice(h, i, i + 30))) END AS s
-            FROM h),
+          ${winnowCtes(20, 31)},
           fp AS (SELECT doc_id, unnest(list_distinct(s)) AS fp FROM sel),
           marked AS (SELECT doc_id,
               CASE WHEN MIN(doc_id) OVER (PARTITION BY fp) <> doc_id
@@ -3451,30 +3218,12 @@ object QueriesLlm {
             CAST(SUM(shared) AS BIGINT) AS n_shared_spans
           FROM marked GROUP BY 1 HAVING SUM(shared) > 0""",
     "d3_simhash" ->
-      s"""WITH toks AS (
-            SELECT doc_id, unnest($toksSql) AS tok FROM documents),
-          th AS (SELECT doc_id,
-                   ('0x' || substring(md5(tok), 1, 15))::BIGINT % 4294967296 AS h
-                 FROM toks),
-          bits AS (SELECT doc_id, i,
-                   SUM(CASE WHEN CAST(floor(h / pow(2, i)) AS BIGINT) % 2 = 1
-                            THEN 1 ELSE -1 END) AS cnt
-                 FROM th CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS i)
-                 GROUP BY 1, 2)
+      s"""WITH $simhashBitsCtes
           SELECT doc_id,
             CAST(SUM(CASE WHEN cnt > 0 THEN CAST(pow(2, i) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash
           FROM bits GROUP BY doc_id""",
     "d6_simhash_neardups" ->
-      s"""WITH toks AS (
-            SELECT doc_id, unnest($toksSql) AS tok FROM documents),
-          th AS (SELECT doc_id,
-                   ('0x' || substring(md5(tok), 1, 15))::BIGINT % 4294967296 AS h
-                 FROM toks),
-          bits AS (SELECT doc_id, i,
-                   SUM(CASE WHEN CAST(floor(h / pow(2, i)) AS BIGINT) % 2 = 1
-                            THEN 1 ELSE -1 END) AS cnt
-                 FROM th CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS i)
-                 GROUP BY 1, 2),
+      s"""WITH $simhashBitsCtes,
           sh AS (SELECT doc_id,
                    SUM(CASE WHEN cnt > 0 THEN CAST(pow(2, i) AS BIGINT) ELSE 0 END) AS sh
                  FROM bits GROUP BY doc_id),
@@ -3517,28 +3266,13 @@ object QueriesLlm {
                           - CAST(cb AS DOUBLE) / GREATEST(nb, 1)) END), 6) AS ks,
            CAST(MAX(na) AS BIGINT) AS n_a, CAST(MAX(nb) AS BIGINT) AS n_b
          FROM c GROUP BY event_type""",
-    "a19_frequent_precip" ->
-      """WITH base AS (
-           SELECT user_id, event_id, ts, CAST(ts AS DATE) AS d,
-                  day(CAST(ts AS DATE)) AS di,
-                  row_number() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-                                     ORDER BY ts, event_id) AS rn
-           FROM events),
-         obs AS (
-           SELECT user_id, event_id, ts, d,
-             CASE WHEN rn = 1 THEN
-               CASE WHEN user_id % 7 = 0 AND di BETWEEN 10 AND 15 THEN 20.5
+    "a19_frequent_precip" -> precipSql(
+      """CASE WHEN user_id % 7 = 0 AND di BETWEEN 10 AND 15 THEN 20.5
                     WHEN user_id % 7 = 3 AND di BETWEEN 10 AND 12 THEN 25.0
                     WHEN user_id % 7 = 0 OR user_id % 7 = 3 THEN di + 0.5
                     WHEN di % 5 = 0 THEN 0.0
-                    ELSE di * 1.5 END
-             ELSE 0.0 END AS pr
-           FROM base),
-         daily AS (
-           SELECT user_id, d,
-                  CAST(SUM(CAST(pr AS DECIMAL(18,2))) AS DOUBLE) AS dtot
-           FROM obs GROUP BY 1, 2),
-         nz AS (
+                    ELSE di * 1.5 END""",
+      """nz AS (
            SELECT user_id, d, dtot,
              SUM(CASE WHEN prev IS NULL OR prev <> dtot THEN 1 ELSE 0 END)
                OVER (PARTITION BY user_id ORDER BY d ROWS UNBOUNDED PRECEDING) AS rid
@@ -3549,32 +3283,12 @@ object QueriesLlm {
            SELECT user_id, d, dtot,
                   COUNT(*) OVER (PARTITION BY user_id, rid) AS rsz
            FROM nz),
-         fd AS (SELECT user_id, d FROM runs WHERE rsz >= 5 AND dtot > 18)
-         SELECT o.user_id, o.event_id,
-                CAST(epoch(date_trunc('second', o.ts)) AS BIGINT) AS time_s,
-                ROUND(o.pr, 4) + 0 AS pr,
-                CASE WHEN fd.user_id IS NOT NULL THEN 31 END AS flag
-         FROM obs o LEFT JOIN fd ON o.user_id = fd.user_id AND o.d = fd.d""",
-    "a20_clim_precip" ->
-      """WITH base AS (
-           SELECT user_id, event_id, ts, CAST(ts AS DATE) AS d,
-                  day(CAST(ts AS DATE)) AS di,
-                  row_number() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-                                     ORDER BY ts, event_id) AS rn
-           FROM events),
-         obs AS (
-           SELECT user_id, event_id, ts, d,
-             CASE WHEN rn = 1 THEN
-               CASE WHEN user_id % 6 = 0 AND di = 14 THEN 100.0
+         fd AS (SELECT user_id, d FROM runs WHERE rsz >= 5 AND dtot > 18)""", 31),
+    "a20_clim_precip" -> precipSql(
+      """CASE WHEN user_id % 6 = 0 AND di = 14 THEN 100.0
                     WHEN di % 7 = 3 THEN 0.0
-                    ELSE CAST(di % 5 AS DOUBLE) + 1.0 END
-             ELSE 0.0 END AS pr
-           FROM base),
-         daily AS (
-           SELECT user_id, d,
-                  CAST(SUM(CAST(pr AS DECIMAL(18,2))) AS DOUBLE) AS dtot
-           FROM obs GROUP BY 1, 2),
-         nz AS (SELECT user_id, d, dtot, month(d) AS mon FROM daily WHERE dtot > 0),
+                    ELSE CAST(di % 5 AS DOUBLE) + 1.0 END""",
+      """nz AS (SELECT user_id, d, dtot, month(d) AS mon FROM daily WHERE dtot > 0),
          p AS (
            SELECT user_id, mon, quantile_cont(dtot, 0.95) AS p95
            FROM nz GROUP BY 1, 2),
@@ -3583,32 +3297,12 @@ object QueriesLlm {
            FROM nz JOIN p USING (user_id, mon)
            WHERE CASE WHEN p95 > 442.0 THEN dtot > 442.0
                       WHEN p95 <> 0 THEN dtot > p95 * 9.0
-                      ELSE dtot > 9.0 END)
-         SELECT o.user_id, o.event_id,
-                CAST(epoch(date_trunc('second', o.ts)) AS BIGINT) AS time_s,
-                ROUND(o.pr, 4) + 0 AS pr,
-                CASE WHEN fd.user_id IS NOT NULL THEN 32 END AS flag
-         FROM obs o LEFT JOIN fd ON o.user_id = fd.user_id AND o.d = fd.d""",
-    "a21_gap_precip" ->
-      """WITH base AS (
-           SELECT user_id, event_id, ts, CAST(ts AS DATE) AS d,
-                  day(CAST(ts AS DATE)) AS di,
-                  row_number() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-                                     ORDER BY ts, event_id) AS rn
-           FROM events),
-         obs AS (
-           SELECT user_id, event_id, ts, d,
-             CASE WHEN rn = 1 THEN
-               CASE WHEN user_id % 11 = 0 AND di = 25 THEN 500.0
+                      ELSE dtot > 9.0 END)""", 32),
+    "a21_gap_precip" -> precipSql(
+      """CASE WHEN user_id % 11 = 0 AND di = 25 THEN 500.0
                     WHEN user_id % 11 = 5 AND di IN (24, 25) THEN 500.0
-                    ELSE CAST((di % 9) * 4 AS DOUBLE) END
-             ELSE 0.0 END AS pr
-           FROM base),
-         daily AS (
-           SELECT user_id, d,
-                  CAST(SUM(CAST(pr AS DECIMAL(18,2))) AS DOUBLE) AS dtot
-           FROM obs GROUP BY 1, 2),
-         bounds AS (SELECT user_id, MIN(d) AS d0, MAX(d) AS d1 FROM daily GROUP BY 1),
+                    ELSE CAST((di % 9) * 4 AS DOUBLE) END""",
+      """bounds AS (SELECT user_id, MIN(d) AS d0, MAX(d) AS d1 FROM daily GROUP BY 1),
          grid AS (
            SELECT user_id, CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP),
                   CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS d
@@ -3625,12 +3319,7 @@ object QueriesLlm {
            WINDOW w AS (PARTITION BY user_id, mon ORDER BY dtot)),
          fd AS (
            SELECT user_id, d FROM nb
-           WHERE n > 1 AND least(COALESCE(pg, 1e308), COALESCE(ng, 1e308)) > 200.0)
-         SELECT o.user_id, o.event_id,
-                CAST(epoch(date_trunc('second', o.ts)) AS BIGINT) AS time_s,
-                ROUND(o.pr, 4) + 0 AS pr,
-                CASE WHEN fd.user_id IS NOT NULL THEN 33 END AS flag
-         FROM obs o LEFT JOIN fd ON o.user_id = fd.user_id AND o.d = fd.d""",
+           WHERE n > 1 AND least(COALESCE(pg, 1e308), COALESCE(ng, 1e308)) > 200.0)""", 33),
     // d11: lockstep unnest pairs each paragraph with its position; keep-first is a
     // row_number over the normalized-paragraph fingerprint ordered by (doc, pos)
     "d11_paragraph_dedup" ->
@@ -3709,14 +3398,7 @@ object QueriesLlm {
     // d18: d7's walk CTE + a quality join — keeper = row_number 1 over
     // (n_chars DESC, doc_id) per cluster
     "d18_cluster_quality_keep" ->
-      s"""WITH RECURSIVE $minhashVerifiedCte,
-          nd AS (SELECT id1, id2 FROM verified WHERE j >= 0.4),
-          e2 AS (SELECT id1 AS s, id2 AS d FROM nd
-                 UNION SELECT id2, id1 FROM nd),
-          walk(id, r) AS (
-            SELECT s, d FROM e2
-            UNION
-            SELECT w.id, e.d FROM walk w JOIN e2 e ON w.r = e.s),
+      s"""WITH RECURSIVE $minhashWalkCtes,
           cl AS (SELECT id AS doc_id, LEAST(id, MIN(r)) AS cluster
                  FROM walk GROUP BY id),
           q AS (SELECT cl.doc_id, cl.cluster, d.n_chars,
@@ -3752,8 +3434,7 @@ object QueriesLlm {
                        / len(list_distinct(list_concat(a.sh, b.sh))) END, 6) AS jaccard
           FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1""",
     "e1_ann_brute" ->
-      """WITH c AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cv FROM embeddings),
-          q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 10),
+      s"""WITH $annSidesCtes,
           s AS (SELECT q.qid, c.cid,
                   CASE WHEN list_dot_product(c.cv, c.cv) = 0 OR list_dot_product(q.qv, q.qv) = 0 THEN 0.0
                        ELSE list_dot_product(c.cv, q.qv)
@@ -3764,11 +3445,7 @@ object QueriesLlm {
                 FROM s)
           SELECT qid, cid, ROUND(cos, 6) + 0 AS cos, rank FROM r WHERE rank <= 5""",
     "e3_ivf_assign" ->
-      """WITH scored AS (
-           SELECT vec_id, i AS cid,
-                  CASE WHEN list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) = 0 THEN 0.0
-                       ELSE embedding[i + 1] / sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) END AS cos
-           FROM embeddings CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS i)),
+      s"""WITH $basisCosCte,
          best AS (
            SELECT vec_id, cid,
                   row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid DESC) AS rn
@@ -3776,15 +3453,9 @@ object QueriesLlm {
          SELECT CAST(cid AS BIGINT) AS cid, COUNT(*) AS n
          FROM best WHERE rn = 1 GROUP BY 1""",
     "d5_embed_neardups" ->
-      s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          planted AS (
-            SELECT vec_id + 100000 AS vec_id,
-              list_transform(generate_series(1, 64),
-                j -> 0.9 * v[j] + 0.1 * v[(j % 64) + 1]) AS v
-            FROM base WHERE vec_id < 50),
-          corpus AS (SELECT * FROM base UNION ALL SELECT * FROM planted),
+      s"""WITH $plantedCorpusCtes,
           planes(pid, p) AS (VALUES
-             $d5PlanesSql),
+             ${planesSql(48)}),
           bits AS (
             SELECT c.vec_id, pl.pid,
               CASE WHEN ${dotSql("c.v", "pl.p")} > 0 THEN '1' ELSE '0' END AS bit
@@ -3812,52 +3483,14 @@ object QueriesLlm {
           SELECT id1, id2, cos FROM verified WHERE cos >= 0.8""",
     // e9: e4's CTE chain with the rank window replaced by the threshold filter
     "e9_ivf_range" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          norm AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nv FROM e),
-          cscore AS (
-            SELECT vec_id, i AS cell,
-              CASE WHEN nv = 0 THEN 0.0 ELSE v[i + 1] / nv END AS cos
-            FROM norm CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS i)),
-          assign AS (SELECT vec_id AS cid, cell FROM (
-              SELECT vec_id, cell,
-                row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
-              FROM cscore) WHERE rn = 1),
-          probes AS (SELECT vec_id AS qid, cell FROM (
-              SELECT vec_id, cell,
-                row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
-              FROM cscore WHERE vec_id < 10) WHERE rn <= 2),
-          cands AS (SELECT p.qid, a.cid FROM probes p JOIN assign a ON p.cell = a.cell),
-          scored AS (
-            SELECT c.qid, c.cid,
-              CASE WHEN q.nv = 0 OR t.nv = 0 THEN 0.0
-                   ELSE list_dot_product(q.v, t.v) / (q.nv * t.nv) END AS cos
-            FROM cands c
-            JOIN norm q ON c.qid = q.vec_id
-            JOIN norm t ON c.cid = t.vec_id)
+      s"""WITH $ivfCellCtes,
+          $ivfCandsCte,
+          $ivfScoredCte
           SELECT qid, cid, ROUND(cos, 4) + 0 AS cos FROM scored WHERE cos >= 0.2""",
     "e4_ivf_topk" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          norm AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nv FROM e),
-          cscore AS (
-            SELECT vec_id, i AS cell,
-              CASE WHEN nv = 0 THEN 0.0 ELSE v[i + 1] / nv END AS cos
-            FROM norm CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS i)),
-          assign AS (SELECT vec_id AS cid, cell FROM (
-              SELECT vec_id, cell,
-                row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
-              FROM cscore) WHERE rn = 1),
-          probes AS (SELECT vec_id AS qid, cell FROM (
-              SELECT vec_id, cell,
-                row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
-              FROM cscore WHERE vec_id < 10) WHERE rn <= 2),
-          cands AS (SELECT p.qid, a.cid FROM probes p JOIN assign a ON p.cell = a.cell),
-          scored AS (
-            SELECT c.qid, c.cid,
-              CASE WHEN q.nv = 0 OR t.nv = 0 THEN 0.0
-                   ELSE list_dot_product(q.v, t.v) / (q.nv * t.nv) END AS cos
-            FROM cands c
-            JOIN norm q ON c.qid = q.vec_id
-            JOIN norm t ON c.cid = t.vec_id),
+      s"""WITH $ivfCellCtes,
+          $ivfCandsCte,
+          $ivfScoredCte,
           r AS (SELECT qid, cid, cos,
                   row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid ASC) AS rank
                 FROM scored)
@@ -3884,46 +3517,21 @@ object QueriesLlm {
           FROM d""",
     // e13: e4's assign/probe CTEs composed with e12's quantize + score CTEs
     "e13_ivfsq_topk" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          norm AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nv FROM e),
-          cscore AS (
-            SELECT vec_id, i AS cell,
-              CASE WHEN nv = 0 THEN 0.0 ELSE v[i + 1] / nv END AS cos
-            FROM norm CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS i)),
-          assign AS (SELECT vec_id AS cid, cell FROM (
-              SELECT vec_id, cell,
-                row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
-              FROM cscore) WHERE rn = 1),
-          probes AS (SELECT vec_id AS qid, cell FROM (
-              SELECT vec_id, cell,
-                row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
-              FROM cscore WHERE vec_id < 10) WHERE rn <= 2),
-          cq AS (SELECT vec_id AS cid, list_min(v) AS mn, list_max(v) AS mx,
-              list_transform(v, x -> CASE WHEN list_max(v) = list_min(v) THEN 0
-                ELSE CAST(round((x - list_min(v)) / (list_max(v) - list_min(v)) * 255)
-                     - 128 AS INT) END) AS codes
-            FROM e),
-          cands AS (SELECT p.qid, a.cid FROM probes p JOIN assign a ON p.cell = a.cell),
+      s"""WITH $ivfCellCtes,
+          $sqCodesCte,
+          $ivfCandsCte,
           s AS (SELECT c.qid, c.cid,
               (cq.mx - cq.mn) / 255.0 *
                 list_sum(list_transform(generate_series(1, 64),
                   j -> q.v[j] * CAST(cq.codes[j] + 128 AS DOUBLE))) +
               cq.mn * list_sum(q.v) AS score0
             FROM cands c JOIN cq ON c.cid = cq.cid JOIN e q ON c.qid = q.vec_id),
-          r AS (SELECT qid, cid, ROUND(score0, 6) + 0 AS score,
-                  row_number() OVER (PARTITION BY qid
-                    ORDER BY ROUND(score0, 6) DESC, cid ASC) AS rank
-                FROM s)
-          SELECT qid, cid, score, rank FROM r WHERE rank <= 5""",
+          $sqRankSql""",
     // e12: the SQ8 search replayed — the same quantize replica as e5, then
     // the same integer-fold score expansion in the same float-op order
     "e12_sq_topk" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          cq AS (SELECT vec_id AS cid, list_min(v) AS mn, list_max(v) AS mx,
-              list_transform(v, x -> CASE WHEN list_max(v) = list_min(v) THEN 0
-                ELSE CAST(round((x - list_min(v)) / (list_max(v) - list_min(v)) * 255)
-                     - 128 AS INT) END) AS codes
-            FROM e),
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+          $sqCodesCte,
           q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
           s AS (SELECT q.qid, cq.cid,
               (cq.mx - cq.mn) / 255.0 *
@@ -3931,11 +3539,7 @@ object QueriesLlm {
                   j -> q.qv[j] * CAST(cq.codes[j] + 128 AS DOUBLE))) +
               cq.mn * list_sum(q.qv) AS score0
             FROM cq CROSS JOIN q),
-          r AS (SELECT qid, cid, ROUND(score0, 6) + 0 AS score,
-                  row_number() OVER (PARTITION BY qid
-                    ORDER BY ROUND(score0, 6) DESC, cid ASC) AS rank
-                FROM s)
-          SELECT qid, cid, score, rank FROM r WHERE rank <= 5""",
+          $sqRankSql""",
     "mm1_byte_features" ->
       """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS length
          FROM documents""",
@@ -3949,11 +3553,9 @@ object QueriesLlm {
     // Dot products fold in the Spark order, so sign bits and cosines agree bit-exactly.
     // (AnnOpsSpec additionally property-tests recall >= 0.9 vs brute force.)
     "e2_ann_lsh" ->
-      s"""WITH c AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cv FROM embeddings),
-          q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-                FROM embeddings WHERE vec_id < 10),
+      s"""WITH $annSidesCtes,
           planes(pid, p) AS (VALUES
-             $e2PlanesSql),
+             ${planesSql(10)}),
           cbits AS (SELECT c.cid, pl.pid,
               CASE WHEN ${dotSql("c.cv", "pl.p")} > 0 THEN '1' ELSE '0' END AS bit
             FROM c CROSS JOIN planes pl),

@@ -17,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * series operators that run as `SeriesScan` kernels keep no window form beside
   * them. The banded near-dup operators pair through one bucket chassis, and each
   * band-key family has one definition that its pair operator, cap ledger and
-  * streaming twin share. */
+  * streaming twin share. Each cached media fixture tag is written at one call
+  * site, so a fixture bump cannot leave a query reading a stale cache. */
 class ScaffoldingSpec extends AnyFunSuite {
   private val sources: Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")
@@ -120,6 +121,15 @@ class ScaffoldingSpec extends AnyFunSuite {
       ops.collect { case (f, op) if !member(f, op).contains(s"$keys(") => s"$op: $keys" }
     }
     assert(missing.isEmpty, s"audited keys must be the join keys: $missing")
+  }
+
+  test("each media fixture tag is written at exactly one mediaFixture call site") {
+    val call = """mediaFixture\(\s*\w+,\s*\w+,\s*"([^"]+)"""".r
+    val tags = sources.flatMap { case (_, text) => call.findAllMatchIn(text).map(_.group(1)) }
+    assert(tags.contains("mm6_avi_v2"), s"scan found no mediaFixture call: $tags")
+    val repeated = tags.groupBy(identity).collect { case (tag, n) if n.size > 1 => tag -> n.size }
+    assert(repeated.isEmpty,
+      s"a fixture bump must reach every reader; call one fixture def per tag: $repeated")
   }
 
   test("a frame running to unboundedFollowing starts at unboundedPreceding") {
