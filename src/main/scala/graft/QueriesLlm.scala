@@ -707,7 +707,7 @@ object QueriesLlm {
       // the training collects above already ran eagerly, so the cache has served
       // its purpose: release it here (r7 verdict item — library callers have no
       // harness clearCache). The serving action recomputes the pruned projection
-      // from parquet once; ivfPqTopK persists its own code table.
+      // from parquet once.
       emb.unpersist(blocking = false)
       result
     }),

@@ -29,14 +29,29 @@ object AnnOps {
     * the baseline/oracle path, not the billion-vector path). */
   def bruteForceTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
                      queries: DataFrame, queryId: String, queryVec: String,
-                     k: Int): DataFrame = {
-    val joined = corpus.crossJoin(broadcast(queries))
-      .withColumn("cos", cosine(col(corpusVec), col(queryVec)))
-    val w = Window.partitionBy(col(queryId)).orderBy(col("cos").desc, col(corpusId))
-    joined.withColumn("rank", row_number().over(w))
+                     k: Int): DataFrame =
+    cosineTopK(corpus.crossJoin(broadcast(queries)), corpusId, corpusVec,
+      queryId, queryVec, k, digits = 6)
+
+  /** The per-query top-k every search op ranks by: `row_number` over `queryId`,
+    * ordered by `score` (`.desc` or `.asc`), ties to the lower `corpusId`,
+    * kept to `rank <= k`. Returns `cands` plus `rank`. */
+  private[graft] def topK(cands: DataFrame, queryId: String, corpusId: String,
+                          score: Column, k: Int): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    cands.withColumn("rank", row_number().over(
+        Window.partitionBy(col(queryId)).orderBy(score, col(corpusId))))
       .filter(col("rank") <= k)
-      .select(col(queryId), col(corpusId), round(col("cos"), 6).as("cos"), col("rank"))
   }
+
+  /** [[topK]] by raw cosine, descending: (queryId, corpusId, cos, rank), with
+    * cos rounded to `digits`. */
+  private def cosineTopK(cands: DataFrame, corpusId: String, corpusVec: String,
+                         queryId: String, queryVec: String, k: Int,
+                         digits: Int): DataFrame =
+    topK(cands.withColumn("cos", cosine(col(corpusVec), col(queryVec))),
+        queryId, corpusId, col("cos").desc, k)
+      .select(col(queryId), col(corpusId), round(col("cos"), digits).as("cos"), col("rank"))
 
   /** Deterministic random hyperplanes (seeded Gaussian), as literal nested arrays. */
   def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Seq[Seq[Double]] = {
@@ -77,12 +92,8 @@ object AnnOps {
       .withColumn("_sig", rhSignature(col(queryVec), planes))
       .withColumn("_bkt", explode(probeKeys(col("_sig"), nPlanes)))
       .drop("_sig")
-    val cands = bucketed.join(probed, "_bkt")
-      .withColumn("cos", cosine(col(corpusVec), col(queryVec)))
-    val w = Window.partitionBy(col(queryId)).orderBy(col("cos").desc, col(corpusId))
-    cands.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryId), col(corpusId), round(col("cos"), 6).as("cos"), col("rank"))
+    cosineTopK(bucketed.join(probed, "_bkt"), corpusId, corpusVec, queryId, queryVec,
+      k, digits = 6)
   }
 
   /** IVF-style coarse quantization: assign each vector to its nearest of `centroids`
@@ -109,17 +120,20 @@ object AnnOps {
     * DECIMAL(27,10) so the result is addition-order independent (bit-identical across
     * partitionings and engines). Unused dimensions prune: a caller projecting 2 of 64
     * mean components pays for 2 aggregates, not 64. */
-  def kmeansStep(df: DataFrame, vecCol: String, centroids: Seq[Seq[Double]]): DataFrame = {
-    val dim = centroids.head.size
-    val sums = (0 until dim).map(j =>
-      sum(element_at(col(vecCol), j + 1).cast("decimal(27,10)")).as(s"_s$j"))
-    df.withColumn("_cell", ivfAssign(col(vecCol), centroids))
-      .groupBy(col("_cell"))
-      .agg(count(lit(1)).as("n"), sums: _*)
-      .select(col("_cell").cast("long").as("cid"), col("n"),
-        array((0 until dim).map(j =>
-          col(s"_s$j").cast("double") / col("n")): _*).as("centroid"))
-  }
+  def kmeansStep(df: DataFrame, vecCol: String, centroids: Seq[Seq[Double]]): DataFrame =
+    cellMeans(df.withColumn("_cell", ivfAssign(col(vecCol), centroids)), vecCol,
+        centroids.head.size)
+      .select(col("_cell").cast("long").as("cid"), col("n"), col("_mean").as("centroid"))
+
+  /** The centroid update both k-means trainers share: per `_cell`, the count `n`
+    * and the mean `_mean` of `vecCol`'s first `dim` components, each an
+    * order-independent DECIMAL(27,10) sum cast to double and divided by `n`. */
+  private def cellMeans(assigned: DataFrame, vecCol: String, dim: Int): DataFrame =
+    assigned.groupBy(col("_cell"))
+      .agg(count(lit(1)).as("n"), (0 until dim).map(j =>
+        sum(element_at(col(vecCol), j + 1).cast("decimal(27,10)")).as(s"_s$j")): _*)
+      .select(col("_cell"), col("n"), array((0 until dim).map(j =>
+        col(s"_s$j").cast("double") / col("n")): _*).as("_mean"))
 
   /** Iterate [[kmeansStep]] to train spherical IVF centroids — the production path
     * the driver-sample inits stand in for. Each round is ONE partial-aggregated
@@ -182,16 +196,10 @@ object AnnOps {
   def kmeansTrainTable(df: DataFrame, idCol: String, vecCol: String,
                        initDf: DataFrame, dim: Int, iters: Int = 5): DataFrame = {
     val vecs = df.select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
-    val sums = (0 until dim).map(j =>
-      sum(element_at(col(vecCol), j + 1).cast("decimal(27,10)")).as(s"_s$j"))
     (0 until iters).foldLeft(initDf.select(col("cid").cast("int").as("cid"),
         col("centroid").cast("array<double>").as("centroid"))) { (cents, _) =>
-      val upd = ivfAssignByJoin(vecs, idCol, vecCol, cents)
-        .groupBy(col("_cell"))
-        .agg(count(lit(1)).as("n"), sums: _*)
-        .select(col("_cell").cast("int").as("cid"),
-          array((0 until dim).map(j =>
-            col(s"_s$j").cast("double") / col("n")): _*).as("_newc"))
+      val upd = cellMeans(ivfAssignByJoin(vecs, idCol, vecCol, cents), vecCol, dim)
+        .select(col("_cell").cast("int").as("cid"), col("_mean").as("_newc"))
       cents.join(upd, Seq("cid"), "left")
         .select(col("cid"),
           coalesce(col("_newc"), col("centroid")).as("centroid"))
@@ -240,27 +248,22 @@ object AnnOps {
     * Output: (queryId, corpusId, score, rank ≤ k). */
   def sqTopK(corpus: DataFrame, corpusId: String, sqCol: String,
              queries: DataFrame, queryId: String, queryVec: String,
-             k: Int): DataFrame = {
-    require(k >= 1, "k >= 1")
-    corpus
-      .crossJoin(broadcast(
-        queries.select(col(queryId).as("_qid"), col(queryVec).as("_qv"))))
-      .withColumn("score", sqScore(col("_qv"), col(sqCol)))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("_qid"))
-          .orderBy(col("score").desc, col(corpusId))))
-      .filter(col("rank") <= k)
-      .select(col("_qid").as(queryId), col(corpusId), col("score"), col("rank"))
-  }
+             k: Int): DataFrame =
+    sqScoreTopK(corpus.crossJoin(broadcast(
+        queries.select(col(queryId).as("_qid"), col(queryVec).as("_qv")))),
+      corpusId, sqCol, queryId, k)
 
-  /** The shared SQ asymmetric score (6dp-rounded): exactly
-    * `dot(qv, dequantize(sq))` via the integer-fold expansion — ONE
-    * definition behind [[sqTopK]] and [[ivfSqTopK]] so the flat and
-    * cell-pruned paths cannot drift. Native codegen'd kernel
+  /** The shared SQ asymmetric ranking: [[topK]] of the `_qid` queries by score
+    * (6dp-rounded) exactly `dot(_qv, dequantize(sqCol))` via the integer-fold
+    * expansion — ONE definition behind [[sqTopK]] and [[ivfSqTopK]] so the
+    * flat and cell-pruned paths cannot drift. Native codegen'd kernel
     * ([[graft.expr.SqDot]] — the interpreted HOF fold measured 47.6 s on
     * e12's 20M-candidate 100× stream; VecOpsSpec pins HOF parity). */
-  private def sqScore(qv: Column, sq: Column): Column =
-    round(graft.expr.SqDot.expr(qv, sq), 6)
+  private def sqScoreTopK(cands: DataFrame, corpusId: String, sqCol: String,
+                          queryId: String, k: Int): DataFrame =
+    topK(cands.withColumn("score", round(graft.expr.SqDot.expr(col("_qv"), col(sqCol)), 6)),
+        "_qid", corpusId, col("score").desc, k)
+      .select(col("_qid").as(queryId), col(corpusId), col("score"), col("rank"))
 
   /** IVF + SQ top-k — [[sqTopK]] with [[ivfAssign]]'s cell pruning, the SQ
     * row of the quantized-index matrix (IVF+PQ = e8, IVF+SQ = this): the
@@ -273,23 +276,12 @@ object AnnOps {
     * SQ's quantization error (bounded at (mx−mn)/510 per component). */
   def ivfSqTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
                 queries: DataFrame, queryId: String, queryVec: String,
-                centroids: Seq[Seq[Double]], nProbe: Int, k: Int): DataFrame = {
-    require(k >= 1, "k >= 1")
-    val indexed = corpus
-      .withColumn("_cell", ivfAssign(col(corpusVec), centroids))
-      .withColumn("_sq", quantizeInt8(col(corpusVec)))
-      .select(col(corpusId), col("_cell"), col("_sq"))
-    val probed = queries
-      .withColumn("_cell", explode(ivfProbes(col(queryVec), centroids, nProbe)))
-      .select(col(queryId).as("_qid"), col(queryVec).as("_qv"), col("_cell"))
-    indexed.join(broadcast(probed), "_cell")
-      .withColumn("score", sqScore(col("_qv"), col("_sq")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("_qid"))
-          .orderBy(col("score").desc, col(corpusId))))
-      .filter(col("rank") <= k)
-      .select(col("_qid").as(queryId), col(corpusId), col("score"), col("rank"))
-  }
+                centroids: Seq[Seq[Double]], nProbe: Int, k: Int): DataFrame =
+    sqScoreTopK(ivfProbeJoin(corpus, corpusVec, queries, queryVec, centroids, nProbe,
+        _.withColumn("_sq", quantizeInt8(col(corpusVec)))
+          .select(col(corpusId), col("_cell"), col("_sq")),
+        _.select(col(queryId).as("_qid"), col(queryVec).as("_qv"), col("_cell"))),
+      corpusId, "_sq", queryId, k)
 
   /** Deterministic product-quantization codebooks: `m` subspaces × `k` centroids of
     * `subDim` dims (seeded Gaussian — a production system k-means-trains them, e.g.
@@ -330,47 +322,9 @@ object AnnOps {
   def ivfPqTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
                 queries: DataFrame, queryId: String, queryVec: String,
                 centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
-                nProbe: Int, k: Int): DataFrame = {
-    val m = codebooks.size
-    val subDim = codebooks.head.head.size
-    // The (id, cell, codes) table IS the IVF-PQ index: persist it so the wide
-    // encode expression (m*k*subDim terms — past the 64 KB codegen method limit,
-    // so it runs interpreted) is evaluated exactly once per corpus row instead of
-    // being re-planned/re-evaluated by every downstream stage (sort, window, AQE
-    // re-optimizations). A production system writes this table out once and serves
-    // many query batches from it; the persist is the single-job analog.
-    val assigned = corpus
-      .withColumn("_cell", ivfAssign(col(corpusVec), centroids))
-      .withColumn("_codes", pqEncode(col(corpusVec), codebooks).getField("codes"))
-      .select(col(corpusId), col("_cell"), col("_codes"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cbLit = typedlit(codebooks)
-    val lut = transform(sequence(lit(0), lit(m - 1)), s => {
-      val sub = element_at(cbLit, s + 1)
-      transform(sub, c =>
-        aggregate(sequence(lit(1), lit(subDim)), lit(0.0), (acc, j) => {
-          val x = element_at(col(queryVec), s * lit(subDim) + j) - element_at(c, j)
-          acc + x * x
-        }))
-    })
-    // Materialize the per-query LUTs too (|Q|*nProbe rows of m*k doubles): the LUT
-    // literal-expression tree is another >64 KB codegen blowout, and pinning it keeps
-    // the broadcast build + every AQE re-plan reading values, not re-deriving them.
-    val probed = queries
-      .withColumn("_cell", explode(ivfProbes(col(queryVec), centroids, nProbe)))
-      .withColumn("_lut", lut)
-      .select(col(queryId), col("_cell"), col("_lut"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val adc = (0 until m).map(s =>
-      element_at(element_at(col("_lut"), s + 1), element_at(col("_codes"), s + 1) + 1))
-      .reduce(_ + _)
-    val w = Window.partitionBy(col(queryId)).orderBy(col("adc").asc, col(corpusId))
-    assigned.join(broadcast(probed), "_cell")
-      .withColumn("adc", adc)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryId), col(corpusId), round(col("adc"), 6).as("adc"), col("rank"))
-  }
+                nProbe: Int, k: Int): DataFrame =
+    ivfAdcTopK(corpus, corpusId, corpusVec, queries, queryId, queryVec, centroids,
+      codebooks, nProbe, k)(pqEncode(col(corpusVec), codebooks), queryVec)
 
   /** Residual IVF-PQ top-k (the FAISS-standard `IndexIVFPQ` encoding: PQ codes
     * quantize `v − centroid(cell)`, not the raw vector). Residuals concentrate
@@ -381,54 +335,57 @@ object AnnOps {
     * through the cell key in the probe join).
     *
     * Same scale shape as [[ivfPqTopK]]: the (id, cell, codes) table is the
-    * persisted index (codes are the shuffle payload, never vectors), the
-    * |Q|×nProbe LUT table broadcasts, and the candidate join is an equi-join on
-    * the cell. Expression arithmetic keeps [[pqEncode]]'s fixed fold order, so
-    * the op carries a bit-exact SQL oracle. */
+    * index (codes are the shuffle payload, never vectors), the |Q|×nProbe LUT
+    * table broadcasts, and the candidate join is an equi-join on the cell.
+    * Expression arithmetic keeps [[pqEncode]]'s fixed fold order, so the op
+    * carries a bit-exact SQL oracle. */
   def ivfPqResidualTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
                         queries: DataFrame, queryId: String, queryVec: String,
                         centroids: Seq[Seq[Double]],
                         codebooks: Seq[Seq[Seq[Double]]],
                         nProbe: Int, k: Int): DataFrame = {
-    val m = codebooks.size
-    val subDim = codebooks.head.head.size
     val centLit = typedlit(centroids)
-    def residual(v: Column, cell: Column): Column =
-      zip_with(v, element_at(centLit, cell.cast("int") + 1), (a, b) => a - b)
-    val assigned = corpus
-      .withColumn("_cell", ivfAssign(col(corpusVec), centroids))
+    ivfAdcTopK(corpus, corpusId, corpusVec, queries, queryId, queryVec, centroids,
+        codebooks, nProbe, k)(
       // FUSED residual+encode (graft.expr.PqEncodeNative, residual = true):
       // one native pass subtracts the cell centroid and PQ-encodes without
       // materializing the residual array — bit-identical to
       // `pqEncodeHof(residual(vec, cell), codebooks)` (PqNativeSpec pins it).
-      .withColumn("_codes",
-        graft.expr.PqEncodeNative.residualExpr(col(corpusVec), col("_cell"),
-          centroids, codebooks).getField("codes"))
-      .select(col(corpusId), col("_cell"), col("_codes"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      graft.expr.PqEncodeNative.residualExpr(col(corpusVec), col("_cell"),
+        centroids, codebooks),
+      "_qres",
+      _.withColumn("_qres", zip_with(col(queryVec),
+        element_at(centLit, col("_cell").cast("int") + 1), (a, b) => a - b)))
+  }
+
+  /** The IVF-ADC search both IVF-PQ ops share: corpus rows carry their `encode`
+    * codes (which may read `_cell`), probe rows the LUT of their `lutQuery` column
+    * (which `prepare` may add), and candidates rank by ascending ADC, rounded 6dp. */
+  private def ivfAdcTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
+                         queries: DataFrame, queryId: String, queryVec: String,
+                         centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
+                         nProbe: Int, k: Int)(
+                         encode: Column, lutQuery: String,
+                         prepare: DataFrame => DataFrame = identity): DataFrame = {
+    val m = codebooks.size
+    val subDim = codebooks.head.head.size
     val cbLit = typedlit(codebooks)
-    val lut = transform(sequence(lit(0), lit(m - 1)), s => {
-      val sub = element_at(cbLit, s + 1)
-      transform(sub, c =>
+    val lut = transform(sequence(lit(0), lit(m - 1)), s =>
+      transform(element_at(cbLit, s + 1), c =>
         aggregate(sequence(lit(1), lit(subDim)), lit(0.0), (acc, j) => {
-          val x = element_at(col("_qres"), s * lit(subDim) + j) - element_at(c, j)
+          val x = element_at(col(lutQuery), s * lit(subDim) + j) - element_at(c, j)
           acc + x * x
-        }))
-    })
-    val probed = queries
-      .withColumn("_cell", explode(ivfProbes(col(queryVec), centroids, nProbe)))
-      .withColumn("_qres", residual(col(queryVec), col("_cell")))
-      .withColumn("_lut", lut)
-      .select(col(queryId), col("_cell"), col("_lut"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        })))
     val adc = (0 until m).map(s =>
       element_at(element_at(col("_lut"), s + 1), element_at(col("_codes"), s + 1) + 1))
       .reduce(_ + _)
-    val w = Window.partitionBy(col(queryId)).orderBy(col("adc").asc, col(corpusId))
-    assigned.join(broadcast(probed), "_cell")
+    val cands = ivfProbeJoin(corpus, corpusVec, queries, queryVec, centroids, nProbe,
+      _.withColumn("_codes", encode.getField("codes"))
+        .select(col(corpusId), col("_cell"), col("_codes")),
+      q => prepare(q).withColumn("_lut", lut)
+        .select(col(queryId), col("_cell"), col("_lut")))
       .withColumn("adc", adc)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(cands, queryId, corpusId, col("adc").asc, k)
       .select(col(queryId), col(corpusId), round(col("adc"), 6).as("adc"), col("rank"))
   }
 
@@ -501,16 +458,24 @@ object AnnOps {
     * confined to neighbors assigned outside the probed cells (property-tested). */
   def ivfTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
               queries: DataFrame, queryId: String, queryVec: String,
-              centroids: Seq[Seq[Double]], nProbe: Int, k: Int): DataFrame = {
-    val assigned = corpus.withColumn("_cell", ivfAssign(col(corpusVec), centroids))
-    val probed = queries.withColumn("_cell",
-      explode(ivfProbes(col(queryVec), centroids, nProbe)))
-    val cands = assigned.join(broadcast(probed), "_cell")
-      .withColumn("cos", cosine(col(corpusVec), col(queryVec)))
-    val w = Window.partitionBy(col(queryId)).orderBy(col("cos").desc, col(corpusId))
-    cands.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryId), col(corpusId), round(col("cos"), 4).as("cos"), col("rank"))
+              centroids: Seq[Seq[Double]], nProbe: Int, k: Int): DataFrame =
+    cosineTopK(ivfProbeJoin(corpus, corpusVec, queries, queryVec, centroids, nProbe),
+      corpusId, corpusVec, queryId, queryVec, k, digits = 4)
+
+  /** The IVF probe join every cell-pruned search shares: corpus rows in their
+    * [[ivfAssign]] cell meet each query's `nProbe` [[ivfProbes]] cells in an
+    * equi-join on `_cell`; `index` and `probe` shape each side once `_cell` is
+    * set. The |Q| x nProbe probe side is broadcast (a stream's per micro-batch). */
+  private[graft] def ivfProbeJoin(corpus: DataFrame, corpusVec: String,
+                                  queries: DataFrame, queryVec: String,
+                                  centroids: Seq[Seq[Double]], nProbe: Int,
+                                  index: DataFrame => DataFrame = identity,
+                                  probe: DataFrame => DataFrame = identity): DataFrame = {
+    require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
+    val cells = index(corpus.withColumn("_cell", ivfAssign(col(corpusVec), centroids)))
+    val probes = probe(queries.withColumn("_cell",
+      explode(ivfProbes(col(queryVec), centroids, nProbe))))
+    cells.join(broadcast(probes), "_cell")
   }
 
   /** IVF RANGE search — all corpus vectors with cosine >= `minCos` of each query
@@ -525,13 +490,10 @@ object AnnOps {
                      queries: DataFrame, queryId: String, queryVec: String,
                      centroids: Seq[Seq[Double]], nProbe: Int,
                      minCos: Double): DataFrame = {
-    val assigned = corpus.withColumn("_cell", ivfAssign(col(corpusVec), centroids))
-    val probed = queries.withColumn("_cell",
-      explode(ivfProbes(col(queryVec), centroids, nProbe)))
     // each corpus vector lives in exactly ONE cell (ivfAssign is argmax) and the
     // probe list is distinct, so a (query, corpus) pair can only meet once — no
     // dedup needed, and with the probes broadcast the whole op is SHUFFLE-FREE
-    assigned.join(broadcast(probed), "_cell")
+    ivfProbeJoin(corpus, corpusVec, queries, queryVec, centroids, nProbe)
       .withColumn("cos", cosine(col(corpusVec), col(queryVec)))
       .filter(col("cos") >= minCos)
       .select(col(queryId), col(corpusId), round(col("cos"), 4).as("cos"))

@@ -142,7 +142,7 @@ case class CosineSim(left: Expression, right: Expression) extends VecBinary {
 }
 
 /** `sqDot(qv, sq)` — the asymmetric scalar-quantized dot product
-  * (`graft.ann.AnnOps.sqScore`'s kernel): exactly
+  * (`graft.ann.AnnOps.sqScoreTopK`'s kernel): exactly
   * `(mx − mn)/255 · Σᵢ qvᵢ·(codesᵢ+128) + mn · Σᵢ qvᵢ` with both sums as
   * independent left-to-right accumulators, bit-identical to the HOF
   * formulation (pinned in VecOpsSpec) and to the SQL oracle's ordered

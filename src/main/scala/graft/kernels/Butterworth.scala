@@ -33,20 +33,6 @@ object Butterworth {
     Coeffs(k / (k + 1.0), k / (k + 1.0), (k - 1.0) / (k + 1.0))
   }
 
-  /** Direct-form difference equation y[n] = b0 x[n] + b1 x[n-1] - a1 y[n-1] with zero
-    * initial conditions (scipy sosfilt default). Pure streaming fold. */
-  def filterSeries(xs: Iterator[Double], c: Coeffs): Iterator[Double] = {
-    var xp = 0.0
-    var yp = 0.0
-    var first = true
-    xs.map { x =>
-      val y = if (first) { first = false; c.b0 * x }
-              else c.b0 * x + c.b1 * xp - c.a1 * yp
-      xp = x; yp = y
-      y
-    }
-  }
-
   /** The reference's one-month cutoff frequency in Hz (`cut_period = 1 month`). */
   val OneMonthCutoffHz: Double = 1.0 / (3600.0 * 24.0 * 365.0 / 30.0)
 
@@ -67,7 +53,9 @@ object Butterworth {
       Seq(col(timeCol), col(valueCol).cast("double"), col(dataFreqSecondsCol).cast("double")),
       LowPassKernel(cutFreq, out, df.schema(timeCol).dataType))
 
-  /** Inputs: the time, the value and the frequency in seconds. */
+  /** Inputs: the time, the value and the frequency in seconds. Runs the direct-form
+    * y[n] = b0 x[n] + b1 x[n-1] - a1 y[n-1] from zero initial conditions (scipy
+    * sosfilt's default). */
   private final case class LowPassKernel(cutFreq: Double, out: String, timeType: DataType)
       extends SeriesKernel {
     override def outputs: Seq[StructField] = Seq(StructField(out, DoubleType, nullable = true))

@@ -101,9 +101,28 @@ object MultimodalOps {
         .orElse(tryDecodeJavax(payload))
 
     private def tryDecodeJpegScratch(
-        payload: Array[Byte]): Option[java.awt.image.BufferedImage] = {
+        payload: Array[Byte]): Option[java.awt.image.BufferedImage] =
+      // a type-mismatched destination fails: retry through the allocating path
+      withJpegReader(payload, tryDecodeJpegReused(payload)) { rd =>
+        val w = rd.getWidth(0); val h = rd.getHeight(0) // header-only parse
+        val param = rd.getDefaultReadParam
+        val scratch = jpegScratch.get()
+        if (scratch != null && scratch.getWidth == w && scratch.getHeight == h)
+          param.setDestination(scratch)
+        val img = rd.read(0, param)
+        if (img ne scratch) jpegScratch.set(img) // adopt the new geometry/type
+        img
+      }
+
+    /** `read` on this thread's JPEG reader set to `payload` (`None` without the
+      * JPEG SOI marker or a reader). A failed read can leave the reader dirty:
+      * it is disposed and dropped with the scratch image, and `recover` answers. */
+    private def withJpegReader(payload: Array[Byte],
+                               recover: => Option[java.awt.image.BufferedImage])(
+        read: javax.imageio.ImageReader => java.awt.image.BufferedImage)
+        : Option[java.awt.image.BufferedImage] = {
       if (payload.length < 3 || (payload(0) & 0xff) != 0xff ||
-          (payload(1) & 0xff) != 0xd8) return None
+          (payload(1) & 0xff) != 0xd8) return None // not JPEG (SOI magic)
       var rd = jpegReader.get()
       if (rd == null) {
         val it = javax.imageio.ImageIO.getImageReadersByFormatName("jpeg")
@@ -112,21 +131,12 @@ object MultimodalOps {
       }
       try {
         rd.setInput(new ByteArrayImageInputStream(payload))
-        val w = rd.getWidth(0); val h = rd.getHeight(0) // header-only parse
-        val param = rd.getDefaultReadParam
-        val scratch = jpegScratch.get()
-        if (scratch != null && scratch.getWidth == w && scratch.getHeight == h)
-          param.setDestination(scratch)
-        val img = rd.read(0, param)
-        if (img ne scratch) jpegScratch.set(img) // adopt the new geometry/type
-        Option(img)
+        Option(read(rd))
       } catch {
         case _: Exception =>
-          // a type-mismatched destination or dirty reader state: drop both and
-          // let the caller's orElse retry through the plain allocating path
           try rd.dispose() catch { case _: Exception => () }
           jpegReader.remove(); jpegScratch.remove()
-          tryDecodeJpegReused(payload)
+          recover
       }
     }
 
@@ -143,25 +153,8 @@ object MultimodalOps {
       * caller's orElse falls back to the generic path (which will also fail
       * on truly corrupt bytes → payload drops, the documented contract). */
     private[multimodal] def tryDecodeJpegReused(
-        payload: Array[Byte]): Option[java.awt.image.BufferedImage] = {
-      if (payload.length < 3 || (payload(0) & 0xff) != 0xff ||
-          (payload(1) & 0xff) != 0xd8) return None // not JPEG (SOI magic)
-      var rd = jpegReader.get()
-      if (rd == null) {
-        val it = javax.imageio.ImageIO.getImageReadersByFormatName("jpeg")
-        if (!it.hasNext) return None
-        rd = it.next(); jpegReader.set(rd)
-      }
-      try {
-        rd.setInput(new ByteArrayImageInputStream(payload))
-        Option(rd.read(0))
-      } catch {
-        case _: Exception =>
-          try rd.dispose() catch { case _: Exception => () }
-          jpegReader.remove()
-          None
-      }
-    }
+        payload: Array[Byte]): Option[java.awt.image.BufferedImage] =
+      withJpegReader(payload, None)(_.read(0))
 
     private def u32be(b: Array[Byte], o: Int): Long =
       ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
@@ -710,15 +703,23 @@ object MultimodalOps {
 
   private def mm5Frames(docId: Long): Seq[Array[Byte]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
+    twoShotFrames { (f, p) =>
+      val h = md.digest(s"$docId:${f / 3}:$p".getBytes("UTF-8"))
+      val base = (((h(0) & 0xff) << 8) | (h(1) & 0xff)) % 256
+      ((base + (f % 3) * ((p * 13 + f) % 2) * 2) % 256).toInt
+    }
+  }
+
+  /** The mm5/mm6 frame skeleton: six 72×64 JPEG frames (two 3-frame shots)
+    * whose 9×8 grid cell `p` of frame `f` is a flat 8×8 gray block of value
+    * `cell(f, p)`, called in frame-then-cell order. */
+  private def twoShotFrames(cell: (Int, Int) => Int): Seq[Array[Byte]] =
     (0 until 6).map { f =>
-      val sid = f / 3
       val img = new java.awt.image.BufferedImage(
         72, 64, java.awt.image.BufferedImage.TYPE_INT_RGB)
       var p = 0
       while (p < 72) {
-        val h = md.digest(s"$docId:$sid:$p".getBytes("UTF-8"))
-        val base = (((h(0) & 0xff) << 8) | (h(1) & 0xff)) % 256
-        val v = ((base + (f % 3) * ((p * 13 + f) % 2) * 2) % 256).toInt
+        val v = cell(f, p)
         val bx = p % 9; val by = p / 9
         var y = by * 8
         while (y < by * 8 + 8) {
@@ -730,7 +731,6 @@ object MultimodalOps {
       }
       ImageCodec.encodeJpeg(img, 1.0f)
     }
-  }
 
   /** Real from-scratch video container parser (RIFF/AVI — same spirit as the
     * from-scratch NcSource/ZarrSource format readers): walks the RIFF chunk tree,
@@ -822,9 +822,12 @@ object MultimodalOps {
       * ORDER in hdrl, the public AVI two-digit chunk-id rule) in stream
       * order. Compressed tags decline by returning None. Returns
       * (sampleRate, channel-averaged amplitudes) via the same
-      * [[AudioCodec.decodePcmFrames]] kernel as every other PCM path. */
+      * [[AudioCodec.decodePcmFrames]] kernel as every other PCM path. An MP4
+      * payload reads its `soun` track through [[Mp4Codec.audioSamples]]: the
+      * container magic picks the walk, as in [[frames]]. */
     def audioSamples(payload: Array[Byte]): Option[(Int, Array[Double])] =
-      try audioSamplesImpl(payload)
+      if (Mp4Codec.isMp4(payload)) Mp4Codec.audioSamples(payload)
+      else try audioSamplesImpl(payload)
       catch { case scala.util.control.NonFatal(_) => None }
 
     private def audioSamplesImpl(payload: Array[Byte]): Option[(Int, Array[Double])] = {
@@ -1346,9 +1349,8 @@ object MultimodalOps {
   }
 
   /** The audio-track on-ramp for VIDEO payloads (r15, VERDICT r14 #2): walk
-    * the container's first sound stream — AVI `auds` via
-    * [[VideoCodec.audioSamples]], MP4 `soun` via [[Mp4Codec.audioSamples]],
-    * dispatched on container magic like [[VideoCodec.frames]] — and run the
+    * the container's first sound stream through [[VideoCodec.audioSamples]]
+    * (AVI `auds`, or MP4 `soun` by container magic) and run the
     * SAME windowing kernel as [[audioFrameFeatures]], so a soundtrack's
     * features (and everything derived from them: [[energyHash64]], RMS
     * gates) are bit-identical to the same PCM in a WAV. Videos without a
@@ -1358,10 +1360,8 @@ object MultimodalOps {
                         (implicit spark: SparkSession): Dataset[AudioFeatures] = {
     import spark.implicits._
     ds.mapPartitions(_.flatMap { r =>
-      val dec =
-        if (Mp4Codec.isMp4(r.payload)) Mp4Codec.audioSamples(r.payload)
-        else VideoCodec.audioSamples(r.payload)
-      dec.map { case (rate, s) => audioFeaturesOf(r.id, rate, s, windowSamples) }
+      VideoCodec.audioSamples(r.payload)
+        .map { case (rate, s) => audioFeaturesOf(r.id, rate, s, windowSamples) }
     })
   }
 
@@ -1391,18 +1391,11 @@ object MultimodalOps {
     require(stride >= 1, "stride must be >= 1")
     import spark.implicits._
     ds.mapPartitions(_.map { r =>
-      val grays: Seq[(Int, Seq[Int])] = VideoCodec.frames(r.payload).iterator.zipWithIndex
-        .filter(_._2 % stride == 0)
-        .flatMap { case (f, i) =>
-          ImageCodec.tryDecodeScratch(f)
-            .map(img => (i, grayRasterOf(img, hashW, hashH).toSeq))
-        }.toList
-      val rms: Seq[Double] =
-        (if (Mp4Codec.isMp4(r.payload)) Mp4Codec.audioSamples(r.payload)
-         else VideoCodec.audioSamples(r.payload))
-          .map { case (rate, s) =>
-            audioFeaturesOf(r.id, rate, s, windowSamples).windowRms.toSeq }
-          .orNull
+      val grays: Seq[(Int, Seq[Int])] = frameGrays(r.payload, stride, hashW, hashH).toList
+      val rms: Seq[Double] = VideoCodec.audioSamples(r.payload)
+        .map { case (rate, s) =>
+          audioFeaturesOf(r.id, rate, s, windowSamples).windowRms.toSeq }
+        .orNull
       (r.id, grays, rms)
     }).toDF("id", "frames", "window_rms")
   }
@@ -1720,14 +1713,20 @@ object MultimodalOps {
     require(stride >= 1, "stride must be >= 1")
     import spark.implicits._
     ds.mapPartitions(_.flatMap { r =>
-      VideoCodec.frames(r.payload).iterator.zipWithIndex
-        .filter(_._2 % stride == 0)
-        .flatMap { case (f, i) =>
-          ImageCodec.tryDecodeScratch(f)
-            .map(img => (r.id, i, grayRasterOf(img, hashW, hashH).toSeq))
-        }
+      frameGrays(r.payload, stride, hashW, hashH).map { case (i, g) => (r.id, i, g) }
     }).toDF("id", "frame_idx", "gray")
   }
+
+  /** (frame index, gray raster) of every `stride`-th decodable frame, the walk
+    * [[videoGrayRasters]] and [[videoAvRasters]] share; each raster is taken
+    * before the next [[ImageCodec.tryDecodeScratch]] reuses the image. */
+  private def frameGrays(payload: Array[Byte], stride: Int, hashW: Int,
+                         hashH: Int): Iterator[(Int, Seq[Int])] =
+    VideoCodec.frames(payload).iterator.zipWithIndex
+      .filter(_._2 % stride == 0)
+      .flatMap { case (f, i) =>
+        ImageCodec.tryDecodeScratch(f).map(img => (i, grayRasterOf(img, hashW, hashH).toSeq))
+      }
 
   /** Per-video KEYFRAME dHashes — the video "fingerprint set" (mm5's shot
     * detection folded to its useful residue): dHash every frame raster, then
@@ -1890,30 +1889,15 @@ object MultimodalOps {
   private def mm6Frames(docId: Long): Seq[Array[Byte]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val gid = docId / 4
-    (0 until 6).map { f =>
-      val sid = f / 3
-      val img = new java.awt.image.BufferedImage(
-        72, 64, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var p = 0
-      while (p < 72) {
-        val h = md.digest(s"g$gid:$sid:$p".getBytes("UTF-8"))
-        // base capped at 239: max jitter is 4 (shot) + 6 (video) = 10, so no
-        // cell ever wraps mod 256 — a wrap would turn a +2 brightness jitter
-        // into a 254-level jump, flipping comparisons hard enough to mark
-        // spurious within-shot keyframes (caught by the {0,3} keyframe pin)
-        val base = (((h(0) & 0xff) << 8) | (h(1) & 0xff)) % 240
-        val v = (base + (f % 3) * ((p * 13 + f) % 2) * 2
-          + (docId % 4) * ((p * 7 + docId) % 2) * 2).toInt
-        val bx = p % 9; val by = p / 9
-        var y = by * 8
-        while (y < by * 8 + 8) {
-          var x = bx * 8
-          while (x < bx * 8 + 8) { img.setRGB(x, y, (v << 16) | (v << 8) | v); x += 1 }
-          y += 1
-        }
-        p += 1
-      }
-      ImageCodec.encodeJpeg(img, 1.0f)
+    twoShotFrames { (f, p) =>
+      val h = md.digest(s"g$gid:${f / 3}:$p".getBytes("UTF-8"))
+      // base capped at 239: max jitter is 4 (shot) + 6 (video) = 10, so no
+      // cell ever wraps mod 256 — a wrap would turn a +2 brightness jitter
+      // into a 254-level jump, flipping comparisons hard enough to mark
+      // spurious within-shot keyframes (caught by the {0,3} keyframe pin)
+      val base = (((h(0) & 0xff) << 8) | (h(1) & 0xff)) % 240
+      (base + (f % 3) * ((p * 13 + f) % 2) * 2
+        + (docId % 4) * ((p * 7 + docId) % 2) * 2).toInt
     }
   }
 

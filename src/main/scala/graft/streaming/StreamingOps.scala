@@ -309,14 +309,11 @@ object StreamingOps {
                      centroids: Seq[Seq[Double]], nProbe: Int, k: Int,
                      watermarkDelay: String = "1 hour"): DataFrame = {
     import graft.ann.AnnOps
-    val assigned = corpus
-      .withColumn("_cell", AnnOps.ivfAssign(col(corpusVec), centroids))
-      .select(col("_cell"), col(corpusId).as("_cid"), col(corpusVec).as("_cvec"))
-    val probed = queryStream
-      .withWatermark(timeCol, watermarkDelay)
-      .select(col(queryId), col(timeCol), col(queryVec).as("_qvec"))
-      .withColumn("_cell", explode(AnnOps.ivfProbes(col("_qvec"), centroids, nProbe)))
-    probed.join(assigned, Seq("_cell"))
+    require(k >= 1, s"k must be >= 1, got $k")
+    AnnOps.ivfProbeJoin(corpus, corpusVec,
+        queryStream.withWatermark(timeCol, watermarkDelay), queryVec, centroids, nProbe,
+        _.select(col("_cell"), col(corpusId).as("_cid"), col(corpusVec).as("_cvec")),
+        _.select(col(queryId), col(timeCol), col(queryVec).as("_qvec"), col("_cell")))
       .withColumn("_cos", AnnOps.cosine(col("_cvec"), col("_qvec")))
       .groupBy(col(queryId), col(timeCol))
       .agg(slice(array_sort(collect_list(

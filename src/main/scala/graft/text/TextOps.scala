@@ -1242,8 +1242,6 @@ object TextOps {
     pruned.count()
     // document frequencies for just the query terms (≤ |query vocab| keys)
     val dfreq = pruned.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(qidCol)).orderBy(col("score").desc, col(idCol))
     // r16 (guide §1.2 step 2, §2.3, measured at 100×): the per-term idf and the
     // per-(doc,term) contribution used to be computed AFTER the qterms fan-out —
     // a posting shared by q queries paid the log/round/decimal chain q times, and
@@ -1279,12 +1277,11 @@ object TextOps {
           (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))), 6)
           .cast("decimal(8,6)"))
       .select(col("term"), col(idCol), col("_contrib"))
-    contrib.join(broadcast(qterms), "term")
+    val scored = contrib.join(broadcast(qterms), "term")
       .groupBy(col(qidCol), col(idCol))
       .agg(sum(col("_contrib")).as("_s"))
       .withColumn("score", round(col("_s").cast("double"), 4))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    graft.ann.AnnOps.topK(scored, qidCol, idCol, col("score").desc, k)
       .select(col(qidCol), col(idCol), col("score"), col("rank"))
   }
 

@@ -18,7 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * them. The banded near-dup operators pair through one bucket chassis, and each
   * band-key family has one definition that its pair operator, cap ledger and
   * streaming twin share. Each cached media fixture tag is written at one call
-  * site, so a fixture bump cannot leave a query reading a stale cache. */
+  * site, so a fixture bump cannot leave a query reading a stale cache. The ANN
+  * search ops rank through one `topK` and probe IVF cells through one join, and
+  * `graft/ann` pins no storage beyond the k-means lineage cut. */
 class ScaffoldingSpec extends AnyFunSuite {
   private val sources: Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")
@@ -123,6 +125,30 @@ class ScaffoldingSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"audited keys must be the join keys: $missing")
   }
 
+  test("the ANN search ops rank through one topK and probe through one IVF join") {
+    assert(occurrences(source("AnnOps.scala"), "row_number().over(").length == 1 &&
+      member("AnnOps.scala", "topK").contains("row_number().over("),
+      "rank per query through AnnOps.topK")
+    // the definition plus the one call in the probe chassis
+    val probes = sources.flatMap { case (p, text) =>
+      occurrences(text, "ivfProbes(").map(_ => p.getFileName.toString)
+    }
+    assert(probes == Seq("AnnOps.scala", "AnnOps.scala") &&
+      member("AnnOps.scala", "ivfProbeJoin").contains("ivfProbes("),
+      s"probe IVF cells through AnnOps.ivfProbeJoin: $probes")
+  }
+
+  // \w*[cC]: localCheckpoint( pins storage too
+  private val pin = """persist\(|\.cache\(\)|\w*[cC]heckpoint\(""".r
+
+  test("graft/ann pins no storage but kmeansTrainTable's per-round localCheckpoint") {
+    val pins = sources.filter(_._1.toString.contains("/graft/ann/")).flatMap {
+      case (p, text) => pin.findAllIn(text).map(m => s"${p.getFileName}: $m")
+    }
+    assert(pins == Seq("AnnOps.scala: localCheckpoint("), s"an ANN op pins storage: $pins")
+    assert(member("AnnOps.scala", "kmeansTrainTable").contains(".localCheckpoint()"))
+  }
+
   test("each media fixture tag is written at exactly one mediaFixture call site") {
     val call = """mediaFixture\(\s*\w+,\s*\w+,\s*"([^"]+)"""".r
     val tags = sources.flatMap { case (_, text) => call.findAllMatchIn(text).map(_.group(1)) }
@@ -146,7 +172,6 @@ class ScaffoldingSpec extends AnyFunSuite {
   private def assertNoPin(scoped: Seq[(Path, String)], expected: Set[String]): Unit = {
     val files = scoped.map(_._1.getFileName.toString).toSet
     assert(expected.subsetOf(files), s"scan found no sources: $files")
-    val pin = """persist\(|\.cache\(\)|checkpoint\(""".r
     val offenders = scoped.flatMap { case (p, text) =>
       pin.findAllIn(text).map(m => s"$p: $m")
     }

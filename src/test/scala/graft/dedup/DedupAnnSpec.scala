@@ -770,6 +770,50 @@ class DedupAnnSpec extends SparkSpec {
     }
   }
 
+  test("every search op refuses k < 1 and nProbe < 1") {
+    // k = 0 would answer every query with nothing, and nProbe = 0 would give
+    // every query zero candidates
+    val corpus = Seq((1L, Seq.fill(64)(0.5)), (2L, Seq.fill(64)(-0.25))).toDF("cid", "cv")
+    val queries = Seq((1L, Seq.fill(64)(0.5))).toDF("qid", "qv")
+    val sq = corpus.select($"cid", AnnOps.quantizeInt8($"cv").as("sq"))
+    val cents = Seq(Seq.fill(64)(1.0), Seq.fill(64)(-1.0))
+    val books = AnnOps.pqCodebooks(m = 8, k = 4, subDim = 8)
+    val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
+    val textQueries = Seq((1L, "a b")).toDF("qid", "q")
+    val stream = queries.withColumn("ts", lit(0L).cast("timestamp"))
+    def calls(k: Int, nProbe: Int): Seq[(String, () => Any)] = Seq(
+      "bruteForceTopK" -> (() =>
+        AnnOps.bruteForceTopK(corpus, "cid", "cv", queries, "qid", "qv", k)),
+      "lshTopK" -> (() => AnnOps.lshTopK(corpus, "cid", "cv", queries, "qid", "qv", k)),
+      "ivfTopK" -> (() =>
+        AnnOps.ivfTopK(corpus, "cid", "cv", queries, "qid", "qv", cents, nProbe, k)),
+      "ivfRangeSearch" -> (() => AnnOps.ivfRangeSearch(corpus, "cid", "cv", queries,
+        "qid", "qv", cents, nProbe, minCos = 0.5)),
+      "sqTopK" -> (() => AnnOps.sqTopK(sq, "cid", "sq", queries, "qid", "qv", k)),
+      "ivfSqTopK" -> (() =>
+        AnnOps.ivfSqTopK(corpus, "cid", "cv", queries, "qid", "qv", cents, nProbe, k)),
+      "ivfPqTopK" -> (() => AnnOps.ivfPqTopK(corpus, "cid", "cv", queries, "qid", "qv",
+        cents, books, nProbe, k)),
+      "ivfPqResidualTopK" -> (() => AnnOps.ivfPqResidualTopK(corpus, "cid", "cv",
+        queries, "qid", "qv", cents, books, nProbe, k)),
+      "bm25Retrieve" -> (() => graft.text.TextOps.bm25Retrieve(docs, "doc_id", "text",
+        textQueries, "qid", "q", k)),
+      "annServeStream" -> (() => graft.streaming.StreamingOps.annServeStream(stream,
+        corpus, "qid", "qv", "ts", "cid", "cv", cents, nProbe, k)))
+    val noProbe = Set("bruteForceTopK", "lshTopK", "sqTopK", "bm25Retrieve")
+    val refusals = calls(k = 0, nProbe = 1).collect {
+        case (name, call) if name != "ivfRangeSearch" => (name, "k", call)
+      } ++ calls(k = 1, nProbe = 0).collect {
+        case (name, call) if !noProbe(name) => (name, "nProbe", call)
+      }
+    assert(refusals.size == 15)
+    for ((name, param, call) <- refusals) {
+      val e = withClue(s"$name, $param: ")(intercept[IllegalArgumentException](call()))
+      assert(e.getMessage.contains(s"$param ") && e.getMessage.contains(">= 1"),
+        s"$name, $param: ${e.getMessage}")
+    }
+  }
+
   test("snapshotDiff classifies added/removed/changed/unchanged; normalization-insensitive") {
     val old = Seq((1L, "a b c"), (2L, "keep me"), (3L, "gone soon")).toDF("id", "text")
     val cur = Seq((1L, "a b  C"), // whitespace/case only -> same fingerprint

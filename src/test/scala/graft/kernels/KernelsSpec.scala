@@ -13,23 +13,38 @@ class KernelsSpec extends SparkSpec {
     assert(approx(c.a1, -0.97871047210032913, 1e-15))
   }
 
+  // one series through Butterworth.lowPass: hourly-spaced times, sampling
+  // frequency 1 / freqS Hz, outputs in time order
+  private def lowPassSeries(xs: Seq[Double], freqS: Double, cutFreq: Double): Seq[Double] = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    implicit val s = spark
+    val df = xs.zipWithIndex.map { case (v, i) => (i.toLong * 3600, v) }.toDF("tsec", "v")
+      .withColumn("k", lit("s"))
+      .withColumn("t", col("tsec").cast("timestamp"))
+      .withColumn("freq_s", lit(freqS))
+    Butterworth.lowPass(df, Seq("k"), "t", "v", "freq_s", "lp", cutFreq)
+      .orderBy("tsec").select("lp").as[Double].collect().toSeq
+  }
+
   test("Butterworth filter matches pinned sosfilt output") {
     val xs = (0 until 20).map(i => math.sin(i * 0.7) + i * 0.1)
     val want = Seq(0.0, 0.007922021608, 0.028294219666, 0.052692770769, 0.071776831052,
       0.079660888888, 0.076662463498, 0.069132854463, 0.066450534051, 0.076591227919,
       0.102358135603, 0.140045268368, 0.181162549045, 0.21641132417, 0.240040534832,
       0.252534763087, 0.260369915942, 0.272951444947, 0.298175097122, 0.338698038154)
-    val c = Butterworth.coeffs(Butterworth.OneMonthCutoffHz, 1.0 / 3600.0)
-    val got = Butterworth.filterSeries(xs.iterator, c).toSeq
+    val got = lowPassSeries(xs, 3600.0, Butterworth.OneMonthCutoffHz)
+    assert(got.length == want.length)
     got.zip(want).foreach { case (a, b) => assert(approx(a, b, 1e-9)) }
   }
 
   test("Butterworth low-pass attenuates high frequency, passes DC") {
-    val c = Butterworth.coeffs(0.01, 1.0) // fc well below Nyquist
-    val dc = Butterworth.filterSeries(Iterator.fill(2000)(1.0), c).toSeq.last
+    // fc = 0.01 Hz at fs = 1 Hz, well below Nyquist
+    val dc = lowPassSeries(Seq.fill(2000)(1.0), 1.0, 0.01).last
     assert(approx(dc, 1.0, 1e-3)) // DC gain ~1
     val hf = (0 until 2000).map(i => if (i % 2 == 0) 1.0 else -1.0)
-    val hfOut = Butterworth.filterSeries(hf.iterator, c).toSeq.drop(1000)
+    val hfOut = lowPassSeries(hf, 1.0, 0.01).drop(1000)
+    assert(hfOut.length == 1000)
     assert(hfOut.forall(v => math.abs(v) < 0.05)) // Nyquist-rate signal killed
   }
 

@@ -825,6 +825,8 @@ class MultimodalSpec extends SparkSpec {
     val mp4 = Mp4Codec.buildMjpegMp4(frames, 8, 8, Some((pcm, 8000, 1)))
     val (mp4Rate, mp4S) = Mp4Codec.audioSamples(mp4).get
     assert(mp4Rate == 8000 && mp4S.toSeq == want)
+    // the video entry point picks the MP4 walk by container magic
+    assert(VideoCodec.audioSamples(mp4).map(_._2.toSeq) == Some(want))
     assert(Mp4Codec.frames(mp4).size == 3 &&
       Mp4Codec.tryParse(mp4).get.nFrames == 3)
     assert(Mp4Codec.audioSamples(Mp4Codec.buildMjpegMp4(frames, 8, 8)).isEmpty)
