@@ -1627,7 +1627,7 @@ object QueriesLlm {
   /** mm5's analytic twin: rebuild each (video, frame)'s flat-block gray grid
     * from the md5(doc:shot:cell)+jitter synthesis (exact through the JPEG
     * round-trip and the 72×64→9×8 box mean — both identities by construction,
-    * see mm5FixtureAvi), dHash it, and flag keyframes off the lag hamming. */
+    * see mm5FixtureVideo), dHash it, and flag keyframes off the lag hamming. */
   private val mm5KeyframesSql: String =
     s"""WITH ${keyframeCtes("""CAST(((('0x' || substring(md5(doc_id::VARCHAR || ':' ||
                         sid::VARCHAR || ':' || p::VARCHAR), 1, 4))::BIGINT % 256)

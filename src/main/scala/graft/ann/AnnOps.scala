@@ -80,9 +80,11 @@ object AnnOps {
     array((sig +: flips): _*)
   }
 
-  /** LSH-bucketed approximate cosine top-k: corpus bucketed by signature (one shuffle),
-    * queries probe their bucket + Hamming-1 neighbors, cosine ranked within candidates.
-    * Recall vs [[bruteForceTopK]] is property-tested (>= 0.9 on planted neighbors). */
+  /** LSH-bucketed approximate cosine top-k: queries probe their bucket + Hamming-1
+    * neighbors, cosine ranked within candidates. The probe side (|Q| × (nPlanes + 1)
+    * rows) is the broadcast side of the bucket join, as in [[ivfProbeJoin]], so the
+    * corpus never shuffles and adaptive execution cannot pick the corpus as the build
+    * side. Recall vs [[bruteForceTopK]] is property-tested (>= 0.9 on planted neighbors). */
   def lshTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
               queries: DataFrame, queryId: String, queryVec: String,
               k: Int, nPlanes: Int = 12, dim: Int = 64, seed: Long = 42L): DataFrame = {
@@ -92,8 +94,8 @@ object AnnOps {
       .withColumn("_sig", rhSignature(col(queryVec), planes))
       .withColumn("_bkt", explode(probeKeys(col("_sig"), nPlanes)))
       .drop("_sig")
-    cosineTopK(bucketed.join(probed, "_bkt"), corpusId, corpusVec, queryId, queryVec,
-      k, digits = 6)
+    cosineTopK(bucketed.join(broadcast(probed), "_bkt"), corpusId, corpusVec,
+      queryId, queryVec, k, digits = 6)
   }
 
   /** IVF-style coarse quantization: assign each vector to its nearest of `centroids`
@@ -432,13 +434,6 @@ object AnnOps {
         case _ => cbs(s)(ci)
       }))
     }
-  }
-
-  /** Inverse of [[pqEncode]]: concatenate each code's centroid. */
-  def pqDecode(codes: Column, codebooks: Seq[Seq[Seq[Double]]]): Column = {
-    val cb = typedlit(codebooks)
-    flatten(transform(sequence(lit(0), lit(codebooks.size - 1)),
-      s => element_at(element_at(cb, s + 1), element_at(codes, s + 1) + 1)))
   }
 
   /** The `nProbe` centroid ids nearest to `vec` (cos desc, cid desc on ties —

@@ -158,15 +158,8 @@ object DedupOps {
     (as, bs)
   }
 
-  /** MinHash signature (length `k`) of a shingle array: sig_i = min over shingles of
-    * (a_i*h32(s) + b_i) mod p, with h32 = 60-bit md5 hash mod 2^32 (keeps a_i*h32
-    * within 63 bits -- no overflow, no 128-bit intermediates). One nested transform --
-    * O(k*|shingles|) per row, fully codegen'd, no UDF, no shuffle. */
-  def minhashSignature(shingleArr: Column, k: Int = 32, seed: Long = 42L): Column =
-    minhashSignatureFromHashes(
-      transform(shingleArr, s => pmod(shingleHash(s), lit(1L << 32))), k, seed)
-
-  /** Signature from PRE-hashed 32-bit shingle values, via the native
+  /** MinHash signature (length `k`) from PRE-hashed 32-bit shingle values
+    * ([[hashedShingles]]): sig_i = min over shingles of (a_i*h32 + b_i) mod p, via the native
     * [[graft.expr.MinHashSig]] expression — one pass over the hash array computes
     * all k minima with no intermediate arrays (the former k-nested-transform HOF
     * materialized k×|shingles| boxed longs per row on the sig-table build, the

@@ -37,9 +37,6 @@ object Derive {
     lit(243.04) * (gamma - lnRh) / (lit(17.625) + lnRh - gamma) + lit(273.15)
   }
 
-  /** Wind magnitude (m/s) from u/v components (`calc_clean.py:390-411`). */
-  def windMag(u: Column, v: Column): Column = hypot(u, v)
-
   /** Station pressure (Pa) from sea-level pressure (Pa), elevation (m), air temp (K)
     * (`calc_clean.py:414-437`). */
   def psFromPsl(psl: Column, elev: Column, temp: Column): Column =

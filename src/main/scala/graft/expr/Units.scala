@@ -12,34 +12,7 @@ object Units {
   def hpaToPa(c: Column): Column = c * lit(100.0)
   def kpaToPa(c: Column): Column = c * lit(1000.0)
   def inHgToPa(c: Column): Column = c * lit(3386.39)
-  def ktsToMs(c: Column): Column = c / lit(1.94)
   def mphToMs(c: Column): Column = c / lit(2.237)
-  def gkgToKgkg(c: Column): Column = c / lit(1000.0)
   def inToMm(c: Column): Column = c * lit(25.4)
   def ftToM(c: Column): Column = c * lit(0.3048)
-
-  /** "DD.MM.SS" → decimal degrees (`calc_clean.py:241-255`). */
-  def latDmsToDd(c: Column): Column =
-    substring(c, 1, 2).cast("double") +
-      substring(c, 4, 2).cast("double") / lit(60.0) +
-      substr(c, lit(7)).cast("double") / lit(3600.0)
-
-  /** "DDD.MM.SS" → decimal degrees, western hemisphere forced negative
-    * (`calc_clean.py:258-284`). A leading "-" is stripped first — the sign is applied
-    * unconditionally either way, exactly as the reference does. */
-  def lonDmsToDd(c: Column): Column = {
-    val s = when(c.startsWith("-"), regexp_replace(c, "^-", "")).otherwise(c)
-    lit(-1.0) * (substring(s, 1, 3).cast("double") +
-      substring(s, 5, 2).cast("double") / lit(60.0) +
-      substr(s, lit(8)).cast("double") / lit(3600.0))
-  }
-
-  /** LORAN "DDMM.mm" latitude → decimal degrees (`calc_clean.py:305-322`). */
-  def latDMmToDd(c: Column): Column =
-    substring(c, 1, 2).cast("double") + substr(c, lit(3)).cast("double") / lit(60.0)
-
-  /** LORAN "DDDMM.mm" longitude → decimal degrees, western hemisphere
-    * (`calc_clean.py:287-302`). */
-  def lonDMmToDd(c: Column): Column =
-    lit(-1.0) * (substring(c, 1, 3).cast("double") + substr(c, lit(4)).cast("double") / lit(60.0))
 }

@@ -538,10 +538,10 @@ object JpegCodec {
     }
   }
 
-  /** FUSED h2v2 fancy upsample + YCC→RGB: the same separable triangle filter
-    * as [[fancyUpsampleH2V2]] (identical integer formulas → identical
-    * pixels), evaluated inline per output pixel from per-row column sums so
-    * the full-size chroma planes are never materialized. */
+  /** FUSED h2v2 fancy upsample + YCC→RGB: libjpeg's separable triangle filter
+    * (`h2v2_fancy_upsample`; identical integer formulas → identical pixels),
+    * evaluated inline per output pixel from per-row column sums so the
+    * full-size chroma planes are never materialized. */
   private def yccToRgbH2V2(yp: Array[Int], yStride: Int, cbC: Comp, crC: Comp,
                            w: Int, h: Int, px: Array[Int]): Unit = {
     val dw = (w + 1) / 2; val dh = (h + 1) / 2

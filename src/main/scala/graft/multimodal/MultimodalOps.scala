@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
   *
   * IMAGE decode/resize is REAL: `javax.imageio` ships with the JVM (PNG/JPEG/GIF/BMP),
   * so `kind == "image"` payloads that ImageIO can parse get true dimensions, channel
-  * counts, and a decode -> box-filter -> PNG re-encode resize. Audio/video (no JVM
-  * codec) and undecodable image payloads fall back to the clearly-marked deterministic
-  * stub ([[StubCodec]]) so the plumbing stays total; everything around the codec --
-  * schema, batch shape, partitioning, byte-level features -- is real either way.
+  * counts, and a decode -> box-filter -> PNG re-encode resize. Audio decodes through
+  * javax.sound ([[AudioCodec]]) and video through the from-scratch RIFF/AVI and ISO-BMFF
+  * walks ([[VideoCodec]], [[Mp4Codec]]). A payload no codec parses declines: its row
+  * drops from the decoding operator's output, and [[resize]] falls back to byte
+  * decimation marked `resize_codec = "stub"`.
   *
   * Scale notes: media rows are large -- callers should store binaries in their own
   * column (Parquet keeps them in separate pages; projection pruning skips them unless
@@ -25,11 +26,6 @@ object MultimodalOps {
   /** A media row: opaque payload + typed metadata. */
   final case class MediaRow(id: Long, kind: String, payload: Array[Byte],
                             meta: Map[String, String])
-
-  /** Decoded media descriptor. `codec` records which path produced it: "imageio"
-    * (real decode) or "stub" (deterministic fallback). */
-  final case class Decoded(id: Long, kind: String, width: Int, height: Int,
-                           channels: Int, nFrames: Int, codec: String)
 
   /** Fixed-length byte-level features: 16-bucket byte histogram (normalized), payload
     * length, entropy proxy. Real computation on real bytes -- used as the
@@ -90,7 +86,7 @@ object MultimodalOps {
       * decodes INTO the previous image via ImageReadParam.setDestination.
       * CONTRACT: the returned image is only valid until the next call on the
       * same thread — for strictly per-row consumers (imageGrayRaster, resize,
-      * decodeBatch: compute, then drop the reference) — callers that hold
+      * videoGrayRasters: compute, then drop the reference) — callers that hold
       * images across rows must use [[tryDecode]]. Non-JPEG payloads and
       * geometry changes take the allocating paths unchanged. */
     private[multimodal] def tryDecodeScratch(
@@ -456,20 +452,10 @@ object MultimodalOps {
     }
   }
 
-  /** Real JVM-native audio header decode (javax.sound.sampled): WAV/AIFF/AU PCM.
-    * Returns (sampleRate, sampleSizeBits, channels, frames). Static + stateless. */
+  /** Real JVM-native audio decode: WAV/AIFF/AU PCM to per-channel-averaged
+    * amplitudes (javax.sound.sampled, with a fast path for canonical PCM WAV).
+    * Static + stateless. */
   object AudioCodec {
-    def tryDecode(payload: Array[Byte]): Option[(Int, Int, Int, Long)] =
-      try {
-        val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(payload))
-        try {
-          val f = in.getFormat
-          Some((f.getSampleRate.toInt, f.getSampleSizeInBits, f.getChannels,
-            in.getFrameLength))
-        } finally in.close()
-      } catch { case _: Exception => None }
-
     /** Raw PCM frame bytes -> per-channel-averaged amplitudes. 8-bit unsigned
       * re-centers to -128..127; 16-bit sign-extends signed PCM and re-centers
       * unsigned PCM (raw 0..65535 - 32768), so every sample lands in
@@ -679,7 +665,7 @@ object MultimodalOps {
   }
 
   /** mm5 fixture synthesis (the [[sineWav]]/[[mm4FixturePng]] pattern for
-    * video): a REAL MJPEG AVI of six 72×64 frames in two 3-frame "shots".
+    * video): a REAL MJPEG video of six 72×64 frames in two 3-frame "shots".
     * Every 8×8 JPEG block is a flat gray whose value derives from
     * md5(doc:shot:cell) plus a small per-frame jitter, so the full production
     * path — container walk ([[VideoCodec.frames]]) → per-frame JPEG decode →
@@ -688,15 +674,10 @@ object MultimodalOps {
     * [[ImageCodec.encodeJpeg]]) and the 72×64→9×8 box mean is the identity on
     * block values. Shot boundaries give consecutive frames independent grids
     * (dHash hamming ≈ 32) while within-shot jitter keeps hamming small — the
-    * keyframe-detection signal mm5 gates. */
-  def mm5FixtureAvi(docId: Long): Array[Byte] =
-    VideoCodec.buildMjpegAvi(mm5Frames(docId), 72, 64)
-
-  /** mm5's container-coverage twin (r14): the SAME frame synthesis in both
-    * containers — even doc ids get RIFF/AVI, odd ids ISO-BMFF/MP4 — so the
-    * one mm5 query exercises both from-scratch container walks end-to-end
-    * under the unchanged analytic oracle (frame content is container-
-    * independent by construction). */
+    * keyframe-detection signal mm5 gates. Even doc ids get RIFF/AVI, odd ids
+    * ISO-BMFF/MP4 (r14), so the one mm5 query exercises both from-scratch
+    * container walks under the same analytic oracle (frame content is
+    * container-independent by construction). */
   def mm5FixtureVideo(docId: Long): Array[Byte] =
     if (docId % 2 == 0) VideoCodec.buildMjpegAvi(mm5Frames(docId), 72, 64)
     else Mp4Codec.buildMjpegMp4(mm5Frames(docId), 72, 64)
@@ -1230,54 +1211,6 @@ object MultimodalOps {
     }
   }
 
-  /** STUB codec for kinds the JVM has no codec for (non-AVI video, non-PCM audio)
-    * and undecodable payloads: deterministically fakes a decode from the payload's
-    * leading bytes. ??? -- a production deployment swaps in real codecs for the
-    * remaining formats with the identical signature. Kept total and deterministic so
-    * plumbing tests are stable. */
-  object StubCodec {
-    def decode(kind: String, payload: Array[Byte]): (Int, Int, Int, Int) = {
-      val b = (i: Int) => if (payload.length > i) payload(i) & 0xff else 0
-      // fake-but-stable dimensions derived from content
-      val w = 16 + (b(0) % 64) * 8
-      val h = 16 + (b(1) % 64) * 8
-      val ch = if (kind == "audio") 1 else 3
-      val frames = if (kind == "video") 1 + b(2) % 300 else 1
-      (w, h, ch, frames)
-    }
-  }
-
-  /** Batched decode: one typed `mapPartitions` pass (the Scala analog of a Pandas UDF
-    * over mapInPandas -- same batch shape, arrow-free). Images decode for real via
-    * [[ImageCodec]] (PNG/JPEG/GIF/BMP), audio via [[AudioCodec]] (WAV/AIFF/AU PCM --
-    * width carries the sample rate, height the bits per sample, nFrames the frame
-    * count); video and undecodable payloads take the stub. */
-  def decodeBatch(ds: Dataset[MediaRow])(implicit spark: SparkSession): Dataset[Decoded] = {
-    import spark.implicits._
-    ds.mapPartitions(_.map { r =>
-      val real = r.kind match {
-        case "image" => ImageCodec.tryDecodeScratch(r.payload).map(img =>
-          Decoded(r.id, r.kind, img.getWidth, img.getHeight,
-            img.getColorModel.getNumComponents, 1, "imageio"))
-        case "audio" => AudioCodec.tryDecode(r.payload).map { case (rate, bits, ch, fr) =>
-          // getFrameLength may be AudioSystem.NOT_SPECIFIED (-1) for streamed
-          // formats (ADVICE r7) — clamp so nFrames never goes negative
-          Decoded(r.id, r.kind, rate, bits, ch,
-            math.min(math.max(fr, 0L), Int.MaxValue.toLong).toInt, "javasound")
-        }
-        case "video" => Mp4Codec.tryParse(r.payload).map(m =>
-            Decoded(r.id, r.kind, m.width, m.height, 3, m.nFrames, "isobmff"))
-          .orElse(VideoCodec.tryParse(r.payload).map(a =>
-            Decoded(r.id, r.kind, a.width, a.height, 3, a.nFrames, "riff-avi")))
-        case _ => None
-      }
-      real.getOrElse {
-        val (w, h, ch, f) = StubCodec.decode(r.kind, r.payload)
-        Decoded(r.id, r.kind, w, h, ch, f, "stub")
-      }
-    })
-  }
-
   /** Byte-histogram features (16 buckets, normalized) + length. Streams bytes; no
     * per-partition materialization. */
   def byteFeatures(ds: Dataset[MediaRow])(implicit spark: SparkSession): Dataset[ByteFeatures] = {
@@ -1312,10 +1245,10 @@ object MultimodalOps {
   }
 
   /** The shared windowing kernel behind [[audioFrameFeatures]] (standalone
-    * audio payloads) and [[videoAudioFeatures]] (audio tracks extracted from
-    * video containers, r15) — one definition so the two on-ramps cannot
-    * drift. */
-  private def audioFeaturesOf(id: Long, rate: Int, s: Array[Double],
+    * audio payloads) and [[videoAvRasters]]' soundtrack channel (audio tracks
+    * extracted from video containers, r15) — one definition so the two on-ramps
+    * cannot drift. */
+  private[multimodal] def audioFeaturesOf(id: Long, rate: Int, s: Array[Double],
                               windowSamples: Int): AudioFeatures = {
     val n = s.length
     val nWin = (n + windowSamples - 1) / windowSamples
@@ -1348,32 +1281,15 @@ object MultimodalOps {
       if (n > 0) math.sqrt(sumSq / n) else 0.0, wRms, wZcr)
   }
 
-  /** The audio-track on-ramp for VIDEO payloads (r15, VERDICT r14 #2): walk
-    * the container's first sound stream through [[VideoCodec.audioSamples]]
-    * (AVI `auds`, or MP4 `soun` by container magic) and run the
-    * SAME windowing kernel as [[audioFrameFeatures]], so a soundtrack's
-    * features (and everything derived from them: [[energyHash64]], RMS
-    * gates) are bit-identical to the same PCM in a WAV. Videos without a
-    * decodable PCM audio track drop (the imageGrayRaster contract) — joint
-    * A/V consumers join this table back to the visual-code table by id. */
-  def videoAudioFeatures(ds: Dataset[MediaRow], windowSamples: Int = 256)
-                        (implicit spark: SparkSession): Dataset[AudioFeatures] = {
-    import spark.implicits._
-    ds.mapPartitions(_.flatMap { r =>
-      VideoCodec.audioSamples(r.payload)
-        .map { case (rate, s) => audioFeaturesOf(r.id, rate, s, windowSamples) }
-    })
-  }
-
   /** BOTH A/V channels in ONE container walk + decode pass (r16, VERDICT r15
-    * item 5): joint consumers (mm10) previously ran [[videoGrayRasters]] AND
-    * [[videoAudioFeatures]] over the same corpus — every payload was read and
+    * item 5): joint consumers (mm10) previously ran [[videoGrayRasters]] AND a
+    * separate soundtrack-features pass over the same corpus — every payload was read and
     * its container walked/decoded twice (the stated mm10 floor, two full
     * decode passes at 100×). One mapPartitions pass now emits, per video, the
     * (frame_idx, gray) raster list (exactly videoGrayRasters' values — same
     * VideoCodec.frames walk, same tryDecodeScratch, same grayRasterOf kernel)
-    * plus the soundtrack's window-RMS array (exactly videoAudioFeatures'
-    * windowRms via the same audioFeaturesOf kernel; NULL when the container
+    * plus the soundtrack's window-RMS array (exactly [[audioFrameFeatures]]'
+    * windowRms of the same PCM, via the same audioFeaturesOf kernel; NULL when the container
     * has no decodable PCM track — the same drop rule, applied by the caller
     * as a `window_rms IS NOT NULL` filter). Callers explode `frames` to
     * recover the videoGrayRasters row shape; both downstream channels are
@@ -1398,37 +1314,6 @@ object MultimodalOps {
         .orNull
       (r.id, grays, rms)
     }).toDF("id", "frames", "window_rms")
-  }
-
-  /** Frame sampling: fixed-stride byte-window slices standing in for video frame
-    * extraction (window size / stride are what a codec-backed version would use).
-    * Emits (id, frameIdx, frame) rows via flatMap -- the UDTF shape. */
-  def sampleFrames(ds: Dataset[MediaRow], frameBytes: Int, stride: Int)
-                  (implicit spark: SparkSession): Dataset[(Long, Int, Array[Byte])] = {
-    import spark.implicits._
-    ds.flatMap { r =>
-      val n = r.payload.length
-      Iterator.range(0, math.max(n - frameBytes + 1, 0), stride).zipWithIndex.map {
-        case (off, idx) => (r.id, idx, java.util.Arrays.copyOfRange(r.payload, off, off + frameBytes))
-      }
-    }
-  }
-
-  /** REAL video frame sampling: every `stride`-th movi frame of a RIFF/AVI payload
-    * via [[VideoCodec]] (for MJPEG each emitted frame is a standalone JPEG that
-    * [[ImageCodec]] decodes downstream). Non-AVI payloads emit nothing — callers
-    * route those through [[sampleFrames]]'s byte-window fallback. Same UDTF shape
-    * as sampleFrames: (id, frameIdx, frame) via flatMap, one row in -> k rows out,
-    * streaming (the per-row frame list is one video's frames, never a partition). */
-  def sampleVideoFrames(ds: Dataset[MediaRow], stride: Int = 1)
-                       (implicit spark: SparkSession): Dataset[(Long, Int, Array[Byte])] = {
-    require(stride >= 1, "stride must be >= 1")
-    import spark.implicits._
-    ds.flatMap { r =>
-      VideoCodec.frames(r.payload).zipWithIndex.collect {
-        case (f, i) if i % stride == 0 => (r.id, i, f)
-      }
-    }
   }
 
   /** Resize stage. For `kind == "image"` payloads ImageIO can decode, this is a REAL
@@ -1701,8 +1586,8 @@ object MultimodalOps {
 
   /** FUSED video on-ramp (r13): container walk → per-frame JPEG decode →
     * box-mean luma raster in ONE mapPartitions pass, emitting
-    * (id, frame_idx, gray) rows directly. Equivalent to
-    * [[sampleVideoFrames]] + a MediaRow re-wrap + [[imageGrayRaster]], minus
+    * (id, frame_idx, gray) rows directly. Equivalent to sampling every
+    * `stride`-th [[VideoCodec.frames]] frame + a MediaRow re-wrap + [[imageGrayRaster]], minus
     * two typed-encoder boundaries per FRAME (tuple→MediaRow→row: each one
     * re-serializes the ~KB frame payload and the meta map through the
     * case-class encoder — pure overhead on a multi-million-frame corpus).
@@ -1835,8 +1720,8 @@ object MultimodalOps {
 
   /** Joint A/V near-dup pairs (mm10, r15 — VERDICT r14 #2): compose the
     * visual channel ([[videoHash64]] pooled codes) with the audio channel
-    * ([[energyHash64]] over the container soundtrack's
-    * [[videoAudioFeatures]]) under the EITHER-with-both-reported rule: a
+    * ([[energyHash64]] over the container soundtrack's window RMS, from
+    * [[videoAvRasters]]) under the EITHER-with-both-reported rule: a
     * pair is emitted when either channel's banded chassis finds it at
     * ≤ maxHamming, and BOTH channels' exact hammings ride the output row —
     * so a re-encode that replaces one track (new soundtrack on a stolen
@@ -1875,7 +1760,7 @@ object MultimodalOps {
           .otherwise(lit("audio")))
   }
 
-  /** mm6 fixture synthesis ([[mm5FixtureAvi]] with PLANTED cross-video
+  /** mm6 fixture synthesis ([[mm5FixtureVideo]]'s AVI with PLANTED cross-video
     * structure): same six-frame two-shot MJPEG AVI, but shot grids key on the
     * video's GROUP (gid = docId/4, the [[mm4FixturePng]] rule) instead of the
     * video, plus the mm4-style tiny per-video brightness jitter — so the four

@@ -148,43 +148,4 @@ object CaseStudyOps {
       .groupBy("station")
       .agg(sort_array(collect_set(col("flag"))).as("flags"))
   }
-
-  /** Known per-network instrument issues (`known_issue_check`, `:63-160`) as a
-    * queryable catalog: (network, variable or "" = any, station or "" = any,
-    * advisory). The reference prints these; a library returns them. */
-  val KnownIssues: Seq[(String, String, String, String)] = Seq(
-    ("RAWS", "tas", "", "values may be too high (on order of 10F) if sun is " +
-      "shining strongly and winds are light"),
-    ("RAWS", "pr", "", "stations are not maintained in winter, instrument may " +
-      "freeze; consider subsetting for May-September"),
-    ("SNOTEL", "tas", "", "values may remain at exactly 0.0C for two or more " +
-      "consecutive days; should be caught by unusual_streaks"),
-    ("SNOTEL", "tas", "", "mid-1990s-2000s sensor transition produces warm bias " +
-      "at colder temperatures"),
-    ("ASOSAWOS", "tdps", "", "values may be stuck around 0.0C or have excessive " +
-      "mirror contamination; should be caught by unusual_streaks"),
-    ("ASOSAWOS", "pr", "", "poor snowfall instrumentation before the 1996 ASOS " +
-      "installation; 1980-1996 precipitation more likely flagged"),
-    ("OtherISD", "pr", "", "poor snowfall instrumentation before the 1996 ASOS " +
-      "installation; 1980-1996 precipitation more likely flagged"),
-    ("NDBC", "", "", "some buoys have data past their known disestablishment " +
-      "dates; should be caught by spurious_buoy_check"),
-    ("MARITIME", "", "", "some buoys have data past their known disestablishment " +
-      "dates; should be caught by spurious_buoy_check"),
-    ("NDBC", "", "NDBC_46044", "buoy went adrift during reporting period; " +
-      "confirm the window was flagged"),
-    ("MARITIME", "", "MARITIME_MTYC1", "buoy renamed and/or relocated"),
-    ("MARITIME", "", "MARITIME_MEYC1", "buoy renamed and/or relocated"),
-    ("MARITIME", "", "MARITIME_SMOC1", "buoy renamed and/or relocated"),
-    ("MARITIME", "", "MARITIME_ICAC1", "buoy renamed and/or relocated"))
-
-  /** Advisories applying to (network, var, station) — wildcard rows ("" fields)
-    * match any value, mirroring the reference's nested conditionals. */
-  def knownIssueCheck(network: String, varName: String,
-                      station: String): Seq[String] =
-    KnownIssues.collect {
-      case (n, v, s, msg)
-        if n == network && (v.isEmpty || v == varName) &&
-          (s.isEmpty || s == station) => msg
-    }
 }

@@ -29,26 +29,7 @@ object CleanOps {
     df.filter(col(latCol).between(latLo, latHi) && col(lonCol).between(lonLo, lonHi))
 
   /** P4 — point-in-polygon membership (ray casting) for stations passing the bbox
-    * prefilter (`qaqc_wholestation.py:231-267`), as a plain Scala predicate: the
-    * parity reference for the native [[graft.expr.PointInPolygon]] expression that
-    * [[filterInPolygon]] wires in. */
-  def pointInPolygon(poly: Seq[(Double, Double)]): (Double, Double) => Boolean = {
-    val xs = poly.map(_._1).toArray
-    val ys = poly.map(_._2).toArray
-    (px: Double, py: Double) => {
-      var inside = false
-      var j = xs.length - 1
-      var i = 0
-      while (i < xs.length) {
-        if ((ys(i) > py) != (ys(j) > py) &&
-          px < (xs(j) - xs(i)) * (py - ys(i)) / (ys(j) - ys(i)) + xs(i)) inside = !inside
-        j = i; i += 1
-      }
-      inside
-    }
-  }
-
-  /** P4 (wired) — polygon membership via the native Catalyst expression
+    * prefilter (`qaqc_wholestation.py:231-267`), via the native Catalyst expression
     * (`graft.expr.PointInPolygon`, whole-stage codegen'd), applied AFTER
     * [[bboxFilter]] so the scan-level pruning still happens; call on the stations dim
     * table (15k rows), never per-observation. */

@@ -37,19 +37,6 @@ object SeriesOps {
       .withColumn(dtCol, col(timeCol).cast("long") - lag(col(timeCol), 1).over(w).cast("long"))
   }
 
-  /** W2 — run-length encoding: monotone streak id that increments whenever the observed
-    * value changes (`qaqc_unusual_streaks.py:607-633`; pandas `(x != x.shift()).cumsum()`).
-    * Running sum over an unbounded-preceding frame — single pass, no self-join. */
-  def withStreakId(df: DataFrame, keys: Seq[String], timeCol: String, valueCol: String,
-                   out: String = "streak_id"): DataFrame = {
-    val w = seriesWindow(keys, timeCol)
-    val changed = when(
-      lag(col(valueCol), 1).over(w).isNull ||
-        lag(col(valueCol), 1).over(w) =!= col(valueCol), 1).otherwise(0)
-    df.withColumn(out,
-      sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-  }
-
   /** W7 — range-frame window max: true where `valueCol` stays constant (max |dd| == 0)
     * for `rangeSeconds` ahead (dewpoint-depression 24 h check,
     * `/root/reference/scripts/3_qaqc_data/qaqc_logic_checks.py:80-151`). */

@@ -138,7 +138,7 @@ object QaqcPipeline {
     * the total-obs column. The reference loops per-station CSVs (~37 min native,
     * ~24 min hourly per its own logged timings); over the long-format counts this
     * is one groupBy. Output stays long-format — the reference's variable-pivoted
-    * CSV is a presentation detail (`writeReport` + pivot serves it). The same op
+    * CSV is a presentation detail (a pivot and a CSV write serve it). The same op
     * keyed on a `network` station column is the network table. */
   def flagRateTable(flagCounts: DataFrame): DataFrame =
     flagCounts.groupBy("station", "variable").agg(

@@ -4,47 +4,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** S1/S3/S4 — file listing and per-network CSV sources.
+/** S3/S4 — the per-file line reader under the network CSV sources.
   *
   * S3 (MADIS header-sniffing CSV, `/root/reference/scripts/2_clean_data/
   * MADIS_clean.py:113-392`): each file opens with ~10 `key: value` metadata lines
   * (station, lat, lon, elevation, units) before the CSV body. Re-expressed
-  * Spark-first: `wholetext` read → per-file line split → header lines parsed into a
-  * one-row-per-file metadata DataFrame, body lines exploded and parsed with
-  * `from_csv(schema)`. Line order is exact (one string per file), everything stays
-  * distributed — one task per file, no driver loops. Suits the reference's
-  * many-small-station-files shape; files must fit an executor (they do: station CSVs
-  * are MBs).
+  * Spark-first: `wholetext` read → per-file line split; the network readers parse
+  * the header lines ([[NetworkCatalogs.madisHeaders]]) and [[readBody]] explodes the
+  * body lines and parses them with `from_csv(schema)`. Line order is exact (one
+  * string per file), everything stays distributed — one task per file, no driver
+  * loops. Suits the reference's many-small-station-files shape; files must fit an
+  * executor (they do: station CSVs are MBs). Path globs do the file listing.
   */
 object CsvSources {
-
-  /** S1 — object listing: `spark.read` path globs do the listing/pruning; this helper
-    * exists for parity with the reference's explicit key filtering
-    * (`qaqc_utils.py:455-503`) when a listing must be inspected. */
-  def listFiles(spark: SparkSession, globPath: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(globPath)
-      .select(col("path"), col("length"))
-  }
 
   private[sources] def perFileLines(spark: SparkSession, globPath: String): DataFrame =
     spark.read.option("wholetext", "true").text(globPath)
       .select(input_file_name().as("file"),
         split(regexp_replace(col("value"), "\r\n", "\n"), "\n").as("lines"))
-
-  /** Sniffed header: one row per file with the first `headerLines` lines parsed as
-    * `key<sep>value` pairs into a map column. */
-  def sniffHeaders(spark: SparkSession, globPath: String, headerLines: Int,
-                   sep: String = ":"): DataFrame = {
-    val hdr = slice(col("lines"), 1, headerLines)
-    val kv = filter(
-      transform(hdr, l => struct(
-        trim(substring_index(l, sep, 1)).as("key"),
-        trim(regexp_replace(l, "^[^" + sep + "]*" + sep, "")).as("val"))),
-      s => s.getField("key") =!= "" && instr(s.getField("key"), " ") === 0)
-    perFileLines(spark, globPath)
-      .select(col("file"), map_from_entries(kv).as("metadata"))
-  }
 
   /** Body rows: lines after the header (optionally one more for the CSV column
     * header), parsed with the explicit `schema` via `from_csv` and exploded. */
@@ -57,16 +34,5 @@ object CsvSources {
       .select(col("file"),
         from_csv(col("line"), schema, Map("sep" -> delimiter)).as("row"))
       .select(col("file") +: schema.fieldNames.map(f => col(s"row.$f")): _*)
-  }
-
-  /** S3 composed: body joined with its file's sniffed metadata (broadcast — the
-    * metadata side is one row per file). */
-  def readWithSniffedHeader(spark: SparkSession, globPath: String, schema: StructType,
-                            headerLines: Int, csvHeaderLine: Boolean = true,
-                            sep: String = ":", delimiter: String = ","): DataFrame = {
-    val meta = sniffHeaders(spark, globPath, headerLines, sep)
-    val skip = headerLines + (if (csvHeaderLine) 1 else 0)
-    readBody(spark, globPath, schema, skip, delimiter)
-      .join(broadcast(meta), "file")
   }
 }

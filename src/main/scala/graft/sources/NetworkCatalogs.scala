@@ -379,19 +379,19 @@ object NetworkCatalogs {
 
   /** Old-format NDBC column renames: `WD`→`WDIR`, `BAR`→`PRES`, 2-digit `YY` years
     * (80–99 → 19xx else 20xx), missing minute column → `"00"`
-    * (`MARITIME_clean.py:231-261`). Column membership checks are exact-case (the
-    * `columns` array), never resolver-based — `MO` vs `mo` must not collide. */
+    * (`MARITIME_clean.py:231-261`). A frame holding both an old column and its new
+    * name (a read over files of both layouts) keeps the new value where it is set.
+    * Column membership checks are exact-case (the `columns` array), never
+    * resolver-based — `MO` vs `mo` must not collide. */
   def maritimeRenames(df: DataFrame): DataFrame = {
-    var d = df
-    if (d.columns.contains("WD")) d = d.withColumnRenamed("WD", "WDIR")
-    if (d.columns.contains("BAR")) d = d.withColumnRenamed("BAR", "PRES")
-    if (d.columns.contains("YY") && !d.columns.contains("YYYY"))
-      d = d.withColumn("YYYY",
-        when(col("YY").cast("int").between(80, 99),
-          concat(lit("19"), col("YY"))).otherwise(concat(lit("20"), col("YY"))))
-        .drop("YY")
-    if (!d.columns.contains("mi")) d = d.withColumn("mi", lit("00"))
-    d
+    def has(c: String): Option[Column] = if (df.columns.contains(c)) Some(col(c)) else None
+    val year = has("YY").map(yy =>
+      when(yy.cast("int").between(80, 99), concat(lit("19"), yy)).otherwise(concat(lit("20"), yy)))
+    Seq("WDIR" -> has("WD"), "PRES" -> has("BAR"), "YYYY" -> year, "mi" -> Some(lit("00")))
+      .foldLeft(df) { case (d, (name, old)) =>
+        old.fold(d)(o => d.withColumn(name, has(name).fold(o)(coalesce(_, o))))
+      }
+      .drop("WD", "BAR", "YY")
   }
 
   /** NDBC time: Y/M/D/h/m columns, already UTC (`MARITIME_clean.py:274-277`). */
@@ -466,6 +466,15 @@ object NetworkCatalogs {
         l => l.startsWith("Station_ID")), 1), ",").as("columns"))
   }
 
+  /** Cell `name` of a split data row, looked up in the file's own column names (the
+    * first of a duplicated name). Null when the file has no such column or the row
+    * is ragged (trailing sensors absent): element_at never sees an out-of-range
+    * index (ANSI-safe). */
+  private def namedCell(names: Column, cells: Column, name: String): Column = {
+    val idx = array_position(names, name)
+    when(idx > 0 && size(cells) >= idx, element_at(cells, idx.cast("int")))
+  }
+
   /** MADIS/CWOP end-to-end read: header-sniffed station CSVs → canonical obs.
     *
     * Per-file schemas differ (stations carry different sensor sets, occasionally
@@ -483,31 +492,34 @@ object NetworkCatalogs {
         explode(filter(col("lines"),
           l => l.startsWith(concat(col("station_id"), lit(","))))).as("line"))
       .withColumn("cells", split(col("line"), ","))
-    def cell(name: String): Column = {
-      val idx = array_position(col("columns"), name)
-      // size guard: ragged data rows (trailing sensors absent) read as null, and
-      // element_at never sees an out-of-range index (ANSI-safe)
-      when(idx > 0 && size(col("cells")) >= idx, element_at(col("cells"), idx.cast("int")))
-    }
     val rawCols = madis.rawSchema.fieldNames.filter(_ != "Station_ID").toSeq
-    val raw = body.select(
-      col("station_id").as("Station_ID") +: rawCols.map(c => cell(c).as(c)): _*)
+    val raw = body.select(col("station_id").as("Station_ID") +:
+      rawCols.map(c => namedCell(col("columns"), col("cells"), c).as(c)): _*)
     standardize(raw, madis, madis.stationId(col("Station_ID")),
       to_timestamp(col("Date_Time")), dropEmptyColumns = true)
   }
 
   /** MARITIME end-to-end read: whitespace-separated NDBC text (station id from the
-    * `<id><yyyy>.txt`-style filename). Space-delimited runs are collapsed to single
-    * delimiters before the positional parse. */
+    * `<id><yyyy>.txt`-style filename), one task per file. A post-2007 file (`#`
+    * header lines) is parsed by position in [[maritimeCols]]. An older file opens with
+    * an un-prefixed header line (`YYYY …` from 1999, `YY …` before, with `WD`/`BAR`
+    * and no minute column): its columns are named by that line — NDBC's `MM`/`mm` as
+    * `MO`/`mi` — and go through [[maritimeRenames]], as [[readMadis]] reads its
+    * per-file header. */
   def readMaritime(spark: SparkSession, glob: String): DataFrame = {
     import org.apache.spark.sql.functions.{split => fsplit}
-    val lines = spark.read.textFile(glob).toDF("line")
-      .withColumn("file", input_file_name())
-      .filter(!col("line").startsWith("#") && length(trim(col("line"))) > 0)
-    val parts = fsplit(trim(col("line")), "\\s+")
-    val raw = lines.select(
-      col("file") +: maritimeCols.zipWithIndex.map { case (c, i) =>
-        parts.getItem(i).as(c) }: _*)
+    val first = element_at(col("lines"), 1)
+    val old = trim(first).startsWith("YY")
+    val header = transform(fsplit(trim(first), "\\s+"),
+      c => when(c === "MM", "MO").when(c === "mm", "mi").otherwise(c))
+    val lines = CsvSources.perFileLines(spark, glob).select(
+      col("file"),
+      when(old, header).otherwise(typedlit(maritimeCols)).as("columns"),
+      explode(filter(col("lines"), (l, i) =>
+        !(old && i === 0) && !l.startsWith("#") && length(trim(l)) > 0)).as("line"))
+    val cells = fsplit(trim(col("line")), "\\s+")
+    val raw = maritimeRenames(lines.select(col("file") +: (maritimeCols ++ Seq("YY", "WD", "BAR"))
+      .map(c => namedCell(col("columns"), cells, c).as(c)): _*))
     standardize(raw, maritime,
       maritime.stationId(upper(regexp_extract(col("file"), "([a-zA-Z0-9]+?)[0-9]{4}\\.[^/]*$", 1))),
       maritimeTime(raw))

@@ -1,14 +1,14 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.core.AttrsTable
 
-/** S7/S9/S11 — sinks. The reference's delete-then-write zarr store per station
+/** S7/S11 — sinks. The reference's delete-then-write zarr store per station
   * (`QAQC_pipeline.py:345-368`, `MERGE_pipeline.py:413-468`) becomes ONE partitioned
-  * columnar table; its tiny CSV reports/ledgers stay driver-side single files.
+  * columnar table.
   *
   * Attrs: zarr carries global + per-variable attributes natively; parquet via the
   * DataFrame API does not, so [[graft.core.AttrsTable]] rides as a `_graft_attrs`
@@ -76,11 +76,6 @@ object Sinks {
       .saveAsTable(table)
   }
 
-  /** S9 — small report sink (flag counts, rates, ledgers): tiny aggregates → one CSV
-    * file with header, like the reference's `to_csv` reports. */
-  def writeReport(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
   /** S11 — per-station CSV export (`data-access/zarr_to_csv.py:58-160`): one station's
     * rows, time-sorted. The station filter prunes on partition/min-max stats before
     * anything is read.
@@ -125,17 +120,4 @@ object Sinks {
       fs.delete(renamed, false)
     }
   }
-
-  /** Catalog-wide attribute update (`/root/reference/scripts/misc/
-    * update_zarr_attributes.py:42-104`): add or overwrite one GLOBAL attr on every
-    * published obs table, re-consolidating each sidecar. The reference walks an
-    * intake catalog and rewrites each zarr store's `.zattrs`; here each table's
-    * `_graft_attrs` sidecar is kilobytes, so this is a driver-side loop over
-    * sidecar-only I/O — no data file is touched, regardless of table size. */
-  def updateAttr(spark: SparkSession, dataPaths: Seq[String],
-                 key: String, value: String): Unit =
-    dataPaths.foreach { p =>
-      val a = AttrsTable.read(spark, p)
-      AttrsTable(a.global + (key -> value), a.perVar).write(spark, p)
-    }
 }

@@ -224,13 +224,6 @@ object StationLists {
         sum(when(col("_a").isNull, 1).otherwise(0)).as("missing_in_a"))
   }
 
-  /** Stations of `a` absent from `b` (the `--export` missing-stations .dat of
-    * `compare_zarr_counts.py`): one anti-join. */
-  def missingStations(a: DataFrame, b: DataFrame): DataFrame =
-    a.select("network", "station").distinct()
-      .join(b.select("network", "station").distinct(),
-        Seq("network", "station"), "left_anti")
-
   /** Stations-over-time chart data (`notebooks/figure_utils.py:106-190`,
     * `get_station_chart`): per (network, month), the count of stations whose
     * [start_date, end_date] record covers the month. Start dates clamp up to

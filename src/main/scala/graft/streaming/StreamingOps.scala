@@ -9,8 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   *  - hourly standardization as a watermarked windowed aggregation (append mode:
   *    an hour finalizes once the watermark passes it);
-  *  - streak (RLE) detection as `flatMapGroupsWithState` — the streaming form of W2/W3,
-  *    emitting each closed run with its length and span.
+  *  - run-length encoding of equal values as `flatMapGroupsWithState`, emitting each
+  *    closed run with its length and span (plain RLE, not the W3 streak flag).
   *
   * Both transforms are `readStream`-agnostic: they accept any DataFrame, so the same
   * code path serves batch backfills and the live stream (the classic kappa shape).
@@ -369,9 +369,12 @@ object StreamingOps {
   }
 
   /** Streaming RLE: per key, consecutive equal values form a run; when the value
-    * changes (or the state times out), the closed run is emitted. State is one
-    * (value, count, bounds) tuple per key — O(keys) memory regardless of stream
-    * length, the same invariant the batch W2 keeps via its running-sum window. */
+    * changes (or the state times out), the closed run is emitted with its count and
+    * bounds. State is one (value, count, bounds) tuple per key — O(keys) memory
+    * regardless of stream length. This is plain RLE on equal values, not the W3
+    * streak flag ([[graft.ops.StreakOps.straightRepeats]]): it has no `minSeqLen`,
+    * no `nValues`/`nDays` thresholds, no `minValue` floor and no adjacency rule, so
+    * a closed run is not a flagged streak. */
   def streakDetector(ds: Dataset[Obs])(implicit spark: SparkSession): Dataset[ClosedStreak] = {
     import spark.implicits._
     ds.groupByKey(_.key)
@@ -484,17 +487,17 @@ object StreamingOps {
       }
   }
 
-  /** Streaming 1-point spike confirmation — W6's 1-pt pattern
-    * (`qaqc_unusual_large_jumps.py:128-299`; see the batch [[graft.ops.SpikeOps]])
-    * on a live feed. The decision for point i needs the diffs (d₋₁, d, d₊₁, d₊₂),
-    * i.e. points i−2..i+2, so emission lags the stream by exactly two points and
-    * state is a ≤ 5-observation ring per key — O(keys), stream-length independent.
+  /** Streaming 1-point spike pattern with ONE constant critical value `c` per key
+    * (`crit`, else `defaultCrit`): point i is a hit when |d| > c,
+    * sign(d) ≠ sign(d₊₁), |d₋₁| < c, |d₊₁| > c and |d₊₂| < c over the diffs of
+    * points i−2..i+2, so emission lags the stream by exactly two points and state
+    * is a ≤ 5-observation ring per key — O(keys), stream-length independent.
     *
-    * `crit` is the per-key critical value. In production it is the batch-computed
-    * monthly IQR criteria served as a small broadcast map — the kappa shape the
-    * other streaming twins use: batch calibrates (the oracle-checked `w6` plan),
-    * the stream confirms. Pattern, matching the batch 1-pt rule with a constant
-    * crit: |d| > c, sign(d) ≠ sign(d₊₁), |d₋₁| < c, |d₊₁| > c, |d₊₂| < c. */
+    * This is not W6's 1-pt rule ([[graft.ops.SpikeOps.detectSpikes]],
+    * `qaqc_unusual_large_jumps.py:128-299`): that rule derives a critical value per
+    * (series, month) from the IQR of the differences, compares each neighbor with
+    * its own month's value, and keeps only rows with 0 < Δt ≤ 12 h in months of
+    * more than `minDatapoints` rows. This op applies none of these. */
   def spikeDetector(ds: Dataset[Obs], crit: Map[String, Double],
                     defaultCrit: Double = Double.MaxValue)
                    (implicit spark: SparkSession): Dataset[SpikeHit] = {

@@ -1020,26 +1020,10 @@ object TextOps {
     * rank-priority loop, so a 32k-merge production vocabulary costs one plan
     * node instead of 32k chained HOF folds (plan analysis alone dies at that
     * depth). Identical output for every rank-consistent table (what any BPE
-    * trainer emits; BpeApplySpec pins native == fold equality); the fold form
-    * below remains the reference for arbitrary hand-built tables. */
+    * trainer emits; BpeApplySpec pins it to the chained-HOF fold form it replaced). */
   def bpeSegment(text: Column, merges: Seq[(String, String)],
                  endOfWord: String = "</w>"): Column =
     graft.expr.BpeSegmentNative.expr(text, merges, endOfWord)
-
-  private[graft] def bpeSegmentFolds(text: Column, merges: Seq[(String, String)],
-                                     endOfWord: String = "</w>"): Column = {
-    val initial = transform(tokens(lower(text)),
-      w => concat(split(w, ""), array(lit(endOfWord))))
-    val perWord = merges.foldLeft(initial) { case (arr, (a, b)) =>
-      transform(arr, syms => aggregate(syms,
-        array().cast("array<string>"),
-        (acc, s) => when(
-          size(acc) > 0 && element_at(acc, -1) === lit(a) && s === lit(b),
-          concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-          .otherwise(concat(acc, array(s)))))
-    }
-    flatten(perWord)
-  }
 
   /** Trained character-trigram language identification (the Cavnar-Trenkle
     * n-gram family, as a self-trained add-1 multinomial over char trigrams —

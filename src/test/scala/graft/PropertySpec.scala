@@ -21,21 +21,6 @@ class PropertySpec extends SparkSpec {
   private def seriesGen(rng: scala.util.Random): List[Double] =
     List.fill(5 + rng.nextInt(36))(rng.nextInt(6).toDouble)
 
-  test("property: RLE streak ids reconstruct the series run structure") {
-    forAllSeeded(seriesGen) { vals =>
-      val df = vals.zipWithIndex.map { case (v, i) => ("k", ts(i), v) }.toDF("k", "t", "v")
-      val runs = SeriesOps.withStreakId(df, Seq("k"), "t", "v")
-        .groupBy("streak_id").agg(count(lit(1)).as("n"), first(col("v")).as("v"))
-        .orderBy("streak_id")
-        .select("n", "v").as[(Long, Double)].collect().toList
-      // reconstructing from (length, value) pairs yields the original series
-      val rebuilt = runs.flatMap { case (n, v) => List.fill(n.toInt)(v) }
-      assert(rebuilt == vals)
-      // and adjacent runs never share a value
-      assert(runs.map(_._2).sliding(2).forall(p => p.length < 2 || p(0) != p(1)))
-    }
-  }
-
   test("property: deaccumulate inverts running sums of non-negative increments") {
     forAllSeeded(r => List.fill(3 + r.nextInt(23))(r.nextDouble() * 20)) { incs =>
       val accum = incs.scanLeft(0.0)(_ + _).tail

@@ -20,15 +20,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * streaming twin share. Each cached media fixture tag is written at one call
   * site, so a fixture bump cannot leave a query reading a stale cache. The ANN
   * search ops rank through one `topK` and probe IVF cells through one join, and
-  * `graft/ann` pins no storage beyond the k-means lineage cut. */
+  * `graft/ann` pins no storage beyond the k-means lineage cut. Every public
+  * operator has a caller in `src/main` or `perfbench/src`, or an allow-list entry
+  * that says why it stays, and every scaladoc link names something `src/main`
+  * defines. */
 class ScaffoldingSpec extends AnyFunSuite {
-  private val sources: Seq[(Path, String)] = {
-    val root = Paths.get("src/main/scala")
-    val walk = Files.walk(root)
+  private def scalaFiles(dir: String): Seq[(Path, String)] = {
+    val walk = Files.walk(Paths.get(dir))
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
     finally walk.close()
   }
+
+  private val sources: Seq[(Path, String)] = scalaFiles("src/main/scala")
 
   private def source(file: String): String =
     sources.find(_._1.endsWith(file)).map(_._2).getOrElse(fail(s"scan found no $file"))
@@ -232,5 +236,209 @@ class ScaffoldingSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"station containers are a DataSource V2 scan and a plan-node sink: $offenders")
+  }
+
+  // ------------------------------------------------ every public operator has a caller
+
+  private val charLit = """'(?:\\u[0-9a-fA-F]{4}|\\.|[^'\\\n])'""".r
+
+  /** `text` with its comments blanked (line breaks kept) and its string and char
+    * literals kept: a comment calls nothing, and codegen names objects in strings. */
+  private def stripComments(text: String): String = {
+    val out = new StringBuilder(text.length)
+    def keep(from: Int, until: Int): Int = { out ++= text.substring(from, until); until }
+    def blank(from: Int, until: Int): Int = {
+      (from until until).foreach(j => out += (if (text(j) == '\n') '\n' else ' '))
+      until
+    }
+    var i = 0
+    while (i < text.length) i =
+      if (text.startsWith("\"\"\"", i)) {
+        val close = text.indexOf("\"\"\"", i + 3)
+        var j = if (close < 0) text.length else close + 3
+        while (j < text.length && text(j) == '"') j += 1
+        keep(i, j)
+      } else if (text(i) == '"') {
+        var j = i + 1
+        while (j < text.length && text(j) != '"' && text(j) != '\n')
+          j += (if (text(j) == '\\') 2 else 1)
+        keep(i, math.min(j + 1, text.length))
+      } else if (text(i) == '\'') {
+        val lit = charLit.findPrefixOf(text.substring(i, math.min(i + 8, text.length)))
+        keep(i, i + lit.fold(1)(_.length))
+      } else if (text.startsWith("//", i)) {
+        val eol = text.indexOf('\n', i)
+        blank(i, if (eol < 0) text.length else eol)
+      } else if (text.startsWith("/*", i)) {
+        var depth = 1
+        var j = i + 2
+        while (j < text.length && depth > 0)
+          if (text.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (text.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        blank(i, j)
+      } else keep(i, i + 1)
+    out.toString
+  }
+
+  private lazy val code: Seq[(Path, String)] =
+    sources.map { case (p, text) => p -> stripComments(text) }
+
+  /** Where each identifier occurs in comment-stripped code, leaving out the name
+    * of a `def` header (an overload does not call its twin). */
+  private def identifierSites(files: Seq[(Path, String)]): Map[String, Seq[(Path, Int)]] = {
+    val defHeader = """\bdef\s+$""".r
+    files.flatMap { case (p, text) =>
+      """[A-Za-z_]\w*""".r.findAllMatchIn(text)
+        .filter(m => m.start == 0 || !Character.isLetterOrDigit(text(m.start - 1)))
+        .filterNot(m => defHeader.findFirstIn(text.substring(
+          math.max(0, m.start - 8), m.start)).nonEmpty)
+        .map(m => (m.matched, (p, m.start)))
+    }.groupMap(_._1)(_._2)
+  }
+
+  /** A def in one of `dirs` that is public or `private[pkg]` and a member of a named
+    * object, class or trait: its file, name and span (the header to the next line
+    * indented no deeper that does not close or continue it). */
+  private final class Op(val file: Path, val name: String, val from: Int, val until: Int) {
+    def key: String = s"${file.getFileName.toString.stripSuffix(".scala")}.$name"
+  }
+
+  private def publicOps(dirs: Seq[String]): Seq[Op] = {
+    val header = ("""^(\s*)((?:(?:private|protected)(?:\[\w+\])?\s+|override\s+|final\s+|""" +
+      """implicit\s+|@\w+\s+)*)def\s+([A-Za-z_]\w*)""").r
+    def indent(l: String): Int = l.length - l.dropWhile(_ == ' ').length
+    code.filter { case (p, _) => dirs.exists(d => p.toString.contains(s"/graft/$d/")) }
+      .flatMap { case (p, text) =>
+        val lines = text.split("\n", -1)
+        val starts = lines.scanLeft(0)(_ + _.length + 1)
+        lines.indices.flatMap { i =>
+          header.findPrefixMatchOf(lines(i)).filterNot { m =>
+            """\boverride\b|\bprotected\b|\bprivate\s|\bprivate\[this\]""".r
+              .findFirstIn(m.group(2)).nonEmpty
+          }.flatMap { m =>
+            val k = m.group(1).length
+            val owner = (i - 1 to 0 by -1).map(lines(_))
+              .find(l => l.trim.nonEmpty && indent(l) < k)
+            val member =
+              owner.exists("""\b(?:object|class|trait)\s+\w""".r.findFirstIn(_).nonEmpty)
+            val end = (i + 1 until lines.length).find { j =>
+              val l = lines(j)
+              l.trim.nonEmpty && (indent(l) < k || indent(l) == k &&
+                !Seq(")", "}", ".").exists(l.trim.startsWith))
+            }.getOrElse(lines.length)
+            if (member) Some(new Op(p, m.group(3), starts(i), starts(end))) else None
+          }
+        }
+      }
+  }
+
+  private val callerScope = Seq("ops", "dedup", "text", "ann", "multimodal", "sources",
+    "expr", "pipeline", "graph", "streaming")
+
+  /** Public ops no declared query, pipeline or perfbench workload calls, each with the
+    * reason it stays:
+    *  - R1, a reference capability no declared query reaches yet: the reference
+    *    `file:line` and the Spec that pins it;
+    *  - R2, ROADMAP item 5 (streaming twins: batch-exact or gone) decides it;
+    *  - R3, a ROADMAP item will call it. */
+  private val uncalledAllowed: Map[String, String] = Map(
+    "NetworkCatalogs.readCimis" -> "R1 CIMIS_clean.py:58-734; NetworkCatalogsSpec",
+    "NetworkCatalogs.readScanSnotel" -> "R1 SCANSNOTEL_clean.py:55-768; NetworkCatalogsSpec",
+    "NetworkCatalogs.readCw3e" -> "R1 CW3E_clean.py:57-635; NetworkCatalogsSpec",
+    "NetworkCatalogs.readValleywater" -> "R1 VALLEYWATER_clean.py:45-278; NetworkCatalogsSpec",
+    "NetworkCatalogs.readMadis" -> "R1 MADIS_clean.py:113-392; NetworkCatalogsSpec",
+    "NetworkCatalogs.readMaritime" -> "R1 MARITIME_clean.py:160-660; NetworkCatalogsSpec",
+    "LogicOps.flagAccumWindow" -> "R1 qaqc_logic_checks.py:211-308; LogicPipelineSpec",
+    "StreakOps.straightRepeatsWithCriteria" ->
+      "R1 qaqc_unusual_streaks.py:45-122; StreakCriteriaSpec",
+    "QaqcPipeline.buoyCheckStage" -> "R1 qaqc_buoy_check.py:25-160; BuoyCheckSpec",
+    "ConcatStations.concatObs" -> "R1 qaqc_concatenate_stations.py:66-556; CsvSourcesSpec",
+    "Derive.psFromPsl" -> "R1 calc_clean.py:414-437; DeriveSpec",
+    "Derive.psFromAltimeter" -> "R1 calc_clean.py:440-462; DeriveSpec",
+    "Sinks.exportStationCsv" -> "R1 zarr_to_csv.py:58-160; SinksSpec",
+    "Sinks.writeObsBucketed" -> "R1 QAQC_pipeline.py:345-368; SinksSpec",
+    "Sinks.readAttrs" -> "R1 zarr_to_csv.py:74-104; SinksSpec",
+    "StreamingOps.hourlyAgg" -> "R2 twin of SeriesOps.hourlyFirst/hourlySum; StreamingSpec",
+    "StreamingOps.dedupExact" -> "R2 twin of DedupOps.exactDedup; StreamingSpec",
+    "StreamingOps.nearDedupSimhash" -> "R2 twin of DedupOps.simhashNearDups; StreamingSpec",
+    "StreamingOps.streakDetector" ->
+      "R2 plain RLE on equal values, not W3 StreakOps.straightRepeats; StreamingSpec",
+    "StreamingOps.spikeDetector" ->
+      "R2 one constant crit per key, not W6 SpikeOps.detectSpikes; StreamingSpec",
+    "StreamingOps.tokenBudgetStream" -> "R2 twin of TextOps.tokenBudgetFill; StreamingSpec",
+    "StreamingOps.dsirScoreStream" -> "R2 twin of TextOps.dsirWeights; StreamingSpec",
+    "StreamingOps.knScoreStream" -> "R2 twin of TextOps.knBigramScore; StreamingSpec",
+    "StreamingOps.linearScoreStream" -> "R2 twin of TextOps.linearClassifierScores; StreamingSpec",
+    "StreamingOps.annServeStream" -> "R2 twin of AnnOps.ivfTopK; StreamingSpec",
+    "StreamingOps.keyframeStream" -> "R2 twin of the mm5 keyframe flags; StreamingSpec",
+    "StreamingOps.videoHashStream" -> "R2 twin of MultimodalOps.videoHash64; StreamingSpec",
+    "StreamingOps.incrementalDedupStream" ->
+      "R2 twin of DedupOps.incrementalNearDups; StreamingSpec",
+    "StreamingOps.corpusBandTable" -> "R2 band table of incrementalDedupStream; StreamingSpec",
+    "StreamingOps.codeDedupStream" ->
+      "R2 twin of DedupOps.hamming64IncrementalNearDups; StreamingSpec",
+    "StreamingOps.codeBandTable" -> "R2 band table of codeDedupStream; StreamingSpec",
+    "TextOps.knBigramModel" -> "R2 model of knScoreStream; StreamingSpec",
+    "TextOps.dsirBucketWeights" -> "R2 model of dsirScoreStream; StreamingSpec",
+    "TextOps.dsirOovLogWeight" -> "R2 model of dsirScoreStream; StreamingSpec",
+    "TextOps.linearClassifierWeights" -> "R2 model of linearScoreStream; StreamingSpec",
+    "DedupOps.simhashCapStats" -> "R3 ROADMAP item 6 records cap loss; DedupAnnSpec",
+    "DedupOps.embeddingCapStats" -> "R3 ROADMAP item 6 records cap loss; DedupAnnSpec",
+    "DedupOps.semanticDedupAuto" -> "R3 ROADMAP item 12, SCALE.md r11/r15; DedupAnnSpec")
+
+  test("every public operator has a caller or an allow-listed reason") {
+    val ops = publicOps(callerScope)
+    assert(ops.exists(_.key == "DedupOps.bandPairs"), s"scan found no ops: ${ops.size}")
+    val inMain = identifierSites(code)
+    val inPerfbench = identifierSites(scalaFiles("perfbench/src").map { case (p, t) =>
+      p -> stripComments(t) }).keySet
+    def called(op: Op): Boolean = inPerfbench(op.name) ||
+      inMain.getOrElse(op.name, Nil).exists { case (p, at) =>
+        p != op.file || at < op.from || at >= op.until }
+    val uncalled = ops.filterNot(called).map(_.key).distinct
+    val missing = uncalled.filterNot(uncalledAllowed.contains)
+    assert(missing.isEmpty, "call these from a query, pipeline or perfbench, move a " +
+      s"parity reference to src/test, delete, or allow-list with a reason: $missing")
+    val stale = uncalledAllowed.keySet -- uncalled
+    assert(stale.isEmpty, s"these allow-listed ops have a caller now or are gone: $stale")
+    assert(uncalledAllowed.size <= 40, s"${uncalledAllowed.size} allow-listed ops")
+    val reason = """R1 \w+\.py:\d+-\d+; \w+Spec|R[23] .+; \w+Spec""".r
+    val bad = uncalledAllowed.filterNot { case (_, r) => reason.matches(r) }
+    assert(bad.isEmpty, s"state R1 (reference file:lines), R2 or R3, then the Spec: $bad")
+  }
+
+  test("every scaladoc link names something src/main defines") {
+    val defined = code.flatMap { case (_, text) =>
+      val names = """\b(?:def|val|var|object|class|trait|type)\s+([A-Za-z_]\w*)""".r
+        .findAllMatchIn(text).map(_.group(1))
+      val packages = """(?m)^package\s+([\w.]+)""".r.findAllMatchIn(text)
+        .flatMap(_.group(1).split('.'))
+      // class parameters: the names before `:` at the first list's top level
+      val params = """\bclass\s+\w+(?:\[[^\]]*\])?\s*\(""".r.findAllMatchIn(text).flatMap { m =>
+        val top = new StringBuilder
+        var depth = 1
+        var j = m.end
+        while (j < text.length && depth > 0) {
+          text(j) match {
+            case '(' | '[' => depth += 1
+            case ')' | ']' => depth -= 1
+            case c if depth == 1 => top += c
+            case _ =>
+          }
+          j += 1
+        }
+        top.toString.split(',').flatMap("""(\w+)\s*:""".r.findFirstMatchIn(_).map(_.group(1)))
+      }
+      names ++ packages ++ params
+    }.toSet
+    assert(defined.contains("qcNorm") && defined.contains("bandPairs"), "scan found no names")
+    val dangling = sources.flatMap { case (p, text) =>
+      """\[\[([^\]\s]+)""".r.findAllMatchIn(text).map(_.group(1)).flatMap { target =>
+        val last = target.takeWhile(_ != '(').split("[.#]").last.stripSuffix("$")
+        if (defined(last)) None else Some(s"${p.getFileName}: [[$target]]")
+      }
+    }
+    assert(dangling.isEmpty, s"these scaladoc links name nothing in src/main: $dangling")
   }
 }

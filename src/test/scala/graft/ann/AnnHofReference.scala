@@ -4,7 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The HOF-fold forms of [[AnnOps.ivfAssign]] and [[AnnOps.pqEncode]] that the
-  * native expressions replaced, kept as their parity references (PqNativeSpec). */
+  * native expressions replaced, kept as their parity references (PqNativeSpec), and
+  * the PQ decode that checks [[AnnOps.pqEncode]]'s codes (DedupAnnSpec). */
 object AnnHofReference {
 
   def ivfAssignHof(vec: Column, centroids: Seq[Seq[Double]]): Column = {
@@ -70,5 +71,12 @@ object AnnHofReference {
       transform(perSub, p => p.getField("code")).as("codes"),
       aggregate(transform(perSub, p => p.getField("dist")), lit(0.0),
         (acc, d) => acc + d).as("sse"))
+  }
+
+  /** Inverse of [[AnnOps.pqEncode]]: concatenate each code's centroid. */
+  def pqDecode(codes: Column, codebooks: Seq[Seq[Seq[Double]]]): Column = {
+    val cb = typedlit(codebooks)
+    flatten(transform(sequence(lit(0), lit(codebooks.size - 1)),
+      s => element_at(element_at(cb, s + 1), element_at(codes, s + 1) + 1)))
   }
 }

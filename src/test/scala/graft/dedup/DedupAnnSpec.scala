@@ -29,7 +29,8 @@ class DedupAnnSpec extends SparkSpec {
       .mkString(" ")
     val df = Seq((1L, base), (2L, perturbed)).toDF("id", "text")
     val sigj = df.select(col("id"),
-        DedupOps.minhashSignature(DedupOps.shingles(col("text"), 3), k = 128).as("sig"),
+        DedupOps.minhashSignatureFromHashes(DedupOps.hashedShingles(col("text"), 3), k = 128)
+          .as("sig"),
         DedupOps.shingles(col("text"), 3).as("sh"))
       .collect()
     val s1 = sigj.find(_.getLong(0) == 1L).get
@@ -93,6 +94,16 @@ class DedupAnnSpec extends SparkSpec {
     }
     val meanRecall = recalls.sum / recalls.size
     assert(meanRecall >= 0.9, s"mean recall $meanRecall")
+    // the probed queries are the bucket join's build side whatever the size estimates
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, "-1")
+    try {
+      val plan = AnnOps.lshTopK(corpusDf, "cid", "cv", queryDf, "qid", "qv", k,
+        nPlanes = 8, dim = dim).queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin") && plan.contains("BuildRight") &&
+        !plan.contains("SortMergeJoin"), plan)
+    } finally saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
   }
 
   test("IVF assignment routes vectors to their nearest centroid") {
@@ -236,7 +247,7 @@ class DedupAnnSpec extends SparkSpec {
     val rows = (1L to 50L).map(i => (i, Seq.fill(16)(rnd.nextGaussian()))).toDF("id", "v")
     val got = rows
       .withColumn("pq", AnnOps.pqEncode(col("v"), cbs))
-      .withColumn("dec", AnnOps.pqDecode(col("pq.codes"), cbs))
+      .withColumn("dec", graft.ann.AnnHofReference.pqDecode(col("pq.codes"), cbs))
       .select(col("id"), col("v"), col("pq.codes").as("codes"),
         col("pq.sse").as("sse"), col("dec"))
       .as[(Long, Seq[Double], Seq[Int], Double, Seq[Double])].collect()

@@ -1,15 +1,34 @@
 package graft.expr
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.text.TextOps
 
 /** Pins [[BpeSegmentNative]] to the chained-HOF fold form it replaced
-  * ([[TextOps.bpeSegmentFolds]]) on trained and crafted rank-consistent merge
+  * ([[bpeSegmentFolds]]) on trained and crafted rank-consistent merge
   * tables, and codegen to interpreted. */
 class BpeApplySpec extends SparkSpec {
   import spark.implicits._
+
+  /** The fold form: one chained HOF pass per merge, in table order. Equal to the
+    * native segmenter on every rank-consistent table; the reference for arbitrary
+    * hand-built ones. */
+  private def bpeSegmentFolds(text: Column, merges: Seq[(String, String)],
+                              endOfWord: String = "</w>"): Column = {
+    val initial = transform(TextOps.tokens(lower(text)),
+      w => concat(split(w, ""), array(lit(endOfWord))))
+    val perWord = merges.foldLeft(initial) { case (arr, (a, b)) =>
+      transform(arr, syms => aggregate(syms,
+        array().cast("array<string>"),
+        (acc, s) => when(
+          size(acc) > 0 && element_at(acc, -1) === lit(a) && s === lit(b),
+          concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
+          .otherwise(concat(acc, array(s)))))
+    }
+    flatten(perWord)
+  }
 
   test("native segmenter == chained HOF folds on a trained merge table") {
     val corpus = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
@@ -25,7 +44,7 @@ class BpeApplySpec extends SparkSpec {
       (4L, "ban ana nan")).toDF("id", "text")
     val cmp = docs
       .withColumn("n", TextOps.bpeSegment(col("text"), merges))
-      .withColumn("h", TextOps.bpeSegmentFolds(col("text"), merges))
+      .withColumn("h", bpeSegmentFolds(col("text"), merges))
     assert(cmp.filter(not(col("n") <=> col("h"))).count() == 0)
     // spot-pin the classic segmentation
     val seg = docs.filter(col("id") === 1L)
@@ -41,7 +60,7 @@ class BpeApplySpec extends SparkSpec {
     val docs = Seq((1L, "abc abcd dddd cab")).toDF("id", "text")
     val n = docs.select(TextOps.bpeSegment(col("text"), merges).as("s"))
       .as[Seq[String]].head()
-    val h = docs.select(TextOps.bpeSegmentFolds(col("text"), merges).as("s"))
+    val h = docs.select(bpeSegmentFolds(col("text"), merges).as("s"))
       .as[Seq[String]].head()
     assert(n == h)
     assert(n == Seq("abc</w>", "abc", "d", "</w>", "dd", "dd", "</w>",

@@ -46,12 +46,6 @@ class DeriveSpec extends SparkSpec {
     got.zip(rows.map(_._2)).foreach { case (a, b) => assert(approx(a, b, 0.5)) }
   }
 
-  test("wind magnitude from u/v (fixture values)") {
-    val got = df.select(Derive.windMag($"u", $"v").as("x")).as[Double].collect()
-    val want = rows.map(r => math.sqrt(r._4 * r._4 + r._5 * r._5))
-    got.zip(want).foreach { case (a, b) => assert(approx(a, b)) }
-  }
-
   test("station pressure from sea-level pressure") {
     val got = df.select(Derive.psFromPsl($"psl", $"elev", $"tas").as("x")).as[Double].collect()
     val want = rows.map(r =>

@@ -11,9 +11,27 @@ class PointInPolygonSpec extends SparkSpec {
   // bbox-only implementation would fail these cases
   private val arrow = Seq((0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0), (2.0, 2.0))
 
+  /** Ray-casting membership (`qaqc_wholestation.py:231-267`) as a plain Scala
+    * predicate: the parity reference for the native expression. */
+  private def pointInPolygon(poly: Seq[(Double, Double)]): (Double, Double) => Boolean = {
+    val xs = poly.map(_._1).toArray
+    val ys = poly.map(_._2).toArray
+    (px: Double, py: Double) => {
+      var inside = false
+      var j = xs.length - 1
+      var i = 0
+      while (i < xs.length) {
+        if ((ys(i) > py) != (ys(j) > py) &&
+          px < (xs(j) - xs(i)) * (py - ys(i)) / (ys(j) - ys(i)) + xs(i)) inside = !inside
+        j = i; i += 1
+      }
+      inside
+    }
+  }
+
   test("native expression agrees with the scalar kernel on a non-convex polygon") {
     val pts = for (xi <- -4 to 20; yi <- -4 to 20) yield (xi * 0.25, yi * 0.25)
-    val truth = CleanOps.pointInPolygon(arrow)
+    val truth = pointInPolygon(arrow)
     val got = pts.toDF("x", "y")
       .withColumn("in", PointInPolygon.expr(col("x"), col("y"), arrow))
       .as[(Double, Double, Boolean)].collect()

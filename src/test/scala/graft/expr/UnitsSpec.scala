@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** §2.7 unit conversions against the reference's fixture values
@@ -29,9 +28,6 @@ class UnitsSpec extends SparkSpec {
   test("inches to mm: x25.4") {
     assert(eval(Units.inToMm($"in")) == rows.map(_._3 * 25.4))
   }
-  test("knots to m/s: /1.94") {
-    assert(eval(Units.ktsToMs($"kts")) == rows.map(_._4 / 1.94))
-  }
   test("mph to m/s: /2.237") {
     assert(eval(Units.mphToMs($"mph")) == rows.map(_._5 / 2.237))
   }
@@ -44,35 +40,7 @@ class UnitsSpec extends SparkSpec {
   test("inHg to Pa: x3386.39") {
     assert(eval(Units.inHgToPa($"inhg")) == rows.map(_._8 * 3386.39))
   }
-  test("g/kg to kg/kg: /1000") {
-    assert(eval(Units.gkgToKgkg($"gkg")) == rows.map(_._9 / 1000))
-  }
   test("feet to m: x0.3048") {
     assert(eval(Units.ftToM($"ft")) == rows.map(_._10 * 0.3048))
-  }
-
-  private def evalStr(v: String, c: String => org.apache.spark.sql.Column): Double =
-    Seq(v).toDF("s").select(c("s").cast("double").as("x")).as[Double].head()
-
-  test("DMS latitude 34.66.11 (fixture row 1)") {
-    // 34 deg + 66 min + 11 sec, exactly as the reference slices it
-    assert(approx(evalStr("34.66.11", s => Units.latDmsToDd(col(s))),
-      34 + 66 / 60.0 + 11 / 3600.0))
-  }
-  test("DMS longitude 120.30.36 is west-negative") {
-    assert(approx(evalStr("120.30.36", s => Units.lonDmsToDd(col(s))),
-      -(120 + 30 / 60.0 + 36 / 3600.0)))
-  }
-  test("DMS longitude with leading minus is not double-negated") {
-    assert(approx(evalStr("-120.30.36", s => Units.lonDmsToDd(col(s))),
-      -(120 + 30 / 60.0 + 36 / 3600.0)))
-  }
-  test("LORAN DM.m latitude 5122.68 (fixture row 1)") {
-    assert(approx(evalStr("5122.68", s => Units.latDMmToDd(col(s))), 51 + 22.68 / 60.0))
-  }
-  test("LORAN DM.m longitude 9230.31 slices [0:3]/[3:] exactly as the reference") {
-    // `_lon_DMm_to_Dd` (calc_clean.py:287-302) takes data[:3]="923" as degrees and
-    // data[3:]="0.31" as minutes — reproduced verbatim, quirk and all
-    assert(approx(evalStr("9230.31", s => Units.lonDMmToDd(col(s))), -(923 + 0.31 / 60.0)))
   }
 }

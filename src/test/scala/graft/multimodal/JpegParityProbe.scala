@@ -84,7 +84,7 @@ object JpegSpeedProbe {
 /** mm5-class (flat-block, DC-only) decode speed */
 object JpegFlatProbe {
   def main(args: Array[String]): Unit = {
-    val frames = MultimodalOps.VideoCodec.frames(MultimodalOps.mm5FixtureAvi(7L))
+    val frames = MultimodalOps.VideoCodec.frames(MultimodalOps.mm5FixtureVideo(7L))
     val jpeg = frames.head
     val ours = JpegCodec.tryDecodeUngated(jpeg).get
     val ref = ImageCodec.tryDecodeJavax(jpeg).get

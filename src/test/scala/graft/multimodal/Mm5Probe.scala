@@ -33,7 +33,7 @@ object Mm5Probe {
 
     def rows = spark.read.parquet(cache.getAbsolutePath)
       .as[MultimodalOps.MediaRow]
-    def frames = MultimodalOps.sampleVideoFrames(rows)
+    def frames = VideoReference.sampleVideoFrames(rows)
       .map { case (id, idx, f) => MultimodalOps.MediaRow(id * 16 + idx, "image", f, Map.empty) }
     def gray = MultimodalOps.imageGrayRaster(frames)
 

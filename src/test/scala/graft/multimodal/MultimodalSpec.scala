@@ -3,6 +3,7 @@ package graft.multimodal
 import graft.SparkSpec
 import MultimodalOps._
 import DHashHofReference.dHashHof
+import VideoReference.{sampleVideoFrames, videoAudioFeatures}
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
@@ -10,17 +11,6 @@ class MultimodalSpec extends SparkSpec {
 
   private def media(id: Long, kind: String, bytes: Array[Byte]) =
     MediaRow(id, kind, bytes, Map("codec" -> "stub"))
-
-  test("decode batch is deterministic and typed") {
-    val ds = Seq(
-      media(1, "image", Array[Byte](10, 20, 30)),
-      media(2, "video", Array[Byte](1, 2, 3, 4))).toDS()
-    val out = decodeBatch(ds).collect().sortBy(_.id)
-    assert(out(0).channels == 3 && out(0).nFrames == 1 && out(0).codec == "stub")
-    assert(out(1).kind == "video" && out(1).nFrames > 1)
-    // determinism
-    assert(decodeBatch(ds).collect().sortBy(_.id).toSeq == out.toSeq)
-  }
 
   // a real PNG generated in-test: 40x24, two solid vertical halves
   private def pngBytes(w: Int = 40, h: Int = 24): Array[Byte] = {
@@ -31,11 +21,9 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("real PNG decode: imageio path reports true dimensions and channels") {
-    val ds = Seq(media(1, "image", pngBytes()),
-      media(2, "image", pngBytes(7, 3))).toDS()
-    val out = decodeBatch(ds).collect().sortBy(_.id)
-    assert(out(0) == Decoded(1, "image", 40, 24, 4, 1, "imageio"))
-    assert(out(1) == Decoded(2, "image", 7, 3, 4, 1, "imageio"))
+    val dims = Seq(pngBytes(), pngBytes(7, 3)).map(ImageCodec.tryDecode(_).map(img =>
+      (img.getWidth, img.getHeight, img.getColorModel.getNumComponents)))
+    assert(dims == Seq(Some((40, 24, 4)), Some((7, 3, 4))))
   }
 
   test("real PNG resize: box-filter halves dimensions and re-encodes decodably") {
@@ -51,7 +39,7 @@ class MultimodalSpec extends SparkSpec {
     assert((back.getRGB(17, 5) & 0xffffff) == 0xcc2200)
   }
 
-  test("real WAV decode: javasound path reports true rate/bits/channels/frames") {
+  test("real WAV decode: javasound path reports the true rate and frame count") {
     // a 100-frame 8kHz 16-bit stereo PCM WAV generated in-test
     val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 2, true, false)
     val pcm = new Array[Byte](100 * fmt.getFrameSize)
@@ -60,11 +48,9 @@ class MultimodalSpec extends SparkSpec {
     val bos = new java.io.ByteArrayOutputStream()
     javax.sound.sampled.AudioSystem.write(ais,
       javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-    val ds = Seq(media(1, "audio", bos.toByteArray),
-      media(2, "audio", Array[Byte](1, 2, 3))).toDS()
-    val out = decodeBatch(ds).collect().sortBy(_.id)
-    assert(out(0) == Decoded(1, "audio", 8000, 16, 2, 100, "javasound"))
-    assert(out(1).codec == "stub") // non-PCM payload keeps the documented fallback
+    assert(AudioCodec.tryDecodeSamplesJavax(bos.toByteArray)
+      .map { case (rate, s) => (rate, s.length) } == Some((8000, 100)))
+    assert(AudioCodec.tryDecodeSamplesJavax(Array[Byte](1, 2, 3)).isEmpty) // non-PCM declines
   }
 
   // a real MJPEG AVI generated in-test: RIFF/AVI container with JPEG frame chunks
@@ -102,12 +88,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("real AVI decode: riff-avi path reports true dimensions and movi frame count") {
     val avi = aviBytes(32, 20, Seq(jpegBytes(32, 20), jpegBytes(32, 20), jpegBytes(32, 20)))
-    val ds = Seq(media(1, "video", avi),
-      media(2, "video", Array[Byte](1, 2, 3, 4))).toDS() // non-AVI -> stub
-    val out = decodeBatch(ds).collect().sortBy(_.id)
-    assert(out(0).codec == "riff-avi", out(0))
-    assert(out(0).width == 32 && out(0).height == 20 && out(0).nFrames == 3)
-    assert(out(1).codec == "stub")
+    assert(VideoCodec.tryParse(avi).map(a => (a.width, a.height, a.nFrames)) == Some((32, 20, 3)))
+    assert(VideoCodec.tryParse(Array[Byte](1, 2, 3, 4)).isEmpty) // non-AVI declines
   }
 
   test("real AVI frame sampling: MJPEG frames round-trip through the image codec") {
@@ -138,13 +120,6 @@ class MultimodalSpec extends SparkSpec {
     assert(f.length == 256)
     assert(approx(f.features.sum, 1.0, 1e-9))
     assert(f.features.forall(v => approx(v, 1.0 / 16, 1e-9))) // uniform bytes
-  }
-
-  test("frame sampling emits stride-spaced windows") {
-    val ds = Seq(media(1, "video", Array.tabulate(100)(_.toByte))).toDS()
-    val frames = sampleFrames(ds, frameBytes = 10, stride = 30).collect().sortBy(_._2)
-    assert(frames.length == 4) // offsets 0,30,60,90
-    assert(frames(1)._3.head == 30.toByte)
   }
 
   test("resize stub decimates payload and records provenance") {
@@ -552,7 +527,7 @@ class MultimodalSpec extends SparkSpec {
     // progressive-free scope: corrupt/truncated payloads drop, never throw
     assert(JpegCodec.tryDecode(bigJpeg.take(60)).isEmpty)
     // the mm5 fixture frame rides the gated-in fast path end-to-end
-    val frame = VideoCodec.frames(mm5FixtureAvi(3L)).head
+    val frame = VideoCodec.frames(mm5FixtureVideo(4L)).head
     assert(frame.length <= 4096 && JpegCodec.tryDecode(frame).isDefined)
   }
 
@@ -637,8 +612,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("mm5 fixture: AVI walk + JPEG decode + box-mean raster reproduces the md5 grid") {
     import spark.implicits._
-    val ids = Seq(0L, 5L, 123L)
-    val rows = ids.map(i => MediaRow(i, "video", mm5FixtureAvi(i), Map.empty)).toDS()
+    val ids = Seq(0L, 6L, 124L) // even ids: the AVI container
+    val rows = ids.map(i => MediaRow(i, "video", mm5FixtureVideo(i), Map.empty)).toDS()
     val frames = sampleVideoFrames(rows)
       .map { case (id, idx, f) => MediaRow(id * 16 + idx, "image", f, Map.empty) }
     val gray = imageGrayRaster(frames).as[(Long, Seq[Int])].collect().toMap
@@ -706,7 +681,7 @@ class MultimodalSpec extends SparkSpec {
       ImageCodec.encodeJpeg(img, 0.8f + i * 0.02f)
     }
     val mp4 = Mp4Codec.buildMjpegMp4(frames, 48, 32)
-    assert(Mp4Codec.isMp4(mp4) && !Mp4Codec.isMp4(mm5FixtureAvi(1L)))
+    assert(Mp4Codec.isMp4(mp4) && !Mp4Codec.isMp4(mm5FixtureVideo(2L)))
     val info = Mp4Codec.tryParse(mp4).get
     assert(info == Mp4Codec.Mp4Info(48, 32, 5, "jpeg"))
     val back = Mp4Codec.frames(mp4)
@@ -725,18 +700,17 @@ class MultimodalSpec extends SparkSpec {
     }
     assert(Mp4Codec.tryParse(avc).get.codec == "avc1")
     assert(Mp4Codec.frames(avc).isEmpty, "compressed codecs must decline loudly")
-    // mm5's container twin: same doc decodes to the same rasters in either box
+    // mm5's container twin: odd ids are MP4, even ids AVI, and the same doc
+    // decodes to the same rasters in either box
     import spark.implicits._
-    val twin = Seq(
-      MediaRow(3L, "video", mm5FixtureVideo(3L), Map.empty), // odd -> MP4
-      MediaRow(4L, "video", mm5FixtureVideo(4L), Map.empty)).toDS() // even -> AVI
-    val twinKinds = decodeBatch(twin).collect().map(d => d.id -> d.codec).toMap
-    assert(twinKinds == Map(3L -> "isobmff", 4L -> "riff-avi"))
+    assert(Mp4Codec.tryParse(mm5FixtureVideo(3L)).isDefined)
+    assert(Mp4Codec.tryParse(mm5FixtureVideo(4L)).isEmpty &&
+      VideoCodec.tryParse(mm5FixtureVideo(4L)).isDefined)
     val viaMp4 = videoGrayRasters(Seq(MediaRow(7L, "video",
-      Mp4Codec.buildMjpegMp4(VideoCodec.frames(mm5FixtureAvi(7L)), 72, 64),
+      Mp4Codec.buildMjpegMp4(VideoCodec.frames(mm5FixtureVideo(8L)), 72, 64),
       Map.empty)).toDS()).collect()
     val viaAvi = videoGrayRasters(Seq(MediaRow(7L, "video",
-      mm5FixtureAvi(7L), Map.empty)).toDS()).collect()
+      mm5FixtureVideo(8L), Map.empty)).toDS()).collect()
     assert(viaMp4.map(_.toString).sorted.toSeq == viaAvi.map(_.toString).sorted.toSeq)
   }
 

@@ -139,13 +139,4 @@ class CaseStudyOpsSpec extends SparkSpec {
       ("25", 5L, "unusual_large"), ("99", 0L, "never_fires"),
       ("no_flag", 7L, "0"), ("total_obs_count", 10L, "0")))
   }
-
-  test("knownIssueCheck: wildcard matching mirrors the reference's conditionals") {
-    assert(CaseStudyOps.knownIssueCheck("RAWS", "pr", "RAWS_X").size == 1)
-    assert(CaseStudyOps.knownIssueCheck("SNOTEL", "tas", "S_1").size == 2)
-    val adrift = CaseStudyOps.knownIssueCheck("NDBC", "tas", "NDBC_46044")
-    assert(adrift.size == 2 && adrift.exists(_.contains("adrift")))
-    assert(CaseStudyOps.knownIssueCheck("MARITIME", "pr", "MARITIME_MTYC1").size == 2)
-    assert(CaseStudyOps.knownIssueCheck("CW3E", "tas", "C3X").isEmpty)
-  }
 }

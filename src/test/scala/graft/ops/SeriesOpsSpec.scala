@@ -12,17 +12,6 @@ class SeriesOpsSpec extends SparkSpec {
   private def tsD(d: Int, h: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-$d%02d $h%02d:00:00")
 
-  test("W2 streak ids reconstruct run lengths") {
-    val df = Seq(
-      ("a", ts(0), 1.0), ("a", ts(1), 1.0), ("a", ts(2), 2.0),
-      ("a", ts(3), 2.0), ("a", ts(4), 2.0), ("a", ts(5), 1.0))
-      .toDF("k", "t", "v")
-    val runs = SeriesOps.withStreakId(df, Seq("k"), "t", "v")
-      .groupBy("k", "streak_id").count().orderBy("streak_id")
-      .select("count").as[Long].collect().toSeq
-    assert(runs == Seq(2L, 3L, 1L))
-  }
-
   test("W15 hourlyFirst takes the first NON-null value per column") {
     val df = Seq(
       ("a", ts(0, 0), None: Option[Double], Some(10.0)),

@@ -28,31 +28,17 @@ $body""")
     dir.getAbsolutePath
   }
 
-  test("S3: header sniffing yields one metadata row per file") {
-    val dir = writeMadisLike()
-    val meta = CsvSources.sniffHeaders(spark, s"$dir/*.csv", headerLines = 5)
-      .collect().map(r => r.getAs[Map[String, String]]("metadata"))
-    assert(meta.length == 2)
-    assert(meta.exists(m => m.get("station").contains("AAA") && m.get("lat").contains("34.1")))
-  }
-
-  test("S3: body parse with explicit schema joined to its file metadata") {
+  test("S3: body rows after the header lines parse with the explicit schema") {
     val dir = writeMadisLike()
     val schema = StructType(Seq(
       StructField("time", TimestampType), StructField("tas", DoubleType),
       StructField("tas_qc", StringType)))
-    val df = CsvSources.readWithSniffedHeader(spark, s"$dir/*.csv", schema,
-      headerLines = 5, csvHeaderLine = true)
+    // five metadata lines plus the CSV column header
+    val df = CsvSources.readBody(spark, s"$dir/*.csv", schema, skipLines = 6)
     assert(df.count() == 3)
-    val aaa = df.filter(col("metadata")("station") === "AAA")
+    val aaa = df.filter(col("file").endsWith("/s1.csv"))
     assert(aaa.count() == 2)
     assert(aaa.agg(sum("tas")).head().getDouble(0) == 21.5)
-  }
-
-  test("S1: file listing returns paths and sizes") {
-    val dir = writeMadisLike()
-    val files = CsvSources.listFiles(spark, s"$dir/*.csv").collect()
-    assert(files.length == 2 && files.forall(_.getLong(1) > 0))
   }
 
   test("§3.3 concat: co-located stations merge under the newest id, newest row wins") {

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -216,16 +217,22 @@ class NetworkCatalogsSpec extends SparkSpec {
     assert(hdr.getAs[String]("state") == "CA")
   }
 
-  test("MARITIME: NDBC whitespace text -> canonical obs (MM na, 999/99/9999 codes, hPa->Pa)") {
+  // two NDBC observations in the post-2007 layout (`#` header and units lines)
+  private val ndbc2007 =
+    """#YY  MM DD hh mm WDIR WSPD GST  WVHT   DPD   APD MWD   PRES  ATMP  WTMP  DEWP  VIS  TIDE
+      |#yr  mo dy hr mn degT m/s  m/s     m   sec   sec degT   hPa  degC  degC  degC  nmi    ft
+      |2014 06 01 00 00 180  5.5  7.0  2.1  10.0   8.0 200 1013.5  15.0  14.0  12.0 99.0 99.00
+      |2014 06 01 01 00 999 99.0  MM   MM   MM     MM  MM  9999.0 999.0  MM   999.0 99.0 99.00
+      |""".stripMargin
+
+  private def readNdbc(body: String): DataFrame = {
     val dir = tmpDir("ndbc")
-    write(dir, "46042h2014.txt",
-      """#YY  MM DD hh mm WDIR WSPD GST  WVHT   DPD   APD MWD   PRES  ATMP  WTMP  DEWP  VIS  TIDE
-        |#yr  mo dy hr mn degT m/s  m/s     m   sec   sec degT   hPa  degC  degC  degC  nmi    ft
-        |2014 06 01 00 00 180  5.5  7.0  2.1  10.0   8.0 200 1013.5  15.0  14.0  12.0 99.0 99.00
-        |2014 06 01 01 00 999 99.0  MM   MM   MM     MM  MM  9999.0 999.0  MM   999.0 99.0 99.00
-        |""".stripMargin)
-    val got = NetworkCatalogs.readMaritime(spark, s"${dir.getAbsolutePath}/*.txt")
-      .orderBy("time")
+    write(dir, "46042h2014.txt", body)
+    NetworkCatalogs.readMaritime(spark, s"${dir.getAbsolutePath}/*.txt").orderBy("time")
+  }
+
+  test("MARITIME: NDBC whitespace text -> canonical obs (MM na, 999/99/9999 codes, hPa->Pa)") {
+    val got = readNdbc(ndbc2007)
     val rows = got.collect()
     assert(rows.length == 2)
     assert(rows(0).getAs[String]("station") == "MARITIME_46042H")
@@ -240,6 +247,28 @@ class NetworkCatalogsSpec extends SparkSpec {
     }
     assert(got.columns.toSet == Set("station", "time", "sfcWind_dir", "sfcWind",
       "ps", "tas", "tdps"))
+  }
+
+  test("MARITIME: pre-2007 header lines (YYYY with WD/BAR, 2-digit YY) name the columns") {
+    // the same observations in the 1999-2006 layout (un-prefixed header, no minute
+    // column) and the pre-1999 one (2-digit year, no TIDE column)
+    val ndbc1999 =
+      """YYYY MM DD hh WD  WSPD GST  WVHT  DPD   APD  MWD  BAR    ATMP  WTMP  DEWP  VIS  TIDE
+        |2014 06 01 00 180  5.5  7.0  2.1  10.0   8.0 200 1013.5  15.0  14.0  12.0 99.0 99.00
+        |2014 06 01 01 999 99.0  MM   MM   MM     MM  MM  9999.0 999.0  MM   999.0 99.0 99.00
+        |""".stripMargin
+    val ndbcYY =
+      """YY MM DD hh WD  WSPD GST  WVHT  DPD   APD  MWD  BAR    ATMP  WTMP  DEWP  VIS
+        |14 06 01 00 180  5.5  7.0  2.1  10.0   8.0 200 1013.5  15.0  14.0  12.0 99.0
+        |14 06 01 01 999 99.0  MM   MM   MM     MM  MM  9999.0 999.0  MM   999.0 99.0
+        |""".stripMargin
+    val want = readNdbc(ndbc2007).collect().toSeq
+    assert(want.length == 2)
+    for (body <- Seq(ndbc1999, ndbcYY)) {
+      val got = readNdbc(body)
+      assert(got.columns.toSeq == readNdbc(ndbc2007).columns.toSeq)
+      assert(got.collect().toSeq == want, body.linesIterator.next())
+    }
   }
 
   test("MARITIME: old-format renames (WD/BAR, 2-digit year, missing minute)") {

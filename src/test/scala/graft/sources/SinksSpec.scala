@@ -100,11 +100,8 @@ class SinksSpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS obs_bucketed_spec")
   }
 
-  test("S9/S11: CSV report and per-station export") {
+  test("S11: per-station CSV export") {
     val tmp = Files.createTempDirectory("csv").toFile.getAbsolutePath
-    val report = Seq(("11", 5L), ("no_flag", 95L)).toDF("flag", "cnt")
-    Sinks.writeReport(report, s"$tmp/report")
-    assert(spark.read.option("header", "true").csv(s"$tmp/report").count() == 2)
     val obs = Seq(("s1", 2L, 1.0), ("s1", 1L, 2.0), ("s2", 1L, 3.0))
       .toDF("station", "time", "tas")
     Sinks.exportStationCsv(obs, "s1", s"$tmp/s1")

@@ -111,14 +111,12 @@ class StationListsSpec extends SparkSpec {
       ("N1", "2020-03-01", 2L), ("N1", "2020-04-01", 1L)))
   }
 
-  test("compareStationCounts + missingStations: both directions") {
+  test("compareStationCounts: counts and missing stations in both directions") {
     val a = Seq(("N1", "s1"), ("N1", "s2"), ("N2", "s3")).toDF("network", "station")
     val b = Seq(("N1", "s1"), ("N1", "s9"), ("N2", "s3")).toDF("network", "station")
     val cmp = StationLists.compareStationCounts(a, b)
       .as[(String, Long, Long, Long, Long)].collect().sortBy(_._1)
     assert(cmp.toSeq == Seq(("N1", 2L, 2L, 1L, 1L), ("N2", 1L, 1L, 0L, 0L)))
-    val miss = StationLists.missingStations(a, b).as[(String, String)].collect()
-    assert(miss.toSeq == Seq(("N1", "s2")))
   }
 
   test("asosStationLookup: exact code and case-insensitive city substring") {
@@ -133,24 +131,6 @@ class StationListsSpec extends SparkSpec {
       .as[String].collect().sorted.toSeq == Seq("ASOSAWOS_1", "ASOSAWOS_2"))
     assert(StationLists.asosStationLookup(st, code = Some("XXXX"))
       .count() == 0L)
-  }
-
-  test("Sinks.updateAttr: adds a global attr to every sidecar, data untouched") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-attr").toString
-    val obs = Seq(("NET", "s1", 1.0)).toDF("network", "station", "tas")
-    Sinks.writeObs(obs, s"$dir/t1", sortCols = Seq("station"),
-      attrs = Some(AttrsTable.ObsDefaults))
-    Sinks.writeObs(obs, s"$dir/t2", sortCols = Seq("station"),
-      attrs = Some(AttrsTable.ObsDefaults))
-    Sinks.updateAttr(spark, Seq(s"$dir/t1", s"$dir/t2"),
-      "DOI", "https://doi.org/10.0000/example")
-    Seq("t1", "t2").foreach { t =>
-      val a = AttrsTable.read(spark, s"$dir/$t")
-      assert(a.global("DOI") == "https://doi.org/10.0000/example")
-      assert(a.global("title") == AttrsTable.ObsDefaults.global("title"))
-      assert(a.forVar("tas") == AttrsTable.ObsDefaults.forVar("tas"))
-    }
-    assert(spark.read.parquet(s"$dir/t1").count() == 1L)
   }
 
   test("webMercator matches the EPSG:3857 closed form at known points") {

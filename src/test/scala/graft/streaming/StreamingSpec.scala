@@ -468,7 +468,7 @@ class StreamingSpec extends SparkSpec {
     // batch lag-window flags on the in-order feed
     val vids = Seq(3L, 8L)
     val rows = vids.map(v =>
-      MultimodalOps.MediaRow(v, "video", MultimodalOps.mm5FixtureAvi(v), Map.empty))
+      MultimodalOps.MediaRow(v, "video", MultimodalOps.mm5FixtureVideo(v), Map.empty))
       .toDS()
     val hashes = MultimodalOps.videoGrayRasters(rows)
       .select(org.apache.spark.sql.functions.col("id").as("videoId"),
